@@ -104,14 +104,10 @@ def register(name: str, oracle: str | None = None):
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             _ensure_adaptive_cached_plans(spark)
-            # r5 ADVICE: operators register shared-subtree persists in
-            # the scoped registry; drain it here so the previous entry's
-            # caches die when the next entry is built (early release is
-            # safe — unpersist recomputes, never corrupts). Same
-            # lifecycle for temp artifacts (bucket-stored generations):
-            # the previous entry's store outlives its collect, dies here.
-            runtime.release_persists()
-            runtime.release_cleanups()
+            # free the intermediates of the entry before the previous
+            # one: the previous entry's result stays computable while
+            # this one is built and collected (runtime module docstring)
+            runtime.release_scopes(keep=1)
             return fn(spark, sf_dir)
 
         QUERIES[name] = wrapped
@@ -952,9 +948,8 @@ def _pop_genome_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bucket count sized to the source bytes (buckets_for_path — a fixed
     count caps read parallelism at scale); bucketBy writes need no
     shuffle (each task writes its rows into per-bucket files).  The
-    table + layout live until the next catalog entry is built
-    (runtime.scoped_cleanup), keeping the returned plan computable for
-    the driver's collect."""
+    table + layout live in the entry scope (runtime.scoped_cleanup),
+    keeping the returned plan computable for the driver's collect."""
     import shutil
     import tempfile
     import uuid
@@ -2045,15 +2040,12 @@ def corpus_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     328 s → 32 s at sf0.1 with the fixture materialized once.
     Fixture-only cost class: production input is a parquet scan (a
     plan leaf), so the trap does not exist there — same reasoning as
-    the stage-4/stage-5 truncations inside the pipeline itself.
-    Classic-session requirement (r12 ADVICE): the fixture
-    checkpoint-truncation raises at ENTRY-BUILD time on Spark Connect
-    sessions (localCheckpoint is a classic-JVM API), rather than at
-    collect as the in-pipeline checkpoints already did."""
-    docs = runtime.local_checkpoint_truncated(
-        _full_ladder_docs(spark, sf_dir)
-    )
-    runtime.scoped_cleanup(lambda: runtime.free_checkpoint(docs))
+    the stage-4/stage-5 truncations inside the pipeline itself. The
+    fixture goes through the ladder's truncation policy
+    (runtime.truncated_persists), so like the rungs it runs at entry
+    build and falls back to a plain persist on Spark Connect."""
+    with runtime.truncated_persists():
+        docs = runtime.scoped_persist(_full_ladder_docs(spark, sf_dir))
     return pipeline_ops.curate_corpus_full(
         docs, ann_ops.paraphrase_embeddings(spark, sf_dir), span_k=13,
     )
@@ -2099,8 +2091,9 @@ def _neardup_pair_artifact(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per dataset content) and return the path of the
     verified near-dup pair parquet: shingle fold → MinHash → banded LSH
     candidates → exact-Jaccard verify, written distributed. The write IS
-    the materialization point, so the shared shingle/set persists are
-    released immediately after it."""
+    the materialization point, so the shared shingle persist is released
+    right after it; the operators' own scoped persists follow the entry
+    scope (runtime module docstring)."""
     import atexit
     import shutil
     import tempfile
@@ -2110,14 +2103,16 @@ def _neardup_pair_artifact(spark: SparkSession, sf_dir: str) -> str:
     )
     if key not in _NEARDUP_ARTIFACTS:
         docs = textops.clusters_corpus(spark, sf_dir)
-        shingles = runtime.scoped_persist(textops.shingles_hashed(docs))
-        sigs = textops.minhash_signatures(docs, shingles=shingles)
-        cands = textops.lsh_candidate_pairs(sigs)
-        pairs = textops.jaccard_pairs(docs, cands, shingles=shingles)
-        d = tempfile.mkdtemp(prefix="gamr_neardup_pairs_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        pairs.write.parquet(f"{d}/pairs")
-        runtime.release_persists()
+        shingles = textops.shingles_hashed(docs).persist()
+        try:
+            sigs = textops.minhash_signatures(docs, shingles=shingles)
+            cands = textops.lsh_candidate_pairs(sigs)
+            pairs = textops.jaccard_pairs(docs, cands, shingles=shingles)
+            d = tempfile.mkdtemp(prefix="gamr_neardup_pairs_")
+            atexit.register(shutil.rmtree, d, ignore_errors=True)
+            pairs.write.parquet(f"{d}/pairs")
+        finally:
+            shingles.unpersist()
         _NEARDUP_ARTIFACTS[key] = d
     return _NEARDUP_ARTIFACTS[key]
 

@@ -20,20 +20,27 @@ from pyspark.sql import DataFrame, functions as F
 
 from . import split as split_ops
 from ..functions import text as text_fns
-from ..runtime import scoped_cleanup, scoped_persist, truncated_persists
+from ..runtime import scoped_persist, truncated_persists
 from .textops import LANGS, STOPWORDS, _count_in
 
 _TOKS = text_fns.SPARK_TOKENS
 
 
 def _ladder(fn):
-    """Decorator for the composed curation ladders: every
-    scoped_persist in the call tree (this module's rungs AND the
-    textops internals — band rows, jaccard sets) checkpoint-truncates
-    to a plan leaf instead of caching. Rationale and measurements:
-    runtime.truncated_persists. Standalone operators stay on plain
-    persist — their plans are shallow enough that the re-analysis
-    this guards against never happens."""
+    """Run ``fn`` under runtime.truncated_persists: every scoped_persist
+    in its call tree (this module's rungs AND the textops internals —
+    band rows, jaccard sets) checkpoint-truncates to a plan leaf instead
+    of caching. Applied to the composed curation ladders and to the
+    private stages that hold a rung which must truncate.
+
+    The rung checkpoints run EAGERLY: calling a ladder executes its
+    rungs, so building the DataFrame costs most of the pipeline and a
+    runtime error surfaces at build time, not at the first action on
+    the result. The rungs live in the entry scope, so the result stays
+    computable until the entry after next is built (runtime module
+    docstring). Standalone operators stay on plain persist — their
+    plans are shallow enough that the re-analysis this guards against
+    never happens."""
     @functools.wraps(fn)
     def wrapped(*args, **kwargs):
         with truncated_persists():
@@ -367,6 +374,7 @@ def curate_corpus_neardup(
     ).select("doc_id", "n_tokens", "dup_count", "nd_dropped", "pm", "split")
 
 
+@_ladder
 def _neardup_kept(
     docs: DataFrame,
     lang: str = "en",
@@ -420,22 +428,16 @@ def _neardup_kept(
     survivors = scoped_persist(survivors)
     sdocs = docs.join(survivors.select("doc_id"), "doc_id", "leftsemi")
     if span_k is not None:
-        # the span rung: cut text CHECKPOINT-TRUNCATED, not merely
-        # persisted (r13 optimization). A persist keeps the full
-        # logical plan behind an InMemoryRelation, and treeString /
+        # the span rung: under the ladder's truncation policy the cut
+        # text becomes a plan LEAF. A persist keeps the full logical
+        # plan behind an InMemoryRelation, and treeString /
         # canonicalization expand every InMemoryTableScan's
         # innerChildren — so each of the ~30 downstream actions
         # (shingle fold, LSH, star loop, chunk stage, LM) re-printed
         # and re-analyzed the nested cut→occ→fixture pyramid, which
         # measured as ~90% driver CPU in TreeNode.generateTreeString
-        # (jstack; before/after numbers in OPTIMIZATION_r13.md — the
-        # sf0.01 entry dropped an order of magnitude with this one
-        # change). The checkpoint collapses the rung to
-        # a plan LEAF — the same stage-4/stage-5 truncation policy
-        # documented in _semdedup_final/curate_corpus_full. Fully-cut
+        # (before/after numbers in OPTIMIZATION_r13.md). Fully-cut
         # docs (span-granularity exact duplicates) drop here.
-        from ..runtime import free_checkpoint, local_checkpoint_truncated
-
         # parallelism pin (r14, guide §2.5): both the span rung's input
         # and its checkpointed output are tiny in BYTES (the whole
         # fixture is a few MB here) but enormous in DERIVED work per
@@ -454,14 +456,13 @@ def _neardup_kept(
         # entry build 38 s → (see OPTIMIZATION_r14.md) with the rung's
         # heavy stages fanned back out.
         par = docs.sparkSession.sparkContext.defaultParallelism
-        cut = local_checkpoint_truncated(
+        cut = scoped_persist(
             dedup_ops.repeated_span_removal(
                 sdocs.repartition(par, "doc_id"), k=span_k
             )
             .filter(F.col("n_tokens") >= 1)
             .repartition(par, "doc_id")
         )
-        scoped_cleanup(lambda: free_checkpoint(cut))
         sdocs = cut.select("doc_id", "text")
         survivors = (
             survivors.drop("n_tokens")
@@ -822,6 +823,7 @@ def curate_corpus_semdedup(
     )
 
 
+@_ladder
 def _semdedup_final(
     docs: DataFrame,
     emb: DataFrame,
@@ -850,21 +852,14 @@ def _semdedup_final(
     is (final2, cut_docs) so the caller's LM stage scores CUT text."""
     from . import ann as ann_ops
 
-    # localCheckpoint, not persist: the semantic stage makes ~6 passes
+    # truncate, don't just persist: the semantic stage makes ~6 passes
     # (seed collect, Lloyd's iterations, assignment, skew census, block
     # sweep) over frames derived from `final`, and the containment
     # composition's logical plan is enormous — a cached-but-untruncated
     # lineage made EVERY pass pay ~7 s of Catalyst re-analysis at sf0.1
     # (measured: semb.count() 6-8 s/pass on 1,963 cached rows).
-    # Checkpointing collapses the plan to a leaf; downstream planning
-    # is constant-size. Same pattern as plans/sga.py's generation loop.
-    # The checkpointed blocks are freed when the NEXT catalog entry is
-    # built (r11 ADVICE: a raw localCheckpoint leaked block-manager
-    # storage per invocation across a gate/bench session) — deferred
-    # past return so the caller's collect can still compute the result.
-    from ..runtime import free_checkpoint, local_checkpoint_truncated, \
-        scoped_cleanup
-
+    # Under the ladder's truncation policy scoped_persist collapses the
+    # plan to a leaf; downstream planning is constant-size.
     res = _chunk_containment_final(
         docs, lang, min_tokens, max_bucket, chunk_tokens, stride,
         chunk_tau_milli, chunk_drop_pm, cand_max_df, cand_min_shared,
@@ -873,8 +868,7 @@ def _semdedup_final(
     cutdocs = None
     if span_k is not None:
         res, cutdocs = res
-    final = local_checkpoint_truncated(res)
-    scoped_cleanup(lambda: free_checkpoint(final))
+    final = scoped_persist(res)
     semb = emb.join(
         final.select(F.col("doc_id").alias("vec_id")), "vec_id", "leftsemi"
     )
@@ -972,9 +966,6 @@ def curate_corpus_full(
     # stage-1-5 composition (incl. the semantic applyInPandas subtree)
     # — same Catalyst re-analysis trap the stage-4 checkpoint already
     # documents, measured again here: 167.9 s → checkpointed at sf0.01
-    from ..runtime import free_checkpoint, local_checkpoint_truncated, \
-        scoped_cleanup
-
     res = _semdedup_final(
         docs, emb, lang, min_tokens, max_bucket, chunk_tokens, stride,
         chunk_tau_milli, chunk_drop_pm, cand_max_df, cand_min_shared,
@@ -983,8 +974,7 @@ def curate_corpus_full(
     )
     if span_k is not None:
         res, docs = res  # the LM stage must score the CUT text
-    final2 = local_checkpoint_truncated(res)
-    scoped_cleanup(lambda: free_checkpoint(final2))
+    final2 = scoped_persist(res)
     span_cols = ["span_dropped_tokens"] if span_k is not None else []
     sdocs = docs.join(final2.select("doc_id"), "doc_id", "leftsemi")
     scored = tx.unigram_logppl(sdocs).select("doc_id", "avg_nll_micro")

@@ -1,125 +1,114 @@
-"""Scoped persist registry (r5 ADVICE: textops/ann persists leaked one
-cache entry per call for the session lifetime on the gate/pipeline
-paths, where nothing ever called clearCache).
+"""Lifecycles of intermediate results.
 
-Operators that persist a shared subtree (both sides of a self-join, a
-fold referenced by two branches) register the handle here via
-``scoped_persist`` instead of calling ``.persist()`` raw.  The catalog's
-``register`` wrapper drains the registry when the NEXT entry is built,
-so a persisted subtree lives exactly as long as the entry that created
-it can still be materialized.  Releasing early is always safe — an
-unpersisted DataFrame recomputes, it never returns wrong rows — so the
-drain needs no knowledge of when the driver actually collected.
+There are two:
 
-Callers that manage their own lifecycle (the GA loops, which unpersist
-per generation) keep raw persist/unpersist and never touch this.
+- **The entry scope.** ``scoped_persist`` materializes a shared subtree
+  (both sides of a self-join, a fold read by two branches, a ladder
+  rung) and ``scoped_cleanup`` registers any other release (drop a temp
+  table, remove a temp layout).  Both append a release callable to the
+  current entry's scope.  Each time ``catalog.register`` builds an
+  entry, ``release_scopes(keep=1)`` runs the releases of every scope
+  older than the previous entry's.  A returned DataFrame therefore
+  stays computable while the next entry is built and collected, and
+  its intermediates are freed when the entry after next is built (or
+  at interpreter exit).  A released cache only recomputes, but a
+  released checkpoint is the only copy of its rows, which is why the
+  release waits an extra entry rather than running at the next one.
+- **Loop rotation.** The GA and streaming loops hold one generation of
+  state at a time: ``local_checkpoint_truncated`` the new state, then
+  ``free_checkpoint`` the one it replaced.  These never touch the
+  registry.
+
+Inside ``truncated_persists()`` (the curation ladders), scoped_persist
+checkpoint-truncates instead of caching; the release is the same.
 """
 
 from __future__ import annotations
 
 import atexit
 import contextlib
+import contextvars
 import logging
 
 from pyspark.sql import DataFrame
 
-_SCOPED: list[DataFrame] = []
-_CLEANUPS: list = []
-_TRUNC_DEPTH = 0
+# per-entry scopes, oldest first; each is a LIFO of release callables
+_SCOPES: list[list] = [[]]
+_TRUNCATE = contextvars.ContextVar("gamr_truncate_persists", default=False)
 _log = logging.getLogger(__name__)
 
 
 @contextlib.contextmanager
 def truncated_persists():
-    """While active, scoped_persist() checkpoint-truncates instead of
-    caching (r14, guide §3.3/§5 "materialise intermediates to truncate
-    enormous plans").
+    """While active in the calling context, scoped_persist()
+    checkpoint-truncates each frame to a plan leaf instead of caching it.
 
-    Why: the composed curation ladders nest 4-6 persisted rungs, and a
-    persist keeps the FULL logical plan behind its InMemoryRelation —
-    so every downstream action re-analyzes the whole pyramid, and (the
-    r14 jstack finding) AQE re-runs createQueryStages/transformUp over
-    the giant tree once per materialized Exchange: the containment
-    entry's one noop save spawned 58 AQE stage-jobs at a near-constant
-    ~0.43 s of driver Catalyst time each, while total executor task
-    time was only ~36 s spread over 105 stages. Collapsing each rung
-    to a Scan ExistingRDD leaf makes every per-stage re-plan O(rung),
-    not O(ladder) — the same mechanism as the r13 span-rung fix,
-    applied to the whole ladder family. At 100 TB the driver cost is
-    the same single-threaded Catalyst bottleneck, only with thousands
-    of stages behind it — truncation is the production policy for
-    deeply-composed pipelines, not a local-mode dodge.
+    Why: a persist keeps the full logical plan behind its
+    InMemoryRelation, so in a ladder that nests 4-6 persisted rungs every
+    downstream action re-analyzes the whole pyramid, and AQE re-plans
+    that tree once per materialized Exchange.  A leaf makes each re-plan
+    O(rung), not O(ladder).  Standalone operators (shallow plans, one or
+    two persists) keep plain persist: there the checkpoint's eager job
+    and lost output partitioning cost more than the re-analysis saved.
 
-    Standalone operators (shallow plans, one or two persists) keep
-    plain persist: for them the truncation's eager materialization
-    and lost cached-plan partitioning would cost more than the
-    re-analysis they don't suffer. Reentrant (ladders compose)."""
-    global _TRUNC_DEPTH
-    _TRUNC_DEPTH += 1
+    Consequences callers see:
+
+    - the checkpoints run eagerly, so the rungs execute while the ladder
+      is being built and a runtime error surfaces at build time, not at
+      the first action on the result;
+    - the flag is a ContextVar: other threads (and contexts) keep plain
+      persist while one thread builds a ladder;
+    - a session without ``_jsparkSession`` (Spark Connect) cannot
+      checkpoint-truncate, so scoped_persist falls back to plain persist.
+
+    Reentrant (ladders compose)."""
+    token = _TRUNCATE.set(True)
     try:
         yield
     finally:
-        _TRUNC_DEPTH -= 1
+        _TRUNCATE.reset(token)
 
 
 def scoped_cleanup(fn) -> None:
-    """Register a cleanup callable (drop a temp table, rm a temp layout)
-    to run when the NEXT catalog entry is built — the same lifecycle as
-    scoped_persist, for entries that materialize a durable artifact
-    (e.g. the bucket-stored generation) their returned DataFrame still
-    reads from.  Deferring past the entry's own return keeps the result
-    lazily computable for the driver's collect; running at next-entry
-    build (or interpreter exit) bounds the leak to one artifact."""
-    _CLEANUPS.append(fn)
+    """Register ``fn`` to run when the current entry's scope is released
+    (see the module docstring), e.g. dropping a temp table the returned
+    DataFrame still reads from."""
+    _SCOPES[-1].append(fn)
 
 
-def release_cleanups() -> int:
+def scoped_persist(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` for the current entry scope and return the frame
+    to read from: ``df`` itself, persisted, or inside truncated_persists()
+    a checkpoint-truncated leaf.  Either way the release is
+    free_checkpoint, which unpersists a cached frame."""
+    if _TRUNCATE.get() and hasattr(df.sparkSession, "_jsparkSession"):
+        out = local_checkpoint_truncated(df)
+    else:
+        out = df.persist()
+    scoped_cleanup(lambda: free_checkpoint(out))
+    return out
+
+
+def release_scopes(keep: int = 0) -> int:
+    """Run the releases of every scope but the newest ``keep``, newest
+    registration first, and open a fresh scope for what is registered
+    next.  Returns how many releases ran without raising; a failing one
+    (a handle whose session has stopped) is logged and skipped."""
+    cut = max(len(_SCOPES) - keep, 0)
+    old = [fn for scope in _SCOPES[:cut] for fn in scope]
+    del _SCOPES[:cut]
+    _SCOPES.append([])
     n = 0
-    while _CLEANUPS:
-        fn = _CLEANUPS.pop()
+    for fn in reversed(old):
         try:
             fn()
             n += 1
         except Exception as exc:
-            _log.debug("release_cleanups: cleanup skipped (%s)", exc)
+            _log.debug("release_scopes: release skipped (%s)", exc)
     return n
 
 
-def scoped_persist(df: DataFrame) -> DataFrame:
-    """persist() + register for release when the next catalog entry is
-    built (or when release_persists() is called explicitly). Inside a
-    truncated_persists() scope the frame is checkpoint-truncated to a
-    plan leaf instead (same lifecycle, see truncated_persists)."""
-    if _TRUNC_DEPTH > 0:
-        out = local_checkpoint_truncated(df)
-        scoped_cleanup(lambda: free_checkpoint(out))
-        return out
-    df.persist()
-    _SCOPED.append(df)
-    return df
-
-
-def release_persists() -> int:
-    """Unpersist every scoped handle; returns how many were released.
-
-    Also runs at interpreter exit (r6 ADVICE: the LAST entry's scoped
-    persists were only ever drained when a NEXT entry was built — a
-    bounded but real end-of-session cache leak on single-entry runs)."""
-    n = 0
-    while _SCOPED:
-        df = _SCOPED.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception as exc:
-            # a stopped session invalidates handles; nothing to release,
-            # but say so at debug level instead of swallowing silently
-            _log.debug("release_persists: unpersist skipped (%s)", exc)
-    return n
-
-
-atexit.register(release_persists)
-atexit.register(release_cleanups)
+atexit.register(release_scopes)
 
 
 def local_checkpoint_truncated(df: DataFrame, eager: bool = True) -> DataFrame:

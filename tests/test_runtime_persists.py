@@ -1,9 +1,20 @@
-"""Scoped-persist registry semantics (r5 ADVICE leak fix): operators
-register shared-subtree persists in runtime._SCOPED; building the NEXT
-catalog entry drains the registry, so gate/pipeline sessions no longer
-accumulate one cache entry per LSH/jaccard call for their lifetime."""
+"""Entry-scope lifecycle (runtime module docstring): scoped_persist and
+scoped_cleanup register release callables in the current entry's scope,
+and building a catalog entry releases the scopes older than the previous
+entry's — so a returned DataFrame stays computable until the entry after
+next is built, and nothing outlives that."""
+
+import os
+import threading
+
+from conftest import SF_DIR
 
 from geneticalgorithmsusingmapreduce_spark import runtime
+
+
+def _stored_rdds(spark):
+    sc = spark.sparkContext
+    return {int(i.id()) for i in sc._jsc.sc().getRDDStorageInfo()}
 
 
 def test_scoped_persist_registers_and_releases(spark):
@@ -11,44 +22,49 @@ def test_scoped_persist_registers_and_releases(spark):
     out = runtime.scoped_persist(df)
     assert out is df
     assert df.storageLevel.useMemory  # actually persisted
-    assert runtime._SCOPED, "handle must be registered"
-    n = runtime.release_persists()
+    assert runtime._SCOPES[-1], "release must be registered"
+    n = runtime.release_scopes()
     assert n >= 1
-    assert not runtime._SCOPED
+    assert not any(runtime._SCOPES)
     assert not df.storageLevel.useMemory  # actually unpersisted
 
 
-def test_catalog_entry_build_drains_registry(spark, tmp_path):
-    # building any registered entry must release previously scoped
-    # persists (early release is safe: unpersist recomputes, never
-    # corrupts) — use a cheap entry over the sf0.001 fixture
+def test_catalog_entry_build_drains_registry(spark):
+    # deliberate contract: building an entry releases the scope of the
+    # entry BEFORE the previous one, so a handle registered now survives
+    # the next entry's build and is released by the one after it
     from geneticalgorithmsusingmapreduce_spark import catalog
 
     leaked = runtime.scoped_persist(spark.range(5))
     assert leaked.storageLevel.useMemory
-    catalog.QUERIES["population_generate"](spark, "/root/testdata/sf0.001")
-    assert not runtime._SCOPED
+    catalog.QUERIES["population_generate"](spark, SF_DIR)
+    assert leaked.storageLevel.useMemory
+    catalog.QUERIES["population_generate"](spark, SF_DIR)
     assert not leaked.storageLevel.useMemory
 
 
 def test_release_survives_stopped_handles(spark):
-    # a handle whose backing session is gone must not break the drain
-    runtime._SCOPED.append(object())  # not even a DataFrame
-    assert runtime.release_persists() == 0
-    assert not runtime._SCOPED
+    # a raising release or a stale handle must not stop the drain
+    ran = []
+
+    def boom():
+        raise RuntimeError("session gone")
+
+    runtime.release_scopes()  # clean slate from other tests
+    runtime.scoped_cleanup(lambda: ran.append("first"))
+    runtime.scoped_cleanup(boom)
+    runtime.scoped_cleanup(lambda: runtime.free_checkpoint(object()))
+    assert runtime.release_scopes() == 2  # boom is skipped, not counted
+    assert ran == ["first"]
+    assert not any(runtime._SCOPES)
 
 
-def test_pipeline_path_drains_scoped_persists(spark):
-    # r6 VERDICT #7 (contract updated r14): the curation ladder's shared
-    # subtrees must be lifecycle-managed end-to-end. Since r14 the
-    # ladders run under runtime.truncated_persists(), so each rung is a
-    # checkpoint-truncated leaf registered as a free_checkpoint CLEANUP
-    # (not a cache handle) — after a full materialization the cleanup
-    # registry must hold every rung, and draining it must run them all.
+def test_pipeline_path_drains_scoped_persists(spark, monkeypatch):
+    # the curation ladders' rungs are checkpoint-truncated leaves, each
+    # registered as a free_checkpoint release in the entry scope
     from geneticalgorithmsusingmapreduce_spark.operators import pipeline
 
-    runtime.release_persists()  # clean slate from other tests
-    runtime.release_cleanups()
+    runtime.release_scopes()  # clean slate from other tests
     docs = spark.createDataFrame(
         [(i, f"the a and of to is u{i}a u{i}b u{i}c u{i}d u{i}e u{i}f "
              f"u{i}g u{i}h")
@@ -56,27 +72,36 @@ def test_pipeline_path_drains_scoped_persists(spark):
         "doc_id long, text string",
     )
     pipeline.curate_corpus_neardup(docs).collect()
-    assert not runtime._SCOPED  # ladder rungs no longer cache-persist
-    n_cleanups = len(runtime._CLEANUPS)
-    assert n_cleanups >= 2  # survivors + shingles at minimum
-    assert runtime.release_cleanups() == n_cleanups
-    assert not runtime._CLEANUPS
+    n_releases = len(runtime._SCOPES[-1])
+    assert n_releases >= 2  # survivors + shingles at minimum
+    freed = []
+    real_free = runtime.free_checkpoint
+    monkeypatch.setattr(
+        runtime, "free_checkpoint", lambda df: (freed.append(df), real_free(df))
+    )
+    assert runtime.release_scopes() == n_releases
+    assert len(freed) == n_releases
+    assert all(hasattr(df, "_gamr_ck_jrdd") for df in freed)
+    assert not any(runtime._SCOPES)
 
 
 def test_release_runs_at_interpreter_exit():
-    # r6 ADVICE: the LAST entry's persists drain at interpreter exit.
-    # Behavior test in a subprocess: a handle left in the registry at
-    # exit must have unpersist() called by the atexit hook.
+    # the LAST entry's persists drain at interpreter exit. Behavior test
+    # in a subprocess: a handle left in the registry at exit must have
+    # unpersist() called by the atexit hook.
     import subprocess
     import sys
 
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = (
-        "import sys; sys.path.insert(0, '/root/repo')\n"
+        f"import sys; sys.path.insert(0, {repo!r})\n"
         "from geneticalgorithmsusingmapreduce_spark import runtime\n"
         "class H:\n"
+        "    def persist(self):\n"
+        "        return self\n"
         "    def unpersist(self):\n"
         "        print('DRAINED-AT-EXIT', flush=True)\n"
-        "runtime._SCOPED.append(H())\n"
+        "runtime.scoped_persist(H())\n"
     )
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True,
@@ -87,24 +112,19 @@ def test_release_runs_at_interpreter_exit():
 
 
 def test_free_checkpoint_releases_rdd_blocks(spark):
-    # r8 ADVICE: unpersist() does NOT free localCheckpoint RDD blocks —
-    # rotating loop state must release the checkpointed RDD explicitly
-    from geneticalgorithmsusingmapreduce_spark import runtime
-
-    sc = spark.sparkContext
-
-    def stored():
-        return {int(i.id()) for i in sc._jsc.sc().getRDDStorageInfo()}
-
-    pre = stored()  # other tests' leftovers are not ours to assert on
+    # unpersist() does NOT free localCheckpoint RDD blocks — rotating
+    # loop state must release the checkpointed RDD explicitly
+    pre = _stored_rdds(spark)  # other tests' leftovers are not ours
     df = runtime.local_checkpoint_truncated(
         spark.range(1000).selectExpr("id", "id * 2 AS v")
     )
     assert df.count() == 1000
-    ours = stored() - pre
+    ours = _stored_rdds(spark) - pre
     assert ours, "checkpoint materialized no blocks?"
     runtime.free_checkpoint(df)
-    assert not (ours & stored()), "checkpointed RDD blocks survived release"
+    assert not (ours & _stored_rdds(spark)), (
+        "checkpointed RDD blocks survived release"
+    )
     # fallback path: an ordinary persisted frame still unpersists
     p = spark.range(10).persist()
     p.count()
@@ -113,12 +133,101 @@ def test_free_checkpoint_releases_rdd_blocks(spark):
 
 
 def test_scoped_cleanup_drains_in_lifo_order():
-    from geneticalgorithmsusingmapreduce_spark import runtime
-
-    runtime.release_cleanups()  # clean slate from other tests' ladders
+    runtime.release_scopes()  # clean slate from other tests' ladders
     order = []
     runtime.scoped_cleanup(lambda: order.append("a"))
     runtime.scoped_cleanup(lambda: order.append("b"))
-    assert runtime.release_cleanups() == 2
+    assert runtime.release_scopes() == 2
     assert order == ["b", "a"]
-    assert runtime.release_cleanups() == 0
+    assert runtime.release_scopes() == 0
+
+
+def test_connect_session_falls_back_to_persist():
+    # a Spark Connect session has no _jsparkSession: inside a ladder,
+    # scoped_persist must plain-persist instead of raising
+    class ConnectSession:
+        pass
+
+    class Frame:
+        sparkSession = ConnectSession()
+        persisted = False
+
+        def persist(self):
+            self.persisted = True
+            return self
+
+        def unpersist(self):
+            self.persisted = False
+
+    df = Frame()
+    with runtime.truncated_persists():
+        out = runtime.scoped_persist(df)
+    assert out is df and df.persisted
+    assert not hasattr(out, "_gamr_ck_jrdd")
+    runtime.release_scopes()
+    assert not df.persisted
+
+
+def _checkpoint_rdd_ids(df):
+    """ids of the RDD lineage behind a local_checkpoint_truncated frame"""
+    ids, r = set(), df._gamr_ck_jrdd
+    while r is not None:
+        ids.add(int(r.id()))
+        deps = r.dependencies().iterator()
+        r = deps.next().rdd() if deps.hasNext() else None
+    return ids
+
+
+def test_ladder_result_valid_until_entry_after_next(spark, monkeypatch):
+    # a ladder's rungs are checkpoints (the only copy of their rows): the
+    # returned DataFrame must still collect after the next entry is
+    # built, and the rungs' blocks must be gone once the entry after
+    # next is built
+    from geneticalgorithmsusingmapreduce_spark import catalog
+
+    rungs = []
+    real_checkpoint = runtime.local_checkpoint_truncated
+
+    def recording_checkpoint(df, eager=True):
+        rungs.append(real_checkpoint(df, eager))
+        return rungs[-1]
+
+    monkeypatch.setattr(
+        runtime, "local_checkpoint_truncated", recording_checkpoint
+    )
+    q = catalog.QUERIES
+    first = q["corpus_curation_neardup"](spark, SF_DIR)
+    ours = _stored_rdds(spark) & set().union(
+        *(_checkpoint_rdd_ids(r) for r in rungs)
+    )
+    assert ours, "ladder rungs materialized no checkpoint blocks?"
+    q["population_generate"](spark, SF_DIR)
+    rows = sorted(first.collect())
+    fresh = sorted(q["corpus_curation_neardup"](spark, SF_DIR).collect())
+    assert rows == fresh
+    assert not (ours & _stored_rdds(spark)), (
+        "first entry's rung checkpoints outlived the entry after next"
+    )
+
+
+def test_truncation_is_context_local(spark):
+    # one thread building a ladder must not flip another thread's
+    # scoped_persist into checkpoint-truncation
+    entered, leave = threading.Event(), threading.Event()
+
+    def ladder_thread():
+        with runtime.truncated_persists():
+            entered.set()
+            leave.wait(timeout=60)
+
+    t = threading.Thread(target=ladder_thread)
+    t.start()
+    try:
+        assert entered.wait(timeout=60)
+        df = runtime.scoped_persist(spark.range(5))
+    finally:
+        leave.set()
+        t.join()
+    assert df.storageLevel.useMemory
+    assert not hasattr(df, "_gamr_ck_jrdd")
+    runtime.free_checkpoint(df)
