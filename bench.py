@@ -17,7 +17,9 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 from geneticalgorithmsusingmapreduce_spark import catalog  # noqa: E402
-from geneticalgorithmsusingmapreduce_spark.session import build_session  # noqa: E402
+from geneticalgorithmsusingmapreduce_spark.session import (  # noqa: E402
+    build_session, local_cpus,
+)
 
 
 def ga_loop_benchmarks(spark) -> dict[str, float]:
@@ -251,9 +253,10 @@ def main():
     load_1m = round(os.getloadavg()[0], 2)
     # threshold scales with the box (r11 ADVICE: a hardcoded ">4 on 32
     # cores" is too lax on a 4-core box and too strict on a 128-core
-    # one): >1/8 of the cores runnable at start = not idle. cpus is
-    # recorded in both output lines so a reading's guard is auditable.
-    cpus = os.cpu_count() or 1
+    # one): >1/8 of the cores runnable at start = not idle. cpus is the
+    # session's local[N] core count, not the host's, and is recorded in
+    # both output lines so a reading's guard is auditable.
+    cpus = local_cpus()
     contended = load_1m > 0.125 * cpus
     if contended:
         print(

@@ -3344,13 +3344,13 @@ def emb_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"SELECT * FROM {ann_ops.duck_trained_ivf_int8_sql()} _q",
 )
 def emb_ivf_postings_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """QUANTIZED durable IVF index (r7 VERDICT "What's missing" #2):
-    the emb_ivf_index_roundtrip build/serve split with int8 postings —
-    1 byte per component + one bigint scale per vector instead of 8
-    bytes per component, the compression that lets a 100 TB embedding
-    index fit storage/memory budgets. Quantization is pure int64
-    arithmetic (sign·round_half_up(127·|x|/scale) as (|x|·254+s) div 2s
-    — no float divide, no negative-division dialect trap), so the
+    """QUANTIZED durable IVF index: the emb_ivf_index_roundtrip
+    build/serve split with int8 postings — 1 byte per component + one
+    bigint scale per vector instead of 8 bytes per component, the
+    compression that lets a 100 TB embedding index fit storage/memory
+    budgets. Build is ann.encode_postings_int8, one Arrow pass that
+    assigns and quantizes each vector in int64 arithmetic
+    (sign·round_half_up(127·|x|/scale) as (|x|·254+s) // 2s), so the
     DuckDB oracle replays training + assignment + compression + serve
     symbolically and the final ranking hash-matches, which also proves
     the array<tinyint> postings round-trip parquet losslessly. The
@@ -3361,11 +3361,9 @@ def emb_ivf_postings_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     emb = read_table(spark, sf_dir, "embeddings")
-    cents = _trained_centroids(spark, sf_dir)
-    qz = emb.select("vec_id", F.expr(ann_ops.quantize_expr()).alias("qv"))
-    p8 = ann_ops.quantize_postings_int8(
-        ann_ops.assign_to_centroids(qz, cents)
-    )
+    rows = trained_centroid_rows(spark, sf_dir)
+    cents = spark.createDataFrame(rows, ann_ops.CENTROID_SCHEMA)
+    p8 = ann_ops.encode_postings_int8(emb, rows)
     d = tempfile.mkdtemp(prefix="gamr_ivf_int8_")
     try:
         p8.write.partitionBy("cent_id").parquet(f"{d}/postings8")
@@ -3402,7 +3400,7 @@ def emb_ivf_recall_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
     exact = ann_ops.topk_dot(emb).select("query_id", "vec_id")
     appx = ann_ops.ivf_topk_int8(
-        emb, _trained_centroids(spark, sf_dir)
+        emb, trained_centroid_rows(spark, sf_dir)
     ).select("query_id", "vec_id", F.lit(1).alias("m"))
     return (
         exact.join(appx, ["query_id", "vec_id"], "left")

@@ -83,6 +83,35 @@ def _argmax_dot_chunked(xm, cm, cnorm=None, chunk_elems=1 << 24):
     return out
 
 
+def _quantize_batch(pdf):
+    """An Arrow batch's ``embedding`` column as the (N, D) int64 matrix
+    the SQL forms produce: floor(x · 10^6 + 0.5) over the float64
+    promotion of each float32 component."""
+    import numpy as np
+
+    from ..functions import bits as _bits
+
+    return np.floor(
+        _bits.np_stack_cells(pdf["embedding"], dtype="float64") * SCALE + 0.5
+    ).astype(np.int64)
+
+
+def _centroid_arrays(centroid_rows: list):
+    """``(cent_ids, cm)`` of centroid rows ``[(cent_id, [D ints])]`` in
+    cent_id order (cent_ids are seed vec_ids, not necessarily 0..C−1;
+    np.searchsorted(cent_ids, c) is cent_id c's row).
+    ``cent_ids[_argmax_dot_chunked(xm, cm)]`` is each row's max-dot
+    centroid: np.argmax keeps the first maximum, so ties go to the
+    lowest cent_id — max_by(cent_id, struct(cdot, -cent_id)) in
+    assign_to_centroids."""
+    import numpy as np
+
+    rows = sorted(centroid_rows)
+    cent_ids = np.array([cid for cid, _ in rows], dtype=np.int64)
+    cm = np.array([cv for _, cv in rows], dtype=np.int64)  # (C, D)
+    return cent_ids, cm
+
+
 def _i64_matmul(a, b):
     """Exact int64 matmul via BLAS float64. Every product and partial
     sum in this module's quantized ranges stays < 2^53 (max |dot| =
@@ -201,12 +230,7 @@ def topk_dot_numpy(
 
     def block_topk(batches):
         for pdf in batches:
-            from ..functions import bits as _bits
-
-            cm = np.floor(
-                _bits.np_stack_cells(pdf["embedding"], dtype="float64")
-                * SCALE + 0.5
-            ).astype(np.int64)  # (N, D)
+            cm = _quantize_batch(pdf)  # (N, D)
             dots = qm @ cm.T  # (Q, N)
             vids = pdf["vec_id"].to_numpy()
             out = {"query_id": [], "vec_id": [], "dot": []}
@@ -302,13 +326,8 @@ def train_centroid_rows(
         cnorm = (cm * cm).sum(axis=1)  # (C,)
 
         def partials(batches):
-            from ..functions import bits as _bits
-
             for pdf in batches:
-                xm = np.floor(
-                    _bits.np_stack_cells(pdf["embedding"], dtype="float64")
-                    * SCALE + 0.5
-                ).astype(np.int64)  # (N, D)
+                xm = _quantize_batch(pdf)  # (N, D)
                 # argmax with ties to the LOWEST cent index — np.argmax
                 # picks the first maximum, matching struct(score, -cent);
                 # chunked so the score block stays bounded at large C
@@ -664,47 +683,41 @@ def duck_trained_ivf_sql(
 
 
 # --------------------------------------------------------------------------
-# int8-quantized IVF postings (r8 — r7 VERDICT "What's missing" #2)
+# int8-quantized IVF postings
 # --------------------------------------------------------------------------
+# [vec_id, cent_id, v8 array<tinyint>, scale bigint]: 1 byte per component
+# instead of 8, at a recall cost measured by emb_ivf_recall_int8. Spark
+# builds them with the encode_postings_int8 kernel; _scale_sql/_q8_sql/
+# _v8_sql are its DuckDB twin, which the oracles replay.
 
 INT8_MAX = 127
 
 
-def _scale_sql(arr: str, dialect: str = "spark") -> str:
-    """Per-vector symmetric scale: max |component| of the int64
-    quantized vector, clamped ≥ 1 (zero vectors would divide by 0)."""
-    el = (
-        (lambda j: f"abs(element_at({arr}, {j + 1}))")
-        if dialect == "spark"
-        else (lambda j: f"abs({arr}[{j + 1}])")
-    )
-    return "greatest(" + ", ".join(el(j) for j in range(DIMS)) + ", 1)"
+def _scale_sql(arr: str) -> str:
+    """Per-vector symmetric scale of a DuckDB int64 list: max |component|,
+    clamped ≥ 1 (zero vectors would divide by 0)."""
+    el = ", ".join(f"abs({arr}[{j + 1}])" for j in range(DIMS))
+    return f"greatest({el}, 1)"
 
 
-def _q8_sql(arr: str, j: int, scale: str, dialect: str = "spark") -> str:
-    """One int8 component: sign(x) · round_half_up(127·|x| / scale),
-    in PURE int64 arithmetic — (|x|·254 + scale) div (2·scale) — so
-    both engines agree bit-exactly. A float divide here would risk
-    cross-engine rounding, and negative integer division itself is a
-    dialect trap (Spark's div truncates toward zero, DuckDB's //
-    floors), which the abs/sign split sidesteps entirely. |x| ≤ scale
-    ⇒ the result is in [−127, 127] and the tinyint cast is ANSI-safe."""
-    if dialect == "spark":
-        x = f"element_at({arr}, {j + 1})"
-        div = "div"
-    else:
-        x = f"{arr}[{j + 1}]"
-        div = "//"
+def _q8_sql(arr: str, j: int, scale: str) -> str:
+    """One int8 component in DuckDB: sign(x) · round_half_up(127·|x| /
+    scale), in PURE int64 arithmetic — (|x|·254 + scale) // (2·scale) —
+    so it matches the kernel bit-exactly. The abs/sign split keeps the
+    integer division on non-negative operands, where flooring and
+    truncating division agree. |x| ≤ scale ⇒ the result is in
+    [−127, 127] and the tinyint cast is safe."""
+    x = f"{arr}[{j + 1}]"
     return (
         f"cast((CASE WHEN {x} < 0 THEN -1 ELSE 1 END) * "
-        f"((abs({x}) * {2 * INT8_MAX} + {scale}) {div} (2 * {scale})) "
+        f"((abs({x}) * {2 * INT8_MAX} + {scale}) // (2 * {scale})) "
         f"as tinyint)"
     )
 
 
-def _v8_sql(arr: str, scale: str, dialect: str = "spark") -> str:
-    elems = ", ".join(_q8_sql(arr, j, scale, dialect) for j in range(DIMS))
-    return (f"array({elems})" if dialect == "spark" else f"[{elems}]")
+def _v8_sql(arr: str, scale: str) -> str:
+    elems = ", ".join(_q8_sql(arr, j, scale) for j in range(DIMS))
+    return f"[{elems}]"
 
 
 def _dot8_sql(a: str, b: str, dialect: str = "spark") -> str:
@@ -719,21 +732,44 @@ def _dot8_sql(a: str, b: str, dialect: str = "spark") -> str:
     ) + ")"
 
 
-def quantize_postings_int8(assigned: DataFrame) -> DataFrame:
-    """Compress an IVF postings table [vec_id, qv, cent_id] to int8:
-    [vec_id, cent_id, v8 array<tinyint>, scale bigint] — 1 byte per
-    component instead of 8 (the difference between an index that fits
-    the storage/memory budget at 100 TB of embeddings and one that
-    doesn't), at a recall cost measured by emb_ivf_recall_int8. The
-    coarse quantizer (C centroid rows) stays full-precision — standard
-    IVF-PQ/SQ practice: probes are cheap and precision there is free."""
-    scale = _scale_sql("qv")
-    return assigned.select(
-        "vec_id",
-        "cent_id",
-        F.expr(f"({scale})").alias("scale"),
-        F.expr(_v8_sql("qv", f"({scale})")).alias("v8"),
-    ).select("vec_id", "cent_id", "v8", "scale")
+def encode_postings_int8(emb: DataFrame, centroid_rows: list) -> DataFrame:
+    """Encode [vec_id, embedding] as int8 IVF postings [vec_id, cent_id,
+    v8, scale] in one Arrow pass with no exchange. Per batch: quantize
+    (floor(x·10^6 + 0.5)), take the max-dot centroid (ties to the
+    lowest cent_id), then scale = max(max|q|, 1) and v8 = sign(q) ·
+    ((|q|·254 + scale) // (2·scale)) in int64 arithmetic. The rows are
+    bit-identical to _scale_sql/_v8_sql over assign_to_centroids, and
+    the plan stays constant-size: no crossJoin, no 64×64-term
+    expressions for Catalyst and codegen to process per build. The
+    coarse quantizer (the centroid rows) stays full precision, standard
+    IVF-SQ practice."""
+    import numpy as np
+
+    cent_ids, cm = _centroid_arrays(centroid_rows)
+
+    def encode(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            xm = _quantize_batch(pdf)  # (N, D)
+            ax = np.abs(xm)
+            scale = np.maximum(ax.max(axis=1), 1)  # (N,)
+            s = scale[:, None]
+            mag = (ax * (2 * INT8_MAX) + s) // (2 * s)
+            v8 = np.where(xm < 0, -mag, mag).astype(np.int8)
+            yield pd.DataFrame({
+                "vec_id": pdf["vec_id"].to_numpy(),
+                "cent_id": cent_ids[_argmax_dot_chunked(xm, cm)],
+                "v8": list(v8),
+                "scale": scale,
+            })
+
+    return emb.select("vec_id", "embedding").mapInPandas(
+        encode,
+        schema="vec_id long, cent_id long, v8 array<tinyint>, scale long",
+    )
 
 
 def ivf_serve_topk_int8(
@@ -786,14 +822,13 @@ def ivf_serve_topk_int8(
 
 
 def ivf_topk_int8(
-    emb: DataFrame, centroids: DataFrame,
+    emb: DataFrame, centroid_rows: list,
     n_queries: int = 5, k: int = 10, n_probes: int = N_PROBES,
 ) -> DataFrame:
-    """assign → int8-compress → serve (no durable artifact — the
-    roundtrip entry adds the parquet write/read split)."""
-    qz = emb.select("vec_id", F.expr(quantize_expr()).alias("qv"))
-    cents = centroids.select("cent_id", "cv")
-    p8 = quantize_postings_int8(assign_to_centroids(qz, cents))
+    """encode_postings_int8 → serve (no durable artifact — the
+    postings entry adds the parquet write/read split)."""
+    cents = emb.sparkSession.createDataFrame(centroid_rows, CENTROID_SCHEMA)
+    p8 = encode_postings_int8(emb, centroid_rows)
     return ivf_serve_topk_int8(p8, cents, n_queries, k, n_probes)
 
 
@@ -817,14 +852,14 @@ def duck_trained_ivf_int8_sql(
         f"ORDER BY {_duck_ldot('v.qv', 'c.cv')} DESC, c.cent_id ASC) AS arn "
         f"FROM qz v CROSS JOIN {prev} c) _a WHERE arn = 1)"
     )
-    scale = _scale_sql("qv", "duckdb")
+    scale = _scale_sql("qv")
     ctes.append(
         f"p8a AS MATERIALIZED (SELECT vec_id, cent_id, qv, "
         f"({scale}) AS scale FROM asgn)"
     )
     ctes.append(
         f"p8 AS MATERIALIZED (SELECT vec_id, cent_id, scale, "
-        f"{_v8_sql('qv', 'scale', 'duckdb')} AS v8 FROM p8a)"
+        f"{_v8_sql('qv', 'scale')} AS v8 FROM p8a)"
     )
     cdot = "(" + " + ".join(
         f"cast(q.v8[{j + 1}] as bigint) * c.cv[{j + 1}]"
@@ -914,13 +949,8 @@ def pq_train_codebook_rows(
         cbm = cb.copy()
 
         def partials(batches):
-            from ..functions import bits as _bits
-
             for pdf in batches:
-                xm = np.floor(
-                    _bits.np_stack_cells(pdf["embedding"], dtype="float64")
-                    * SCALE + 0.5
-                ).astype(np.int64)  # (N, D)
+                xm = _quantize_batch(pdf)  # (N, D)
                 out = {"sub": [], "code": [], "cnt": [], "sums": []}
                 for m in range(m_sub):
                     xs = xm[:, m * sub_dims:(m + 1) * sub_dims]  # (N, S)
@@ -989,14 +1019,16 @@ def pq_train_codebook_rows_residual(
     import pandas as pd
 
     sub_dims = DIMS // m_sub
-    cents_np, pos = _centroid_lookup(centroid_rows)
+    cent_ids, cents_np = _centroid_arrays(centroid_rows)
     seed_rows = sorted(
         (int(r.vec_id), [int(x) for x in r.qv], int(r.cent_id))
         for r in assigned.filter(F.col("vec_id") < k_codes).collect()
     )
     seeds = np.array(
         [qv for _, qv, _ in seed_rows], dtype=np.int64
-    ) - cents_np[[pos[c] for _, _, c in seed_rows]]  # (K, D) residuals
+    ) - cents_np[
+        np.searchsorted(cent_ids, [c for _, _, c in seed_rows])
+    ]  # (K, D) residuals
     cb = np.stack(
         [seeds[:, m * sub_dims:(m + 1) * sub_dims] for m in range(m_sub)]
     )  # (M, K, S)
@@ -1011,10 +1043,9 @@ def pq_train_codebook_rows_residual(
                 if len(pdf) == 0:
                     continue
                 xm = _bits.np_stack_cells(pdf["qv"], dtype="int64")
-                cidx = np.array(
-                    [pos[int(c)] for c in pdf["cent_id"]], dtype=np.int64
-                )
-                xm = xm - cents_np[cidx]  # (N, D) residuals
+                xm = xm - cents_np[
+                    np.searchsorted(cent_ids, pdf["cent_id"].to_numpy())
+                ]  # (N, D) residuals
                 out = {"sub": [], "code": [], "cnt": [], "sums": []}
                 for m in range(m_sub):
                     xs = xm[:, m * sub_dims:(m + 1) * sub_dims]
@@ -1065,17 +1096,6 @@ def pq_train_codebook_rows_residual(
     ]
 
 
-def _centroid_lookup(centroid_rows: list):
-    """(cents_np, pos) — centroid matrix plus cent_id → row-index map
-    (cent_ids are seed vec_ids, not necessarily 0..C−1)."""
-    import numpy as np
-
-    rows = sorted(centroid_rows)
-    pos = {int(cid): i for i, (cid, _) in enumerate(rows)}
-    cents_np = np.array([cv for _, cv in rows], dtype=np.int64)
-    return cents_np, pos
-
-
 def pq_encode(
     assigned: DataFrame, codebook_rows: list,
     centroid_rows: list | None = None,
@@ -1097,8 +1117,8 @@ def pq_encode(
     cb = np.zeros((m_sub, k_codes, sub_dims), dtype=np.int64)
     for m, kk, cw in codebook_rows:
         cb[m, kk] = cw
-    cents_np, pos = (
-        _centroid_lookup(centroid_rows)
+    cent_ids, cents_np = (
+        _centroid_arrays(centroid_rows)
         if centroid_rows is not None else (None, None)
     )
 
@@ -1110,10 +1130,9 @@ def pq_encode(
                 continue
             xm = _bits.np_stack_cells(pdf["qv"], dtype="int64")  # (N, D)
             if cents_np is not None:
-                cidx = np.array(
-                    [pos[int(c)] for c in pdf["cent_id"]], dtype=np.int64
-                )
-                xm = xm - cents_np[cidx]
+                xm = xm - cents_np[
+                    np.searchsorted(cent_ids, pdf["cent_id"].to_numpy())
+                ]
             codes = np.zeros((len(pdf), m_sub), dtype=np.int8)
             for m in range(m_sub):
                 xs = xm[:, m * sub_dims:(m + 1) * sub_dims]
@@ -1789,10 +1808,7 @@ def quantize_bucket_norm(emb: DataFrame, seed: int,
         for pdf in batches:
             if not len(pdf):
                 continue
-            e = np.stack(
-                [np.asarray(v, dtype=np.float32) for v in pdf["embedding"]]
-            ).astype(np.float64)
-            q = np.floor(e * float(SCALE) + 0.5).astype(np.int64)
+            q = _quantize_batch(pdf)
             bucket = ((q @ s_t > 0) * pw).sum(axis=1)
             yield pd.DataFrame({
                 "vec_id": pdf["vec_id"].to_numpy(),
@@ -1824,10 +1840,7 @@ def quantize_bucket_norm_banded(
         for pdf in batches:
             if not len(pdf):
                 continue
-            e = np.stack(
-                [np.asarray(v, dtype=np.float32) for v in pdf["embedding"]]
-            ).astype(np.float64)
-            q = np.floor(e * float(SCALE) + 0.5).astype(np.int64)
+            q = _quantize_batch(pdf)
             bks = np.stack(
                 [((q @ m > 0) * pw).sum(axis=1) for m in mats], axis=1
             )  # (N, bands)
@@ -2121,31 +2134,18 @@ def kernel_assign(emb: DataFrame, centroid_rows: list) -> DataFrame:
     max_by(cent_id, struct(cdot, -cent_id)) tie-break) but emits n
     rows instead of materializing the n·C crossJoin — the path that
     stays linear when C is corpus-sized (√n at the third decade)."""
-    import numpy as np
-
-    cm = np.array(
-        [cv for _, cv in sorted(centroid_rows)], dtype=np.int64
-    )  # (C, D)
-    cent_ids = np.array(
-        [cid for cid, _ in sorted(centroid_rows)], dtype=np.int64
-    )
+    cent_ids, cm = _centroid_arrays(centroid_rows)
 
     def assign_kernel(batches):
         import pandas as pd
 
-        from ..functions import bits as _bits
-
         for pdf in batches:
             if not len(pdf):
                 continue
-            xm = np.floor(
-                _bits.np_stack_cells(pdf["embedding"], dtype="float64")
-                * SCALE + 0.5
-            ).astype(np.int64)  # (N, D)
-            best = _argmax_dot_chunked(xm, cm)  # max dot, lowest-id tie
+            xm = _quantize_batch(pdf)  # (N, D)
             yield pd.DataFrame({
                 "vec_id": pdf["vec_id"].to_numpy(),
-                "cent_id": cent_ids[best],
+                "cent_id": cent_ids[_argmax_dot_chunked(xm, cm)],
                 "qv": list(xm),
                 "n2": (xm * xm).sum(axis=1),
             })
@@ -2603,8 +2603,7 @@ def semantic_cluster_pairs_fast(
         emb.filter(F.col("vec_id") % s == 0), c, iters,
         compute_inertia=False, seed_by_rank=True,
     )
-    cm = np.array([cv for _, cv in sorted(rows)], dtype=np.int64)
-    cent_ids = np.array([cid for cid, _ in sorted(rows)], dtype=np.int64)
+    cent_ids, cm = _centroid_arrays(rows)
 
     # in-driver coarse k-means over the C centroid vectors (min-dist
     # form, seeds = first R fine centroids) — C×R work, milliseconds
@@ -2631,15 +2630,10 @@ def semantic_cluster_pairs_fast(
     def assign2(batches):
         import pandas as pd
 
-        from ..functions import bits as _bits
-
         for pdf in batches:
             if not len(pdf):
                 continue
-            xm = np.floor(
-                _bits.np_stack_cells(pdf["embedding"], dtype="float64")
-                * SCALE + 0.5
-            ).astype(np.int64)
+            xm = _quantize_batch(pdf)
             xf = xm.astype(np.float64)
             # rank probe cells in the SAME 2·dot − |c|² form membership
             # used — raw dot ranks by a different geometry (r10 ADVICE)

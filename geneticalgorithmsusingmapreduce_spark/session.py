@@ -22,6 +22,12 @@ def _blas_threads() -> str:
     return "1"
 
 
+def local_cpus() -> int:
+    """Cores of the local[N] master build_session starts when not given
+    ``cpus``: $SPARK_GRAFT_CPUS, default 32."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
 def build_session(
     app: str = "gamr-spark",
     cpus: int | None = None,
@@ -43,7 +49,7 @@ def build_session(
     extra_conf={"spark.io.compression.codec": "zstd"}, as scale_bench's
     SCALE_BENCH_CONF does."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = local_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)

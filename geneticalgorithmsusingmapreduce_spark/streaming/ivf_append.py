@@ -33,10 +33,12 @@ the ``list_skew`` stat returned per batch (max/mean list size — the
 monitoring value you'd alarm on), kept as a measurement rather than an
 automatic rebuild so ingestion stays append-only and replayable.
 
-At 100 TB: each batch's work is one scan of the BATCH (assign against
-C broadcast centroids, map-side quantize) plus a partitioned append —
-no shuffle of the existing index, ever; list pruning at serve time is
-directory-level, exactly as in the static artifact.
+At 100 TB: each batch's work is one scan of the BATCH (the
+ann.encode_postings_int8 kernel assigns and int8-quantizes each vector
+against the C centroids in its closure, with no exchange) plus a
+partitioned append — no shuffle of the existing index, ever; list
+pruning at serve time is directory-level, exactly as in the static
+artifact.
 """
 
 from __future__ import annotations
@@ -153,19 +155,9 @@ def start_ivf_append(
             fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
             if fs.exists(jpath):
                 fs.delete(jpath, True)
-        cents = spark.createDataFrame(
-            state.centroid_rows, ann.CENTROID_SCHEMA
-        )
-        qz = batch.select(
-            "vec_id", F.expr(ann.quantize_expr()).alias("qv")
-        )
-        # persist around write+count (ADVICE r9): without it the skew
-        # collect() below recomputes the full assign+quantize pipeline
-        # a second time per batch, contradicting the module's
-        # one-scan-of-the-batch design
-        p8 = ann.quantize_postings_int8(
-            ann.assign_to_centroids(qz, cents)
-        ).persist()
+        # persisted around write + count: without it the skew count
+        # below would re-run the encode kernel's scan of the batch
+        p8 = ann.encode_postings_int8(batch, state.centroid_rows).persist()
         try:
             p8.write.mode("append").partitionBy("cent_id").parquet(
                 f"{index_dir}/postings8"

@@ -110,11 +110,9 @@ def write_generation(
     gdir = f"{index_dir}/gen={gen}"
     cents = spark.createDataFrame(centroid_rows, ann.CENTROID_SCHEMA)
     cents.write.mode("overwrite").parquet(f"{gdir}/centroids")
-    qz = emb.select("vec_id", F.expr(ann.quantize_expr()).alias("qv"))
-    p8 = ann.quantize_postings_int8(ann.assign_to_centroids(qz, cents))
-    p8.write.mode("overwrite").partitionBy("cent_id").parquet(
-        f"{gdir}/postings8"
-    )
+    ann.encode_postings_int8(emb, centroid_rows).write.mode(
+        "overwrite"
+    ).partitionBy("cent_id").parquet(f"{gdir}/postings8")
 
 
 def rebuild_index(
@@ -203,15 +201,9 @@ def start_ivf_append_gen(
     state = IvfGenAppendState(index_dir)
 
     def _append_batch(batch: DataFrame, gdir: str) -> list:
-        cents = spark.createDataFrame(
-            state.centroid_rows, ann.CENTROID_SCHEMA
-        )
-        qz = batch.select(
-            "vec_id", F.expr(ann.quantize_expr()).alias("qv")
-        )
-        p8 = ann.quantize_postings_int8(
-            ann.assign_to_centroids(qz, cents)
-        ).persist()
+        # persisted so the per-list count reuses the written rows
+        # instead of re-running the encode scan
+        p8 = ann.encode_postings_int8(batch, state.centroid_rows).persist()
         try:
             p8.write.mode("append").partitionBy("cent_id").parquet(
                 f"{gdir}/postings8"

@@ -360,18 +360,11 @@ def _enrich_kernel(centroid_rows: list, from_qv: bool):
     instead of a float embedding."""
     import numpy as np
 
-    cm = np.array(
-        [cv for _, cv in sorted(centroid_rows)], dtype=np.int64
-    )
-    cent_ids = np.array(
-        [cid for cid, _ in sorted(centroid_rows)], dtype=np.int64
-    )
+    cent_ids, cm = ann._centroid_arrays(centroid_rows)
     cn2 = (cm * cm).sum(axis=1).astype(np.float64)
 
     def kernel(batches):
         import pandas as pd
-
-        from ..functions import bits as _bits
 
         for pdf in batches:
             if not len(pdf):
@@ -381,10 +374,7 @@ def _enrich_kernel(centroid_rows: list, from_qv: bool):
                     np.asarray(v, dtype=np.int64) for v in pdf["qv"]
                 ])
             else:
-                xm = np.floor(
-                    _bits.np_stack_cells(pdf["embedding"], dtype="float64")
-                    * ann.SCALE + 0.5
-                ).astype(np.int64)
+                xm = ann._quantize_batch(pdf)
             best = ann._argmax_dot_chunked(xm, cm)
             n2 = (xm * xm).sum(axis=1)
             cdot = (xm * cm[best]).sum(axis=1).astype(np.float64)

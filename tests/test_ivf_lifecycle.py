@@ -88,11 +88,11 @@ def test_rebuild_matches_from_scratch_build(spark, tmp_path):
     assert ir.rebuild_index(spark, emb, d, n_centroids=8, iters=3) == 1
     rebuilt = _serve_rows(spark, d)
 
-    cents, _ = ann.train_centroids(
+    rows, _ = ann.train_centroid_rows(
         emb, n_centroids=8, iters=3, compute_inertia=False
     )
     scratch = {
-        tuple(r) for r in ann.ivf_topk_int8(emb, cents).collect()
+        tuple(r) for r in ann.ivf_topk_int8(emb, rows).collect()
     }
     assert rebuilt == scratch
 
@@ -152,3 +152,98 @@ def test_append_alarm_rebuild_composed(spark, tmp_path):
     for r in res.collect():
         byq.setdefault(r.query_id, []).append(r)
     assert byq and all(len(v) == 5 for v in byq.values())
+
+
+def _edge_table(spark):
+    """Embeddings and centroid rows that hit every corner of the int8
+    encode: an all-zero vector (scale clamps to 1, and all dots tie),
+    a vector whose dots with centroids 3 and 5 tie exactly (3 must
+    win), components at ±0.577, and negative components on both
+    rounding boundaries — -1/128 quantizes from exactly -7812.5, and
+    against a 127/32 scale, -1/64 and -5/64 are exactly 0.5 and 2.5 in
+    int8 units, where half-up and half-to-even rounding differ — then
+    random vectors so small Arrow batches split the table."""
+    import numpy as np
+
+    d = ann.DIMS
+    tie = [0.0] * d
+    tie[0] = tie[1] = 0.25
+    half = [0.0] * d
+    half[:5] = [3.96875, -0.015625, -0.078125, 0.078125, -0.0078125]
+    rng = np.random.default_rng(7)
+    vecs = [
+        [0.0] * d,
+        tie,
+        [0.577 if j % 2 == 0 else -0.577 for j in range(d)],
+        half,
+    ] + rng.uniform(-1, 1, size=(36, d)).astype(np.float32).tolist()
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<float>"
+    )
+
+    def axis(j):
+        v = [0] * d
+        v[j] = 250_000
+        return v
+
+    # deliberately out of cent_id order: the kernel must sort them
+    cents = [
+        (5, axis(1)), (3, axis(0)), (7, axis(2)),
+        (1, rng.integers(-1000, 1000, size=d).tolist()),
+    ]
+    return emb, cents
+
+
+def _p8_rows(df):
+    return sorted(
+        (r.vec_id, r.cent_id, tuple(r.v8), r.scale) for r in df.collect()
+    )
+
+
+def test_encode_postings_int8_matches_duckdb_twin(spark):
+    # the Spark encode kernel and the DuckDB int8 SQL the oracles replay
+    # must agree bit for bit, over the Spark expression-form assignment
+    import duckdb
+
+    emb, cents = _edge_table(spark)
+    got = _p8_rows(ann.encode_postings_int8(emb, cents))
+
+    qz = emb.select("vec_id", F.expr(ann.quantize_expr()).alias("qv"))
+    asgn = ann.assign_to_centroids(
+        qz, spark.createDataFrame(cents, ann.CENTROID_SCHEMA)
+    ).collect()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE asgn (vec_id BIGINT, cent_id BIGINT, qv BIGINT[])"
+    )
+    con.executemany(
+        "INSERT INTO asgn VALUES (?, ?, ?)",
+        [(r.vec_id, r.cent_id, list(r.qv)) for r in asgn],
+    )
+    want = sorted(
+        (v, c, tuple(v8), s) for v, c, v8, s in con.sql(
+            f"SELECT vec_id, cent_id, {ann._v8_sql('qv', 'scale')}, scale "
+            f"FROM (SELECT *, {ann._scale_sql('qv')} AS scale FROM asgn)"
+        ).fetchall()
+    )
+    assert got == want
+
+    by_id = {r[0]: r for r in got}
+    qv = {r.vec_id: list(r.qv) for r in asgn}
+    assert by_id[0][1:] == (1, (0,) * ann.DIMS, 1)  # clamp; tie to 1
+    assert by_id[1][1] == 3  # exact tie between 3 and 5
+    # the boundaries really are hit: 127·15625/3968750 = 0.5 and
+    # 127·78125/3968750 = 2.5 round away from zero, and
+    # q = floor(-7812.5 + 0.5)
+    assert qv[3][:5] == [3_968_750, -15_625, -78_125, 78_125, -7812]
+    assert by_id[3][2][:5] == (127, -1, -3, 3, 0)
+
+    assert ann.encode_postings_int8(emb.limit(0), cents).collect() == []
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        assert _p8_rows(ann.encode_postings_int8(emb, cents)) == got
+    finally:
+        spark.conf.set(key, prev)

@@ -439,3 +439,51 @@ def test_semdedup_balanced_single_block_exchange(spark):
     assert "FlatMapGroupsInPandas" in p
     assert p.count("hashpartitioning(cent_id") == 1
     assert "bi" in p and "bj" in p  # the block keys ride that exchange
+
+
+# extended-explain budget (bytes) of the int8 postings that an IVF index
+# generation writes: the encode kernel's plan measures ~1.1 KB; the
+# expression form it replaced (crossJoin + 64-term dot + groupBy, with
+# the 64-term scale inlined into each of 64 int8 components) ~254 KB
+POSTINGS8_EXPLAIN_BUDGET = 8 << 10
+
+
+def test_ivf_generation_postings_one_kernel_pass(spark, tmp_path,
+                                                 monkeypatch):
+    # the postings of an index generation are one narrow Arrow pass over
+    # the vectors: no pairing with the centroid table, no shuffle, and a
+    # constant-size plan — a blowup fails here by name
+    from pyspark.sql import functions as F
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from geneticalgorithmsusingmapreduce_spark.operators import ann
+    from geneticalgorithmsusingmapreduce_spark.sources.registry import (
+        read_table,
+    )
+    from geneticalgorithmsusingmapreduce_spark.streaming import (
+        ivf_rebuild as ir,
+    )
+
+    written = {}
+    parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        written[path.rsplit("/", 1)[-1]] = self._df
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    emb = read_table(spark, SF, "embeddings")
+    qz = emb.select("vec_id", F.expr(ann.quantize_expr()).alias("qv"))
+    rows = [
+        (r.vec_id, list(r.qv)) for r in qz.filter("vec_id < 8").collect()
+    ]
+    ir.write_generation(spark, emb, str(tmp_path / "idx"), 0, rows)
+    p8 = written["postings8"]
+    p = _plan(p8)
+    for node in ("CartesianProduct", "BroadcastNestedLoopJoin", "Exchange"):
+        assert node not in p, f"postings write plan has {node}:\n{p}"
+    size = len(p8._jdf.queryExecution().toString().encode())
+    assert size < POSTINGS8_EXPLAIN_BUDGET, (
+        f"postings write plan is {size} B of extended explain, budget "
+        f"{POSTINGS8_EXPLAIN_BUDGET} B"
+    )
