@@ -10,22 +10,24 @@ across batches; the buffered-children dedup becomes D1's intended
 semantics (dedup_genomes — the reference's HashMap dedup never actually
 deduplicated, SURVEY.md §2.13(2)).
 
-A generation tick stream drives the loop — each arriving tick advances
-one generation. At scale the same topology holds with a real source
-(Kafka etc.): ticks are control records; the population lives in parquet
-between batches exactly like the reference's per-iteration HDFS dirs.
+A generation tick stream drives the loop (streaming/microbatch.py) —
+each arriving tick advances one generation. At scale the same topology
+holds with a real source (Kafka etc.): ticks are control records; the
+population lives in parquet between batches exactly like the
+reference's per-iteration HDFS dirs.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import bits
 from ..operators import dedup, fitness as fit_ops, generate
 from ..plans import sga
 from ..runtime import free_checkpoint, local_checkpoint_truncated
+from .microbatch import run_micro_batches
 
 
 @dataclass
@@ -48,7 +50,9 @@ def start_incremental_sga(
     """Run ``generations`` micro-batches driven by a rate stream; returns
     the final IncrementalState. Fixed iteration count mirrors the
     incremental reference's stop rule (``reference
-    src/edu/illinois/incr_ga/IncMapReduce.java:512-513``)."""
+    src/edu/illinois/incr_ga/IncMapReduce.java:512-513``). Raises
+    RuntimeError if a generation fails or the run outlasts the
+    micro-batch driver's deadline — never a partial state."""
     nl = bits.n_longs(n_bits)
     state = IncrementalState(
         population=local_checkpoint_truncated(
@@ -59,16 +63,13 @@ def start_incremental_sga(
         )
     )
 
-    def one_batch(_batch_df: DataFrame, batch_id: int) -> None:
-        if state.generation >= generations:
-            return
+    def one_batch(b: int) -> None:
         # the loop knows its population size (pop_size at batch 0, the
         # previous batch's count after) — small generations route to
         # the one-pass wide shape, identical children (plans/sga)
         prev_n = state.history[-1][2] if state.history else pop_size
         children = sga.next_generation(
-            state.population, n_bits, seed, state.generation, n_buckets,
-            pop_rows=prev_n,
+            state.population, n_bits, seed, b, n_buckets, pop_rows=prev_n,
         )
         if dedup_children:
             children = dedup.dedup_genomes(children)
@@ -78,31 +79,12 @@ def start_incremental_sga(
         new_pop = local_checkpoint_truncated(
             fit_ops.with_fitness(children, nl=nl)
         )
-        import pyspark.sql.functions as F
-
         best, n = new_pop.agg(F.max("fitness"), F.count(F.lit(1))).collect()[0]
         old = state.population
         state.population = new_pop
-        state.history.append((state.generation + 1, best, n))
+        state.history.append((b + 1, best, n))
         free_checkpoint(old)  # release the rotated checkpoint's RDD blocks
-        # last: the driver thread watches this counter and stops the query
-        # once it reaches the target — everything above must be done by then
-        state.generation += 1
+        state.generation = b + 1
 
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1000).load()
-    )
-    q = (
-        stream.writeStream.foreachBatch(one_batch)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        import time
-
-        deadline = time.time() + 300
-        while state.generation < generations and time.time() < deadline:
-            time.sleep(0.2)
-    finally:
-        q.stop()
+    run_micro_batches(spark, generations, one_batch, name="incremental_sga")
     return state

@@ -1,4 +1,4 @@
-"""IVF index rebuild as generation N+1 (r9 VERDICT "Next round" #3).
+"""IVF index rebuild as generation N+1.
 
 ``ivf_append`` keeps an ingesting index append-only and returns list-size
 skew as the re-train ALARM; this module is what a production system does
@@ -39,6 +39,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import ann
+from .ivf_append import _ingest_batch
+from .microbatch import run_micro_batches
 
 GEN_MARKER = "_COMMITTED"
 
@@ -176,19 +178,24 @@ def start_ivf_append_gen(
     rebuild_skew: float | None = None,
     timeout_sec: float = 300,
 ) -> IvfGenAppendState:
-    """The append sink with the ALARM → REBUILD loop composed in (r10
-    VERDICT "Next round" #6): ``ivf_append`` computes list-size skew as
-    a measurement and ``rebuild_index`` exists as a separate manual
-    step; here the two are wired inside ONE foreachBatch maintenance
-    path (the compact_postings_lists composition pattern,
-    ivf_append.py) — ingestion appends int8 postings to the CURRENT
-    committed generation, and when the running max/mean list-size skew
-    exceeds ``rebuild_skew`` the maintenance step retrains on the full
-    ingested corpus, writes generation N+1, records the serve
-    generation MID-REBUILD (provably still N — the atomic-marker
-    discipline means a half-written generation is invisible), commits
-    N+1 atomically, deletes N, and continues appending against the new
-    centroids.
+    """The append sink with the ALARM → REBUILD loop composed in:
+    ``ivf_append`` computes list-size skew as a measurement and
+    ``rebuild_index`` exists as a separate manual step; here the two
+    are wired inside ONE foreachBatch maintenance path. Ingestion runs
+    the append sink's own step (``ivf_append._ingest_batch``) against
+    the CURRENT committed generation — generation 0 is committed only
+    after its first postings land, since a committed but postings-empty
+    generation would serve an empty index. When the running max/mean
+    list-size skew exceeds ``rebuild_skew`` the maintenance step
+    retrains on the full ingested corpus, writes generation N+1,
+    records the serve generation MID-REBUILD (provably still N — the
+    atomic-marker discipline means a half-written generation is
+    invisible), commits N+1 atomically and continues appending against
+    the new centroids. Generation N is deleted one batch later (see
+    ``pending_gc``), not in the committing step, so an in-flight reader
+    still scanning N survives the commit; generations superseded in the
+    final batch stay in ``state.pending_gc`` for the caller's explicit
+    GC.
 
     At 100 TB: per batch the work is unchanged from start_ivf_append
     (batch-only scan + partitioned append + C scalars of skew state);
@@ -196,62 +203,21 @@ def start_ivf_append_gen(
     write — the price of a re-train, paid only when the alarm says the
     Voronoi layout has drifted, while queries keep serving generation
     N until the single metadata commit."""
-    import time
-
     state = IvfGenAppendState(index_dir)
 
-    def _append_batch(batch: DataFrame, gdir: str) -> list:
-        # persisted so the per-list count reuses the written rows
-        # instead of re-running the encode scan
-        p8 = ann.encode_postings_int8(batch, state.centroid_rows).persist()
-        try:
-            p8.write.mode("append").partitionBy("cent_id").parquet(
-                f"{gdir}/postings8"
-            )
-            return p8.groupBy("cent_id").count().collect()
-        finally:
-            p8.unpersist()
-
-    def one_batch(_df: DataFrame, _bid: int) -> None:
-        b = state.batches_done
-        if b >= n_batches:
-            return
-        # deferred GC (r11 ADVICE): a generation superseded in an
-        # EARLIER batch is deleted here, one grace batch after its
-        # replacement committed — deleting in the same maintenance step
-        # as the commit would pull files out from under an in-flight
-        # reader still scanning generation N. Leftovers at stream end
-        # stay in state.pending_gc for the caller's explicit GC.
+    def one_batch(b: int) -> None:
         while state.pending_gc:
             gone = state.pending_gc.pop(0)
             delete_generation(spark, index_dir, gone)
             state.gc_done.append((b, gone))
         batch = emb.filter(F.col("vec_id") % n_batches == b)
-        gdir = f"{index_dir}/gen={state.gen}"
-        if b == 0:
-            rows, _ = ann.train_centroid_rows(
-                batch, n_centroids, iters,
-                compute_inertia=False, seed_by_rank=True,
-            )
-            state.centroid_rows = rows
-            spark.createDataFrame(
-                rows, ann.CENTROID_SCHEMA
-            ).write.mode("overwrite").parquet(f"{gdir}/centroids")
-        counts = _append_batch(batch, gdir)
-        if b == 0:
-            # commit AFTER the first postings land: a committed but
-            # postings-empty generation would serve an empty index
-            commit_generation(spark, index_dir, state.gen)
-        for r in counts:
-            state.list_sizes[int(r["cent_id"])] = (
-                state.list_sizes.get(int(r["cent_id"]), 0) + r["count"]
-            )
-        sizes = list(state.list_sizes.values())
-        skew = (
-            round(max(sizes) * len(sizes) / sum(sizes), 3)
-            if sizes else 0.0
+        n_rows, skew = _ingest_batch(
+            spark, state, batch, b, f"{index_dir}/gen={state.gen}",
+            n_centroids, iters,
         )
-        state.history.append((b, sum(sizes), skew, state.gen))
+        if b == 0:
+            commit_generation(spark, index_dir, state.gen)
+        state.history.append((b, n_rows, skew, state.gen))
         if rebuild_skew is not None and skew > rebuild_skew:
             old, new = state.gen, state.gen + 1
             ingested = emb.filter(F.col("vec_id") % n_batches <= b)
@@ -265,9 +231,6 @@ def start_ivf_append_gen(
                 serve_generation(spark, index_dir)
             )
             commit_generation(spark, index_dir, new)
-            # NOT deleted here: the module's own discipline documents
-            # deletion as a separate post-swap step (r11 ADVICE) —
-            # queued for the next batch's maintenance step instead
             state.pending_gc.append(old)
             state.gen = new
             state.centroid_rows = rows
@@ -280,29 +243,7 @@ def start_ivf_append_gen(
             state.rebuilds.append((b, old, new, skew))
         state.batches_done = b + 1
 
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1000).load()
+    run_micro_batches(
+        spark, n_batches, one_batch, timeout_sec, name="ivf_append_gen"
     )
-    q = (
-        stream.writeStream.foreachBatch(one_batch)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + timeout_sec
-        while state.batches_done < n_batches and time.time() < deadline:
-            if not q.isActive:
-                exc = q.exception()
-                raise RuntimeError(
-                    f"ivf_append_gen: stream died after "
-                    f"{state.batches_done}/{n_batches} batches"
-                ) from exc
-            time.sleep(0.2)
-    finally:
-        q.stop()
-    if state.batches_done < n_batches:
-        raise RuntimeError(
-            f"ivf_append_gen: only {state.batches_done}/{n_batches} "
-            "batches completed before the deadline"
-        )
     return state

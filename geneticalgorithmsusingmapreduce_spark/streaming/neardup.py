@@ -1,5 +1,4 @@
-"""Streaming near-dup: cross-batch LSH state (r8 — r7 VERDICT
-"What's missing" #3).
+"""Streaming near-dup: cross-batch LSH state.
 
 An incremental corpus pipeline must near-dedup NEW documents against
 everything already ingested, not just within the arriving batch.
@@ -10,7 +9,7 @@ sorted distinct-shingle sets (the verification side), exactly the
 durable artifacts the batch pipeline already defines
 (operators/textops.py lsh_band_rows / jaccard_pairs).
 
-Topology per micro-batch (foreachBatch, the incremental_sga pattern —
+Topology per micro-batch (streaming/microbatch.py —
 ``reference src/edu/illinois/incr_ga/IncMapReduce.java:241-325`` is the
 same buffered-state-across-runs idea on the forked Hadoop):
 
@@ -47,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import textops
 from ..runtime import free_checkpoint, local_checkpoint_truncated
+from .microbatch import run_micro_batches
 
 
 @dataclass
@@ -87,8 +87,7 @@ def start_streaming_neardup(
 
     ``max_bucket`` is the hot-bucket skew guard applied to the probe
     sides of each batch's candidate join — the production dial on
-    low-entropy corpora (the textops story). Two guard modes (r8
-    VERDICT "What's wrong" #4):
+    low-entropy corpora (the textops story). Two guard modes:
 
     - "cumulative": prune on the history's RUNNING bucket counts — a
       bucket is skipped from the batch where it crosses the cap on.
@@ -135,10 +134,7 @@ def start_streaming_neardup(
             return band_rows.join(hot, ["band", "bucket"], "left_anti")
         return textops._prune_hot_buckets(band_rows, max_bucket)
 
-    def one_batch(_df: DataFrame, _bid: int) -> None:
-        b = state.batches_done
-        if b >= n_batches:
-            return
+    def one_batch(b: int) -> None:
         batch_docs = docs.filter(F.col("doc_id") % n_batches == b)
         sh = textops.shingles_hashed(batch_docs)
         new_sets = _doc_sets(sh)
@@ -194,7 +190,7 @@ def start_streaming_neardup(
             )
         )
         # LAZY checkpoint, materialized by the count below — one job per
-        # batch where eager + count was two (r14; the _star_loop "one
+        # batch where eager + count would be two (the _star_loop "one
         # job per round" trick)
         new_res = local_checkpoint_truncated(
             state.results.unionByName(verified), eager=False
@@ -207,35 +203,20 @@ def start_streaming_neardup(
         )
         state.history.append((b, n_new))
         for df in old:
-            # r8 ADVICE: plain unpersist() does NOT free localCheckpoint
-            # RDD blocks — a long stream would accumulate storage for
-            # every superseded state generation; free the checkpointed
-            # RDD explicitly (production-scale streams should persist
-            # history as appended parquet instead — module doc)
+            # plain unpersist() does NOT free localCheckpoint RDD blocks
+            # — a long stream would accumulate storage for every
+            # superseded state generation (production-scale streams
+            # should persist history as appended parquet instead —
+            # module doc)
             free_checkpoint(df)
         state.batches_done = b + 1
 
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1000).load()
-    )
-    q = (
-        stream.writeStream.foreachBatch(one_batch)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
     try:
-        import time
-
-        deadline = time.time() + timeout_sec
-        while state.batches_done < n_batches and time.time() < deadline:
-            time.sleep(0.2)
+        run_micro_batches(
+            spark, n_batches, one_batch, timeout_sec,
+            name="streaming_neardup",
+        )
     finally:
-        q.stop()
         if hot is not None:
             free_checkpoint(hot)
-    if state.batches_done < n_batches:
-        raise RuntimeError(
-            f"streaming_neardup: only {state.batches_done}/{n_batches} "
-            "batches completed before the deadline"
-        )
     return state

@@ -1,6 +1,6 @@
-"""Streaming semantic dedup: cross-batch embedding near-dup (r11 —
-extends the streaming family's exact-digest → MinHash/LSH ladder with
-its embedding rung).
+"""Streaming semantic dedup: cross-batch embedding near-dup — the
+embedding rung of the streaming family's exact-digest → MinHash/LSH
+ladder.
 
 An incremental corpus pipeline must semantically dedup NEW documents
 against everything already ingested. The state the SemDeDup restriction
@@ -10,9 +10,9 @@ vector + Voronoi cell under centroids trained once on batch 0 — the
 fixed-quantizer discipline of streaming/ivf_append.py; re-training is
 the rebuild lifecycle's job, streaming/ivf_rebuild.py).
 
-Topology per micro-batch (foreachBatch, the streaming/neardup.py
-pattern; the reference analog is the forked incremental Hadoop's
-buffered-state-across-runs idea,
+Topology per micro-batch (streaming/microbatch.py; the reference
+analog is the forked incremental Hadoop's buffered-state-across-runs
+idea,
 ``reference src/edu/illinois/incr_ga/IncMapReduce.java:241-325``):
 
     batch vecs → Arrow assignment kernel (vs FIXED batch-0 centroids)
@@ -44,10 +44,8 @@ Two variants:
   through the cent_id exchange every batch (ΣB ≈ B²/2 history-bytes
   over B batches) and batch-0 training is flat Lloyd's over the full
   batch (an n·C/3 term). Kept as the minimal-moving-parts form and the
-  r11 gate entry.
-* ``start_streaming_semdedup_durable`` — the scale shape its docstring
-  promised (r11 VERDICT "Next round" #1; zone maps / int8 sketch /
-  compaction / quantizer lifecycle r12 #2-#3): history lives as
+  ``streaming_semdedup`` gate entry.
+* ``start_streaming_semdedup_durable`` — the scale shape: history lives as
   (batch, cent_id)-PARTITIONED PARQUET inside an atomically-committed
   GENERATION directory, with an int8 SKETCH sidecar and per-directory
   angular ZONE rows. Each batch re-reads only what can still pair:
@@ -56,9 +54,9 @@ Two variants:
   only — three provably output-invariant stages, so per-batch history
   bytes track sketch-size + candidate mass even under UNIFORM
   arrivals, where plain probed-cell pruning degenerates to re-reading
-  the whole store (the r12 probe's honest finding). Batch-0 training
-  runs on a deterministic fixed-modulus sample (train_filter replay —
-  the oracle stays symbolic); recency-banded compaction bounds the
+  the whole store. Batch-0 training runs on a deterministic
+  fixed-modulus sample (train_filter replay — the oracle stays
+  symbolic); recency-banded compaction bounds the
   file count; a hot-cell alarm retrains the quantizer into generation
   N+1 with the ivf_rebuild marker discipline. Pairs land per batch in
   a found_batch-partitioned store outside the generations, so driver
@@ -74,6 +72,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, \
 
 from ..operators import ann
 from ..runtime import free_checkpoint, local_checkpoint_truncated
+from .microbatch import run_micro_batches
 
 _ASSIGN_SCHEMA = "vec_id long, cent_id long, qv array<long>, n2 long"
 _PAIR_BATCH_SCHEMA = (
@@ -139,8 +138,6 @@ def start_streaming_semdedup(
     (routing vec_id % n_batches), semantically deduping each batch
     against the cumulative assignment history. Returns the final state;
     ``results`` carries [vec_a, vec_b, dot, na2, nb2, found_batch]."""
-    import time
-
     t2 = tau_milli * tau_milli
     state = SemDedupState(
         assigned=spark.createDataFrame([], _ASSIGN_SCHEMA),
@@ -151,10 +148,7 @@ def start_streaming_semdedup(
 
     new_vs_all = _new_vs_all_fn(t2)
 
-    def one_batch(_df: DataFrame, _bid: int) -> None:
-        b = state.batches_done
-        if b >= n_batches:
-            return
+    def one_batch(b: int) -> None:
         batch = emb.filter(F.col("vec_id") % n_batches == b)
         if b == 0:
             rows, _ = ann.train_centroid_rows(
@@ -190,31 +184,9 @@ def start_streaming_semdedup(
         free_checkpoint(asg)
         state.batches_done = b + 1
 
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1000).load()
+    run_micro_batches(
+        spark, n_batches, one_batch, timeout_sec, name="streaming_semdedup"
     )
-    q = (
-        stream.writeStream.foreachBatch(one_batch)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + timeout_sec
-        while state.batches_done < n_batches and time.time() < deadline:
-            if not q.isActive:
-                exc = q.exception()
-                raise RuntimeError(
-                    f"streaming_semdedup: stream died after "
-                    f"{state.batches_done}/{n_batches} batches"
-                ) from exc
-            time.sleep(0.2)
-    finally:
-        q.stop()
-    if state.batches_done < n_batches:
-        raise RuntimeError(
-            f"streaming_semdedup: only {state.batches_done}/{n_batches} "
-            "batches completed before the deadline"
-        )
     return state
 
 
@@ -527,9 +499,9 @@ def compact_semdedup_history(
     spark: SparkSession, gen_dir: str, keep_recent: int = 1
 ) -> dict:
     """RECENCY-BANDED compaction of the durable store's
-    one-directory-per-(batch, cell) layout (r12 VERDICT "Next round"
-    #2, second lever): merge every band except the ``keep_recent``
-    newest REAL batches into ONE negative-id band — fewer, larger
+    one-directory-per-(batch, cell) layout: merge every band except
+    the ``keep_recent`` newest REAL batches into ONE negative-id band
+    — fewer, larger
     files per cell (the layout_compaction discipline applied inside
     the partitioned store), while recent batches keep their own
     fine-grained zone rows (recent data is both the most likely to be
@@ -641,8 +613,7 @@ def start_streaming_semdedup_durable(
     timeout_sec: float = 300,
 ) -> DurableSemDedupState:
     """Cross-batch semantic dedup with DURABLE cent_id-partitioned
-    history (r11 VERDICT "Next round" #1 — the scale shape the
-    in-memory variant's docstring named but didn't implement).
+    history — the scale shape of the in-memory variant.
 
     Store layout (generation-wrapped, the ivf_rebuild marker
     discipline — pairs are generation-INDEPENDENT):
@@ -663,11 +634,11 @@ def start_streaming_semdedup_durable(
     stages, each OUTPUT-INVARIANT (the gate entry's hash is unchanged
     by any of them):
 
-      1. ZONE SKIP (r12 "Next round" #2, first lever): per probed
-         cell, the batch's theta interval vs each (band, cell) zone
-         row — spherical triangle inequality, a directory whose
-         angular gap exceeds arccos(τ) cannot hold a ≥τ partner and
-         is skipped BEFORE any read (driver-side, C·bands scalars).
+      1. ZONE SKIP: per probed cell, the batch's theta interval vs
+         each (band, cell) zone row — spherical triangle inequality,
+         a directory whose angular gap exceeds arccos(τ) cannot hold
+         a ≥τ partner and is skipped BEFORE any read (driver-side,
+         C·bands scalars).
       2. SKETCH PRE-FILTER (the uniform-regime lever): the surviving
          directories are read from the int8 SKETCH store (~6× fewer
          bytes than the full qv rows) and a per-cell Arrow kernel
@@ -679,9 +650,8 @@ def start_streaming_semdedup_durable(
          fresh-triangle + fresh×history kernel + exact decimal
          certificate decide. Under uniform arrivals — where plain
          directory pruning degenerates to re-reading ~the whole store
-         every batch (the r12 probe's honest finding) — per-batch
-         history bytes now track sketch-size + candidate mass, not
-         store size.
+         every batch — per-batch history bytes now track sketch-size
+         + candidate mass, not store size.
 
     Maintenance, composed into the same foreachBatch loop:
 
@@ -690,11 +660,11 @@ def start_streaming_semdedup_durable(
         ``compact_keep_recent`` real batches into one negative-id
         band — bounding the directory/file count the per-batch listing
         pays, with zone envelopes folded conservatively.
-      * ``rebuild_hot_frac`` (r12 "Next round" #3 — the quantizer
-        LIFECYCLE): when a batch's hottest-cell fraction exceeds the
-        threshold (the ivf_append skew-alarm idea: drifted arrivals
-        collapse into few cells of the frozen batch-0 quantizer,
-        gutting the cluster restriction's selectivity), retrain on the
+      * ``rebuild_hot_frac`` (the quantizer LIFECYCLE): when a
+        batch's hottest-cell fraction exceeds the threshold (the
+        ivf_append skew-alarm idea: drifted arrivals collapse into few
+        cells of the frozen batch-0 quantizer, gutting the cluster
+        restriction's selectivity), retrain on the
         deterministic sample of history ∪ batch, re-enrich the WHOLE
         store into generation N+1 (same one-pass kernel, from qv),
         commit it atomically (ivf_rebuild's marker discipline — a
@@ -719,7 +689,6 @@ def start_streaming_semdedup_durable(
     here as a partitioned columnar store instead of re-shipped
     sequence files."""
     import os
-    import time
 
     from . import ivf_rebuild as gens
 
@@ -764,10 +733,7 @@ def start_streaming_semdedup_durable(
             for r in cell_stats
         ])
 
-    def one_batch(_df: DataFrame, _bid: int) -> None:
-        b = state.batches_done
-        if b >= n_batches:
-            return
+    def one_batch(b: int) -> None:
         # deferred GC of a generation superseded in an earlier batch
         # (the ivf_append_gen grace-batch discipline)
         while state.pending_gc:
@@ -789,17 +755,15 @@ def start_streaming_semdedup_durable(
                 compute_inertia=False, seed_by_rank=True,
             )
             state.centroid_rows = rows
-        # persist, not eager localCheckpoint (r14 job-count cut): the
-        # enrich kernel feeds 4-5 consumers (cell stats, pre-filter
-        # union, fresh pair side, assign/sketch writes) and must
-        # materialize once — but the eager checkpoint spent a DEDICATED
-        # job on that, immediately followed by the cell_stats collect.
-        # The cache's first action (the collect below) materializes the
-        # persist instead: one job where there were two, every batch.
-        # The plan behind the cache is two nodes (filter ∘ mapInPandas
-        # over the source leaf), so the r13 nested-innerChildren
-        # stringification trap does not apply; free_checkpoint at batch
-        # end falls back to unpersist for plain cached frames.
+        # persist, not eager localCheckpoint: the enrich kernel feeds
+        # 4-5 consumers (cell stats, pre-filter union, fresh pair side,
+        # assign/sketch writes) and must materialize once, and the
+        # cache's first action (the cell_stats collect below) does that
+        # — an eager checkpoint would spend a dedicated job on it. The
+        # plan behind the cache is two nodes (filter ∘ mapInPandas over
+        # the source leaf), so there is no nested plan tree to truncate;
+        # free_checkpoint at batch end falls back to unpersist for plain
+        # cached frames.
         asg = (
             batch.select("vec_id", "embedding").mapInPandas(
                 _enrich_kernel(state.centroid_rows, from_qv=False),
@@ -877,10 +841,9 @@ def start_streaming_semdedup_durable(
                     ))
                 )
                 # persist + let the candidate-dir collect be the
-                # materializing action (r14 job-count cut, same move as
-                # the asg persist above): the eager checkpoint burned a
-                # job, then the distinct-collect burned another over the
-                # checkpointed blocks. One job now does both.
+                # materializing action (same move as the asg persist
+                # above): one job, where an eager checkpoint followed by
+                # the distinct-collect would be two.
                 cand = pre.groupBy("cent_id").applyInPandas(
                     prefilter,
                     schema="cent_id long, batch long, vec_id long",
@@ -939,11 +902,9 @@ def start_streaming_semdedup_durable(
             .filter(F.expr(_keep_expr(t2)))
             .withColumn("found_batch", F.lit(b).cast("long"))
         )
-        # n_new rides the write via observe() (r13 VERDICT "Next round"
-        # #6): the previous form re-read the just-written found_batch=b
-        # directory and count()ed it — one extra Spark job per batch
-        # (plus a driver isdir probe) for a number the write's own scan
-        # already knows. Pairs bytes on disk are identical.
+        # n_new rides the write via observe(): the write's own scan
+        # counts the pairs, so no extra job re-reads the found_batch=b
+        # directory.
         pairs_obs = Observation()
         new_pairs.observe(
             pairs_obs, F.count(F.lit(1)).alias("n")
@@ -1043,31 +1004,10 @@ def start_streaming_semdedup_durable(
             state.rebuilds.append((b, old, new, round(hot, 4)))
         state.batches_done = b + 1
 
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1000).load()
+    run_micro_batches(
+        spark, n_batches, one_batch, timeout_sec,
+        name="streaming_semdedup_durable",
     )
-    q = (
-        stream.writeStream.foreachBatch(one_batch)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + timeout_sec
-        while state.batches_done < n_batches and time.time() < deadline:
-            if not q.isActive:
-                exc = q.exception()
-                raise RuntimeError(
-                    f"streaming_semdedup_durable: stream died after "
-                    f"{state.batches_done}/{n_batches} batches"
-                ) from exc
-            time.sleep(0.2)
-    finally:
-        q.stop()
-    if state.batches_done < n_batches:
-        raise RuntimeError(
-            f"streaming_semdedup_durable: only {state.batches_done}/"
-            f"{n_batches} batches completed before the deadline"
-        )
     return state
 
 

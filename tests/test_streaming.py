@@ -1,16 +1,23 @@
 """Streaming surface: the windowed transforms must produce the same result
 under readStream as in batch (T1's micro-batch ≡ one-job-per-generation
-equivalence, SURVEY.md §2.11), and the incremental SGA must advance its
-population across micro-batches."""
+equivalence, SURVEY.md §2.11), the incremental SGA must advance its
+population across micro-batches, and a failing or stalled micro-batch
+must surface as a named error instead of a partial result."""
 
 from __future__ import annotations
 
 import tempfile
+import time
 
+import pytest
 from pyspark.sql import functions as F
 
+from geneticalgorithmsusingmapreduce_spark.plans import sga
 from geneticalgorithmsusingmapreduce_spark.sources.registry import read_events
 from geneticalgorithmsusingmapreduce_spark.streaming import incremental, windows
+from geneticalgorithmsusingmapreduce_spark.streaming.microbatch import (
+    run_micro_batches,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -241,6 +248,55 @@ def test_incremental_sga_advances(spark):
     assert max(bests) >= bests[0]  # selection pressure present
 
 
+def test_micro_batch_step_failure_raises_fast(spark):
+    # a raising step kills the query; the driver must name the failure
+    # at once, not poll until the deadline
+    done = []
+
+    def step(b):
+        if b == 1:
+            raise ValueError("step-one-failed")
+        done.append(b)
+
+    t0 = time.monotonic()
+    with pytest.raises(
+        RuntimeError, match=r"^probe: stream died after 1/3 batches$"
+    ) as ei:
+        run_micro_batches(spark, 3, step, timeout_sec=120, name="probe")
+    assert time.monotonic() - t0 < 60
+    assert "step-one-failed" in str(ei.value.__cause__)
+    assert done == [0]
+
+
+def test_micro_batch_deadline_raises(spark):
+    def step(_b):
+        time.sleep(3)
+
+    with pytest.raises(
+        RuntimeError,
+        match=r"^probe: only 0/2 batches completed before the deadline$",
+    ):
+        run_micro_batches(spark, 2, step, timeout_sec=1, name="probe")
+
+
+def test_incremental_sga_generation_failure_raises(spark, monkeypatch):
+    # the sink must not return a partial state when a generation fails
+    def failing_generation(*_args, **_kwargs):
+        raise ValueError("generation-failed")
+
+    monkeypatch.setattr(sga, "next_generation", failing_generation)
+    t0 = time.monotonic()
+    with pytest.raises(
+        RuntimeError, match=r"^incremental_sga: stream died after 0/2 batches$"
+    ) as ei:
+        incremental.start_incremental_sga(
+            spark, n_bits=64, pop_size=64, generations=2, seed=13,
+            n_buckets=2,
+        )
+    assert time.monotonic() - t0 < 60
+    assert "generation-failed" in str(ei.value.__cause__)
+
+
 def test_streaming_neardup_cross_batch_state(spark):
     # r8: a near-dup pair split across micro-batches must be found in
     # the LATER member's batch via the signature history; a within-batch
@@ -272,29 +328,46 @@ def test_streaming_neardup_cross_batch_state(spark):
 
 
 def test_ivf_append_reused_index_dir_is_cleared(spark, tmp_path):
-    # ADVICE r10: the per-batch postings writes are mode(append), so a
-    # second ingestion into the SAME index_dir must clear the stale
-    # postings8 layout on batch 0 — otherwise every vector is silently
-    # duplicated in the durable index (centroids were already overwrite
-    # for exactly this reuse case; the guard must be consistent)
+    # the per-batch postings writes are mode(append), so an ingestion
+    # into a directory that already holds postings must clear them on
+    # batch 0 — otherwise every vector is silently duplicated in the
+    # durable index. Two inputs: a second plain append into the same
+    # index_dir, and the generation sink over a leftover UNCOMMITTED
+    # gen=0 (a crashed earlier run) that it then commits and serves.
     from geneticalgorithmsusingmapreduce_spark.sources.registry import (
         read_table,
     )
-    from geneticalgorithmsusingmapreduce_spark.streaming import ivf_append
+    from geneticalgorithmsusingmapreduce_spark.streaming import (
+        ivf_append,
+        ivf_rebuild,
+    )
 
     emb = read_table(spark, SF, "embeddings")
     n = emb.count()
-    d = str(tmp_path / "idx")
-    st = ivf_append.start_ivf_append(
-        spark, emb, d, n_batches=2, n_centroids=4, iters=1
-    )
-    assert st.batches_done == 2
-    assert spark.read.parquet(f"{d}/postings8").count() == n
-    st2 = ivf_append.start_ivf_append(
-        spark, emb, d, n_batches=2, n_centroids=4, iters=1
-    )
-    assert st2.batches_done == 2
-    assert spark.read.parquet(f"{d}/postings8").count() == n  # not 2n
+    for sink in ("append", "append_gen"):
+        d = str(tmp_path / sink)
+        stale = d if sink == "append" else f"{d}/gen=0"
+        st = ivf_append.start_ivf_append(
+            spark, emb, stale, n_batches=2, n_centroids=4, iters=1
+        )
+        assert st.batches_done == 2
+        assert spark.read.parquet(f"{stale}/postings8").count() == n
+        if sink == "append":
+            st2 = ivf_append.start_ivf_append(
+                spark, emb, d, n_batches=2, n_centroids=4, iters=1
+            )
+            postings = spark.read.parquet(f"{d}/postings8")
+        else:
+            st2 = ivf_rebuild.start_ivf_append_gen(
+                spark, emb, d, n_batches=2, n_centroids=4, iters=1,
+                rebuild_skew=None,
+            )
+            assert ivf_rebuild.committed_generations(spark, d) == [0]
+            _, postings = ivf_rebuild.read_serve_tables(spark, d)
+        assert st2.batches_done == 2
+        ids = [r.vec_id for r in postings.select("vec_id").collect()]
+        assert len(ids) == n, sink  # not 2n
+        assert len(set(ids)) == n, sink
 
 
 def test_ivf_append_compaction_reduces_files_content_invariant(
