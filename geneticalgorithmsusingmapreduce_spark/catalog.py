@@ -3218,9 +3218,7 @@ def trained_centroid_rows(
 
 
 def _trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.createDataFrame(
-        trained_centroid_rows(spark, sf_dir), ann_ops.CENTROID_SCHEMA
-    )
+    return ann_ops.centroid_frame(spark, trained_centroid_rows(spark, sf_dir))
 
 
 @register(
@@ -3360,19 +3358,16 @@ def emb_ivf_postings_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from .streaming import ivf_rebuild as ir
+
     emb = read_table(spark, sf_dir, "embeddings")
     rows = trained_centroid_rows(spark, sf_dir)
-    cents = spark.createDataFrame(rows, ann_ops.CENTROID_SCHEMA)
     p8 = ann_ops.encode_postings_int8(emb, rows)
     d = tempfile.mkdtemp(prefix="gamr_ivf_int8_")
     try:
         p8.write.partitionBy("cent_id").parquet(f"{d}/postings8")
-        cents.write.parquet(f"{d}/centroids")
-        back_cents = spark.read.parquet(f"{d}/centroids")
-        postings = spark.read.parquet(f"{d}/postings8").select(
-            "vec_id", "v8", "scale",
-            F.col("cent_id").cast("long").alias("cent_id"),
-        )
+        ann_ops.centroid_frame(spark, rows).write.parquet(f"{d}/centroids")
+        back_cents, postings = ir.read_index_tables(spark, d)
         out = ann_ops.ivf_serve_topk_int8(postings, back_cents)
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
@@ -3531,7 +3526,7 @@ def _pq_residual_codebook_rows(spark: SparkSession, sf_dir: str) -> list:
     if key not in _PQ_CACHE:
         emb = read_table(spark, sf_dir, "embeddings")
         cent_rows = trained_centroid_rows(spark, sf_dir)
-        cents = spark.createDataFrame(cent_rows, ann_ops.CENTROID_SCHEMA)
+        cents = ann_ops.centroid_frame(spark, cent_rows)
         qz = emb.select(
             "vec_id", F.expr(ann_ops.quantize_expr()).alias("qv")
         )
@@ -3608,17 +3603,13 @@ def emb_ivf_append_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .streaming import ivf_append as ia
+    from .streaming import ivf_append as ia, ivf_rebuild as ir
 
     emb = read_table(spark, sf_dir, "embeddings")
     d = tempfile.mkdtemp(prefix="gamr_ivf_append_")
     try:
         ia.start_ivf_append(spark, emb, d, n_batches=3)
-        back_cents = spark.read.parquet(f"{d}/centroids")
-        postings = spark.read.parquet(f"{d}/postings8").select(
-            "vec_id", "v8", "scale",
-            F.col("cent_id").cast("long").alias("cent_id"),
-        )
+        back_cents, postings = ir.read_index_tables(spark, d)
         out = ann_ops.ivf_serve_topk_int8(postings, back_cents)
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
@@ -3645,18 +3636,14 @@ def emb_ivf_append_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .streaming import ivf_append as ia
+    from .streaming import ivf_append as ia, ivf_rebuild as ir
 
     emb = read_table(spark, sf_dir, "embeddings")
     d = tempfile.mkdtemp(prefix="gamr_ivf_compact_")
     try:
         st = ia.start_ivf_append(spark, emb, d, n_batches=3, compact_after=2)
         assert st.compactions, "compaction threshold never tripped"
-        back_cents = spark.read.parquet(f"{d}/centroids")
-        postings = spark.read.parquet(f"{d}/postings8").select(
-            "vec_id", "v8", "scale",
-            F.col("cent_id").cast("long").alias("cent_id"),
-        )
+        back_cents, postings = ir.read_index_tables(spark, d)
         out = ann_ops.ivf_serve_topk_int8(postings, back_cents)
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)

@@ -118,12 +118,20 @@ def _i64_matmul(a, b):
     64 · 577,001² ≈ 2.1e13; residual components at most double the
     base range, 8-term subspace sums ≤ 1.1e13), so the float64 path
     is BIT-IDENTICAL to integer arithmetic — and it reaches BLAS,
-    where numpy's int64 @ is a naive non-BLAS loop ~100× slower
-    (measured: the C=8192 sized-SemDeDup assignment pass went from
-    ~20 min to seconds at 2.4M×64)."""
+    where numpy's int64 @ is a naive non-BLAS loop ~100× slower."""
     import numpy as np
 
     return (a.astype(np.float64) @ b.astype(np.float64)).astype(np.int64)
+
+
+def _head_per_group(order, keys, n: int):
+    """``order``, a lexsort whose primary key is ``keys``, cut to the
+    first n entries of each key: row_number() <= n over a window
+    partitioned by ``keys``."""
+    import numpy as np
+
+    g = keys[order]
+    return order[np.arange(len(g)) - np.searchsorted(g, g) < n]
 
 
 def _q(arr: str, j: int) -> str:
@@ -230,19 +238,15 @@ def topk_dot_numpy(
 
     def block_topk(batches):
         for pdf in batches:
-            cm = _quantize_batch(pdf)  # (N, D)
-            dots = qm @ cm.T  # (Q, N)
+            dots = _quantize_batch(pdf) @ qm.T  # (N, Q)
             vids = pdf["vec_id"].to_numpy()
-            out = {"query_id": [], "vec_id": [], "dot": []}
-            for qi in range(len(qids)):
-                mask = vids != qids[qi]
-                d, v = dots[qi][mask], vids[mask]
-                # partial top-k per block (order fixed by final window)
-                idx = np.lexsort((v, -d))[:k]
-                out["query_id"].extend([qids[qi]] * len(idx))
-                out["vec_id"].extend(v[idx])
-                out["dot"].extend(d[idx])
-            yield pd.DataFrame(out)
+            n, qi = np.nonzero(vids[:, None] != qids)
+            q, v, d = qids[qi], vids[n], dots[n, qi]
+            # partial top-k per block (order fixed by final window)
+            top = _head_per_group(np.lexsort((v, -d, q)), q, k)
+            yield pd.DataFrame(
+                {"query_id": q[top], "vec_id": v[top], "dot": d[top]}
+            )
 
     from pyspark.sql import Window
 
@@ -290,14 +294,9 @@ def train_centroid_rows(
     combine, so what reaches the driver is exactly C×D scalars — the
     new model itself, which a driver-hosted Lloyd's loop must hold
     anyway to ship into the next iteration's closure (the reference's
-    J2 broadcast-scalars pattern, at its irreducible size). Before r5
-    the driver folded C×n_batches partial rows itself — equivalent
-    here, but at cluster scale n_batches = task count and the driver
-    fold would grow as tasks×C×D while the grouped form stays C×D.
-    An even earlier expression form (crossJoin + 64-term qdot +
-    posexplode means) was execution-equivalent but paid ~1.4 s of
-    Catalyst/codegen per iteration at tiny data sizes — the kernel
-    plan is constant-size."""
+    J2 broadcast-scalars pattern, at its irreducible size); a driver
+    fold of the partial rows would grow as tasks×C×D. The kernel plan
+    is constant-size."""
     import numpy as np
     import pandas as pd
 
@@ -332,9 +331,8 @@ def train_centroid_rows(
                 # picks the first maximum, matching struct(score, -cent);
                 # chunked so the score block stays bounded at large C
                 best = _argmax_dot_chunked(xm, cm, cnorm)  # (N,)
-                # sort-based group fold (exact int64, order-free sums):
-                # the earlier per-centroid Python mask loop was O(C·N)
-                # per batch — 8192 passes at corpus-sized C
+                # sort-based group fold (exact int64, order-free sums),
+                # not one mask pass per centroid (O(C·N) per batch)
                 order = np.argsort(best, kind="stable")
                 ub, starts = np.unique(best[order], return_index=True)
                 sums = np.add.reduceat(xm[order], starts, axis=0)
@@ -408,6 +406,18 @@ def train_centroid_rows(
 CENTROID_SCHEMA = "cent_id long, cv array<long>"
 
 
+def centroid_frame(spark, rows: list) -> DataFrame:
+    """Centroid rows ``[(cent_id, [D ints])]`` as a CENTROID_SCHEMA
+    DataFrame, from a pyarrow.Table the JVM reads directly: Python rows
+    would pay a Python worker's fixed cost (a few hundred ms)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table({
+        "cent_id": pa.array([cid for cid, _ in rows], pa.int64()),
+        "cv": pa.array([list(cv) for _, cv in rows], pa.list_(pa.int64())),
+    }))
+
+
 def train_centroids(
     emb: DataFrame, n_centroids: int = N_CENTROIDS, iters: int = 3,
     compute_inertia: bool = True,
@@ -417,7 +427,7 @@ def train_centroids(
     rows, history = train_centroid_rows(
         emb, n_centroids, iters, compute_inertia
     )
-    return emb.sparkSession.createDataFrame(rows, CENTROID_SCHEMA), history
+    return centroid_frame(emb.sparkSession, rows), history
 
 
 def assign_to_centroids(qz: DataFrame, cents: DataFrame) -> DataFrame:
@@ -548,12 +558,19 @@ def duck_ivf_topk_sql(
         JOIN {table} q ON q.vec_id = p.query_id
         WHERE p.query_id != a.vec_id
       )
-      SELECT query_id, vec_id, dot, cast(rank as bigint) AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY dot DESC, vec_id ASC) AS rank
-        FROM hits
-      ) _r WHERE rank <= {k}
+      {_duck_rank_sql("hits", "dot", k)}
     )"""
+
+
+def _duck_rank_sql(hits: str, score: str, k: int) -> str:
+    """The top k rows of ``hits`` [query_id, vec_id, score] per query by
+    (score desc, vec_id), with a bigint rank: the serves' final window."""
+    return (
+        f"SELECT query_id, vec_id, {score}, cast(rank as bigint) AS rank "
+        f"FROM (SELECT *, row_number() OVER (PARTITION BY query_id "
+        f"ORDER BY {score} DESC, vec_id ASC) AS rank FROM {hits}) _r "
+        f"WHERE rank <= {k}"
+    )
 
 
 def _duck_qlist(arr: str) -> str:
@@ -566,6 +583,19 @@ def _duck_ldot(a: str, b: str) -> str:
     return "(" + " + ".join(
         f"{a}[{j + 1}] * {b}[{j + 1}]" for j in range(DIMS)
     ) + ")"
+
+
+def _duck_asgn_cte(cents: str) -> str:
+    """``asgn`` [vec_id, qv, cent_id]: each ``qz`` vector's max-dot
+    centroid in ``cents``, ties to the lowest cent_id (the DuckDB twin
+    of assign_to_centroids)."""
+    return (
+        f"asgn AS (SELECT vec_id, qv, cent_id FROM ("
+        f"SELECT v.vec_id, v.qv, c.cent_id, "
+        f"row_number() OVER (PARTITION BY v.vec_id "
+        f"ORDER BY {_duck_ldot('v.qv', 'c.cv')} DESC, c.cent_id ASC) AS arn "
+        f"FROM qz v CROSS JOIN {cents} c) _a WHERE arn = 1)"
+    )
 
 
 def _duck_kmeans_ctes(
@@ -650,13 +680,7 @@ def duck_trained_ivf_sql(
     centroids."""
     ctes, prev = _duck_kmeans_ctes(n_centroids, iters, table)
     # the ivf_topk query itself (assignment by max DOT, as ivf_topk does)
-    ctes.append(
-        f"asgn AS (SELECT vec_id, qv, cent_id FROM ("
-        f"SELECT v.vec_id, v.qv, c.cent_id, "
-        f"row_number() OVER (PARTITION BY v.vec_id "
-        f"ORDER BY {_duck_ldot('v.qv', 'c.cv')} DESC, c.cent_id ASC) AS arn "
-        f"FROM qz v CROSS JOIN {prev} c) _a WHERE arn = 1)"
-    )
+    ctes.append(_duck_asgn_cte(prev))
     ctes.append(
         f"probes AS (SELECT query_id, qe, cent_id FROM ("
         f"SELECT q.vec_id AS query_id, q.qv AS qe, c.cent_id, "
@@ -674,11 +698,7 @@ def duck_trained_ivf_sql(
     body = ",\n      ".join(ctes)
     return f"""(
       WITH {body}
-      SELECT query_id, vec_id, dot, cast(rank as bigint) AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY dot DESC, vec_id ASC) AS rank
-        FROM hits
-      ) _r WHERE rank <= {k}
+      {_duck_rank_sql("hits", "dot", k)}
     )"""
 
 
@@ -687,8 +707,9 @@ def duck_trained_ivf_sql(
 # --------------------------------------------------------------------------
 # [vec_id, cent_id, v8 array<tinyint>, scale bigint]: 1 byte per component
 # instead of 8, at a recall cost measured by emb_ivf_recall_int8. Spark
-# builds them with the encode_postings_int8 kernel; _scale_sql/_q8_sql/
-# _v8_sql are its DuckDB twin, which the oracles replay.
+# encodes and serves them with Arrow kernels (encode_postings_int8,
+# ivf_serve_topk_int8); _v8_sql and duck_serve_int8_sql are their DuckDB
+# twins, which the oracles replay.
 
 INT8_MAX = 127
 
@@ -720,16 +741,16 @@ def _v8_sql(arr: str, scale: str) -> str:
     return f"[{elems}]"
 
 
-def _dot8_sql(a: str, b: str, dialect: str = "spark") -> str:
-    """Dot over two int8 arrays, with each element widened FIRST —
-    tinyint·tinyint would overflow the byte domain in both engines."""
-    if dialect == "spark":
-        el = lambda arr, j: f"cast(element_at({arr}, {j + 1}) as bigint)"  # noqa: E731
-    else:
-        el = lambda arr, j: f"cast({arr}[{j + 1}] as bigint)"  # noqa: E731
+def _dot8_sql(a: str, b: str) -> str:
+    """DuckDB dot over two lists, with each element widened to bigint
+    FIRST — tinyint·tinyint would overflow the byte domain."""
     return "(" + " + ".join(
-        f"{el(a, j)} * {el(b, j)}" for j in range(DIMS)
+        f"cast({a}[{j + 1}] as bigint) * cast({b}[{j + 1}] as bigint)"
+        for j in range(DIMS)
     ) + ")"
+
+
+POSTINGS8_SCHEMA = "vec_id long, cent_id long, v8 array<tinyint>, scale long"
 
 
 def encode_postings_int8(emb: DataFrame, centroid_rows: list) -> DataFrame:
@@ -738,11 +759,9 @@ def encode_postings_int8(emb: DataFrame, centroid_rows: list) -> DataFrame:
     (floor(x·10^6 + 0.5)), take the max-dot centroid (ties to the
     lowest cent_id), then scale = max(max|q|, 1) and v8 = sign(q) ·
     ((|q|·254 + scale) // (2·scale)) in int64 arithmetic. The rows are
-    bit-identical to _scale_sql/_v8_sql over assign_to_centroids, and
-    the plan stays constant-size: no crossJoin, no 64×64-term
-    expressions for Catalyst and codegen to process per build. The
-    coarse quantizer (the centroid rows) stays full precision, standard
-    IVF-SQ practice."""
+    bit-identical to _scale_sql/_v8_sql over assign_to_centroids, from
+    a constant-size plan. The coarse quantizer (the centroid rows)
+    stays full precision, standard IVF-SQ practice."""
     import numpy as np
 
     cent_ids, cm = _centroid_arrays(centroid_rows)
@@ -767,8 +786,7 @@ def encode_postings_int8(emb: DataFrame, centroid_rows: list) -> DataFrame:
             })
 
     return emb.select("vec_id", "embedding").mapInPandas(
-        encode,
-        schema="vec_id long, cent_id long, v8 array<tinyint>, scale long",
+        encode, schema=POSTINGS8_SCHEMA
     )
 
 
@@ -776,46 +794,62 @@ def ivf_serve_topk_int8(
     p8: DataFrame, cents: DataFrame,
     n_queries: int = 5, k: int = 10, n_probes: int = N_PROBES,
 ) -> DataFrame:
-    """Serve top-k from int8 postings: probes rank centroids by the
-    int8-query × full-precision-centroid dot (positive per-query factor
-    127/scale_q away from the true dot → same probe choice discipline,
-    tie-broken identically), the list search scores
-    sdot = dot8(qe8, v8) · scale_v — rank-equivalent per query to the
-    symmetric reconstruction (scale_q/127² is a constant positive
-    factor), and bounded |sdot| ≤ 64·127²·scale_v, ANSI-safe. Output:
-    [query_id, vec_id, sdot, rank]."""
+    """Top-k over int8 postings [vec_id, cent_id, v8, scale] for the rows
+    vec_id < n_queries: [query_id, vec_id, sdot, rank]. The driver picks
+    each query's n_probes centroids by int8-query × centroid dot, ties
+    to the lowest cent_id, so only the probed lists are scanned —
+    directory pruning on a cent_id-partitioned index. Per Arrow batch,
+    one BLAS matmul scores sdot = dot8(qe8, v8)·scale_v for all queries
+    (exact: |sdot| ≤ 64·127²·577,001 < 2^53; it ranks like the symmetric
+    reconstruction, scale_q/127² being constant per query), and each
+    query keeps a k-row partial top-k of its probed lists minus its own
+    row; one window merges them. Duplicate query rows share one probe
+    and one rank window, as in duck_serve_int8_sql."""
+    import numpy as np
+    import pandas as pd
     from pyspark.sql import Window
 
-    queries = p8.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v8").alias("qe8"),
+    from ..functions import bits as _bits
+
+    qrows = p8.filter(F.col("vec_id") < n_queries).select(
+        "vec_id", "v8"
+    ).collect()
+    qids = np.array([r.vec_id for r in qrows], dtype=np.int64)
+    qe8 = np.array([r.v8 for r in qrows], dtype=np.int64).reshape(-1, DIMS)
+    cent_ids, cm = _centroid_arrays(cents.select("cent_id", "cv").collect())
+    # probe pair i = (query row, centroid) = divmod(i, C)
+    row, c = np.divmod(np.arange(len(qids) * len(cent_ids)), len(cent_ids))
+    pdot = _i64_matmul(qe8, cm.T).ravel()
+    pick = _head_per_group(
+        np.lexsort((cent_ids[c], -pdot, qids[row])), qids[row], n_probes
     )
-    cdot = "(" + " + ".join(
-        f"cast(element_at(qe8, {j + 1}) as bigint) * element_at(cv, {j + 1})"
-        for j in range(DIMS)
-    ) + ")"
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("pdot"), F.asc("cent_id")
-    )
-    probes = (
-        queries.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id", "qe8", "cent_id", F.expr(cdot).alias("pdot")
-        )
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= n_probes)
-        .select("query_id", "qe8", "cent_id")
-    )
+    probe_row, probe_cent = row[pick], cent_ids[c[pick]]
+    probe_qid = qids[probe_row]
+
+    def scan(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            vid = pdf["vec_id"].to_numpy()
+            sdot = _i64_matmul(_bits.np_stack_cells(pdf["v8"]), qe8.T)
+            sdot *= pdf["scale"].to_numpy()[:, None]  # (N, R)
+            n, i = np.nonzero(
+                (pdf["cent_id"].to_numpy()[:, None] == probe_cent)
+                & (vid[:, None] != probe_qid)
+            )
+            q, v, s = probe_qid[i], vid[n], sdot[n, probe_row[i]]
+            top = _head_per_group(np.lexsort((v, -s, q)), q, k)
+            yield pd.DataFrame(
+                {"query_id": q[top], "vec_id": v[top], "sdot": s[top]}
+            )
+
     w = Window.partitionBy("query_id").orderBy(
         F.desc("sdot"), F.asc("vec_id")
     )
     return (
-        probes.join(p8.select("vec_id", "v8", "scale", "cent_id"), "cent_id")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id", "vec_id",
-            (F.expr(_dot8_sql("qe8", "v8")) * F.col("scale")).alias("sdot"),
-        )
+        p8.filter(F.col("cent_id").isin(sorted(set(probe_cent.tolist()))))
+        .select("vec_id", "cent_id", "v8", "scale")
+        .mapInPandas(scan, schema="query_id long, vec_id long, sdot long")
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
@@ -827,9 +861,31 @@ def ivf_topk_int8(
 ) -> DataFrame:
     """encode_postings_int8 → serve (no durable artifact — the
     postings entry adds the parquet write/read split)."""
-    cents = emb.sparkSession.createDataFrame(centroid_rows, CENTROID_SCHEMA)
+    cents = centroid_frame(emb.sparkSession, centroid_rows)
     p8 = encode_postings_int8(emb, centroid_rows)
     return ivf_serve_topk_int8(p8, cents, n_queries, k, n_probes)
+
+
+def duck_serve_int8_sql(
+    p8: str, cents: str,
+    n_queries: int = 5, k: int = 10, n_probes: int = N_PROBES,
+) -> str:
+    """Oracle twin of ivf_serve_topk_int8, as one subquery over the
+    DuckDB tables or CTEs ``p8`` and ``cents`` [cent_id, cv]."""
+    return f"""(
+      WITH probes8 AS (SELECT query_id, qe8, cent_id FROM (
+        SELECT q.vec_id AS query_id, q.v8 AS qe8, c.cent_id,
+               row_number() OVER (PARTITION BY q.vec_id
+                 ORDER BY {_dot8_sql('q.v8', 'c.cv')} DESC,
+                          c.cent_id ASC) AS pr
+        FROM {p8} q CROSS JOIN {cents} c WHERE q.vec_id < {n_queries}) _p
+        WHERE pr <= {n_probes}),
+      hits8 AS (SELECT p.query_id, a.vec_id,
+               {_dot8_sql('p.qe8', 'a.v8')} * a.scale AS sdot
+        FROM probes8 p JOIN {p8} a ON a.cent_id = p.cent_id
+        WHERE p.query_id != a.vec_id)
+      {_duck_rank_sql("hits8", "sdot", k)}
+    )"""
 
 
 def duck_trained_ivf_int8_sql(
@@ -845,13 +901,7 @@ def duck_trained_ivf_int8_sql(
     CTE inlining would substitute the 64-element quantization into
     every reference (the 24-plane banded-oracle lesson)."""
     ctes, prev = _duck_kmeans_ctes(n_centroids, iters, table, train_filter)
-    ctes.append(
-        f"asgn AS (SELECT vec_id, qv, cent_id FROM ("
-        f"SELECT v.vec_id, v.qv, c.cent_id, "
-        f"row_number() OVER (PARTITION BY v.vec_id "
-        f"ORDER BY {_duck_ldot('v.qv', 'c.cv')} DESC, c.cent_id ASC) AS arn "
-        f"FROM qz v CROSS JOIN {prev} c) _a WHERE arn = 1)"
-    )
+    ctes.append(_duck_asgn_cte(prev))
     scale = _scale_sql("qv")
     ctes.append(
         f"p8a AS MATERIALIZED (SELECT vec_id, cent_id, qv, "
@@ -861,37 +911,16 @@ def duck_trained_ivf_int8_sql(
         f"p8 AS MATERIALIZED (SELECT vec_id, cent_id, scale, "
         f"{_v8_sql('qv', 'scale')} AS v8 FROM p8a)"
     )
-    cdot = "(" + " + ".join(
-        f"cast(q.v8[{j + 1}] as bigint) * c.cv[{j + 1}]"
-        for j in range(DIMS)
-    ) + ")"
-    ctes.append(
-        f"probes8 AS (SELECT query_id, qe8, cent_id FROM ("
-        f"SELECT q.vec_id AS query_id, q.v8 AS qe8, c.cent_id, "
-        f"row_number() OVER (PARTITION BY q.vec_id "
-        f"ORDER BY {cdot} DESC, c.cent_id ASC) AS pr "
-        f"FROM p8 q CROSS JOIN {prev} c WHERE q.vec_id < {n_queries}) _p "
-        f"WHERE pr <= {n_probes})"
-    )
-    ctes.append(
-        f"hits8 AS (SELECT p.query_id, a.vec_id, "
-        f"{_dot8_sql('p.qe8', 'a.v8', 'duckdb')} * a.scale AS sdot "
-        f"FROM probes8 p JOIN p8 a ON a.cent_id = p.cent_id "
-        f"WHERE p.query_id != a.vec_id)"
-    )
     body = ",\n      ".join(ctes)
+    serve = duck_serve_int8_sql("p8", prev, n_queries, k, n_probes)
     return f"""(
       WITH {body}
-      SELECT query_id, vec_id, sdot, cast(rank as bigint) AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY sdot DESC, vec_id ASC) AS rank
-        FROM hits8
-      ) _r WHERE rank <= {k}
+      SELECT * FROM {serve} _s
     )"""
 
 
 # --------------------------------------------------------------------------
-# Product-quantized postings (r9 — r8 VERDICT "Next round" #3)
+# Product-quantized postings
 # --------------------------------------------------------------------------
 # PQ on top of the int8 SQ artifact family: split each 64-dim quantized
 # vector into M_SUB subvectors and learn a K_CODES-entry codebook per
@@ -1005,8 +1034,8 @@ def pq_train_codebook_rows_residual(
     assigned: DataFrame, centroid_rows: list,
     m_sub: int = M_SUB, k_codes: int = K_CODES, iters: int = PQ_ITERS,
 ) -> list:
-    """pq_train_codebook_rows over IVF RESIDUALS (r9 VERDICT "Next
-    round" #4): the codebook is trained on (qv − assigned centroid),
+    """pq_train_codebook_rows over IVF RESIDUALS: the codebook is
+    trained on (qv − assigned centroid),
     the quantity PQ actually has to represent once the coarse quantizer
     carries the vector's location — standard IVF-PQ. Residuals are
     int64 differences of already-quantized values, so the exact-integer
@@ -1106,8 +1135,8 @@ def pq_encode(
     to the lowest code), so the oracle's encode CTE matches bit-exactly.
     With ``centroid_rows``, encodes the RESIDUAL (qv − assigned
     centroid) instead — standard IVF-PQ practice: residuals concentrate
-    the codes' dynamic range (r9 VERDICT "Next round" #4); the codebook
-    must then come from pq_train_codebook_rows_residual."""
+    the codes' dynamic range; the codebook must then come from
+    pq_train_codebook_rows_residual."""
     import numpy as np
     import pandas as pd
 
@@ -1185,7 +1214,7 @@ def pq_serve_topk(
         .filter(F.col("pr") <= n_probes)
         .select(*probe_cols)
     )
-    # derive sub_dims from the codebook itself (ADVICE r9): pq_encode
+    # derive sub_dims from the codebook itself: pq_encode
     # and the duck twin both parameterize on m_sub; hardcoding the
     # module-level SUB_DIMS here would silently mis-slice query
     # subvectors for a codebook trained with non-default m_sub
@@ -1254,7 +1283,7 @@ def ivf_topk_pq_residual(
     dot(q, c) + dot(q, r̂)). ``codebook_rows`` must come from
     pq_train_codebook_rows_residual over the same centroids."""
     spark = emb.sparkSession
-    cents = spark.createDataFrame(centroid_rows, CENTROID_SCHEMA)
+    cents = centroid_frame(spark, centroid_rows)
     qz = emb.select("vec_id", F.expr(quantize_expr()).alias("qv"))
     assigned = assign_to_centroids(qz, cents)
     codes = pq_encode(assigned, codebook_rows, centroid_rows=centroid_rows)
@@ -1415,13 +1444,7 @@ def duck_trained_ivf_pq_sql(
     IVF assignment + per-subspace codebook training + encode + ADC
     serve, one chained query."""
     ctes, prev = _duck_kmeans_ctes(n_centroids, iters, table)
-    ctes.append(
-        f"asgn AS (SELECT vec_id, cent_id FROM ("
-        f"SELECT v.vec_id, c.cent_id, "
-        f"row_number() OVER (PARTITION BY v.vec_id "
-        f"ORDER BY {_duck_ldot('v.qv', 'c.cv')} DESC, c.cent_id ASC) AS arn "
-        f"FROM qz v CROSS JOIN {prev} c) _a WHERE arn = 1)"
-    )
+    ctes.append(_duck_asgn_cte(prev))
     pq_ctes, cb = _duck_pq_ctes(m_sub, k_codes, pq_iters)
     ctes.extend(pq_ctes)
     sub_dims = DIMS // m_sub
@@ -1459,11 +1482,7 @@ def duck_trained_ivf_pq_sql(
     body = ",\n      ".join(ctes)
     return f"""(
       WITH {body}
-      SELECT query_id, vec_id, adot, cast(rank as bigint) AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY adot DESC, vec_id ASC) AS rank
-        FROM hits
-      ) _r WHERE rank <= {k}
+      {_duck_rank_sql("hits", "adot", k)}
     )"""
 
 
@@ -1478,13 +1497,7 @@ def duck_trained_ivf_pq_residual_sql(
     codebook training OVER THE RESIDUALS + encode + ADC serve with the
     candidate list's query×centroid dot added back."""
     ctes, prev = _duck_kmeans_ctes(n_centroids, iters, table)
-    ctes.append(
-        f"asgn AS (SELECT vec_id, cent_id FROM ("
-        f"SELECT v.vec_id, c.cent_id, "
-        f"row_number() OVER (PARTITION BY v.vec_id "
-        f"ORDER BY {_duck_ldot('v.qv', 'c.cv')} DESC, c.cent_id ASC) AS arn "
-        f"FROM qz v CROSS JOIN {prev} c) _a WHERE arn = 1)"
-    )
+    ctes.append(_duck_asgn_cte(prev))
     rv = "[" + ", ".join(
         f"v.qv[{j + 1}] - c.cv[{j + 1}]" for j in range(DIMS)
     ) + "]"
@@ -1530,11 +1543,7 @@ def duck_trained_ivf_pq_residual_sql(
     body = ",\n      ".join(ctes)
     return f"""(
       WITH {body}
-      SELECT query_id, vec_id, adot, cast(rank as bigint) AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY adot DESC, vec_id ASC) AS rank
-        FROM hits
-      ) _r WHERE rank <= {k}
+      {_duck_rank_sql("hits", "adot", k)}
     )"""
 
 
@@ -2451,13 +2460,7 @@ def duck_semantic_cluster_pairs_sql(
             else ("TRUE" if seed_by_rank else None)
         ),
     )
-    ctes.append(
-        f"asgn AS (SELECT vec_id, qv, cent_id FROM ("
-        f"SELECT v.vec_id, v.qv, c.cent_id, "
-        f"row_number() OVER (PARTITION BY v.vec_id "
-        f"ORDER BY {_duck_ldot('v.qv', 'c.cv')} DESC, c.cent_id ASC) AS arn "
-        f"FROM qz v CROSS JOIN {prev} c) _a WHERE arn = 1)"
-    )
+    ctes.append(_duck_asgn_cte(prev))
     ctes.append(
         f"withn2 AS (SELECT vec_id, cent_id, qv, "
         f"{_duck_ldot('qv', 'qv')} AS n2 FROM asgn)"
@@ -2527,13 +2530,7 @@ def duck_cluster_balanced_sample_sql(
     from ..functions import bits as _bits
 
     ctes, prev = _duck_kmeans_ctes(n_centroids, iters, table)
-    ctes.append(
-        f"asgn AS (SELECT vec_id, cent_id FROM ("
-        f"SELECT v.vec_id, c.cent_id, "
-        f"row_number() OVER (PARTITION BY v.vec_id "
-        f"ORDER BY {_duck_ldot('v.qv', 'c.cv')} DESC, c.cent_id ASC) AS arn "
-        f"FROM qz v CROSS JOIN {prev} c) _a WHERE arn = 1)"
-    )
+    ctes.append(_duck_asgn_cte(prev))
     body = ",\n      ".join(ctes)
     ss = _bits.seed_salt(seed, SALT_DIVERSITY)
     hq = prng.duck_hash_query(

@@ -137,9 +137,9 @@ def _ingest_batch(
             compute_inertia=False, seed_by_rank=True,
         )
         state.centroid_rows = rows
-        spark.createDataFrame(
-            rows, ann.CENTROID_SCHEMA
-        ).write.mode("overwrite").parquet(f"{store_dir}/centroids")
+        ann.centroid_frame(spark, rows).write.mode("overwrite").parquet(
+            f"{store_dir}/centroids"
+        )
         jpath = spark._jvm.org.apache.hadoop.fs.Path(
             f"{store_dir}/postings8"
         )

@@ -110,8 +110,9 @@ def write_generation(
     """Encode the corpus against ``centroid_rows`` and write the full
     generation layout (centroids + int8 postings), UNCOMMITTED."""
     gdir = f"{index_dir}/gen={gen}"
-    cents = spark.createDataFrame(centroid_rows, ann.CENTROID_SCHEMA)
-    cents.write.mode("overwrite").parquet(f"{gdir}/centroids")
+    ann.centroid_frame(spark, centroid_rows).write.mode(
+        "overwrite"
+    ).parquet(f"{gdir}/centroids")
     ann.encode_postings_int8(emb, centroid_rows).write.mode(
         "overwrite"
     ).partitionBy("cent_id").parquet(f"{gdir}/postings8")
@@ -139,19 +140,26 @@ def rebuild_index(
     return new
 
 
+def read_index_tables(
+    spark: SparkSession, gdir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(centroids, postings8) of the index stored under ``gdir``, read
+    with explicit schemas (cent_id as long), so neither read launches a
+    footer-inference job; postings8 columns are [vec_id, v8, scale,
+    cent_id]."""
+    return (
+        spark.read.schema(ann.CENTROID_SCHEMA).parquet(f"{gdir}/centroids"),
+        spark.read.schema(ann.POSTINGS8_SCHEMA).parquet(f"{gdir}/postings8"),
+    )
+
+
 def read_serve_tables(
     spark: SparkSession, index_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """(centroids, postings8) of the current serve generation — the
     inputs ann.ivf_serve_topk_int8 consumes."""
     g = serve_generation(spark, index_dir)
-    gdir = f"{index_dir}/gen={g}"
-    cents = spark.read.parquet(f"{gdir}/centroids")
-    postings = spark.read.parquet(f"{gdir}/postings8").select(
-        "vec_id", "v8", "scale",
-        F.col("cent_id").cast("long").alias("cent_id"),
-    )
-    return cents, postings
+    return read_index_tables(spark, f"{index_dir}/gen={g}")
 
 
 @dataclass

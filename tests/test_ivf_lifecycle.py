@@ -210,7 +210,7 @@ def test_encode_postings_int8_matches_duckdb_twin(spark):
 
     qz = emb.select("vec_id", F.expr(ann.quantize_expr()).alias("qv"))
     asgn = ann.assign_to_centroids(
-        qz, spark.createDataFrame(cents, ann.CENTROID_SCHEMA)
+        qz, ann.centroid_frame(spark, cents)
     ).collect()
     con = duckdb.connect()
     con.execute(
@@ -245,5 +245,91 @@ def test_encode_postings_int8_matches_duckdb_twin(spark):
     spark.conf.set(key, "7")
     try:
         assert _p8_rows(ann.encode_postings_int8(emb, cents)) == got
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _serve_edge_tables():
+    """int8 postings and centroids that hit every corner of the serve:
+    query 0's second probe ties between lists 4 and 6 (4 must win; list
+    6 holds the best vector), query 2's first probe ties between the
+    same two, query 1 alone fills list 8, vectors 10 and 11 tie on sdot
+    for query 0 (10 must win), and query 0 and 2 sit in probed lists.
+    Vectors 100+ score 0 against every query, so they tie among
+    themselves and split small Arrow batches."""
+    import numpy as np
+
+    def vec(*head):
+        return list(head) + [0] * (ann.DIMS - len(head))
+
+    rng = np.random.default_rng(11)
+    rows = [
+        (0, 2, vec(10, 5), 7), (10, 2, vec(3), 10), (11, 2, vec(1), 30),
+        (12, 2, vec(2, 1), 5), (20, 4, vec(0, 4), 10), (21, 4, vec(1, 1), 3),
+        (30, 6, vec(0, 8), 100), (1, 8, vec(0, 0, 7), 3),
+        (2, 4, vec(0, 9), 2),
+    ] + [
+        (100 + i, [2, 4, 6][i % 3],
+         [0, 0, 0] + rng.integers(-127, 128, ann.DIMS - 3).tolist(),
+         int(rng.integers(1, 1000)))
+        for i in range(30)
+    ]
+    cents = [(6, vec(0, 100)), (2, vec(100)), (8, vec(0, 0, 100)),
+             (4, vec(0, 100))]
+    return rows, cents
+
+
+def test_serve_int8_kernel_matches_duckdb(spark):
+    # the serve kernel and the DuckDB serve SQL the oracles replay must
+    # agree row for row, ties and edge lists included
+    import duckdb
+
+    rows, cents = _serve_edge_tables()
+    con = duckdb.connect()
+    con.execute("CREATE TABLE cents (cent_id BIGINT, cv BIGINT[])")
+    con.executemany("INSERT INTO cents VALUES (?, ?)", cents)
+    cents_df = ann.centroid_frame(spark, cents)
+
+    def check(p8_rows, n_queries, k, n_probes):
+        con.execute(
+            "CREATE OR REPLACE TABLE p8 (vec_id BIGINT, cent_id BIGINT, "
+            "v8 TINYINT[], scale BIGINT)"
+        )
+        if p8_rows:
+            con.executemany("INSERT INTO p8 VALUES (?, ?, ?, ?)", p8_rows)
+        want = sorted(con.sql(
+            "SELECT * FROM "
+            f"{ann.duck_serve_int8_sql('p8', 'cents', n_queries, k, n_probes)}"
+            " _q"
+        ).fetchall())
+        out = ann.ivf_serve_topk_int8(
+            spark.createDataFrame(p8_rows, ann.POSTINGS8_SCHEMA), cents_df,
+            n_queries, k, n_probes,
+        )
+        assert out.schema.simpleString() == (
+            "struct<query_id:bigint,vec_id:bigint,sdot:bigint,rank:int>"
+        )
+        assert sorted(tuple(r) for r in out.collect()) == want
+        return want
+
+    got = check(rows, 3, 3, 2)
+    byq = {}
+    for q, v, sdot, rank in got:
+        byq.setdefault(q, []).append((v, sdot))
+    assert byq[0] == [(10, 300), (11, 300), (20, 200)]  # list 4, not 6
+    assert byq[1][:2] == [(0, 0), (10, 0)]  # list 8 is only itself; list 2
+    assert {v for v, _ in byq[2]} == {20, 30, 21}  # own row dropped
+    assert check(rows, 3, 1, 2)[0] == (0, 10, 300, 1)  # sdot tie at k
+    one_probe = check(rows, 3, 4, 1)  # first-probe tie: list 4 only
+    assert {v for q, v, _, _ in one_probe if q == 2} == {20, 21, 101, 104}
+    assert check(rows + rows[:1], 3, 3, 2)  # duplicate query row
+    assert check(rows, 0, 3, 2) == []
+    assert check([], 3, 3, 2) == []
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        assert check(rows, 3, 5, 2)
     finally:
         spark.conf.set(key, prev)

@@ -487,3 +487,47 @@ def test_ivf_generation_postings_one_kernel_pass(spark, tmp_path,
         f"postings write plan is {size} B of extended explain, budget "
         f"{POSTINGS8_EXPLAIN_BUDGET} B"
     )
+
+
+# extended-explain budget (bytes) of the int8 serve over a stored index
+# generation: the serve kernel's plan measures ~6.6 KB; the expression
+# form it replaced (broadcast cross join + two 64-term dots + two
+# windows) ~97 KB
+SERVE8_EXPLAIN_BUDGET = 16 << 10
+
+
+def test_ivf_serve_int8_scans_probed_lists_only(spark, tmp_path):
+    # serving a stored generation pairs nothing with the centroid table,
+    # scans only the probed list directories, and keeps a constant-size
+    # plan
+    from pyspark.sql import functions as F
+
+    from geneticalgorithmsusingmapreduce_spark.operators import ann
+    from geneticalgorithmsusingmapreduce_spark.sources.registry import (
+        read_table,
+    )
+    from geneticalgorithmsusingmapreduce_spark.streaming import (
+        ivf_rebuild as ir,
+    )
+
+    emb = read_table(spark, SF, "embeddings")
+    qz = emb.select("vec_id", F.expr(ann.quantize_expr()).alias("qv"))
+    rows = [
+        (r.vec_id, list(r.qv)) for r in qz.filter("vec_id < 8").collect()
+    ]
+    d = str(tmp_path / "idx")
+    ir.write_generation(spark, emb, d, 0, rows)
+    ir.commit_generation(spark, d, 0)
+    cents, postings = ir.read_serve_tables(spark, d)
+    out = ann.ivf_serve_topk_int8(postings, cents)
+    p = _plan(out)
+    for node in ("CartesianProduct", "BroadcastNestedLoopJoin"):
+        assert node not in p, f"serve plan has {node}:\n{p}"
+    assert re.search(r"PartitionFilters: \[[^\]]*cent_id#\d+L (=|IN) ", p), (
+        f"postings scan prunes no list:\n{p}"
+    )
+    size = len(out._jdf.queryExecution().toString().encode())
+    assert size < SERVE8_EXPLAIN_BUDGET, (
+        f"serve plan is {size} B of extended explain, budget "
+        f"{SERVE8_EXPLAIN_BUDGET} B"
+    )

@@ -382,7 +382,10 @@ def test_ivf_append_compaction_reduces_files_content_invariant(
     from geneticalgorithmsusingmapreduce_spark.sources.registry import (
         read_table,
     )
-    from geneticalgorithmsusingmapreduce_spark.streaming import ivf_append
+    from geneticalgorithmsusingmapreduce_spark.streaming import (
+        ivf_append,
+        ivf_rebuild,
+    )
 
     emb = read_table(spark, SF, "embeddings")
     plain_d = str(tmp_path / "plain")
@@ -399,11 +402,7 @@ def test_ivf_append_compaction_reduces_files_content_invariant(
     assert comp_files < plain_files
 
     def serve(d):
-        cents = spark.read.parquet(f"{d}/centroids")
-        p = spark.read.parquet(f"{d}/postings8").select(
-            "vec_id", "v8", "scale",
-            F.col("cent_id").cast("long").alias("cent_id"),
-        )
+        cents, p = ivf_rebuild.read_index_tables(spark, d)
         return {
             tuple(r) for r in ann.ivf_serve_topk_int8(p, cents).collect()
         }
