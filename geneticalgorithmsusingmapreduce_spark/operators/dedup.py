@@ -20,6 +20,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import runtime
+
 
 @contextmanager
 def _scoped_shuffle_width(spark: SparkSession, n_edges: int):
@@ -222,12 +224,15 @@ def cluster_pairs(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     sym = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct().localCheckpoint(eager=True)
+    runtime.scoped_free(sym)
     n_edges = sym.count()  # free: sym is materialized
     with _scoped_shuffle_width(pairs.sparkSession, n_edges):
         labels = _minlabel_loop(sym, max_iters)
         out = labels.select(
             F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
         ).localCheckpoint(eager=True)
+    runtime.free_checkpoint(labels)
+    runtime.scoped_free(out)
     return out
 
 
@@ -260,10 +265,12 @@ def _minlabel_loop(sym: DataFrame, max_iters: int) -> DataFrame:
             .localCheckpoint(eager=False)
         )
         changed = new.filter("label != old_label").count()
-        labels = new.select("node", "label")
+        runtime.free_checkpoint(labels)
+        labels = new  # old_label rides along unread
         if changed == 0:
             break
     else:
+        runtime.free_checkpoint(labels)
         # silent wrong answers are worse than failing: a component with
         # diameter > max_iters would return non-minimum labels and the
         # curation pipeline would keep/drop the wrong documents
@@ -337,6 +344,7 @@ def cluster_pairs_star(
     ).localCheckpoint(eager=True)
     # lazy: the initial _sig below materializes it in the same job
     edges = raw.filter("u != v").distinct().localCheckpoint(eager=False)
+    runtime.scoped_free(raw, edges)
     # contract parity with cluster_pairs: a node appearing ONLY in
     # self-pairs (a == a) must still come back labeled with itself —
     # the u != v filter above would otherwise erase it entirely
@@ -369,6 +377,8 @@ def cluster_pairs_star(
             .select("doc_id", F.col("doc_id").alias("cluster_id"))
         )
         out = labels.unionByName(lonely).localCheckpoint(eager=True)
+    runtime.free_checkpoint(edges)
+    runtime.scoped_free(out)
     return out
 
 
@@ -408,21 +418,20 @@ def _star_loop(edges: DataFrame, sig, max_rounds: int, _sig):
             .localCheckpoint(eager=False)
         )
         new_sig = _sig(new)
-        if new_sig == sig:
-            # the (count, checksum) signature is a 2^-64-collision proxy;
-            # make the fixpoint proof EXACT with one symmetric-difference
-            # emptiness check, paid only on the (single) signature-equal
-            # round, never per round (ADVICE r3). Both sides are already
-            # distinct, so two anti-joins suffice.
-            diff = new.join(edges, ["u", "v"], "left_anti").unionByName(
-                edges.join(new, ["u", "v"], "left_anti")
-            )
-            if diff.isEmpty():
-                edges = new
-                break
-        edges = new
-        sig = new_sig
+        # the (count, checksum) signature is a 2^-64-collision proxy;
+        # make the fixpoint proof EXACT with one symmetric-difference
+        # emptiness check, paid only on the (single) signature-equal
+        # round, never per round. Both sides are already distinct, so
+        # two anti-joins suffice.
+        done = new_sig == sig and new.join(
+            edges, ["u", "v"], "left_anti"
+        ).unionByName(edges.join(new, ["u", "v"], "left_anti")).isEmpty()
+        runtime.free_checkpoint(edges)
+        edges, sig = new, new_sig
+        if done:
+            break
     else:
+        runtime.free_checkpoint(edges)
         # same fail-loudly policy as cluster_pairs: an unconverged edge
         # set yields nodes with conflicting / non-minimal labels, which
         # would silently keep/drop the wrong documents downstream

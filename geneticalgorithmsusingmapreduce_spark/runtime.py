@@ -2,20 +2,24 @@
 
 There are two:
 
-- **The entry scope.** ``scoped_persist`` materializes a shared subtree
-  (both sides of a self-join, a fold read by two branches, a ladder
-  rung) and ``scoped_cleanup`` registers any other release (drop a temp
-  table, remove a temp layout).  Both append a release callable to the
-  current entry's scope.  Each time ``catalog.register`` builds an
-  entry, ``release_scopes(keep=1)`` runs the releases of every scope
-  older than the previous entry's.  A returned DataFrame therefore
-  stays computable while the next entry is built and collected, and
-  its intermediates are freed when the entry after next is built (or
-  at interpreter exit).  A released cache only recomputes, but a
-  released checkpoint is the only copy of its rows, which is why the
-  release waits an extra entry rather than running at the next one.
-- **Loop rotation.** The GA and streaming loops hold one generation of
-  state at a time: ``local_checkpoint_truncated`` the new state, then
+- **The entry scope.** It owns everything an entry leaves behind for
+  its returned DataFrame to read: ``scoped_persist`` materializes a
+  shared subtree (both sides of a self-join, a fold read by two
+  branches, a ladder rung), ``scoped_tempdir`` makes a temp directory
+  (a round-trip store, an index generation), ``scoped_free`` hands over
+  checkpoints (a stream's final state, a clustering loop's result), and
+  ``scoped_cleanup`` registers any other release (drop a temp table).
+  Each appends a release callable to the current entry's scope.  Each
+  time ``catalog.register`` builds an entry, ``release_scopes(keep=1)``
+  runs the releases of every scope older than the previous entry's.  A
+  returned DataFrame therefore stays computable while the next entry is
+  built and collected, and what it reads is freed when the entry after
+  next is built (or at interpreter exit).  A released cache only
+  recomputes, but a released checkpoint or store is the only copy of its
+  rows, which is why the release waits an extra entry rather than
+  running at the next one.
+- **Loop rotation.** The GA, clustering and streaming loops hold one
+  generation of state at a time: checkpoint the new state, then
   ``free_checkpoint`` the one it replaced.  These never touch the
   registry.
 
@@ -29,6 +33,8 @@ import atexit
 import contextlib
 import contextvars
 import logging
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame
 
@@ -76,6 +82,21 @@ def scoped_cleanup(fn) -> None:
     _SCOPES[-1].append(fn)
 
 
+def scoped_tempdir(prefix: str) -> str:
+    """Make a temp directory that is removed when the current entry's
+    scope is released, so a returned DataFrame can read from it."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    scoped_cleanup(lambda: shutil.rmtree(d, ignore_errors=True))
+    return d
+
+
+def scoped_free(*dfs: DataFrame) -> None:
+    """Register free_checkpoint of each of ``dfs`` in the current entry's
+    scope: checkpoints a returned DataFrame still reads from."""
+    for df in dfs:
+        scoped_cleanup(lambda df=df: free_checkpoint(df))
+
+
 def scoped_persist(df: DataFrame) -> DataFrame:
     """Materialize ``df`` for the current entry scope and return the frame
     to read from: ``df`` itself, persisted, or inside truncated_persists()
@@ -85,7 +106,7 @@ def scoped_persist(df: DataFrame) -> DataFrame:
         out = local_checkpoint_truncated(df)
     else:
         out = df.persist()
-    scoped_cleanup(lambda: free_checkpoint(out))
+    scoped_free(out)
     return out
 
 
@@ -174,19 +195,26 @@ def local_checkpoint_truncated(df: DataFrame, eager: bool = True) -> DataFrame:
 
 
 def free_checkpoint(df: DataFrame) -> None:
-    """Release a rotated local_checkpoint_truncated frame: explicitly
-    unpersist the underlying checkpointed RDD's blocks (non-blocking),
-    falling back to plain unpersist for ordinary cached frames.
+    """Release a checkpointed frame's RDD blocks (non-blocking), or
+    unpersist an ordinary cached frame.
 
-    The handle captured at checkpoint time is a WRAPPER
-    (SQLExecutionRDD → MapPartitionsRDD → the actually-persisted
-    checkpoint RDD → LocalCheckpointRDD); unpersisting the wrapper
-    frees nothing, so walk the (linear) lineage and unpersist every
-    ancestor holding a valid storage level."""
+    unpersist() frees nothing of a checkpoint: its blocks belong to the
+    checkpointed RDD, not to the cache manager.  A plain
+    ``localCheckpoint`` frame's plan is a LogicalRDD over that RDD.  A
+    local_checkpoint_truncated frame keeps the handle captured at
+    checkpoint time, a WRAPPER (SQLExecutionRDD → MapPartitionsRDD →
+    the checkpointed RDD → LocalCheckpointRDD), so walk its linear
+    lineage and unpersist every ancestor holding a valid storage
+    level."""
     jrdd = getattr(df, "_gamr_ck_jrdd", None)
     try:
         if jrdd is None:
             df.unpersist()
+            plan = df._jdf.queryExecution().analyzed()
+            if plan.getClass().getSimpleName() == "LogicalRDD":
+                rdd = plan.rdd()
+                if rdd.getStorageLevel().isValid():
+                    rdd.unpersist(False)
             return
         r, depth = jrdd, 0
         while r is not None and depth < 16:

@@ -5,15 +5,27 @@ plain shuffled join."""
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 
+from geneticalgorithmsusingmapreduce_spark import catalog
 from geneticalgorithmsusingmapreduce_spark.sources import bucketing
 from geneticalgorithmsusingmapreduce_spark.sources.registry import read_table
 
 SF = "/root/testdata/sf0.001"
 
 
+def _final_plan(df):
+    p = df._jdf.queryExecution().executedPlan().toString()
+    return p.split("== Initial Plan ==")[0]
+
+
 def test_bucketed_join_and_agg_no_exchange(spark, tmp_path):
+    # the catalog entry plans on the session's own broadcast threshold:
+    # its merge hint, not a conf toggle, keeps the join bucketed
+    entry = catalog.QUERIES["join_bucketed_revenue"](spark, SF)
+    entry.collect()
     o = read_table(spark, SF, "orders").select("o_orderkey", "o_custkey")
     li = read_table(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
     bucketing.write_bucketed(o, "b_orders", str(tmp_path / "o"), 8, "o_orderkey")
@@ -31,10 +43,14 @@ def test_bucketed_join_and_agg_no_exchange(spark, tmp_path):
             .agg(F.count(F.lit(1)).alias("n"))
         )
         rows = j.collect()
-        p = j._jdf.queryExecution().executedPlan().toString()
-        p = p.split("== Initial Plan ==")[0]
-        assert "SortMergeJoin" in p or "ShuffledHashJoin" in p
+        p = _final_plan(j)
         assert "Exchange" not in p  # join AND agg ride the bucketing
+        for plan in (p, _final_plan(entry)):
+            join = re.search("SortMergeJoin|ShuffledHashJoin", plan)
+            assert join, plan
+            assert "BroadcastHashJoin" not in plan
+            # the entry's 5-row priority regroup exchanges above the join
+            assert "Exchange" not in plan[join.start():]
 
         want = (
             o.join(li, o.o_orderkey == li.l_orderkey)

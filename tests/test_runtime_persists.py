@@ -4,8 +4,12 @@ and building a catalog entry releases the scopes older than the previous
 entry's — so a returned DataFrame stays computable until the entry after
 next is built, and nothing outlives that."""
 
+import glob
 import os
+import tempfile
 import threading
+
+import pytest
 
 from conftest import SF_DIR
 
@@ -15,6 +19,12 @@ from geneticalgorithmsusingmapreduce_spark import runtime
 def _stored_rdds(spark):
     sc = spark.sparkContext
     return {int(i.id()) for i in sc._jsc.sc().getRDDStorageInfo()}
+
+
+def _is_checkpoint(df):
+    """a checkpoint's plan is a LogicalRDD leaf; a cache keeps its plan"""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.getClass().getSimpleName() == "LogicalRDD"
 
 
 def test_scoped_persist_registers_and_releases(spark):
@@ -61,7 +71,8 @@ def test_release_survives_stopped_handles(spark):
 
 def test_pipeline_path_drains_scoped_persists(spark, monkeypatch):
     # the curation ladders' rungs are checkpoint-truncated leaves, each
-    # registered as a free_checkpoint release in the entry scope
+    # registered as a free_checkpoint release in the entry scope next to
+    # the clustering loop's plain checkpoints; nothing is a cache
     from geneticalgorithmsusingmapreduce_spark.operators import pipeline
 
     runtime.release_scopes()  # clean slate from other tests
@@ -81,7 +92,8 @@ def test_pipeline_path_drains_scoped_persists(spark, monkeypatch):
     )
     assert runtime.release_scopes() == n_releases
     assert len(freed) == n_releases
-    assert all(hasattr(df, "_gamr_ck_jrdd") for df in freed)
+    assert sum(hasattr(df, "_gamr_ck_jrdd") for df in freed) >= 2
+    assert all(_is_checkpoint(df) for df in freed)
     assert not any(runtime._SCOPES)
 
 
@@ -231,3 +243,78 @@ def test_truncation_is_context_local(spark):
     assert df.storageLevel.useMemory
     assert not hasattr(df, "_gamr_ck_jrdd")
     runtime.free_checkpoint(df)
+
+
+@pytest.mark.parametrize("loop", ["cluster_pairs", "cluster_pairs_star"])
+def test_cluster_loops_free_their_checkpoints(spark, loop):
+    # each round frees the round it supersedes; the input checkpoint and
+    # the returned frame live in the entry scope until it is released
+    from geneticalgorithmsusingmapreduce_spark.operators import dedup
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (7, 7)],
+        "doc_a long, doc_b long",
+    )
+    runtime.release_scopes()  # clean slate from other tests
+    pre = _stored_rdds(spark)
+    out = getattr(dedup, loop)(pairs)
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (7, 7), (10, 10), (11, 10),
+    ]
+    held = _stored_rdds(spark) - pre
+    assert len(held) == 2, f"superseded rounds still hold blocks: {held}"
+    runtime.release_scopes()
+    assert not (held & _stored_rdds(spark)), "checkpoint blocks survived"
+
+
+# every entry that returns a lazy frame over what its scope owns: a temp
+# store, bucketed tables, or a stream's state checkpoints
+SCOPED_ENTRIES = [
+    "csv_json_roundtrip", "orc_roundtrip", "sequencefile_roundtrip",
+    "streaming_neardup", "streaming_neardup_guarded", "streaming_semdedup",
+    "streaming_semdedup_durable", "layout_compaction",
+    "events_partitioned_scan", "join_bucketed_revenue",
+    "emb_ivf_index_roundtrip", "emb_ivf_postings_int8",
+    "emb_ivf_postings_pq", "emb_ivf_append_int8",
+    "emb_ivf_append_compacted", "emb_ivf_rebuild_gen",
+]
+_HAS_NO_DIRS = {"streaming_neardup", "streaming_neardup_guarded",
+                "streaming_semdedup"}
+
+
+def _gamr_dirs():
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "gamr_*")))
+
+
+def _tables(spark):
+    return {t.name for t in spark.catalog.listTables()}
+
+
+@pytest.mark.parametrize("name", SCOPED_ENTRIES)
+def test_entry_store_valid_until_entry_after_next(
+    spark, name, tmp_path, monkeypatch
+):
+    # the returned DataFrame reads its store (dirs, tables, checkpoints)
+    # lazily: it must still collect after the next entry is built, and
+    # the store must be gone once the entry after next is built
+    from geneticalgorithmsusingmapreduce_spark import catalog
+
+    # temp dirs of this process only
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    q = catalog.QUERIES
+    dirs0, tables0, blocks0 = _gamr_dirs(), _tables(spark), _stored_rdds(spark)
+    first = q[name](spark, SF_DIR)
+    dirs = _gamr_dirs() - dirs0
+    tables = _tables(spark) - tables0
+    blocks = _stored_rdds(spark) - blocks0
+    assert dirs or name in _HAS_NO_DIRS, "entry made no temp store?"
+    assert blocks or name not in _HAS_NO_DIRS, "no state checkpoints?"
+    q["population_generate"](spark, SF_DIR)
+    rows = sorted(first.collect(), key=str)
+    assert all(os.path.isdir(d) for d in dirs), "store gone before collect"
+    fresh = sorted(q[name](spark, SF_DIR).collect(), key=str)
+    assert rows == fresh
+    q["population_generate"](spark, SF_DIR)
+    assert not any(os.path.exists(d) for d in dirs), "temp dirs outlived scope"
+    assert not (tables & _tables(spark)), "bucket tables outlived scope"
+    assert not (blocks & _stored_rdds(spark)), "checkpoints outlived scope"

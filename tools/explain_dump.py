@@ -25,10 +25,7 @@ HEADLINE = [
     "sga_generation",           # tournament window + pairing + crossover
     "cga_generation",           # shuffle-free vector update
     "join_broadcast_revenue",   # broadcast dim join
-    # join_bucketed_revenue is NOT dumpable here: the entry materializes
-    # before dropping its temp bucket layout, so its returned plan is an
-    # ExistingRDD stub — the zero-exchange property is pinned in
-    # tests/test_bucketing.py instead
+    "join_bucketed_revenue",    # bucketed fact⋈fact, no join exchange
     "dedup_exact_digest",       # 16-byte-key exchange
     "dedup_minhash_lsh",        # band/bucket equi-join
     "dedup_minhash_lsh_capped", # + hot-bucket guard: window count on the join key
