@@ -51,9 +51,8 @@ def ga_loop_benchmarks(spark) -> dict[str, float]:
     best = float("inf")
     for it in range(4):  # gen 0-1 warm Python workers/JIT; gens 2-3 measured
         t0 = time.perf_counter()
-        ch = fit_ops.with_fitness(
-            sga.next_generation(cur, n_bits, 42, it, 32, pop_rows=pop_size),
-            nl=nl,
+        ch = sga.next_generation(
+            cur, n_bits, 42, it, 32, pop_rows=pop_size
         ).localCheckpoint(eager=True)
         ch.count()
         dt = time.perf_counter() - t0
@@ -79,9 +78,8 @@ def ga_loop_benchmarks(spark) -> dict[str, float]:
     best = float("inf")
     for it in range(3):  # gen 0 warms; gens 1-2 measured (min-of-2)
         t0 = time.perf_counter()
-        ch = fit_ops.with_fitness(
-            sga.next_generation(cur, n_bits, 42, it, 32, pop_rows=pop_size),
-            nl=nl,
+        ch = sga.next_generation(
+            cur, n_bits, 42, it, 32, pop_rows=pop_size
         ).localCheckpoint(eager=True)
         ch.count()
         dt = time.perf_counter() - t0

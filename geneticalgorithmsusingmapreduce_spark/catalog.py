@@ -792,14 +792,15 @@ def _pop_with_fitness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pop_genomes_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Id-UNIQUE [id, genome] lookup for the skinny tournament's
-    join-back: the lineitem fixture repeats ~24% of iids (equal genomes
-    by construction — genome is a pure function of iid), so dedup the
-    8-byte IDS first and run the hash-chain derivation AFTER, on
-    distinct ids only. The dedup exchange carries bare ids, the derived
-    genomes stay in their post-exchange partitions (already matching
-    the join key), and derivation cost drops to the distinct count —
-    vs genome_lookup(unique_ids=False)'s wide sort-aggregate over
-    already-derived arrays."""
+    join-back (operators/selection duplicate-id contract): the lineitem
+    fixture repeats ~24% of iids (equal genomes by construction — genome
+    is a pure function of iid), and a repeated winner id would fan out
+    one output row per copy. So dedup the 8-byte IDS first and run the
+    hash-chain derivation AFTER, on distinct ids only: the dedup
+    exchange carries bare ids, the derived genomes stay in their
+    post-exchange partitions (already matching the join key), and
+    derivation cost drops to the distinct count — a dedup of derived
+    genomes would be a wide sort-aggregate over arrays."""
     ids = (
         read_table(spark, sf_dir, "lineitem")
         .filter(LI_POP_WHERE)
@@ -917,12 +918,12 @@ def sga_tournament(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sga_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full composed generation: evaluate → shuffle → tournament → pair →
-    crossover → children (+ child fitness). The reference's entire
+    crossover → evaluated children. The reference's entire
     map-shuffle-reduce job (§3.1) as one declarative plan whose
     window exchanges are genome-free (skinny composition — see
-    plans/sga.next_generation). The lookup stays dedup-then-derive
-    (r8 shape): a bucket-stored lookup was MEASURED at the r9 sf100
-    decade and lost (402.3 s / 9.6× vs this shape's 335.3 / 8.19×) —
+    plans/sga.next_generation). The lookup stays dedup-then-derive: a
+    bucket-stored lookup was MEASURED at the sf100 decade and lost
+    (402.3 s / 9.6× vs this shape's 335.3 / 8.19×) —
     the (part, pair) crossover pivot re-ships the genomes regardless,
     so the store write buys nothing here; the amortized store belongs
     to the LOOP (run_sga storage="bucketed"), where one write serves
@@ -931,9 +932,7 @@ def sga_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pop_with_fitness(spark, sf_dir), GENOME_BITS, SEED, generation=0,
         genome_df=_pop_genomes_unique(spark, sf_dir),
     )
-    return fit_ops.with_fitness(children, nl=NL).select(
-        "id", _gstr("genome").alias("genome"), "fitness"
-    )
+    return children.select("id", _gstr("genome").alias("genome"), "fitness")
 
 
 # --- cGA pipeline: G3/P3 → A3 → J1/J2+P5 → P6 ---------------------------
@@ -1016,21 +1015,19 @@ ORACLES_SHARED_TOURNAMENT = ORACLES.get("sga_tournament")
 
 @register("sga_tournament_pandas", ORACLES_SHARED_TOURNAMENT)
 def sga_tournament_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3: the tournament as a stateful per-partition Pandas kernel
-    (applyInPandas) — the idiomatic successor of the reference's reducer
+    """W3: the tournament as a stateful per-bucket Arrow kernel
+    (applyInArrow) — the idiomatic successor of the reference's reducer
     class. Checked against the *same* oracle as the window-expression form:
     both must produce identical parents.
 
     n_buckets is this operator's WORKING-SET dial: each bucket becomes
-    ONE pandas frame in a worker, so a fixed count scales per-worker
+    ONE Arrow table in a worker, so a fixed count scales per-worker
     memory linearly with the population — at the sf10→sf100 decade
-    (278.6M individuals) 32 buckets put ~8.7M rows in every pandas
-    group and the worker was OOM-killed, while shuffle.buckets_for_pop's
-    512 ran it at 40.9→402.7 s = 9.84× (saturation-linear), with W1/W3
-    parity verified row-identical at the sized count (BASELINE.md r7,
-    tools/probe_tournament_buckets.py). The entry keeps 32 — the sized
-    value for the sf10 population (buckets_for_pop(27.9M) = 32) and the
-    count the static oracle bakes in; size it to the population
+    (278.6M individuals) 32 buckets put ~8.7M rows in every group and
+    the worker was OOM-killed, while shuffle.buckets_for_pop's 512 ran
+    it saturation-linear (BASELINE.md r7). The entry keeps 32 — the
+    sized value for the sf10 population (buckets_for_pop(27.9M) = 32)
+    and the count the static oracle bakes in; size it to the population
     everywhere else."""
     sh = shuffle_ops.with_shuffle_key(
         _pop_with_fitness(spark, sf_dir), SEED * 1_000_033, n_buckets=32

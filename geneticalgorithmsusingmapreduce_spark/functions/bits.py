@@ -57,6 +57,30 @@ def np_stack_cells(col, dtype="int64"):
     return np.array(col.tolist(), dtype=dtype)
 
 
+def np_list_matrix(col, nl: int):
+    """Arrow list<int64> column of N lists of ``nl`` longs → (N, nl)
+    matrix: a reshape of the flat values buffer, zero-copy for a single
+    chunk."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    return col.flatten().to_numpy().reshape(len(col), nl)
+
+
+def arrow_list_column(m):
+    """(N, nl) int64 matrix → Arrow list<int64> array over the same flat
+    buffer (no per-row conversion)."""
+    import numpy as np
+    import pyarrow as pa
+
+    n, nl = m.shape
+    offsets = pa.array(np.arange(0, (n + 1) * nl, nl, dtype=np.int32))
+    return pa.ListArray.from_arrays(
+        offsets, pa.array(np.ascontiguousarray(m).reshape(-1))
+    )
+
+
 def spark_random_long_sql(n_bits_out: int = 64) -> str:
     """Full-entropy random integer with ``n_bits_out`` uniform bits (64 →
     signed full-range int64), composed from two 32-bit ``rand()`` draws.
@@ -246,10 +270,19 @@ def np_popcount_rows(genomes) -> "object":
     return prng.np_popcount64(genomes).sum(axis=1)
 
 
-def np_crossover(pa, pb, seed: int, pair_keys, n_bits: int):
+def np_crossover(pa, pb, seed: int | None, pair_keys, n_bits: int):
     """Both children for each pair row: masks from the same stream as
-    spark_mask_sql, 3 bitwise ops per long."""
-    m = np_genome(seed, pair_keys, n_bits, salt=SALT_MASK)
+    spark_mask_sql, 3 bitwise ops per long. ``seed=None`` draws the masks
+    from numpy's default generator instead, tail long masked."""
+    import numpy as np
+
+    if seed is None:
+        m = np.random.default_rng().integers(
+            0, 1 << 64, size=pa.shape, dtype=np.uint64
+        ).view(np.int64)
+        m[:, -1] &= last_long_mask(n_bits)
+    else:
+        m = np_genome(seed, pair_keys, n_bits, salt=SALT_MASK)
     c1 = (pa & m) | (pb & ~m)
     c2 = (pb & m) | (pa & ~m)
     return c1, c2

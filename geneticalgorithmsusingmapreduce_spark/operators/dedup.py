@@ -65,9 +65,11 @@ def dedup_genomes(pop: DataFrame, keep: str = "min") -> DataFrame:
     smallest id (deterministic, oracle-checkable — dropDuplicates keeps an
     arbitrary row). At scale this is one hash-aggregate shuffle on the
     genome bytes; map-side partial aggs shrink duplicate-heavy partitions
-    before the exchange."""
+    before the exchange. An evaluated population stays evaluated: fitness
+    is a function of the genome, so it rides the grouping key."""
     agg = F.min("id") if keep == "min" else F.max("id")
-    return pop.groupBy("genome").agg(agg.alias("id")).select("id", "genome")
+    keys = ["genome"] + (["fitness"] if "fitness" in pop.columns else [])
+    return pop.groupBy(*keys).agg(agg.alias("id")).select("id", *keys)
 
 
 def duck_dedup_genomes_sql(pop_sql: str, keep: str = "min") -> str:

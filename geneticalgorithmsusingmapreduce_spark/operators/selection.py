@@ -9,65 +9,62 @@ over the partition's head (``:252-272``) — so a partition of n rows yields
 exactly n parents. Every 2nd parent pairs with the previous one for
 crossover (``:235-243``).
 
-Spark mapping: one SKINNY shuffle on the seeded bucket, then
-ranking/analytic window functions over it —
+Over one seeded bucket exchange (operators/shuffle), with
+rn = row_number over (skey, id) within the bucket:
 
-    rn    = row_number() over (partition by part order by skey, id)
-    ext   = rows ∪ head-rows re-positioned at rn+n   (the wrap-around)
-    pid   = max_by(id, fitness·2^31 + rn) over rows between 4 preceding
-    pos   = rn - 4  for rn ≥ 5    (n parents per bucket when n ≥ 4)
-    pair  = (pos+1) div 2; partner id via lag(pid) over pos
-    ...then parent GENOMES join back by id (hash join, no wide sort)
+    ext   = rows ∪ the first min(n, T-1) rows re-positioned at rn+n
+    pid   = argmax of fitness·2^31 + rn over rows between T-1 preceding
+    pos   = rn - (T-1)  for rn ≥ T   (n parents when n ≥ T-1,
+                                      max(0, 2n - (T-1)) below)
+    pair  = pos / 2 at even pos; partner = the parent at pos - 1
 
-All windows share the same partitioning, so Catalyst reuses a single
-exchange; lag() replaces a self-join for pairing (no second shuffle).
-The argmax is tie-broken on (fitness, rn) so the DuckDB oracle matches
-exactly. Buckets with n < T-1 yield fewer than n parents (degenerate case
-the reference never hits — buckets are sized ≫ T).
+The operator has two physical forms with the same keys, hence
+bit-identical parents and children:
 
-**The skinny-shuffle property (r8).** Selection only needs
-(id, fitness, skey) — never the genome — yet through r7 the window
-pipeline shuffled and SORTED full-width rows twice (the rn exchange and
-the post-union window exchange): pop × genome bytes per generation,
-~1.7 GB at the README's 10× scale with 10k-bit genomes, the engine's
-dominant sf100 cost (251.9-316.2 s rows). The reference inherited the
-same design — it shuffles whole individuals
-(``reference src/edu/illinois/ga/MapReduce.java:284-291``). Now every
-window exchange/sort carries ~28-byte skinny rows (50-100× fewer bytes
-for 10k-bit genomes) and winner ids join their genomes back via a hash
-join on id: the population crosses ONE un-sorted hash exchange (reused
-across the pa/pb lookups in pairing), and none at all when the
-generation is bucket-stored by id. Plan property pinned in
-tests/test_plans.py::test_tournament_shuffle_is_skinny.
+* ``breed_children`` — the reference's reducer as ONE grouped Arrow
+  kernel: each bucket arrives as one Arrow table, is sorted in numpy,
+  selected by ``_tournament_index``, paired, crossed over and
+  evaluated, so a generation is one exchange and one Python pass.
+  A bucket's genomes live in one worker at once, which is why
+  plans/sga.next_generation takes it only below WIDE_PATH_BYTES.
+* the skinny composition (``tournament_parent_ids`` →
+  ``paired_parent_ids`` → ``pair_genomes``) — the scale form: the
+  window exchange and sorts carry (id, fitness, skey, part) only, and
+  the two parents' genomes attach through one skinny-build hash join
+  and a role pivot, so genome bytes cross one exchange and enter no
+  sort. Plan property pinned in
+  tests/test_plans.py::test_tournament_shuffle_is_skinny.
 
-Duplicate-id contract: ``id`` is row identity — callers whose source
-can repeat ids (the lineitem fixture's duplicate (orderkey,linenumber)
-keys, which by construction carry EQUAL genomes) must pass
-``unique_ids=False`` so the genome lookup collapses duplicates before
-the join; otherwise each repeated winner id would fan out k output rows.
+``tournament_parents_pandas`` is W3, the reducer-class successor
+(SURVEY.md §2.12): the same ``_tournament_index`` over whole buckets,
+emitting parents instead of children.
 
-At 100 TB: n_buckets should be O(cores·4); windows sort within buckets
-only (no global sort), and the wrap-around union re-reads the bucket
-head — the generation loop persists its input so this costs a cache read,
-not a recompute.
+Duplicate-id contract: ``id`` is row identity for the genome join-back.
+Callers whose source can repeat ids (the lineitem fixture's duplicate
+(orderkey, linenumber) keys, equal genomes by construction) pass an
+id-unique [id, genome] frame as ``genome_df``; otherwise each repeated
+winner id would fan out k output rows.
+
+At scale n_buckets should be O(cores·4): both forms sort within buckets
+only (no global sort), and the skinny form's wrap-around union re-reads
+the bucket head — the generation loop checkpoints its input, so that is
+a cached read, not a recompute.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions import bits
+
 TOURNAMENT_SIZE = 5  # reference src/edu/illinois/ga/MapReduce.java:154
 
 # Tournament ordering: fitness first, tie-broken by the dense per-bucket
-# row number rn (< bucket size, unique within every window). The first
-# version composed fitness·2^32 + id — which silently LOSES selection
-# pressure once ids outgrow 2^32: generation ≥ 1 child ids carry the
-# pair key in their high bits, the id term swamped the fitness term, and
-# the GA degraded to genetic drift (caught by the 10k-bit convergence
-# run: best crept 5218 → 5500 over 112 generations). rn is magnitude-
-# proof: any fitness advantage contributes ≥ 2^31 > max rn. (A struct
-# ordering would be cleaner still, but DuckDB 1.0's arg_max only takes
-# scalar ordering keys.)
+# row number rn (< bucket size, unique within every window). Not the id:
+# child ids carry the pair key in their high bits, so an id term
+# outgrows 2^32 and swamps the fitness term (selection degrades to
+# drift). Any fitness advantage contributes ≥ 2^31 > max rn. DuckDB's
+# arg_max takes scalar keys only, hence one composed key, not a struct.
 _ORD = "(fitness * 2147483648 + rn)"
 
 
@@ -76,7 +73,7 @@ def tournament_parent_ids(
 ) -> DataFrame:
     """W1 skinny core: the windowed tournament over (id, fitness, skey,
     part) ONLY — genomes never enter the exchange or the sorts. Output:
-    one row per input row: [part, pos, parent_id, parent_fitness]."""
+    one row per parent: [part, pos, parent_id, parent_fitness]."""
     w = Window.partitionBy("part").orderBy("skey", "id")
     d = (
         df.select("id", "fitness", "skey", "part")
@@ -106,44 +103,23 @@ def tournament_parent_ids(
     )
 
 
-def genome_lookup(pop: DataFrame, unique_ids: bool = True) -> DataFrame:
-    """[id, genome] lookup side for the join-back. With
-    ``unique_ids=False`` duplicate ids collapse first (partial agg
-    shrinks them map-side; duplicate ids must carry equal genomes —
-    module-doc contract), so a repeated winner id cannot fan out.
-
-    NOTE: the ``unique_ids=False`` collapse is an agg over WIDE rows
-    (array buffers force a sort aggregate) — callers whose genomes are
-    a pure function of the id should dedupe the IDS first and derive
-    genomes after (pass the result as ``genome_df``), which keeps the
-    dedup skinny and halves derivation; the lineitem entries do."""
-    g = pop.select("id", "genome")
-    if not unique_ids:
-        g = g.groupBy("id").agg(F.max("genome").alias("genome"))
-    return g
-
-
 def tournament_parents(
     df: DataFrame,
     t_size: int = TOURNAMENT_SIZE,
-    unique_ids: bool = True,
     genome_df: DataFrame | None = None,
 ) -> DataFrame:
     """W1. Input: [id, genome, fitness, skey, part]; output: one parent per
     input row: [part, pos, parent(genome array), parent_fitness].
 
-    Skinny-shuffle composition: ``tournament_parent_ids`` runs the
-    windows genome-free, then winners join their genomes back via a
-    SHUFFLED HASH join on id — hinted with the skinny winner rows as
-    the build side (a sort-merge join would re-sort the wide genome
-    side; a wide-side hash build OOM'd a 48 GB heap at the sf100
-    probe). ``genome_df`` overrides the lookup side with an id-unique
-    [id, genome] frame — when genomes derive from ids, dedup-ids-then-
-    derive keeps even the lookup exchange skinny."""
+    ``tournament_parent_ids`` runs the windows genome-free, then winners
+    join their genomes back via a SHUFFLED HASH join on id, hinted with
+    the skinny winner rows as the build side (a sort-merge join would
+    re-sort the wide genome side; a wide-side hash build exhausts the
+    heap at scale). ``genome_df`` overrides the lookup side with an
+    id-unique [id, genome] frame (module doc)."""
     sel = tournament_parent_ids(df, t_size)
     g = (
-        genome_df if genome_df is not None
-        else genome_lookup(df, unique_ids)
+        genome_df if genome_df is not None else df.select("id", "genome")
     ).withColumnsRenamed({"id": "parent_id", "genome": "parent"})
     return (
         sel.hint("shuffle_hash")
@@ -174,7 +150,6 @@ def paired_parent_ids(parent_ids: DataFrame) -> DataFrame:
 def pair_genomes(
     pair_ids: DataFrame,
     pop: DataFrame,
-    unique_ids: bool = True,
     genome_df: DataFrame | None = None,
 ) -> DataFrame:
     """Join both parents' genomes onto the skinny pair rows:
@@ -187,23 +162,15 @@ def pair_genomes(
     OBJECT HASH aggregate (hash-based, sort-fallback spill; an array
     `max` buffer would force a full sort aggregate).
 
-    Why this over two sequential id-joins (the first r8 attempt,
-    measured at the sf100 probe): join #2's smaller side already
-    carries the pa genomes, so EITHER it hash-builds wide rows — which
-    OOM'd the 48 GB heap (per-partition UnsafeHashedRelation
-    allocations → GCLocker storms → heap death) — or it sort-merges,
-    re-sorting 1.5× pop of wide rows (measured 471 s / 15.3× at
-    sf100, worse than the pre-skinny 316 s). The explode/pivot form
-    moves the genomes through exactly ONE wide exchange
-    (hashpartitioning(part, pair), n rows) with no wide sort anywhere;
-    every other exchange and sort in the generation is skinny.
+    Two sequential id-joins would be worse either way: the second
+    join's smaller side already carries the pa genomes, so it either
+    hash-builds wide rows (heap exhaustion) or sort-merges, re-sorting
+    1.5× pop of wide rows. The explode/pivot form moves the genomes
+    through exactly ONE wide exchange (hashpartitioning(part, pair),
+    n rows) with no wide sort anywhere.
 
-    ``genome_df``: id-unique [id, genome] lookup override — derive
-    genomes AFTER a skinny id-dedup when they're a function of the id
-    (see genome_lookup note)."""
-    g = genome_df if genome_df is not None else genome_lookup(
-        pop, unique_ids
-    )
+    ``genome_df``: id-unique [id, genome] lookup override (module doc)."""
+    g = genome_df if genome_df is not None else pop.select("id", "genome")
     roles = pair_ids.select(
         "part",
         "pair",
@@ -232,116 +199,101 @@ def pair_genomes(
     )
 
 
-def paired_parents_onepass(
-    df: DataFrame, t_size: int = TOURNAMENT_SIZE
+def _tournament_index(fitness, t_size: int = TOURNAMENT_SIZE):
+    """Parent rows of one bucket whose ``fitness`` is in stream order
+    (skey, id): the window ending at every ext row rn ≥ T over the rows
+    ∪ the first min(n, T-1) rows again, won by the largest
+    (fitness, rn) — the key fitness·2^31 + rn of the window form.
+    Returns max(0, n + min(n, T-1) - (T-1)) indices, in pos order."""
+    import numpy as np
+
+    n = len(fitness)
+    ext = np.arange(n + min(n, t_size - 1)) % max(n, 1)
+    if len(ext) < t_size:
+        return ext[:0]
+    win = np.lib.stride_tricks.sliding_window_view(fitness[ext], t_size)
+    # argmax takes the FIRST maximum; the later stream row wins a tie
+    last = t_size - 1 - win[:, ::-1].argmax(axis=1)
+    return ext[np.arange(len(win)) + last]
+
+
+def _bucket_parents(table, t_size: int):
+    """(parent row indices in pos order, fitness) of one bucket given as
+    an Arrow table with id, skey and fitness columns."""
+    import numpy as np
+
+    order = np.lexsort(
+        (table.column("id").to_numpy(), table.column("skey").to_numpy())
+    )
+    fit = table.column("fitness").to_numpy()
+    return order[_tournament_index(fit[order], t_size)], fit
+
+
+def breed_children(
+    sh: DataFrame, n_bits: int, seed: int | None,
+    t_size: int = TOURNAMENT_SIZE,
 ) -> DataFrame:
-    """W1+W2 in ONE pass over WIDE rows — the small-population fast
-    path: windows carry the genome (max_by(genome, ord) directly), so
-    there is no join-back and no role pivot, at the price of wide
-    window sorts. Correct whenever the per-bucket wide sort fits
-    memory; the r9 min-of-3 same-phase A/B measured the skinny
-    composition's fixed pivot overhead at 1.7× on the two small-pop
-    bench settings (pop 132,878 / 6,000 — `.localdata/ab_pivot_r9.json`)
-    while the r8 event-log A/B had it a wash at 1.33M and the decades
-    show skinny winning at 27.9M+. plans/sga.next_generation routes on
-    a byte threshold. Same ordering keys as the skinny form ⇒
-    bit-identical children (pinned in tests/test_sga.py).
-    Input: [id, genome, fitness, skey, part] → [part, pair, pa, pb]."""
-    w = Window.partitionBy("part").orderBy("skey", "id")
-    d = (
-        df.select("id", "genome", "fitness", "skey", "part")
-        .withColumn("rn", F.row_number().over(w))
-        .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("part")))
-    )
-    head = d.filter(F.col("rn") <= t_size - 1).withColumn(
-        "rn", F.col("rn") + F.col("n")
-    )
-    ext = d.unionByName(head)
-    wf = (
-        Window.partitionBy("part")
-        .orderBy("rn")
-        .rowsBetween(-(t_size - 1), 0)
-    )
-    sel = (
-        ext.select(
-            "part", "rn",
-            F.expr(f"max_by(genome, {_ORD})").over(wf).alias("parent"),
-        )
-        .filter(F.col("rn") >= t_size)
-        .select(
-            "part", (F.col("rn") - t_size + 1).alias("pos"), "parent"
-        )
-    )
-    wp = Window.partitionBy("part").orderBy("pos")
-    return (
-        sel.withColumn("pa", F.lag("parent", 1).over(wp))
-        .filter(F.col("pos") % 2 == 0)
-        .select(
-            "part",
-            ((F.col("pos") + 1) / 2).cast("bigint").alias("pair"),
-            "pa",
-            F.col("parent").alias("pb"),
-        )
-    )
+    """W1 + W2 + P4 + P2 as one kernel per bucket, the reference's
+    GAReducer: [id, genome, fitness, skey, part] → evaluated children
+    [id, genome, fitness]. Per bucket: sort by (skey, id), pick parents
+    with ``_tournament_index``, pair consecutive parents at even pos,
+    cross each pair over with pair key pk = part·2^40 + pair (child ids
+    pk·2 and pk·2+1, the crossover_children stream) and popcount the
+    children. Genomes move as flat Arrow buffers both ways."""
+    nl = bits.n_longs(n_bits)
 
+    def breed(key, table):
+        import numpy as np
+        import pyarrow as pa
 
-def paired_parents(parents: DataFrame) -> DataFrame:
-    """W2 over WIDE parent rows [part, pos, parent, parent_fitness] —
-    kept for callers that already materialized genomes; the generation
-    plan composes ``paired_parent_ids`` + ``pair_genomes`` instead so
-    the lag window never carries genome bytes."""
-    wp = Window.partitionBy("part").orderBy("pos")
-    d = parents.withColumn("pa", F.lag("parent", 1).over(wp))
-    return (
-        d.filter(F.col("pos") % 2 == 0)
-        .select(
-            "part",
-            ((F.col("pos") + 1) / 2).cast("bigint").alias("pair"),
-            "pa",
-            F.col("parent").alias("pb"),
+        win, _ = _bucket_parents(table, t_size)
+        half = len(win) // 2
+        pk = (key[0].as_py() << 40) + np.arange(1, half + 1, dtype=np.int64)
+        g = bits.np_list_matrix(table.column("genome"), nl)
+        c1, c2 = bits.np_crossover(
+            g[win[0:2 * half:2]], g[win[1:2 * half:2]], seed, pk, n_bits
         )
+        ch = np.concatenate([c1, c2])
+        return pa.table({
+            "id": np.concatenate([pk * 2, pk * 2 + 1]),
+            "genome": bits.arrow_list_column(ch),
+            "fitness": bits.np_popcount_rows(ch),
+        })
+
+    return (
+        sh.select("id", "genome", "fitness", "skey", "part")
+        .groupBy("part")
+        .applyInArrow(breed, schema="id long, genome array<long>, fitness long")
     )
 
 
 def tournament_parents_pandas(
     df: DataFrame, t_size: int = TOURNAMENT_SIZE
 ) -> DataFrame:
-    """W3: the same tournament as ``tournament_parents`` but via the
-    ``applyInPandas`` escape hatch — the idiomatic successor of writing a
-    reducer class (SURVEY.md §2.12). The reference's GAReducer is exactly
-    this shape: per-partition stateful streaming with a circular buffer
-    (``reference src/edu/illinois/ga/MapReduce.java:151-273``). Produces
-    bit-identical output to the window-expression form (same oracle), so
-    users can choose either; the expression form stays on the JVM and is
-    preferred (SURVEY.md §2.12 "column expression (preferred)")."""
-    import pandas as pd
+    """W3: ``tournament_parents`` as a stateful per-bucket kernel — the
+    idiomatic successor of writing a reducer class (SURVEY.md §2.12),
+    shaped like the reference's GAReducer
+    (``reference src/edu/illinois/ga/MapReduce.java:151-273``). Each
+    bucket is one Arrow table through ``_tournament_index``, so parents
+    match the window form and its DuckDB twin row for row, buckets
+    smaller than T included. Output [part, pos, parent, parent_fitness]."""
 
-    def one_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["skey", "id"]).reset_index(drop=True)
-        n = len(pdf)
-        genomes = list(pdf["genome"])
-        fits = list(pdf["fitness"])
-        ids = list(pdf["id"])
-        part = pdf["part"].iloc[0]
-        out = []
-        # circular stream of n + (t_size-1) window ends, as the reference's
-        # wrap-around flush does
-        for end in range(t_size - 1, n + t_size - 1):
-            lo = end - (t_size - 1)
-            # tie-break on the stream position (≡ rn in the window form:
-            # wrapped head rows sit at rn = n + original_rn = i + 1)
-            best = max(
-                range(lo, end + 1),
-                key=lambda i: (fits[i % n], i),
-            )
-            out.append(
-                (part, end - t_size + 2, genomes[best % n], fits[best % n])
-            )
-        return pd.DataFrame(
-            out, columns=["part", "pos", "parent", "parent_fitness"]
-        )
+    def one_bucket(key, table):
+        import numpy as np
+        import pyarrow as pa
 
-    return df.groupBy("part").applyInPandas(
+        win, fit = _bucket_parents(table, t_size)
+        return pa.table({
+            "part": np.full(len(win), key[0].as_py(), dtype=np.int64),
+            "pos": np.arange(1, len(win) + 1, dtype=np.int64),
+            # the declared array<bigint> has nullable elements
+            "parent": table.column("genome").take(win).cast(
+                pa.list_(pa.int64())
+            ),
+            "parent_fitness": fit[win],
+        })
+
+    return df.groupBy("part").applyInArrow(
         one_bucket,
         schema="part bigint, pos bigint, parent array<bigint>, parent_fitness bigint",
     )

@@ -6,16 +6,20 @@ max, shuffle randomly partitions AND randomly sorts, reduce runs the
 windowed tournament + pairing + crossover, driver folds side-files for the
 global best and stops at best ≥ nBits−10 (``:433-434``).
 
-Spark plan per generation (one job, ONE shuffle):
+Spark plan per generation: the seeded bucket exchange, then either ONE
+per-bucket Arrow kernel (the reference reducer: W1 tournament, W2
+pairing, P4 crossover and P2 fitness in numpy) or, above
+WIDE_PATH_BYTES, the skinny composition (genome-free W1/W2 windows, one
+genome join-back, P4 crossover, P2 fitness) — see WIDE_PATH_BYTES:
 
-    population --(P2 fitness, codegen)--> --(O1/X1 seeded skey+bucket)-->
-    exchange(part) --> W1 tournament windows --> W2 lag-pairing -->
-    P4 crossover --> children
+    population --(O1/X1 seeded skey+bucket)--> exchange(part) -->
+    {breed kernel | W1 windows → W2 lag-pairing → join-back → P4 → P2}
+    --> evaluated children
 
 The A1/A2 best-individual stats ride the same evaluated DataFrame as a
 separate 1-row agg (partial map-side max → 32-row final exchange — the
 side-channel files S4/S5 and driver fold of the reference collapse into
-this). The loop persists each generation and unpersists the last
+this). The loop checkpoints each generation and frees the last
 (lineage truncation the reference got implicitly from HDFS
 materialization, SURVEY.md §7.4.3).
 """
@@ -60,17 +64,18 @@ def default_n_buckets(spark: SparkSession) -> int:
     return spark.sparkContext.defaultParallelism * 4
 
 
-# Below this many WIDE bytes (pop_rows × genome longs × 8) the
-# one-pass wide-window shape beats the skinny role-pivot composition:
-# the pivot's fixed overhead (explode + hash join + ObjectHashAggregate
-# setup) measured 1.68-1.70× on the two small-pop bench settings
-# (pop 132,878 at 10k bits = 167 MB, pop 6,000 at 64k bits = 48 MB —
-# min-of-3 same-phase A/B, .localdata/ab_pivot_r9.json), while the r8
-# event-log A/B had the shapes a wash at 1.33M pop (1.67 GB) and the
-# sf10→sf100 decades show skinny winning decisively at 27.9M+. 512 MB
-# keeps every measured wide-win inside the fast path and every
-# measured skinny-win outside it, with per-bucket sorts ≤ ~16 MB at
-# the default 32 buckets.
+# The only route selector of next_generation, in genome bytes
+# (pop_rows × n_longs × 8). At or below it a generation is ONE grouped
+# Arrow kernel per bucket (selection.breed_children): one exchange, one
+# Python pass, no window, join or pivot — but a whole bucket's genomes
+# sit in one Python worker, so the bound also caps worker memory (16 MB
+# per bucket at the default 32 buckets). Above it the skinny composition
+# runs: windows over (id, fitness, skey) only and the genomes joined back
+# through one wide exchange with no wide sort, the shape that scales to
+# 10^7-10^8 individuals. 512 MB keeps the reference-scale runs (pop
+# 132,878 at 10k bits = 167 MB; pop 6,000 at 64k bits = 48 MB) on the
+# kernel and the README's 10× run (1.33M at 10k bits = 1.67 GB) on the
+# skinny route.
 WIDE_PATH_BYTES = 512 << 20
 
 
@@ -81,42 +86,35 @@ def next_generation(
     generation: int,
     n_buckets: int = 32,
     t_size: int = selection.TOURNAMENT_SIZE,
-    unique_ids: bool = True,
     genome_df: DataFrame | None = None,
     pop_rows: int | None = None,
 ) -> DataFrame:
-    """One SGA generation: evaluated population → children [id, genome].
-    ``seed`` is folded with the generation index so every generation draws
-    a fresh deterministic stream.
+    """One SGA generation: evaluated population [id, genome, fitness] →
+    evaluated children [id, genome, fitness]. ``seed`` is folded with the
+    generation index so every generation draws a fresh deterministic
+    stream; ``seed=None`` draws shuffle keys and crossover masks at
+    random.
 
-    Skinny composition (r8): the tournament + pairing windows run over
-    (id, fitness, skey) only and the two parents' genomes attach at
-    the very end through one skinny-build hash join + role pivot —
-    genome bytes cross exactly ONE exchange and never enter a sort
-    (see operators/selection.pair_genomes). ``unique_ids=False`` for
-    sources that can repeat ids; ``genome_df`` supplies an id-unique
-    lookup when genomes derive from ids (the lineitem entries).
-
-    ``pop_rows`` (optional, r9): the caller's known population size —
-    when the whole generation's wide bytes fit WIDE_PATH_BYTES, the
-    plan routes to the ONE-PASS wide-window shape instead (no pivot,
-    no join: selection.paired_parents_onepass), which the same-phase
-    A/B measured 1.7× faster at small populations. Same ordering keys
-    ⇒ bit-identical children either way (pinned in tests); callers
-    that don't know their size (or pass None) always get the
-    scale-safe skinny composition."""
+    ``pop_rows`` is the caller's known population size: when the
+    generation fits WIDE_PATH_BYTES it takes the per-bucket kernel,
+    otherwise (or when None) the skinny composition. Same ordering keys
+    and mask stream ⇒ bit-identical seeded children either way (pinned
+    in tests/test_sga.py). ``genome_df``: an id-unique [id, genome]
+    lookup for the skinny route's join-back, for sources that repeat ids
+    or derive genomes from ids (the lineitem entries) and for the
+    bucket-stored loop."""
     gen_seed = None if seed is None else seed * 1_000_033 + generation
     sh = shuffle.with_shuffle_key(pop, gen_seed, n_buckets=n_buckets)
     if (
         pop_rows is not None
         and pop_rows * bits.n_longs(n_bits) * 8 <= WIDE_PATH_BYTES
     ):
-        wide = selection.paired_parents_onepass(sh, t_size)
-        return crossover.crossover_children(wide, n_bits, gen_seed)
+        return selection.breed_children(sh, n_bits, gen_seed, t_size)
     sel = selection.tournament_parent_ids(sh, t_size)
     pairs = selection.paired_parent_ids(sel)
-    wide = selection.pair_genomes(pairs, pop, unique_ids, genome_df)
-    return crossover.crossover_children(wide, n_bits, gen_seed)
+    wide = selection.pair_genomes(pairs, pop, genome_df)
+    children = crossover.crossover_children(wide, n_bits, gen_seed)
+    return evaluate(children, n_bits)
 
 
 def duck_generation_sql(
@@ -200,12 +198,12 @@ def run_sga(
     # by child id every generation (bits toggling back and forth instead of
     # independent flips), so draw one random base seed per run and fold the
     # generation index into it exactly like the seeded path. The draw
-    # comes from `rng` when injected (r4 nit: an injectable source makes
-    # the unseeded MUTATION stream reproducible from a logged Random
-    # state); default remains a fresh stream per run, and the chosen
-    # base is echoed in telemetry either way. NOTE the echo replays only
-    # the mutation masks — the selection/shuffle path under seed=None
-    # deliberately stays on true F.rand (operators/shuffle.py policy).
+    # comes from `rng` when injected (an injectable source makes the
+    # unseeded MUTATION stream reproducible from a logged Random state);
+    # default remains a fresh stream per run, and the chosen base is
+    # echoed in telemetry either way. NOTE the echo replays only the
+    # mutation masks — selection, shuffle keys and crossover masks under
+    # seed=None stay truly random (operators/shuffle.py policy).
     mut_base = (rng or _random).getrandbits(32) if seed is None else seed
     if seed is None:
         print(f"GA:mut_base={mut_base}")
@@ -288,8 +286,8 @@ def run_sga(
                     pop.select("id", "genome")
                     if storage == "bucketed" else None
                 ),
-                # the loop tracks its population size — small
-                # generations route to the one-pass wide shape
+                # the loop tracks its population size — generations
+                # within WIDE_PATH_BYTES take the per-bucket kernel
                 pop_rows=n,
             )
             if mutation_rate:
@@ -308,21 +306,20 @@ def run_sga(
                     children = mutate.apply_mutation(
                         children, n_bits, mutation_rate, gen_seed
                     )
-            children = evaluate(children, n_bits)
+                children = evaluate(children, n_bits)
             if storage == "bucketed":
                 # the store write IS the materialization: lineage and
                 # estimated stats both reset at the scan, so the
                 # checkpoint-stats trap (below) cannot arise
                 new_pop = _materialize_bucketed(children, it, n)
             else:
-                # checkpoint WITH a statistics reset (r8): plain
+                # checkpoint WITH a statistics reset: plain
                 # localCheckpoint preserves the plan's estimated stats,
                 # and the skinny generation's JOINS make the size-only
                 # estimator's product COMPOUND across generations —
                 # digit count of sizeInBytes doubles per generation and
                 # the driver drowns in BigInteger.multiply from ~gen 18
-                # (exponential wall at ANY data size; r1-r7's join-free
-                # plan only added stats, masking the trap). See
+                # (exponential wall at ANY data size). See
                 # runtime.local_checkpoint_truncated.
                 from ..runtime import local_checkpoint_truncated
 
@@ -333,7 +330,7 @@ def run_sga(
             gen_ms = int((time.perf_counter() - t0) * 1000)
             if storage != "bucketed":
                 # free_checkpoint: unpersist() alone leaks the rotated
-                # localCheckpoint's RDD blocks (r8 ADVICE)
+                # localCheckpoint's RDD blocks
                 from ..runtime import free_checkpoint
 
                 free_checkpoint(pop)

@@ -23,8 +23,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions import bits
-from ..operators import dedup, fitness as fit_ops, generate
+from ..operators import dedup, generate
 from ..plans import sga
 from ..runtime import free_checkpoint, local_checkpoint_truncated
 from .microbatch import run_micro_batches
@@ -53,20 +52,19 @@ def start_incremental_sga(
     src/edu/illinois/incr_ga/IncMapReduce.java:512-513``). Raises
     RuntimeError if a generation fails or the run outlasts the
     micro-batch driver's deadline — never a partial state."""
-    nl = bits.n_longs(n_bits)
     state = IncrementalState(
         population=local_checkpoint_truncated(
-            fit_ops.with_fitness(
+            sga.evaluate(
                 generate.random_population(spark, pop_size, n_bits, seed),
-                nl=nl,
+                n_bits,
             )
         )
     )
 
     def one_batch(b: int) -> None:
         # the loop knows its population size (pop_size at batch 0, the
-        # previous batch's count after) — small generations route to
-        # the one-pass wide shape, identical children (plans/sga)
+        # previous batch's count after) — small generations take the
+        # per-bucket kernel, identical children (plans/sga)
         prev_n = state.history[-1][2] if state.history else pop_size
         children = sga.next_generation(
             state.population, n_bits, seed, b, n_buckets, pop_rows=prev_n,
@@ -76,9 +74,7 @@ def start_incremental_sga(
         # stats-resetting checkpoint: the generation plan's joins would
         # otherwise compound the size estimate across micro-batches
         # (see runtime.local_checkpoint_truncated)
-        new_pop = local_checkpoint_truncated(
-            fit_ops.with_fitness(children, nl=nl)
-        )
+        new_pop = local_checkpoint_truncated(children)
         best, n = new_pop.agg(F.max("fitness"), F.count(F.lit(1))).collect()[0]
         old = state.population
         state.population = new_pop

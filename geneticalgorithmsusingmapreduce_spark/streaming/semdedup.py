@@ -604,8 +604,6 @@ def start_streaming_semdedup_durable(
     n_centroids: int = ann.N_CENTROIDS,
     iters: int = 2,
     train_sample_mod: int = 4,
-    use_zones: bool = True,
-    use_sketch: bool = True,
     sketch_read_min_bytes: int = 32 << 20,
     compact_every: int | None = None,
     compact_keep_recent: int = 1,
@@ -783,14 +781,7 @@ def start_streaming_semdedup_durable(
         }
         zone_rows = _zones_load(gd)
         to_free: list[DataFrame] = []
-        if use_zones:
-            live, zone_skipped = _zone_plan(zone_rows, batch_iv, tau_milli)
-        else:
-            live = sorted(
-                (int(z["batch"]), int(z["cent_id"]))
-                for z in zone_rows if int(z["cent_id"]) in batch_iv
-            )
-            zone_skipped = 0
+        live, zone_skipped = _zone_plan(zone_rows, batch_iv, tau_milli)
         sk_bytes = cand_bytes = 0
         n_cand_dirs = 0
         hist = None
@@ -806,7 +797,7 @@ def start_streaming_semdedup_durable(
         # sketch_read_min_bytes=0; the decade probe measures the
         # above-threshold regime.
         store_bytes = _dir_bytes(os.path.join(gd, "assign"))
-        sketch_on = use_sketch and store_bytes >= sketch_read_min_bytes
+        sketch_on = store_bytes >= sketch_read_min_bytes
         if sketch_on:
             sk_live = [
                 (hb, c) for hb, c in live

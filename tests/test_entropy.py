@@ -51,6 +51,15 @@ def test_seed_none_crossover_masks_set_every_bit_position(spark):
         F.expr("bit_count(bit_or(element_at(genome, 1)))").alias("b")
     ).collect()[0]
     assert row.b == 64
+    # the per-bucket kernel's numpy masks: every bit of a full long, and
+    # exactly the used bits of the tail long
+    import numpy as np
+
+    ones = np.full((1024, 2), -1, dtype=np.int64)
+    c1, _ = bits.np_crossover(ones, ones * 0, None, None, 100)
+    assert np.bitwise_or.reduce(c1, axis=0).tolist() == [
+        -1, bits.last_long_mask(100)
+    ]
 
 
 def test_seed_none_shuffle_buckets_spread(spark):

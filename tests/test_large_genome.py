@@ -41,9 +41,8 @@ def test_sga_generation_at_64kbits(spark):
     pop = fit_ops.with_fitness(
         generate.random_population(spark, 256, N_BITS, seed=12), nl=NL
     )
-    children = fit_ops.with_fitness(
-        sga.next_generation(pop, N_BITS, seed=12, generation=0, n_buckets=4),
-        nl=NL,
+    children = sga.next_generation(
+        pop, N_BITS, seed=12, generation=0, n_buckets=4
     )
     rows = children.collect()
     # n parents → floor(n_bucket/2) pairs → 2 children each; buckets with

@@ -531,3 +531,34 @@ def test_ivf_serve_int8_scans_probed_lists_only(spark, tmp_path):
         f"serve plan is {size} B of extended explain, budget "
         f"{SERVE8_EXPLAIN_BUDGET} B"
     )
+
+
+# extended-explain budget (bytes) of one kernel-route SGA generation
+# (population within WIDE_PATH_BYTES): the per-bucket breed kernel's plan
+# measures ~4.3 KB; the one-pass wide-window plan it replaced (max_by
+# genome windows, a wrap-around union, lag pairing and the crossover
+# expression) measured ~25 KB, both at 10,000 bits
+SGA_KERNEL_EXPLAIN_BUDGET = 8 << 10
+
+
+def test_sga_kernel_generation_one_exchange(spark):
+    # a small-population generation is the seeded bucket exchange and
+    # one grouped Arrow pass: no window, no join, one exchange on part,
+    # and a constant-size plan
+    from geneticalgorithmsusingmapreduce_spark.operators import generate
+    from geneticalgorithmsusingmapreduce_spark.plans import sga
+
+    pop = sga.evaluate(
+        generate.random_population(spark, 400, 10_000, seed=3), 10_000
+    )
+    ch = sga.next_generation(pop, 10_000, 3, 0, n_buckets=8, pop_rows=400)
+    p = _plan(ch)
+    for node in ("Window", "Join"):
+        assert node not in p, f"kernel generation plan has {node}:\n{p}"
+    assert p.count("Exchange") == 1, p
+    assert re.search(r"Exchange hashpartitioning\(part#\d+L?, \d+\)", p), p
+    size = len(ch._jdf.queryExecution().toString().encode())
+    assert size < SGA_KERNEL_EXPLAIN_BUDGET, (
+        f"kernel generation plan is {size} B of extended explain, budget "
+        f"{SGA_KERNEL_EXPLAIN_BUDGET} B"
+    )

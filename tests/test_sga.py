@@ -20,6 +20,11 @@ N_BITS = 128
 NL = bits.n_longs(N_BITS)
 
 
+def _ones(genome) -> int:
+    """Reference ONEMAX fitness of one genome (Python ints)."""
+    return sum(bin(x & (2**64 - 1)).count("1") for x in genome)
+
+
 @pytest.fixture(scope="module")
 def pop(spark):
     p = fit_ops.with_fitness(
@@ -45,6 +50,62 @@ def test_tournament_preserves_count_and_pressure(pop):
     avg_par = parents.agg(F.avg("parent_fitness")).collect()[0][0]
     # tournament-5 selection must lift average fitness materially
     assert avg_par > avg_in + 2
+
+
+def test_small_buckets_kernel_reducer_and_oracle_agree(spark):
+    # buckets of 1..6 rows: below T-1 rows the wrap-around yields
+    # max(0, 2n - (T-1)) parents, not n (0, 0, 2 for n = 1, 2, 3). The
+    # kernel route, the W3 reducer, the window form and the DuckDB twin
+    # must agree row for row; fitness is coarsened so windows hold ties.
+    import duckdb
+    import pyarrow as pa
+
+    from geneticalgorithmsusingmapreduce_spark.operators import crossover
+
+    seed = 29
+    src = generate.random_population(spark, 21, N_BITS, seed=4).collect()
+    rows, i = [], 0
+    for part, n in enumerate(range(1, 7)):
+        for _ in range(n):
+            r = src[i]
+            fit = _ones(r.genome) // 8
+            rows.append((r.id, list(r.genome), fit, (r.id * 7919) % 101, part))
+            i += 1
+    cols = ["id", "genome", "fitness", "skey", "part"]
+    sh = spark.createDataFrame(
+        rows, "id long, genome array<long>, fitness long, skey long, part long"
+    ).withColumn(  # non-null elements, like the engine's genome arrays
+        "genome", F.expr("transform(genome, x -> coalesce(x, 0L))")
+    )
+    con = duckdb.connect()
+    con.register("sh", pa.Table.from_pylist([dict(zip(cols, r)) for r in rows]))
+    par_sql = selection.duck_tournament_sql(
+        "(SELECT id, genome, fitness, skey, part FROM sh)"
+    )
+
+    def key(r):
+        return tuple(tuple(v) if isinstance(v, list) else v for v in r)
+
+    duck_par = {key(r) for r in con.sql(f"SELECT * FROM {par_sql} _p").fetchall()}
+    per_part = [sum(1 for r in duck_par if r[0] == p) for p in range(6)]
+    assert per_part == [0, 0, 2, 4, 5, 6]
+    for df in (selection.tournament_parents_pandas(sh),
+               selection.tournament_parents(sh)):
+        got = {key(r) for r in df.select(
+            "part", "pos", "parent", "parent_fitness").collect()}
+        assert got == duck_par
+    ch_sql = crossover.duck_children_sql(
+        selection.duck_paired_sql(par_sql), N_BITS, seed
+    )
+    duck_ch = {
+        (i, tuple(g), _ones(g))
+        for i, g in con.sql(f"SELECT * FROM {ch_sql} _c").fetchall()
+    }
+    kernel = {
+        (r.id, tuple(r.genome), r.fitness)
+        for r in selection.breed_children(sh, N_BITS, seed).collect()
+    }
+    assert kernel == duck_ch and len(kernel) == 2 * (0 + 0 + 1 + 2 + 2 + 3)
 
 
 def test_pairing_and_children_counts(spark, pop):
@@ -112,29 +173,32 @@ def test_run_sga_bucketed_storage_identical_trajectory(spark):
 
 
 def test_wide_fast_path_children_bit_identical(spark):
-    # r9 (r8 VERDICT "Next round" #7): the one-pass wide-window shape
-    # (small-pop fast path, no role pivot) must produce BIT-IDENTICAL
-    # children to the skinny composition — same ordering keys, so the
-    # only difference is physical
-    pop = sga.evaluate(
-        generate.random_population(spark, 600, N_BITS, seed=5), N_BITS
-    )
-    skinny = sga.next_generation(pop, N_BITS, 5, 0, n_buckets=8)
-    wide = sga.next_generation(
-        pop, N_BITS, 5, 0, n_buckets=8, pop_rows=600
-    )
-    a = {(r.id, tuple(r.genome)) for r in skinny.collect()}
-    b = {(r.id, tuple(r.genome)) for r in wide.collect()}
-    assert a == b and a
+    # the per-bucket kernel route (small populations) must breed
+    # BIT-IDENTICAL evaluated children to the skinny composition — same
+    # ordering keys and mask stream, so the only difference is physical.
+    # One width inside the literal-expression crossover (nl ≤ LARGE_NL)
+    # and one on the numpy crossover (nl > LARGE_NL).
+    for n_bits in (N_BITS, 64 * (bits.LARGE_NL + 2)):
+        pop = sga.evaluate(
+            generate.random_population(spark, 600, n_bits, seed=5), n_bits
+        )
+        skinny = sga.next_generation(pop, n_bits, 5, 0, n_buckets=8)
+        kernel = sga.next_generation(
+            pop, n_bits, 5, 0, n_buckets=8, pop_rows=600
+        )
+        a = {(r.id, tuple(r.genome), r.fitness) for r in skinny.collect()}
+        b = {(r.id, tuple(r.genome), r.fitness) for r in kernel.collect()}
+        assert a == b and a, n_bits
+        assert all(f == _ones(g) for _, g, f in b)
 
 
 def test_wide_fast_path_routing():
-    # threshold arithmetic: below WIDE_PATH_BYTES routes wide (no
-    # role-pivot aggregate in the plan), above or unknown stays skinny
+    # threshold arithmetic: within WIDE_PATH_BYTES routes to the
+    # per-bucket kernel, above or unknown stays skinny
     from geneticalgorithmsusingmapreduce_spark.functions import bits
 
     nl = bits.n_longs(10_000)
-    assert 132_878 * nl * 8 <= sga.WIDE_PATH_BYTES     # bench 10kbit: wide
+    assert 132_878 * nl * 8 <= sga.WIDE_PATH_BYTES     # bench 10kbit: kernel
     assert 6_000 * bits.n_longs(64_000) * 8 <= sga.WIDE_PATH_BYTES
     assert 1_328_772 * nl * 8 > sga.WIDE_PATH_BYTES    # README 10x: skinny
     assert 27_856_103 * 4 * 8 > sga.WIDE_PATH_BYTES    # sf10 pop: skinny
@@ -144,10 +208,11 @@ def test_wide_fast_path_plan_has_no_pivot(spark):
     pop = sga.evaluate(
         generate.random_population(spark, 400, N_BITS, seed=3), N_BITS
     )
-    wide_plan = sga.next_generation(
+    kernel_plan = sga.next_generation(
         pop, N_BITS, 3, 0, n_buckets=8, pop_rows=400
     )._jdf.queryExecution().optimizedPlan().toString()
-    assert "map_from_entries" not in wide_plan
+    assert "map_from_entries" not in kernel_plan
+    assert "FlatMapGroupsInArrow" in kernel_plan
     skinny_plan = sga.next_generation(
         pop, N_BITS, 3, 0, n_buckets=8
     )._jdf.queryExecution().optimizedPlan().toString()
@@ -231,7 +296,7 @@ def test_generation_loop_stats_stay_bounded(spark):
     pop.count()
     digits = []
     for it in range(5):
-        ch = sga.evaluate(sga.next_generation(pop, 64, 3, it, 4), 64)
+        ch = sga.next_generation(pop, 64, 3, it, 4)
         new_pop = local_checkpoint_truncated(ch)
         d = len(
             str(

@@ -38,7 +38,7 @@ ALIASES = {
     "cosine_planes24_b4": "dedup_cosine_banded_sized",
     # W3 at shuffle.buckets_for_pop (512 @ 278.6M) — the fixed-32 gate
     # config OOM-killed the worker at sf100; W1/W3 parity verified at
-    # the sized count (tools/probe_tournament_buckets.py)
+    # the sized count (BASELINE.md r7)
     "tournament_pandas_sized": "sga_tournament_pandas",
     # (r8's "streaming_neardup_guarded" probe alias is GONE in r9: the
     # guarded variant is now a REGISTERED entry under that exact name —
