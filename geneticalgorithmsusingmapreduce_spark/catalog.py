@@ -3528,7 +3528,7 @@ def emb_ivf_recall_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 MUTATION_RATE = 0.01
 
 
-MUT_EXACT_BITS = 64  # single-long width — per-bit masks stay in codegen
+MUT_EXACT_BITS = 64  # one long: keeps the per-bit DuckDB oracle cheap
 
 
 @register("sga_mutation")  # oracle attached below (needs the mut subquery)
@@ -3538,12 +3538,11 @@ def sga_mutation(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bit Bernoulli mask from the seeded stream.
 
     Registered at 64-bit width: the exact per-bit form costs ~n_bits/3
-    hashes per row, and at 256 bits it alone was 20% of the whole bench.
-    One long keeps the per-bit oracle check AND the whole plan in
-    whole-stage codegen; the wide-genome Arrow kernel is pinned against
-    this same stream in tests (test_numpy_mask_matches_expression) and
-    the at-scale mutation path is the oracle-checked
-    ``sga_mutation_sparse`` entry below."""
+    hashes per row in both engines, and the DuckDB twin explodes one row
+    per hash. The kernel is the same at every width, and
+    tests/test_mutation.py pins it to the twin at 64 and 130 bits; the
+    at-scale mutation path is the oracle-checked ``sga_mutation_sparse``
+    entry below."""
     li = (
         read_table(spark, sf_dir, "lineitem")
         .filter(LI_POP_WHERE)

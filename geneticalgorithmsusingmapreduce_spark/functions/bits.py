@@ -46,12 +46,11 @@ def last_long_mask(n_bits: int) -> int:
 
 
 def np_stack_cells(col, dtype="int64"):
-    """pandas Series of array-typed cells → (N, width) matrix.
-
-    ``np.array(Series.tolist())`` takes numpy's C fast path over the cell
-    arrays; the previous ``np.stack(Series.map(lambda ...))`` paid a
-    per-row Python call and dominated every Arrow kernel's profile
-    (measured ~3× on the sf0.1 mutation kernel)."""
+    """pandas Series of array-typed cells → (N, width) matrix, one C-level
+    ``np.array(Series.tolist())``. The GA operators never call it: genomes
+    cross as flat Arrow buffers (np_list_matrix / arrow_list_column). Its
+    callers are the ``mapInPandas`` embedding kernels of operators.ann and
+    perfbench's ``functions.bits.stack_cells_s`` micro-timing."""
     import numpy as np
 
     return np.array(col.tolist(), dtype=dtype)
@@ -234,13 +233,17 @@ def duck_mask_query(source_sql, key, carry, n_bits, seed, out="mask"):
 # --------------------------------------------------------------------------
 # numpy kernels (large-genome path)
 # --------------------------------------------------------------------------
-# A 10,000-bit genome is 157 longs; literal-index expressions at that width
-# blow the JVM's 64 KB method limit and whole-stage codegen silently falls
-# back to interpreted evaluation (measured 22-32 s/generation at the
-# reference's own example scale). Above LARGE_NL the operators switch to
-# Arrow-batched numpy kernels computing the *identical* seeded streams
-# (prng.np_xxhash64 wraps exactly like the JVM), so results stay
-# oracle-compatible regardless of which path ran.
+# The one dispatch rule: at n_longs(n_bits) > LARGE_NL the seeded
+# generator, fitness and crossover run Arrow-batched numpy kernels, at or
+# below it the literal-index expressions above. A 10,000-bit genome is
+# 157 longs, and literal-index expressions that wide blow the JVM's 64 KB
+# method limit, so whole-stage codegen silently falls back to interpreted
+# evaluation. Mutation is the exception: its per-bit mask expression
+# outgrows that limit at two longs, so it always runs the kernel. The
+# kernels compute the *identical* seeded streams (prng.np_xxhash64 wraps
+# exactly like the JVM), so results stay oracle-compatible whichever path
+# ran. Genomes enter numpy through np_list_matrix and leave through
+# arrow_list_column, never cell by cell.
 
 LARGE_NL = 32
 

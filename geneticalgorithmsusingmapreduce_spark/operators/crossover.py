@@ -24,30 +24,31 @@ def crossover_children(
     """Input [part, pair, pa, pb] → two children per pair:
     [id, genome] with id = pair_key*2 + child_index."""
     nl = bits.n_longs(n_bits)
-    if seed is not None and nl > bits.LARGE_NL:
-        # large-genome path: numpy masks+children per Arrow batch (same
-        # seeded stream; literal exprs at this width break codegen)
-        import numpy as np
-        import pandas as pd
-
+    if nl > bits.LARGE_NL:
+        # numpy masks and children per Arrow batch (the same seeded
+        # stream, or numpy's unseeded draws for seed=None): literal
+        # expressions at this width break the 64 KB codegen limit
         def xo_kernel(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pk = (
-                    pdf["part"].to_numpy() * 1_099_511_627_776
-                    + pdf["pair"].to_numpy()
-                )
-                pa = bits.np_stack_cells(pdf["pa"])
-                pb = bits.np_stack_cells(pdf["pb"])
-                c1, c2 = bits.np_crossover(pa, pb, seed, pk, n_bits)
-                ids = np.concatenate([pk * 2, pk * 2 + 1])
-                genomes = list(c1) + list(c2)
-                yield pd.DataFrame({"id": ids, "genome": genomes})
+            import numpy as np
+            import pyarrow as pa
 
-        return pairs.select("part", "pair", "pa", "pb").mapInPandas(
-            xo_kernel, schema="id long, genome array<long>"
-        )
+            for b in batches:
+                pk = b.column("pk").to_numpy()
+                c1, c2 = bits.np_crossover(
+                    bits.np_list_matrix(b.column("pa"), nl),
+                    bits.np_list_matrix(b.column("pb"), nl),
+                    seed, pk, n_bits,
+                )
+                yield pa.RecordBatch.from_pydict({
+                    "id": np.concatenate([pk * 2, pk * 2 + 1]),
+                    "genome": bits.arrow_list_column(
+                        np.concatenate([c1, c2])
+                    ),
+                })
+
+        return pairs.select(
+            F.expr(_PAIR_KEY).alias("pk"), "pa", "pb"
+        ).mapInArrow(xo_kernel, "id long, genome array<long>")
     if seed is None:
         mask_elems = []
         m = bits.last_long_mask(n_bits)

@@ -18,6 +18,7 @@ row, so the final exchange moves #partitions rows — optimal at any scale.
 
 from __future__ import annotations
 
+import pyarrow as pa  # arrow_udf resolves the kernels' pa.Array hints here
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions import bits
@@ -33,25 +34,15 @@ def with_fitness(
     df: DataFrame, genome: str = "genome", nl: int | None = None
 ) -> DataFrame:
     """P2: append fitness (reference emits (individual, fitness) pairs).
-    Above LARGE_NL a vectorized Arrow kernel (SWAR popcount over the
-    stacked matrix) replaces the literal bit_count sum — same values,
-    no 64 KB codegen blowup."""
+    Above LARGE_NL a scalar Arrow UDF popcounts the flat genome buffer in
+    numpy — same values, no 64 KB codegen blowup, still a projection."""
     if nl is not None and nl > bits.LARGE_NL:
-        return df.withColumn("fitness", _popcount_pandas_udf()(genome))
+
+        def popcount(g: pa.Array) -> pa.Array:
+            return pa.array(bits.np_popcount_rows(bits.np_list_matrix(g, nl)))
+
+        return df.withColumn("fitness", F.arrow_udf(popcount, "long")(genome))
     return df.withColumn("fitness", fitness_col(genome, nl))
-
-
-def _popcount_pandas_udf():
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def pop(col):
-        m = bits.np_stack_cells(col)
-        return pd.Series(bits.np_popcount_rows(m))
-
-    pop.__annotations__ = {"col": pd.Series, "return": pd.Series}
-    return pandas_udf(pop, "long")
 
 
 def fitness_duckdb_sql(genome: str = "genome") -> str:

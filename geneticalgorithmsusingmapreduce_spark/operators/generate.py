@@ -27,6 +27,7 @@ materialization is embarrassingly parallel.
 
 from __future__ import annotations
 
+import pyarrow as pa  # arrow_udf resolves the kernels' pa.Array hints here
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import bits
@@ -52,23 +53,18 @@ def random_population(
         if num_partitions
         else spark.range(pop)
     )
-    nl_total = bits.n_longs(n_bits)
-    if seed is not None and nl_total > bits.LARGE_NL:
-        # large-genome path: Arrow kernel emitting the same seeded stream
-        # (literal expressions at this width break the 64 KB codegen limit)
-        import pandas as pd
+    nl = bits.n_longs(n_bits)
+    if seed is not None and nl > bits.LARGE_NL:
+        # the same seeded stream in numpy: literal expressions at this
+        # width break the 64 KB codegen limit
 
-        def gen_kernel(batches):
-            for pdf in batches:
-                keys = pdf["id"].to_numpy()
-                g = bits.np_genome(seed, keys, n_bits)
-                yield pd.DataFrame({"id": keys, "genome": list(g)})
+        def genomes(ids: pa.Array) -> pa.Array:
+            return bits.arrow_list_column(
+                bits.np_genome(seed, ids.to_numpy(), n_bits)
+            )
 
-        return rng.mapInPandas(
-            gen_kernel, schema="id long, genome array<long>"
-        )
-    if seed is None:
-        nl = bits.n_longs(n_bits)
+        g = F.arrow_udf(genomes, "array<bigint>")("id")
+    elif seed is None:
         mask = bits.last_long_mask(n_bits)
         elems = []
         for j in range(nl):

@@ -4,20 +4,22 @@ convergence stalls near the optimum and the stop rule tolerates
 ``nBits − 10``. A complete GA engine needs one.)
 
 Semantics: each genome bit flips independently with probability ``rate``.
-mutated = genome XOR mask, mask bits drawn from the seeded stream — same
-three-way implementation story as every stochastic operator (Spark
-expressions / DuckDB twin / numpy kernel).
+mutated = genome XOR mask, mask bits drawn from the seeded stream — a
+numpy kernel and its DuckDB twin.
 
 Draw economics: one xxhash64 yields three independent 21-bit uniforms
 (bits 1-21, 22-42, 43-63), so a mask costs ceil(n_bits/3) hashes instead
-of n_bits (measured 12.9 s → ~4 s at sf0.1 for the one-per-bit form).
-The flip threshold is quantized to t = p64 >> 42 ∈ [0, 2^21) — identical
-in both engines, rate resolution 2^-21 ≈ 5·10^-7 (≪ any useful mutation
-rate).
+of n_bits. The flip threshold is quantized to t = p64 >> 42 ∈ [0, 2^21)
+— identical in both engines, rate resolution 2^-21 ≈ 5·10^-7 (≪ any
+useful mutation rate).
+
+Both kernels are scalar Arrow UDFs over (key, genome) → genome: only
+those two columns enter Python, as flat Arrow buffers.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa  # arrow_udf resolves the kernels' pa.Array hints here
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import bits, prng
@@ -31,77 +33,31 @@ def _t21(rate: float) -> int:
     return int(rate * LONG_MAX) >> 42
 
 
-def mutation_expr(seed: int, key: str, n_bits: int, rate: float) -> str:
-    """array<bigint> mask; only used for single-long genomes (per-bit
-    expressions fall out of codegen immediately — see apply_mutation)."""
-    nl = bits.n_longs(n_bits)
-    ss = bits.seed_salt(seed, SALT_MUTATE)
-    t = _t21(rate)
-    elems = []
-    for j in range(nl):
-        terms = []
-        for b in range(64):
-            gb = j * 64 + b
-            h = prng.spark_hash(str(ss), key, str(gb // 3))
-            slot = gb % 3
-            u = f"(shiftright({h}, {1 + slot * 21}) & {U21})"
-            w = (
-                str(1 << b) if b < 63
-                else "(cast(-9223372036854775807 as bigint) - 1)"
-            )
-            terms.append(
-                f"(CASE WHEN {u} < {t} THEN {w} ELSE cast(0 as bigint) END)"
-            )
-        e = "(" + " + ".join(terms) + ")"
-        m = bits.last_long_mask(n_bits)
-        if j == nl - 1 and m != -1:
-            e = f"({e} & {m})"
-        elems.append(e)
-    return "array(" + ", ".join(elems) + ")"
-
-
 def apply_mutation(
     df: DataFrame, n_bits: int, rate: float, seed: int,
     key: str = "id", genome: str = "genome",
 ) -> DataFrame:
-    """[*df.columns with genome replaced by the mutated genome].
-
-    Dispatch: per-bit Bernoulli masks blow the 64 KB codegen limit at
-    just 2 longs, so the Arrow/numpy kernel is the default for anything
-    wider than one long."""
+    """[*df.columns with genome replaced by the mutated genome]: genome
+    XOR np_mutation_mask. One kernel serves every width: as an expression
+    the per-bit Bernoulli mask costs 64 hash-and-compare terms per long
+    and outgrows the 64 KB codegen limit at two longs."""
     nl = bits.n_longs(n_bits)
-    if nl > 1:
-        import numpy as np
-        import pandas as pd
+    ss = bits.seed_salt(seed, SALT_MUTATE)
+    t = _t21(rate)
 
-        ss = bits.seed_salt(seed, SALT_MUTATE)
-        t = _t21(rate)
+    def mutated(k: pa.Array, g: pa.Array) -> pa.Array:
+        mask = np_mutation_mask(ss, k.to_numpy(), n_bits, t)
+        return bits.arrow_list_column(bits.np_list_matrix(g, nl) ^ mask)
 
-        def kernel(batches):
-            for pdf in batches:
-                keys = pdf[key].to_numpy()
-                g = bits.np_stack_cells(pdf[genome])
-                mask = np_mutation_mask(ss, keys, n_bits, t)
-                out = pdf.copy()
-                out[genome] = list(g ^ mask)
-                yield out
-
-        return df.mapInPandas(kernel, schema=df.schema)
-    mexpr = mutation_expr(seed, key, n_bits, rate)
-    xo = ", ".join(
-        f"element_at({genome}, {j + 1}) ^ element_at(__m, {j + 1})"
-        for j in range(nl)
-    )
-    return (
-        df.withColumn("__m", F.expr(mexpr))
-        .withColumn(genome, F.expr(f"array({xo})"))
-        .drop("__m")
+    return df.withColumn(
+        genome, F.arrow_udf(mutated, "array<bigint>")(key, genome)
     )
 
 
 def np_mutation_mask(ss: int, keys, n_bits: int, t21: int):
-    """(N, nl) int64 masks — same stream as mutation_expr (3 draws per
-    hash)."""
+    """(N, nl) int64 masks: bit b of long j flips when draw j·64 + b,
+    the (j·64 + b) mod 3 slot of hash (seed_salt, key, (j·64 + b) // 3),
+    is below ``t21`` — the stream duck_mutation_query rebuilds in SQL."""
     import numpy as np
 
     nl = bits.n_longs(n_bits)
@@ -145,7 +101,6 @@ def apply_mutation_sparse(
     import math
 
     import numpy as np
-    import pandas as pd
 
     lam = n_bits * rate
     # inverse-CDF thresholds on a 63-bit uniform
@@ -157,31 +112,30 @@ def apply_mutation_sparse(
     ss = bits.seed_salt(seed, SALT_MUTATE) + 777  # distinct stream
     nl = bits.n_longs(n_bits)
 
-    def kernel(batches):
-        for pdf in batches:
-            keys = pdf[key].to_numpy()
-            n = len(keys)
-            g = bits.np_stack_cells(pdf[genome]).view(np.uint64)
-            h0 = prng.np_xxhash64([ss, keys, -1]).view(np.uint64) >> np.uint64(1)
-            k_flips = np.searchsorted(thresholds, h0, side="right")
-            mask = np.zeros((n, nl), dtype=np.uint64)
-            for d in range(int(k_flips.max()) if n else 0):
-                active = k_flips > d
-                if not active.any():
-                    break
-                hp = prng.np_xxhash64(
-                    [ss, keys[active], d]).view(np.uint64)
-                pos = (hp % np.uint64(n_bits)).astype(np.int64)
-                rows = np.nonzero(active)[0]
-                np.bitwise_xor.at(
-                    mask, (rows, pos // 64),
-                    np.uint64(1) << (pos % 64).astype(np.uint64),
-                )
-            out = pdf.copy()
-            out[genome] = list((g ^ mask).view(np.int64))
-            yield out
+    def mutated(k: pa.Array, g: pa.Array) -> pa.Array:
+        keys = k.to_numpy()
+        n = len(keys)
+        h0 = prng.np_xxhash64([ss, keys, -1]).view(np.uint64) >> np.uint64(1)
+        k_flips = np.searchsorted(thresholds, h0, side="right")
+        mask = np.zeros((n, nl), dtype=np.uint64)
+        for d in range(int(k_flips.max()) if n else 0):
+            active = k_flips > d
+            if not active.any():
+                break
+            hp = prng.np_xxhash64([ss, keys[active], d]).view(np.uint64)
+            pos = (hp % np.uint64(n_bits)).astype(np.int64)
+            rows = np.nonzero(active)[0]
+            np.bitwise_xor.at(
+                mask, (rows, pos // 64),
+                np.uint64(1) << (pos % 64).astype(np.uint64),
+            )
+        return bits.arrow_list_column(
+            bits.np_list_matrix(g, nl) ^ mask.view(np.int64)
+        )
 
-    return df.mapInPandas(kernel, schema=df.schema)
+    return df.withColumn(
+        genome, F.arrow_udf(mutated, "array<bigint>")(key, genome)
+    )
 
 
 def duck_mutation_sparse_query(

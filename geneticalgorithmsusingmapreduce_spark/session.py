@@ -22,6 +22,15 @@ def _blas_threads() -> str:
     return "1"
 
 
+def _driver_mem() -> str:
+    """$SPARK_GRAFT_DRIVER_MEM, else a third of physical RAM capped at
+    48g: a fixed 48g heap lets the driver JVM outgrow a small machine
+    until the kernel's OOM killer ends it."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    default = f"{min(48 << 10, ram // 3 >> 20)}m"
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", default)
+
+
 def local_cpus() -> int:
     """Cores of the local[N] master build_session starts when not given
     ``cpus``: $SPARK_GRAFT_CPUS, default 32."""
@@ -64,7 +73,7 @@ def build_session(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
             "true",
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_mem())
         .config("spark.sql.session.timeZone", "UTC")
         # the reference enables speculative execution on every job
         # (reference src/edu/illinois/ga/MapReduce.java:281, CGA.java:341)

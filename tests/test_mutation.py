@@ -1,12 +1,15 @@
-"""Bit-flip mutation: rate accuracy + expression/numpy path parity."""
+"""Bit-flip mutation: rate accuracy, kernel/DuckDB-twin parity and
+column pass-through."""
 
 from __future__ import annotations
 
-import numpy as np
+import duckdb
 from pyspark.sql import functions as F
 
 from geneticalgorithmsusingmapreduce_spark.functions import bits
-from geneticalgorithmsusingmapreduce_spark.operators import generate, mutate
+from geneticalgorithmsusingmapreduce_spark.operators import (
+    fitness as fit_ops, generate, mutate,
+)
 
 
 def test_flip_rate_close_to_nominal(spark):
@@ -26,22 +29,31 @@ def test_flip_rate_close_to_nominal(spark):
 
 
 def test_numpy_mask_matches_expression(spark):
-    # same stream, two physical paths: expression form at 256 bits vs
-    # np_mutation_mask directly
-    seed, n_bits = 4, 256
-    pop = generate.random_population(spark, 300, n_bits, seed=2)
-    mut = mutate.apply_mutation(pop, n_bits, rate=0.1, seed=seed)
-    got = {
-        r.id: tuple(r.genome)
-        for r in mut.collect()
-    }
-    orig = {r.id: np.array(r.genome, dtype=np.int64) for r in pop.collect()}
-    ss = bits.seed_salt(seed, mutate.SALT_MUTATE)
-    t21 = mutate._t21(0.1)
-    keys = sorted(orig)
-    masks = mutate.np_mutation_mask(ss, keys, n_bits, t21)
-    for i, k in enumerate(keys):
-        assert tuple(orig[k] ^ masks[i]) == got[k]
+    # the Arrow UDF equals the per-bit DuckDB twin row for row at one long
+    # (the sga_mutation entry's width), a 2-bit tail and four full longs,
+    # and every other column keeps its name, place and value
+    seed, rate = 4, 0.1
+    con = duckdb.connect()
+    for n_bits in (64, 130, 256):
+        pop = fit_ops.with_fitness(
+            generate.random_population(spark, 300, n_bits, seed=2),
+            nl=bits.n_longs(n_bits),
+        ).withColumn("tag", F.concat(F.lit("r"), F.col("id").cast("string")))
+        mut = mutate.apply_mutation(pop, n_bits, rate, seed)
+        assert mut.columns == ["id", "genome", "fitness", "tag"]
+        rows = mut.collect()
+        assert {r.id: (r.fitness, r.tag) for r in rows} == {
+            r.id: (r.fitness, r.tag) for r in pop.collect()
+        }
+        src = generate.population_gen_duckdb_sql(300, n_bits, 2)
+        duck = con.sql(
+            "SELECT * FROM " + mutate.duck_mutation_query(
+                f"SELECT id, genome FROM {src} _p", seed, n_bits, rate
+            ) + " _m"
+        ).fetchall()
+        assert {r.id: list(r.genome) for r in rows} == {
+            i: list(g) for i, g in duck
+        }, n_bits
 
 
 def test_sparse_mutation_rate_and_determinism(spark):

@@ -41,7 +41,7 @@ def test_generate_paths_agree(spark):
 def test_fitness_paths_agree(spark):
     pop = generate.random_population(spark, 300, WIDE_BITS, seed=5)
     nl = bits.n_longs(WIDE_BITS)
-    fast = fit_ops.with_fitness(pop, nl=nl)  # pandas_udf path
+    fast = fit_ops.with_fitness(pop, nl=nl)  # Arrow UDF path
     slow = pop.withColumn(
         "fitness", F.expr(bits.popcount_sql("genome", "spark"))
     )  # interpreted HOF path (always correct)

@@ -562,3 +562,36 @@ def test_sga_kernel_generation_one_exchange(spark):
         f"kernel generation plan is {size} B of extended explain, budget "
         f"{SGA_KERNEL_EXPLAIN_BUDGET} B"
     )
+
+
+def test_genome_kernels_are_arrow_native(spark):
+    # above LARGE_NL every numpy GA kernel moves genomes as flat Arrow
+    # buffers: scalar Arrow UDFs (eval type 250, never the pandas 200)
+    # and mapInArrow, no mapInPandas
+    from pyspark.util import PythonEvalType
+
+    from geneticalgorithmsusingmapreduce_spark.operators import (
+        generate, mutate,
+    )
+    from geneticalgorithmsusingmapreduce_spark.plans import sga
+
+    n_bits = 10_000
+    pop = sga.evaluate(
+        generate.random_population(spark, 64, n_bits, seed=3), n_bits
+    )
+    frames = {
+        "evaluate": pop,
+        "skinny generation": sga.next_generation(pop, n_bits, 3, 0, 4),
+        "mutation": mutate.apply_mutation(pop, n_bits, 1e-3, 3),
+        "sparse mutation": mutate.apply_mutation_sparse(
+            pop, n_bits, 1e-4, 3
+        ),
+    }
+    for name, df in frames.items():
+        p = _plan(df)
+        assert "MapInPandas" not in p, f"{name}:\n{p}"
+        types = re.findall(r"ArrowEvalPython \[.*\], (\d+)\n", p)
+        assert types, f"{name} has no Arrow UDF:\n{p}"
+        assert set(types) == {str(PythonEvalType.SQL_SCALAR_ARROW_UDF)}, (
+            f"{name}:\n{p}"
+        )

@@ -5,9 +5,9 @@ instead of guessing.
 
 The codec is a create-time-only core conf, so each (codec, rep) runs in
 its own subprocess session, STRICTLY ALTERNATING lz4/zstd so box drift
-(page cache, JIT, thermal) hits both arms equally — same protocol as
-tools/ab_sga10x.py. Per entry we keep the min across reps of the min-of-N
-in-process runs (bench.py's noop-sink protocol).
+(page cache, JIT, thermal) hits both arms equally. Per entry we keep
+the min across reps of the min-of-N in-process runs (bench.py's
+noop-sink protocol).
 
 Usage:
   python tools/ab_codec.py [sf_dir] [entry ...]     # orchestrator

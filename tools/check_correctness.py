@@ -103,7 +103,13 @@ def main():
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error {type(e).__name__}: {str(e)[:300]}")
+            # the root cause: a Python worker's traceback ends with it,
+            # Spark's own errors lead with it (a plan or query context
+            # follows)
+            msg = str(e)
+            lines = [ln for ln in msg.splitlines() if ln.strip()] or [""]
+            cause = lines[-1] if "Traceback (most recent" in msg else lines[0]
+            print(f"FAIL {name}: spark error {type(e).__name__}: {cause}")
             failed.append(name)
             continue
         t_spark = time.perf_counter() - t_entry
