@@ -2505,7 +2505,7 @@ def emb_topk_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("emb_topk_numpy", f"SELECT * FROM {ann_ops.duck_topk_sql()} _q")
 def emb_topk_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same top-k as an Arrow/numpy blocked matmul (mapInPandas) —
+    """The same top-k as an Arrow/numpy blocked matmul (mapInArrow) —
     the 100 TB hot-path shape; checked against the *same* oracle."""
     return ann_ops.topk_dot_numpy(read_table(spark, sf_dir, "embeddings"))
 

@@ -47,10 +47,10 @@ def last_long_mask(n_bits: int) -> int:
 
 def np_stack_cells(col, dtype="int64"):
     """pandas Series of array-typed cells → (N, width) matrix, one C-level
-    ``np.array(Series.tolist())``. The GA operators never call it: genomes
-    cross as flat Arrow buffers (np_list_matrix / arrow_list_column). Its
-    callers are the ``mapInPandas`` embedding kernels of operators.ann and
-    perfbench's ``functions.bits.stack_cells_s`` micro-timing."""
+    ``np.array(Series.tolist())``. No package kernel calls it: genomes and
+    embedding vectors cross as flat Arrow buffers (np_list_matrix /
+    arrow_list_column). Its one caller is perfbench's
+    ``functions.bits.stack_cells_s`` micro-timing."""
     import numpy as np
 
     return np.array(col.tolist(), dtype=dtype)

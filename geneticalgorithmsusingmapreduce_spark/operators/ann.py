@@ -14,9 +14,12 @@ Scale shapes:
 * brute-force top-k: Q broadcast query rows × N candidates — a broadcast
   nested-loop whose inner side never shuffles; per-partition top-k via
   window row_number, k-row final merge.
-* the numpy kernel (mapInPandas) computes the same integer dot products
+* the numpy kernel (mapInArrow) computes the same integer dot products
   as a blocked matmul per Arrow batch — the shape you'd use at 100 TB
   (vector data never leaves the executor; queries ride the closure).
+  Every kernel here reads vectors with bits.np_list_matrix (a reshape of
+  the Arrow list's flat values) and writes them with
+  bits.arrow_list_column, never row by row.
 * sign-LSH: 16 seeded hyperplanes with ±1 components from the xxhash64
   stream → 16-bit bucket; pairs within a bucket verified exactly. One
   narrow projection + one self-join on the bucket key.
@@ -24,9 +27,10 @@ Scale shapes:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import prng
+from ..functions import bits as _bits, prng
 from ..runtime import scoped_persist
 
 DIMS = 64
@@ -39,20 +43,19 @@ def planes_for_count(n_vecs: int, min_planes: int = 8,
     """Size the sign-LSH bucket space to the corpus: ⌈log2(n)⌉ + 2.
 
     Expected in-bucket candidate volume is ~n²/2^(planes+1), so a FIXED
-    plane count is quadratic in corpus density — the r6 sf100 decade
-    measured it directly: at 2.2M vectors the frozen 16-plane space ran
-    39.28× for 10× data while this rule's 24 planes ran 1.26×
-    (BASELINE.md r6). ⌈log2(n)⌉ + 2 keeps the expected bucket occupancy
-    ≤ ~n/4·2⁻ˡᵒᵍ²⁽ⁿ⁾ < 1, i.e. the exchange stays near-flat as the
-    corpus grows; recall lost to the finer space is recovered by
+    plane count is quadratic in corpus density: at 2.2M vectors a fixed
+    16-plane space ran 39.28× for 10× data while this rule's 24 planes
+    ran 1.26× (BASELINE.md). ⌈log2(n)⌉ + 2 keeps the expected bucket
+    occupancy ≤ ~n/4·2⁻ˡᵒᵍ²⁽ⁿ⁾ < 1, i.e. the exchange stays near-flat
+    as the corpus grows; recall lost to the finer space is recovered by
     banding B independent bucket sets (cosine_near_pairs bands > 1).
     Mirrors sources.bucketing.buckets_for_path, which sizes bucketed
     join spaces the same data-driven way. Clamped to [min_planes,
     max_planes]: below 8 the space is too coarse even for tiny corpora;
     int64 bucket keys cap at 63 planes, and past ~30 the per-plane
     recall loss outpaces any candidate saving at feasible band counts.
-    planes_for_count(2_200_000) == 24 — the exact configuration the
-    sf100 row measured."""
+    planes_for_count(2_200_000) == 24, the configuration measured at
+    that size."""
     import math
 
     if n_vecs <= 1:
@@ -83,16 +86,14 @@ def _argmax_dot_chunked(xm, cm, cnorm=None, chunk_elems=1 << 24):
     return out
 
 
-def _quantize_batch(pdf):
-    """An Arrow batch's ``embedding`` column as the (N, D) int64 matrix
-    the SQL forms produce: floor(x · 10^6 + 0.5) over the float64
-    promotion of each float32 component."""
+def _quantize_batch(col):
+    """An Arrow ``embedding`` column as the (N, D) int64 matrix the SQL
+    forms produce: floor(x · 10^6 + 0.5) over the float64 promotion of
+    each float32 component."""
     import numpy as np
 
-    from ..functions import bits as _bits
-
     return np.floor(
-        _bits.np_stack_cells(pdf["embedding"], dtype="float64") * SCALE + 0.5
+        _bits.np_list_matrix(col, DIMS).astype(np.float64) * SCALE + 0.5
     ).astype(np.int64)
 
 
@@ -221,36 +222,31 @@ def topk_dot_numpy(
     emb: DataFrame, n_queries: int = 5, k: int = 10
 ) -> DataFrame:
     """The same exact top-k as a blocked numpy matmul over Arrow batches
-    (mapInPandas) — identical output (same quantization), same oracle.
+    (mapInArrow) — identical output (same quantization), same oracle.
     This is the 100 TB shape: per-partition candidate blocks × broadcast
     query matrix, k-row partial tops merged by one tiny final window."""
     import numpy as np
-    import pandas as pd
+    from pyspark.sql import Window
 
-    qrows = sorted(
-        (r.vec_id, list(r.embedding))
-        for r in emb.filter(F.col("vec_id") < n_queries).collect()
-    )
-    qids = np.array([v for v, _ in qrows], dtype=np.int64)
-    qm = np.floor(
-        np.array([e for _, e in qrows], dtype=np.float64) * SCALE + 0.5
-    ).astype(np.int64)  # (Q, D)
+    qt = emb.filter(F.col("vec_id") < n_queries).select(
+        "vec_id", "embedding"
+    ).toArrow()
+    qids = qt.column("vec_id").to_numpy()
+    qm = _quantize_batch(qt.column("embedding"))  # (Q, D)
 
     def block_topk(batches):
-        for pdf in batches:
-            dots = _quantize_batch(pdf) @ qm.T  # (N, Q)
-            vids = pdf["vec_id"].to_numpy()
+        for b in batches:
+            dots = _quantize_batch(b.column("embedding")) @ qm.T  # (N, Q)
+            vids = b.column("vec_id").to_numpy()
             n, qi = np.nonzero(vids[:, None] != qids)
             q, v, d = qids[qi], vids[n], dots[n, qi]
             # partial top-k per block (order fixed by final window)
             top = _head_per_group(np.lexsort((v, -d, q)), q, k)
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {"query_id": q[top], "vec_id": v[top], "dot": d[top]}
             )
 
-    from pyspark.sql import Window
-
-    partial = emb.select("vec_id", "embedding").mapInPandas(
+    partial = emb.select("vec_id", "embedding").mapInArrow(
         block_topk, schema="query_id long, vec_id long, dot long"
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("vec_id"))
@@ -264,143 +260,152 @@ N_CENTROIDS = 8
 N_PROBES = 2
 
 
+def _nearest_codes(xm, cb):
+    """(N, G) index of the nearest codeword per S-wide slice g of the
+    (N, G·S) int64 matrix ``xm`` among the K rows of ``cb[g]`` (cb is
+    (G, K, S)): argmax 2x·c − |c|², ties to the lowest index."""
+    import numpy as np
+
+    s = cb.shape[2]
+    return np.column_stack([
+        _argmax_dot_chunked(
+            xm[:, g * s:(g + 1) * s], cb[g], (cb[g] * cb[g]).sum(axis=1)
+        )
+        for g in range(len(cb))
+    ])
+
+
+def _lloyd_partials(matrix, cb, compute_inertia: bool):
+    """mapInArrow kernel of one Lloyd's iteration: per Arrow batch, the
+    int64 matrix ``matrix(batch)`` is assigned to ``cb``'s codewords
+    (_nearest_codes) and folded by a sort + np.add.reduceat (exact
+    int64, order-free) into one row per non-empty (g, code): [g, code,
+    cnt, sums, inert], inert being the batch's Σ|x − c|² (zero unless
+    ``compute_inertia``)."""
+    import numpy as np
+
+    s = cb.shape[2]
+
+    def partials(batches):
+        for b in batches:
+            if not b.num_rows:
+                continue
+            xm = matrix(b)
+            best = _nearest_codes(xm, cb)
+            out = {"g": [], "code": [], "cnt": [], "sums": [], "inert": []}
+            for g in range(len(cb)):
+                xs, bg, cm = xm[:, g * s:(g + 1) * s], best[:, g], cb[g]
+                order = np.argsort(bg, kind="stable")
+                ub, starts = np.unique(bg[order], return_index=True)
+                out["g"].append(np.full(len(ub), g, np.int32))
+                out["code"].append(ub.astype(np.int32))
+                out["cnt"].append(np.diff(np.append(starts, len(order))))
+                out["sums"].append(np.add.reduceat(xs[order], starts, axis=0))
+                inert = np.zeros(len(ub), np.int64)
+                if compute_inertia:
+                    # |x|² − (2x·c − |c|²) per row, one int64 gather-dot
+                    d2 = (xs * xs).sum(axis=1) - (
+                        2 * np.einsum("ij,ij->i", xs, cm[bg])
+                        - (cm * cm).sum(axis=1)[bg]
+                    )
+                    inert = np.add.reduceat(d2[order], starts)
+                out["inert"].append(inert)
+            cols = {k: np.concatenate(v) for k, v in out.items()}
+            cols["sums"] = _bits.arrow_list_column(cols["sums"])
+            yield pa.RecordBatch.from_pydict(cols)
+
+    return partials
+
+
+def _lloyd(
+    src: DataFrame, seed_src: DataFrame, matrix, groups: int, iters: int,
+    compute_inertia: bool = False,
+):
+    """The one Lloyd's loop behind the IVF and PQ trainers: G groups of
+    K codewords over S-wide slices (S = D/G) of the (N, D) int64 matrix
+    ``matrix(batch)`` maps an Arrow batch to. Seeds are ``seed_src``'s
+    rows (K of them, in vec_id order), sliced into G groups. Per
+    iteration ONE action: a mapInArrow pass (_lloyd_partials) emits
+    per-(g, code) partial sums, posexplode + a grouped SUM keyed on (g,
+    code, pos) folds them with map-side combine, and exactly G·K·S
+    scalars reach the driver — the model itself, which the next
+    iteration's closure must carry anyway (a driver fold of the partial
+    rows would grow as tasks × K). Each (g, pos) group sees every
+    batch's partial once, so SUM(cnt) and SUM(inert) per group are the
+    per-code totals. The update is the mean rounded half up: exact int64
+    sum → one IEEE double divide → floor(· + 0.5), op for op the DuckDB
+    replays (_duck_kmeans_ctes, _duck_pq_ctes); an empty code keeps its
+    codeword. Returns (seed vec_ids, (G, K, S) codebook, inertia per
+    iteration — empty unless ``compute_inertia``)."""
+    import numpy as np
+
+    seeds = seed_src.toArrow().sort_by("vec_id")
+    x0 = matrix(seeds)  # (K, D)
+    k, d = x0.shape
+    cb = x0.reshape(k, groups, d // groups).transpose(1, 0, 2).copy()
+    history: list[float] = []
+    for _ in range(iters):
+        rows = (
+            src.mapInArrow(
+                _lloyd_partials(matrix, cb, compute_inertia),
+                schema="g int, code int, cnt long, sums array<long>, "
+                "inert long",
+            )
+            .select(
+                "g", "code", "cnt", "inert",
+                F.posexplode("sums").alias("pos", "s"),
+            )
+            .groupBy("g", "code", "pos")
+            .agg(
+                F.sum("s").alias("s"), F.sum("cnt").alias("cnt"),
+                F.sum("inert").alias("inert"),
+            )
+            .collect()
+        )
+        sums = np.zeros_like(cb)
+        cnt = np.zeros(cb.shape[:2], dtype=np.int64)
+        for r in rows:
+            sums[r.g, r.code, r.pos] = r.s
+            cnt[r.g, r.code] = r.cnt
+        if compute_inertia:
+            history.append(float(sum(r.inert for r in rows if r.pos == 0)))
+        mean = np.floor(sums / np.maximum(cnt, 1)[..., None] + 0.5)
+        cb = np.where(cnt[..., None] > 0, mean.astype(np.int64), cb)
+    return seeds.column("vec_id").to_numpy(), cb, history
+
+
+def _quantized(b):
+    """The quantized ``embedding`` matrix of an Arrow batch or table."""
+    return _quantize_batch(b.column("embedding"))
+
+
 def train_centroid_rows(
     emb: DataFrame, n_centroids: int = N_CENTROIDS, iters: int = 3,
     compute_inertia: bool = True,
     seed_by_rank: bool = False,
 ):
     """Lloyd's k-means over the quantized vectors — the training step
-    that turns ivf_topk's deterministic seed centroids into real ones.
-    Returns ``(rows, history)`` where rows is the LOCAL model
-    ``[(cent_id, [D ints]), ...]`` — callers that want a DataFrame use
-    train_centroids; callers that reuse the model across queries cache
-    these plain rows (they are session-independent).
-
-    Same iterative-driver shape as the GA loops: per iteration, ONE
-    assignment pass over the distributed vectors (argmin ||x−c||² via
-    |c|²−2x·c — |x|² is constant per vector), then a grouped partial
-    fold, then a driver collect of exactly C×D scalars. Empty clusters
-    keep their previous centroid. ``history`` is the inertia per
-    iteration — monotonically non-increasing, which the tests pin.
+    that turns ivf_topk's deterministic seed centroids into real ones:
+    _lloyd with one group over all D dimensions. Seeds are the first C
+    quantized vectors (vec_id < C), or with ``seed_by_rank`` the C
+    smallest vec_ids, which a slice whose ids are not dense from 0
+    needs (the duck replay's train_filter branch matches). Returns
+    ``(rows, history)``: rows is the LOCAL model ``[(cent_id, [D
+    ints]), ...]`` (session-independent plain rows, so callers cache
+    them; train_centroids wraps them in a DataFrame) and history the
+    inertia per iteration, which the tests pin as non-increasing.
 
     At 100 TB you'd train on a sample (`emb.sample(...)`) — assignment
-    cost is the same one-scan shape ivf_topk pays once.
-
-    Physical shape: ONE action per iteration — a mapInPandas kernel
-    (quantize the Arrow batch, score all centroids as a blocked int64
-    matmul — the same integers the SQL expressions produce — and emit C
-    partial rows of per-dim sums) followed by posexplode + a grouped
-    SUM keyed on (cent, dim). The grouped agg has map-side partial
-    combine, so what reaches the driver is exactly C×D scalars — the
-    new model itself, which a driver-hosted Lloyd's loop must hold
-    anyway to ship into the next iteration's closure (the reference's
-    J2 broadcast-scalars pattern, at its irreducible size); a driver
-    fold of the partial rows would grow as tasks×C×D. The kernel plan
-    is constant-size."""
-    import numpy as np
-    import pandas as pd
-
-    # seed centroids: first C quantized vectors. seed_by_rank picks the
-    # C SMALLEST vec_ids instead of vec_id < C — required when training
-    # on a slice whose ids aren't dense from 0 (the incremental-append
-    # initial batch); the duck replay's train_filter branch matches.
-    if seed_by_rank:
-        seed_src = emb.select("vec_id", "embedding").orderBy(
-            "vec_id"
-        ).limit(n_centroids)
-    else:
-        seed_src = emb.filter(F.col("vec_id") < n_centroids)
-    seed_rows = sorted(
-        (r.vec_id, list(r.embedding)) for r in seed_src.collect()
-    )
-    cents_np = np.floor(
-        np.array([e for _, e in seed_rows], dtype=np.float64) * SCALE + 0.5
-    ).astype(np.int64)  # (C, D)
-    cent_ids = [int(v) for v, _ in seed_rows]
-    history: list[float] = []
-
+    cost is the same one-scan shape ivf_topk pays once."""
     src = emb.select("vec_id", "embedding")
-    for _ in range(iters):
-        cm = cents_np.copy()
-        cnorm = (cm * cm).sum(axis=1)  # (C,)
-
-        def partials(batches):
-            for pdf in batches:
-                xm = _quantize_batch(pdf)  # (N, D)
-                # argmax with ties to the LOWEST cent index — np.argmax
-                # picks the first maximum, matching struct(score, -cent);
-                # chunked so the score block stays bounded at large C
-                best = _argmax_dot_chunked(xm, cm, cnorm)  # (N,)
-                # sort-based group fold (exact int64, order-free sums),
-                # not one mask pass per centroid (O(C·N) per batch)
-                order = np.argsort(best, kind="stable")
-                ub, starts = np.unique(best[order], return_index=True)
-                sums = np.add.reduceat(xm[order], starts, axis=0)
-                cnts = np.diff(np.append(starts, len(order)))
-                if compute_inertia:
-                    xnorm = (xm * xm).sum(axis=1)
-                    # per-row best score via one int64 gather-dot
-                    sb = 2 * np.einsum(
-                        "ij,ij->i", xm, cm[best]
-                    ) - cnorm[best]
-                    inert = np.add.reduceat(
-                        (xnorm - sb)[order], starts
-                    )
-                else:
-                    inert = np.zeros(len(ub), dtype=np.int64)
-                yield pd.DataFrame({
-                    "cent": ub.astype(np.int32),
-                    "cnt": cnts.astype(np.int64),
-                    "sums": [r.tolist() for r in sums],
-                    "inert": inert.astype(np.int64),
-                })
-
-        partial = src.mapInPandas(
-            partials,
-            schema="cent int, cnt long, sums array<long>, inert long",
-        )
-        # distributed fold keyed on (cent, dim): each exploded row
-        # carries its batch's cnt/inert alongside, so SUM(cnt)/SUM(inert)
-        # per (cent, dim) group equals the per-cent total (every dim
-        # group sees each batch's partial exactly once) — one grouped
-        # agg, one action, exactly C×D rows back to the driver
-        rows = (
-            partial.select(
-                "cent", "cnt", "inert",
-                F.posexplode("sums").alias("pos", "s"),
-            )
-            .groupBy("cent", "pos")
-            .agg(
-                F.sum("s").alias("s"),
-                F.sum("cnt").alias("cnt"),
-                F.sum("inert").alias("inert"),
-            )
-            .collect()
-        )
-        cnt = np.zeros(len(cm), dtype=np.int64)
-        sums = np.zeros_like(cm)
-        inert_total = 0
-        for r in rows:
-            sums[r.cent, r.pos] = r.s
-            cnt[r.cent] = r.cnt
-            if r.pos == 0:
-                inert_total += r.inert
-        if compute_inertia:
-            history.append(float(inert_total))
-        # mean rounded half-up: exact int64 sum → IEEE double divide →
-        # floor, matching the DuckDB oracle's cast(s as double)/c + 0.5
-        # op-for-op; empty clusters keep their previous centroid
-        new = cents_np.copy()
-        for ci in range(len(cm)):
-            if cnt[ci] > 0:
-                new[ci] = np.floor(
-                    sums[ci].astype(np.float64) / float(cnt[ci]) + 0.5
-                ).astype(np.int64)
-        cents_np = new
-    rows_out = [
-        (cid, [int(x) for x in cents_np[i]]) for i, cid in enumerate(cent_ids)
-    ]
-    return rows_out, history
+    seed_src = (
+        src.orderBy("vec_id").limit(n_centroids) if seed_by_rank
+        else src.filter(F.col("vec_id") < n_centroids)
+    )
+    ids, cb, history = _lloyd(
+        src, seed_src, _quantized, 1, iters, compute_inertia
+    )
+    return [(int(c), cv.tolist()) for c, cv in zip(ids, cb[0])], history
 
 
 CENTROID_SCHEMA = "cent_id long, cv array<long>"
@@ -767,25 +772,24 @@ def encode_postings_int8(emb: DataFrame, centroid_rows: list) -> DataFrame:
     cent_ids, cm = _centroid_arrays(centroid_rows)
 
     def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            xm = _quantize_batch(pdf)  # (N, D)
+            xm = _quantize_batch(b.column("embedding"))  # (N, D)
             ax = np.abs(xm)
             scale = np.maximum(ax.max(axis=1), 1)  # (N,)
             s = scale[:, None]
             mag = (ax * (2 * INT8_MAX) + s) // (2 * s)
-            v8 = np.where(xm < 0, -mag, mag).astype(np.int8)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy(),
+            yield pa.RecordBatch.from_pydict({
+                "vec_id": b.column("vec_id"),
                 "cent_id": cent_ids[_argmax_dot_chunked(xm, cm)],
-                "v8": list(v8),
+                "v8": _bits.arrow_list_column(
+                    np.where(xm < 0, -mag, mag).astype(np.int8)
+                ),
                 "scale": scale,
             })
 
-    return emb.select("vec_id", "embedding").mapInPandas(
+    return emb.select("vec_id", "embedding").mapInArrow(
         encode, schema=POSTINGS8_SCHEMA
     )
 
@@ -806,16 +810,13 @@ def ivf_serve_topk_int8(
     row; one window merges them. Duplicate query rows share one probe
     and one rank window, as in duck_serve_int8_sql."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import Window
 
-    from ..functions import bits as _bits
-
-    qrows = p8.filter(F.col("vec_id") < n_queries).select(
+    qt = p8.filter(F.col("vec_id") < n_queries).select(
         "vec_id", "v8"
-    ).collect()
-    qids = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    qe8 = np.array([r.v8 for r in qrows], dtype=np.int64).reshape(-1, DIMS)
+    ).toArrow()
+    qids = qt.column("vec_id").to_numpy()
+    qe8 = _bits.np_list_matrix(qt.column("v8"), DIMS).astype(np.int64)
     cent_ids, cm = _centroid_arrays(cents.select("cent_id", "cv").collect())
     # probe pair i = (query row, centroid) = divmod(i, C)
     row, c = np.divmod(np.arange(len(qids) * len(cent_ids)), len(cent_ids))
@@ -827,19 +828,20 @@ def ivf_serve_topk_int8(
     probe_qid = qids[probe_row]
 
     def scan(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            vid = pdf["vec_id"].to_numpy()
-            sdot = _i64_matmul(_bits.np_stack_cells(pdf["v8"]), qe8.T)
-            sdot *= pdf["scale"].to_numpy()[:, None]  # (N, R)
+            vid = b.column("vec_id").to_numpy()
+            v8 = _bits.np_list_matrix(b.column("v8"), DIMS)
+            sdot = _i64_matmul(v8, qe8.T)
+            sdot *= b.column("scale").to_numpy()[:, None]  # (N, R)
             n, i = np.nonzero(
-                (pdf["cent_id"].to_numpy()[:, None] == probe_cent)
+                (b.column("cent_id").to_numpy()[:, None] == probe_cent)
                 & (vid[:, None] != probe_qid)
             )
             q, v, s = probe_qid[i], vid[n], sdot[n, probe_row[i]]
             top = _head_per_group(np.lexsort((v, -s, q)), q, k)
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {"query_id": q[top], "vec_id": v[top], "sdot": s[top]}
             )
 
@@ -849,7 +851,7 @@ def ivf_serve_topk_int8(
     return (
         p8.filter(F.col("cent_id").isin(sorted(set(probe_cent.tolist()))))
         .select("vec_id", "cent_id", "v8", "scale")
-        .mapInPandas(scan, schema="query_id long, vec_id long, sdot long")
+        .mapInArrow(scan, schema="query_id long, vec_id long, sdot long")
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
@@ -945,89 +947,27 @@ PQ_ITERS = 2
 CODEBOOK_SCHEMA = "sub int, code int, cw array<long>"
 
 
+def _codebook_rows(cb) -> list:
+    """(M, K, S) codebook → [(sub, code, [S ints]), ...]."""
+    return [
+        (m, kk, cw.tolist()) for m in range(len(cb))
+        for kk, cw in enumerate(cb[m])
+    ]
+
+
 def pq_train_codebook_rows(
     emb: DataFrame, m_sub: int = M_SUB, k_codes: int = K_CODES,
     iters: int = PQ_ITERS,
 ) -> list:
-    """Per-subspace Lloyd's: seed codebook m = the m-th subvector of the
-    first K quantized vectors; per iteration ONE mapInPandas pass emits
-    per-(sub, code) partial sums for ALL subspaces at once (blocked int64
-    matmuls — the train_centroid_rows kernel generalized), folded by a
-    grouped SUM to exactly M·K·SUB_DIMS scalars. Assignment is
-    argmax 2x·c − |c|² with ties to the LOWEST code (np.argmax picks the
-    first maximum, matching the oracle's ORDER BY score DESC, code ASC);
-    empty codes keep their previous codeword; means are exact int64 sums
-    → one IEEE double divide → floor(·+0.5), bit-equal to the DuckDB
-    replay. Returns [(sub, code, [SUB_DIMS ints]), ...]."""
-    import numpy as np
-    import pandas as pd
-
-    sub_dims = DIMS // m_sub
-    seed_rows = sorted(
-        (r.vec_id, list(r.embedding))
-        for r in emb.filter(F.col("vec_id") < k_codes).collect()
-    )
-    seeds = np.floor(
-        np.array([e for _, e in seed_rows], dtype=np.float64) * SCALE + 0.5
-    ).astype(np.int64)  # (K, D)
-    cb = np.stack(
-        [seeds[:, m * sub_dims:(m + 1) * sub_dims] for m in range(m_sub)]
-    )  # (M, K, S)
+    """Per-subspace Lloyd's: _lloyd with M groups of DIMS/M dimensions
+    over the quantized vectors, seed codebook m = the m-th subvector of
+    the first K quantized vectors. Returns [(sub, code, [SUB_DIMS
+    ints]), ...]."""
     src = emb.select("vec_id", "embedding")
-    for _ in range(iters):
-        cbm = cb.copy()
-
-        def partials(batches):
-            for pdf in batches:
-                xm = _quantize_batch(pdf)  # (N, D)
-                out = {"sub": [], "code": [], "cnt": [], "sums": []}
-                for m in range(m_sub):
-                    xs = xm[:, m * sub_dims:(m + 1) * sub_dims]  # (N, S)
-                    cm = cbm[m]  # (K, S)
-                    scores = 2 * (xs @ cm.T) - (cm * cm).sum(axis=1)
-                    best = np.argmax(scores, axis=1)
-                    for kk in range(len(cm)):
-                        mask = best == kk
-                        n = int(mask.sum())
-                        if n == 0:
-                            continue
-                        out["sub"].append(m)
-                        out["code"].append(kk)
-                        out["cnt"].append(n)
-                        out["sums"].append(xs[mask].sum(axis=0).tolist())
-                yield pd.DataFrame(out)
-
-        rows = (
-            src.mapInPandas(
-                partials,
-                schema="sub int, code int, cnt long, sums array<long>",
-            )
-            .select(
-                "sub", "code", "cnt",
-                F.posexplode("sums").alias("pos", "s"),
-            )
-            .groupBy("sub", "code", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("cnt").alias("cnt"))
-            .collect()
-        )
-        new = cb.copy()
-        sums = np.zeros_like(cb)
-        cnt = np.zeros((m_sub, k_codes), dtype=np.int64)
-        for r in rows:
-            sums[r.sub, r.code, r.pos] = r.s
-            cnt[r.sub, r.code] = r.cnt
-        for m in range(m_sub):
-            for kk in range(k_codes):
-                if cnt[m, kk] > 0:
-                    new[m, kk] = np.floor(
-                        sums[m, kk].astype(np.float64) / float(cnt[m, kk])
-                        + 0.5
-                    ).astype(np.int64)
-        cb = new
-    return [
-        (m, kk, [int(x) for x in cb[m, kk]])
-        for m in range(m_sub) for kk in range(k_codes)
-    ]
+    _, cb, _ = _lloyd(
+        src, src.filter(F.col("vec_id") < k_codes), _quantized, m_sub, iters
+    )
+    return _codebook_rows(cb)
 
 
 def pq_train_codebook_rows_residual(
@@ -1044,85 +984,27 @@ def pq_train_codebook_rows_residual(
     the residual CTE). Input: ``assigned`` [vec_id, qv, cent_id] (one
     assignment pass, shared with encoding). Returns the same
     [(sub, code, [SUB_DIMS ints]), ...] shape."""
-    import numpy as np
-    import pandas as pd
-
-    sub_dims = DIMS // m_sub
-    cent_ids, cents_np = _centroid_arrays(centroid_rows)
-    seed_rows = sorted(
-        (int(r.vec_id), [int(x) for x in r.qv], int(r.cent_id))
-        for r in assigned.filter(F.col("vec_id") < k_codes).collect()
-    )
-    seeds = np.array(
-        [qv for _, qv, _ in seed_rows], dtype=np.int64
-    ) - cents_np[
-        np.searchsorted(cent_ids, [c for _, _, c in seed_rows])
-    ]  # (K, D) residuals
-    cb = np.stack(
-        [seeds[:, m * sub_dims:(m + 1) * sub_dims] for m in range(m_sub)]
-    )  # (M, K, S)
     src = assigned.select("vec_id", "qv", "cent_id")
-    for _ in range(iters):
-        cbm = cb.copy()
+    _, cb, _ = _lloyd(
+        src, src.filter(F.col("vec_id") < k_codes),
+        _residuals(centroid_rows), m_sub, iters,
+    )
+    return _codebook_rows(cb)
 
-        def partials(batches):
-            from ..functions import bits as _bits
 
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                xm = _bits.np_stack_cells(pdf["qv"], dtype="int64")
-                xm = xm - cents_np[
-                    np.searchsorted(cent_ids, pdf["cent_id"].to_numpy())
-                ]  # (N, D) residuals
-                out = {"sub": [], "code": [], "cnt": [], "sums": []}
-                for m in range(m_sub):
-                    xs = xm[:, m * sub_dims:(m + 1) * sub_dims]
-                    cm = cbm[m]
-                    scores = 2 * (xs @ cm.T) - (cm * cm).sum(axis=1)
-                    best = np.argmax(scores, axis=1)
-                    for kk in range(len(cm)):
-                        mask = best == kk
-                        n = int(mask.sum())
-                        if n == 0:
-                            continue
-                        out["sub"].append(m)
-                        out["code"].append(kk)
-                        out["cnt"].append(n)
-                        out["sums"].append(xs[mask].sum(axis=0).tolist())
-                yield pd.DataFrame(out)
+def _residuals(centroid_rows: list):
+    """Arrow batch [qv, cent_id] → (N, D) int64 residuals qv − centroid
+    of cent_id."""
+    import numpy as np
 
-        rows = (
-            src.mapInPandas(
-                partials,
-                schema="sub int, code int, cnt long, sums array<long>",
-            )
-            .select(
-                "sub", "code", "cnt",
-                F.posexplode("sums").alias("pos", "s"),
-            )
-            .groupBy("sub", "code", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("cnt").alias("cnt"))
-            .collect()
-        )
-        new = cb.copy()
-        sums = np.zeros_like(cb)
-        cnt = np.zeros((m_sub, k_codes), dtype=np.int64)
-        for r in rows:
-            sums[r.sub, r.code, r.pos] = r.s
-            cnt[r.sub, r.code] = r.cnt
-        for m in range(m_sub):
-            for kk in range(k_codes):
-                if cnt[m, kk] > 0:
-                    new[m, kk] = np.floor(
-                        sums[m, kk].astype(np.float64) / float(cnt[m, kk])
-                        + 0.5
-                    ).astype(np.int64)
-        cb = new
-    return [
-        (m, kk, [int(x) for x in cb[m, kk]])
-        for m in range(m_sub) for kk in range(k_codes)
-    ]
+    cent_ids, cm = _centroid_arrays(centroid_rows)
+
+    def residuals(b):
+        return _bits.np_list_matrix(b.column("qv"), DIMS) - cm[
+            np.searchsorted(cent_ids, b.column("cent_id").to_numpy())
+        ]
+
+    return residuals
 
 
 def pq_encode(
@@ -1138,43 +1020,32 @@ def pq_encode(
     the codes' dynamic range; the codebook must then come from
     pq_train_codebook_rows_residual."""
     import numpy as np
-    import pandas as pd
 
     m_sub = max(r[0] for r in codebook_rows) + 1
     k_codes = max(r[1] for r in codebook_rows) + 1
-    sub_dims = DIMS // m_sub
-    cb = np.zeros((m_sub, k_codes, sub_dims), dtype=np.int64)
+    cb = np.zeros((m_sub, k_codes, DIMS // m_sub), dtype=np.int64)
     for m, kk, cw in codebook_rows:
         cb[m, kk] = cw
-    cent_ids, cents_np = (
-        _centroid_arrays(centroid_rows)
-        if centroid_rows is not None else (None, None)
+    matrix = (
+        _residuals(centroid_rows) if centroid_rows is not None
+        else lambda b: _bits.np_list_matrix(b.column("qv"), DIMS)
     )
 
     def kernel(batches):
-        from ..functions import bits as _bits
-
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            if not b.num_rows:
                 continue
-            xm = _bits.np_stack_cells(pdf["qv"], dtype="int64")  # (N, D)
-            if cents_np is not None:
-                xm = xm - cents_np[
-                    np.searchsorted(cent_ids, pdf["cent_id"].to_numpy())
-                ]
-            codes = np.zeros((len(pdf), m_sub), dtype=np.int8)
-            for m in range(m_sub):
-                xs = xm[:, m * sub_dims:(m + 1) * sub_dims]
-                cm = cb[m]
-                scores = 2 * (xs @ cm.T) - (cm * cm).sum(axis=1)
-                codes[:, m] = np.argmax(scores, axis=1)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"],
-                "cent_id": pdf["cent_id"],
-                "codes": list(codes),
+            yield pa.RecordBatch.from_pydict({
+                "vec_id": b.column("vec_id"),
+                "cent_id": b.column("cent_id"),
+                "codes": _bits.arrow_list_column(
+                    _nearest_codes(matrix(b), cb).astype(np.int8)
+                ),
             })
 
-    return assigned.select("vec_id", "qv", "cent_id").mapInPandas(
+    return assigned.select(
+        "vec_id", "qv", F.col("cent_id").cast("long")
+    ).mapInArrow(
         kernel, schema="vec_id long, cent_id long, codes array<tinyint>"
     )
 
@@ -1398,7 +1269,7 @@ def _duck_pq_ctes(
     would substitute the whole training chain into every reference (the
     24-plane banded-oracle lesson). sub_dims derives from m_sub — a
     hardcoded module constant here would silently mis-slice for any
-    non-default m_sub (review finding)."""
+    non-default m_sub."""
     sub_dims = DIMS // m_sub
     sd = _duck_subdot(f"v.{vcol}", "c.sub", "c.cw", sub_dims)
     ctes = [
@@ -1749,8 +1620,8 @@ DUCK_AUG_EMB = """(
 
 
 def paraphrase_embeddings(spark, sf_dir: str) -> DataFrame:
-    """Embedding side of the PARAPHRASE fixture (r10 VERDICT #3 — the
-    curation semantic stage): every 10th vector gets a perturbed copy
+    """Embedding side of the PARAPHRASE fixture (the curation semantic
+    stage): every 10th vector gets a perturbed copy
     under vec_id+2,000,000, paired with textops.paraphrase_corpus's
     reversed-token document under the same id offset. Same float-exact
     +0.125 single-component shift as augmented_embeddings — the
@@ -1807,28 +1678,7 @@ def quantize_bucket_norm(emb: DataFrame, seed: int,
     (identical to ``cast(x as double)``), then ``floor(x·10⁶ + 0.5)`` in
     float64 and pure int64 matmuls — bit-identical to the SQL/DuckDB
     expressions, which remain the oracle."""
-    import numpy as np
-    import pandas as pd
-
-    s_t = _sign_matrix(seed, n_planes).T  # (DIMS, n_planes)
-    pw = 1 << np.arange(n_planes, dtype=np.int64)
-
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q = _quantize_batch(pdf)
-            bucket = ((q @ s_t > 0) * pw).sum(axis=1)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "qv": list(q),
-                "bucket": bucket,
-                "n2": np.einsum("ij,ij->i", q, q),
-            })
-
-    return emb.select("vec_id", "embedding").mapInPandas(
-        kernel, schema="vec_id long, qv array<long>, bucket long, n2 long"
-    )
+    return _quantize_bucket_kernel(emb, [seed], n_planes, banded=False)
 
 
 def quantize_bucket_norm_banded(
@@ -1837,32 +1687,42 @@ def quantize_bucket_norm_banded(
     """(vec_id, qv, buckets[bands], n2) — quantize_bucket_norm with B
     independent bucket sets in ONE kernel pass (band b's plane signs
     drawn from seed+b, matching lsh_bucket_expr(seed+b) literally)."""
-    import numpy as np
-    import pandas as pd
+    return _quantize_bucket_kernel(
+        emb, [seed + b for b in range(bands)], n_planes, banded=True
+    )
 
-    mats = [
-        _sign_matrix(seed + b, n_planes).T for b in range(bands)
-    ]  # each (DIMS, n_planes)
+
+def _quantize_bucket_kernel(
+    emb: DataFrame, seeds: list, n_planes: int, banded: bool
+) -> DataFrame:
+    """[vec_id, qv, bucket | buckets, n2]: one mapInArrow pass that
+    quantizes each batch, takes one n_planes-bit sign-LSH bucket per
+    plane seed, and the self-norm."""
+    import numpy as np
+
+    mats = [_sign_matrix(sd, n_planes).T for sd in seeds]  # (DIMS, planes)
     pw = 1 << np.arange(n_planes, dtype=np.int64)
 
     def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            q = _quantize_batch(pdf)
+            q = _quantize_batch(b.column("embedding"))
             bks = np.stack(
                 [((q @ m > 0) * pw).sum(axis=1) for m in mats], axis=1
-            )  # (N, bands)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "qv": list(q),
-                "buckets": list(bks),
+            )  # (N, len(seeds))
+            yield pa.RecordBatch.from_pydict({
+                "vec_id": b.column("vec_id"),
+                "qv": _bits.arrow_list_column(q),
+                bkcol: _bits.arrow_list_column(bks) if banded else bks[:, 0],
                 "n2": np.einsum("ij,ij->i", q, q),
             })
 
-    return emb.select("vec_id", "embedding").mapInPandas(
+    bkcol = "buckets" if banded else "bucket"
+    bktype = "array<long>" if banded else "long"
+    return emb.select("vec_id", "embedding").mapInArrow(
         kernel,
-        schema="vec_id long, qv array<long>, buckets array<long>, n2 long",
+        schema=f"vec_id long, qv array<long>, {bkcol} {bktype}, n2 long",
     )
 
 
@@ -1900,8 +1760,6 @@ def cosine_near_pairs(
     the self-join moves only skinny (vec_id, band, bucket) rows, pairs
     are deduped across bands BEFORE the arrays join back for the one
     verify kernel — a pair found by 3 bands is verified once."""
-    import numpy as np
-
     # bucket-space sizing: same quadratic-in-density story as
     # lsh_near_pairs — size n_planes ~ log2(n_vecs) + 2 at scale
     if bands == 1:
@@ -1959,16 +1817,20 @@ def _verify_cosine_candidates(cand: DataFrame, tau_milli: int) -> DataFrame:
     import numpy as np
 
     def dot_kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            qa = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["qa"]])
-            qb = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["qb"]])
-            out = pdf[["vec_a", "vec_b", "na2", "nb2"]].copy()
-            out.insert(2, "dot", np.einsum("ij,ij->i", qa, qb))
-            yield out
+            qa = _bits.np_list_matrix(b.column("qa"), DIMS)
+            qb = _bits.np_list_matrix(b.column("qb"), DIMS)
+            yield pa.RecordBatch.from_pydict({
+                "vec_a": b.column("vec_a"), "vec_b": b.column("vec_b"),
+                "dot": np.einsum("ij,ij->i", qa, qb),
+                "na2": b.column("na2"), "nb2": b.column("nb2"),
+            })
 
-    verified = cand.mapInPandas(
+    verified = cand.select(
+        "vec_a", "vec_b", "qa", "qb", "na2", "nb2"
+    ).mapInArrow(
         dot_kernel,
         schema="vec_a long, vec_b long, dot long, na2 long, nb2 long",
     )
@@ -2071,7 +1933,7 @@ def duck_cosine_near_pairs_banded_sql(
     bands × n_planes × DIMS bucket expression was re-expanded into
     both join sides and the DISTINCT — at n_planes=24 the sf1 oracle
     (22k vectors) ran 228 s and then failed allocation; materialized
-    it runs in 9 s (r7)."""
+    it runs in 9 s."""
     n2 = dot_sql("embedding", "embedding", "duckdb")
     dot = dot_sql("a.embedding", "b.embedding", "duckdb")
     t2 = tau_milli * tau_milli
@@ -2104,7 +1966,7 @@ def duck_cosine_near_pairs_banded_sql(
 
 
 # --------------------------------------------------------------------------
-# Cluster-restricted semantic dedup (SemDeDup-shaped, r10 extension):
+# Cluster-restricted semantic dedup (SemDeDup-shaped):
 # k-means partitions the embedding space, near-dup candidates are
 # intra-cluster pairs only — the published scale recipe for semantic
 # dedup over web-scale corpora (Abbas et al., "SemDeDup", 2023): the
@@ -2119,7 +1981,7 @@ def centroids_for_count(
     """Cluster-count sizing rule for the SemDeDup restriction: C ≈
     n / target_cluster (power of two) holds the expected cluster SIZE
     fixed as the corpus grows, so in-cluster pairwise work stays
-    n·K/2 — LINEAR in n — and each applyInPandas group's K×K dot
+    n·K/2 — LINEAR in n — and each applyInArrow group's K×K dot
     block stays a bounded working set. A √n-sized C balances the raw
     FLOP terms (n·C assignment vs n²/(2C) candidates, both n^1.5) but
     lets the per-decade candidate count grow ~3× faster than the
@@ -2146,23 +2008,30 @@ def kernel_assign(emb: DataFrame, centroid_rows: list) -> DataFrame:
     cent_ids, cm = _centroid_arrays(centroid_rows)
 
     def assign_kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            xm = _quantize_batch(pdf)  # (N, D)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "cent_id": cent_ids[_argmax_dot_chunked(xm, cm)],
-                "qv": list(xm),
-                "n2": (xm * xm).sum(axis=1),
-            })
+            xm = _quantize_batch(b.column("embedding"))  # (N, D)
+            yield _assign_batch(
+                b, cent_ids[_argmax_dot_chunked(xm, cm)], xm
+            )
 
-    return emb.select("vec_id", "embedding").mapInPandas(
-        assign_kernel,
-        schema="vec_id long, cent_id long, qv array<long>, n2 long",
+    return emb.select("vec_id", "embedding").mapInArrow(
+        assign_kernel, schema=_ASSIGN_SCHEMA
     )
+
+
+_ASSIGN_SCHEMA = "vec_id long, cent_id long, qv array<long>, n2 long"
+
+
+def _assign_batch(b, cent_id, xm):
+    """An assignment batch [vec_id, cent_id, qv, n2] (_ASSIGN_SCHEMA)."""
+    return pa.RecordBatch.from_pydict({
+        "vec_id": b.column("vec_id"),
+        "cent_id": cent_id,
+        "qv": _bits.arrow_list_column(xm),
+        "n2": (xm * xm).sum(axis=1),
+    })
 
 
 def semantic_cluster_pairs(
@@ -2176,8 +2045,8 @@ def semantic_cluster_pairs(
     stack), assign every vector to its argmax-dot list, then verify the
     exact integer cosine certificate on INTRA-CLUSTER pairs only.
 
-    OPERATOR GUIDANCE (r12 VERDICT "Next round" #4): for any corpus
-    beyond toy scale, SET ``train_mod`` — sampled training with exact
+    OPERATOR GUIDANCE: for any corpus beyond toy scale, SET
+    ``train_mod`` — sampled training with exact
     assignment is the production default for the exact rung (measured
     same-day decade 6.86× vs 16.52× flat-trained at 99.5% of flat's
     pairs, identical sf10 pair sets; the registered
@@ -2196,7 +2065,7 @@ def semantic_cluster_pairs(
     Physical shape — the part that makes SemDeDup a SCALE recipe: each
     vector ships ONCE to its cluster's partition (one exchange of n
     skinny rows keyed on cent_id), and the within-cluster pairwise
-    similarity is a DENSE K×K int64 matmul inside an applyInPandas
+    similarity is a DENSE K×K int64 matmul inside an applyInArrow
     kernel that emits only pairs passing a float64 pre-filter with a
     1e-9 slack margin (a guaranteed superset: magnitudes ≤ 4.4e32,
     float64 relative error 2.2e-16 ≪ the margin). The exact
@@ -2220,8 +2089,8 @@ def semantic_cluster_pairs(
     static (the emb_ivf convention); cap is physical-only and absent
     from the oracle.
 
-    ``train_mod`` (r11 VERDICT "Next round" #4 — bring the exact
-    FALLBACK rung under bound): Lloyd's trains on the deterministic
+    ``train_mod`` (keeps the exact FALLBACK rung's training linear):
+    Lloyd's trains on the deterministic
     slice ``vec_id % train_mod == 0`` (rank seeds implied, so seeds
     stay well-defined on the sparse id set) while ASSIGNMENT stays the
     exact argmax over every vector — the rung's point. This kills the
@@ -2237,7 +2106,7 @@ def semantic_cluster_pairs(
     train = emb
     if train_mod is not None:
         if not seed_by_rank:
-            # loud, not silent (r12 ADVICE): dense-id seeding is
+            # loud, not silent: dense-id seeding is
             # ill-defined on the sparse sampled slice, so train_mod
             # REQUIRES rank seeds — an explicit False is a caller bug
             import warnings
@@ -2260,19 +2129,13 @@ def semantic_cluster_pairs(
 
 
 _PAIR_SCHEMA = "vec_a long, vec_b long, dot long, na2 long, nb2 long"
+_PAIR_COLS = ("vec_a", "vec_b", "dot", "na2", "nb2")
 
 
 def _empty_pairs():
     import numpy as np
-    import pandas as pd
 
-    return pd.DataFrame({
-        "vec_a": np.empty(0, np.int64),
-        "vec_b": np.empty(0, np.int64),
-        "dot": np.empty(0, np.int64),
-        "na2": np.empty(0, np.int64),
-        "nb2": np.empty(0, np.int64),
-    })
+    return pa.table({c: np.empty(0, np.int64) for c in _PAIR_COLS})
 
 
 def _tile_pairs(vid_a, n2_a, xf_a, vid_b=None, n2_b=None, xf_b=None,
@@ -2280,13 +2143,13 @@ def _tile_pairs(vid_a, n2_a, xf_a, vid_b=None, n2_b=None, xf_b=None,
     """Tiled dense pair sweep between two row blocks (or the strict
     upper triangle of one block when the B side is None): float64
     pre-filter with a 1e-9 slack margin (guaranteed superset — the
-    exact decimal certificate above decides), emitting (vec_a, vec_b)
-    with vec_a < vec_b regardless of which side a member came from.
-    Tiling keeps every pair at bounded memory: a monolithic K×K block
-    is 42 GB at the measured hottest cluster (K=73k — k-means over
-    near-uniform vectors leaves heavy Voronoi skew)."""
+    exact decimal certificate above decides), emitting an Arrow table
+    [vec_a, vec_b, dot, na2, nb2] with vec_a < vec_b regardless of
+    which side a member came from. Tiling keeps every pair at bounded
+    memory: a monolithic K×K block is 42 GB at the measured hottest
+    cluster (K=73k — k-means over near-uniform vectors leaves heavy
+    Voronoi skew)."""
     import numpy as np
-    import pandas as pd
 
     same = vid_b is None
     if same:
@@ -2310,32 +2173,30 @@ def _tile_pairs(vid_a, n2_a, xf_a, vid_b=None, n2_b=None, xf_b=None,
             va, vb = vid_a[i0 + ia], vid_b[j0 + ib]
             na, nb = n2_a[i0 + ia], n2_b[j0 + ib]
             sw = va > vb  # cross blocks carry both orders
-            parts.append(pd.DataFrame({
+            parts.append(pa.table({
                 "vec_a": np.where(sw, vb, va),
                 "vec_b": np.where(sw, va, vb),
                 "dot": d[ia, ib].astype(np.int64),
                 "na2": np.where(sw, nb, na),
                 "nb2": np.where(sw, na, nb),
             }))
-    return pd.concat(parts, ignore_index=True) if parts else _empty_pairs()
+    return pa.concat_tables(parts) if parts else _empty_pairs()
 
 
-def _sorted_block(pdf, mask=None):
+def _sorted_block(table, mask=None):
+    """(vec_ids ascending, n2, qv as a float64 matrix) of an Arrow
+    assignment table's rows, or of those where ``mask``."""
     import numpy as np
 
-    vid = pdf["vec_id"].to_numpy()
     if mask is not None:
-        vid = vid[mask]
-    if not len(vid):  # a hash part can be empty inside a block group
-        e = np.empty(0, np.int64)
-        return e, e, np.empty((0, DIMS), np.float64)
+        table = table.filter(pa.array(mask))
+    vid = table.column("vec_id").to_numpy()
     order = np.argsort(vid)
-    n2 = pdf["n2"].to_numpy()
-    qv = pdf["qv"].to_numpy()
-    if mask is not None:
-        n2, qv = n2[mask], qv[mask]
-    xm = np.stack([np.asarray(v, dtype=np.int64) for v in qv])[order]
-    return vid[order], n2[order], xm.astype(np.float64)
+    xm = _bits.np_list_matrix(table.column("qv"), DIMS)
+    return (
+        vid[order], table.column("n2").to_numpy()[order],
+        xm[order].astype(np.float64),
+    )
 
 
 def _cluster_pairs_from_assign(
@@ -2345,12 +2206,11 @@ def _cluster_pairs_from_assign(
     qv, n2]: one cent_id exchange, tiled dense blocks per cluster,
     exact decimal(38,0) certificate above a float64 pre-filter.
 
-    ``cap`` is the SKEW BOUND (r10 VERDICT #2 — the one `weak` row):
-    without it, one hot Voronoi cell serializes its whole K² sweep in
-    a single applyInPandas group — the measured 30-minute straggler
-    tile that sank the approximate rung's decade (26.27×, BASELINE.md
-    r10; the reference bounds per-reducer load the same way with its
-    random partitioner, reference src/edu/illinois/ga/MapReduce.java:39-50).
+    ``cap`` is the SKEW BOUND: without it, one hot Voronoi cell
+    serializes its whole K² sweep in a single applyInArrow group — a
+    measured 30-minute straggler tile (BASELINE.md; the reference
+    bounds per-reducer load the same way with its random partitioner,
+    reference src/edu/illinois/ga/MapReduce.java:39-50).
     With cap set, any cluster larger than cap rows is decomposed into
     P = ⌈K/cap⌉ hash parts and its pair sweep into the P(P+1)/2
     BLOCK-PAIR groups (part i × part j, i ≤ j) — each unordered pair
@@ -2363,33 +2223,24 @@ def _cluster_pairs_from_assign(
     The cluster-size census is one grouped count collected at
     hot-cluster granularity (model-sized: k-means skew means FEW hot
     cells by construction)."""
-    import numpy as np
-
     t2 = tau_milli * tau_milli
 
-    def cluster_block(pdf):
-        vid, n2, xf = _sorted_block(pdf)
-        return _tile_pairs(vid, n2, xf, t2=t2)
+    def cluster_block(table):
+        return _tile_pairs(*_sorted_block(table), t2=t2)
 
-    def block_pair(pdf):
-        bi, bj = int(pdf["bi"].iloc[0]), int(pdf["bj"].iloc[0])
-        part = pdf["part"].to_numpy()
+    def block_pair(key, table):
+        bi, bj = key[1].as_py(), key[2].as_py()
         if bi == bj:
-            vid, n2, xf = _sorted_block(pdf)
-            return _tile_pairs(vid, n2, xf, t2=t2)
-        va, n2a, xfa = _sorted_block(pdf, part == bi)
-        vb, n2b, xfb = _sorted_block(pdf, part == bj)
+            return _tile_pairs(*_sorted_block(table), t2=t2)
+        part = table.column("part").to_numpy()
+        va, n2a, xfa = _sorted_block(table, part == bi)
+        vb, n2b, xfb = _sorted_block(table, part == bj)
         if not len(va) or not len(vb):
             return _empty_pairs()
         return _tile_pairs(va, n2a, xfa, vb, n2b, xfb, t2=t2)
 
-    if cap is None:
-        cand = base.groupBy("cent_id").applyInPandas(
-            cluster_block, schema=_PAIR_SCHEMA,
-        )
-    else:
-        from ..runtime import scoped_persist
-
+    hot = {}
+    if cap is not None:
         base = scoped_persist(base)
         hot = {
             int(r["cent_id"]): -(-int(r["n"]) // cap)  # ceil division
@@ -2397,33 +2248,31 @@ def _cluster_pairs_from_assign(
             .agg(F.count(F.lit(1)).alias("n"))
             .filter(F.col("n") > cap).collect()
         }
-        if not hot:
-            cand = base.groupBy("cent_id").applyInPandas(
-                cluster_block, schema=_PAIR_SCHEMA,
-            )
-        else:
-            pmap = F.create_map(
-                *[F.lit(x) for kv in hot.items() for x in kv]
-            )
-            split = base.withColumn(
-                "np", F.coalesce(pmap[F.col("cent_id")], F.lit(1))
-            ).withColumn(
-                "part", F.pmod(F.xxhash64("vec_id"), F.col("np"))
-            )
-            blocks = split.select(
-                "vec_id", "cent_id", "qv", "n2", "part",
-                F.explode(F.expr(
-                    "transform(sequence(0, np - 1), q -> "
-                    "struct(least(part, q) AS bi, "
-                    "greatest(part, q) AS bj))"
-                )).alias("blk"),
-            ).select(
-                "vec_id", "cent_id", "qv", "n2", "part",
-                F.col("blk.bi").alias("bi"), F.col("blk.bj").alias("bj"),
-            )
-            cand = blocks.groupBy("cent_id", "bi", "bj").applyInPandas(
-                block_pair, schema=_PAIR_SCHEMA,
-            )
+    if not hot:
+        cand = base.groupBy("cent_id").applyInArrow(
+            cluster_block, schema=_PAIR_SCHEMA
+        )
+    else:
+        pmap = F.create_map(*[F.lit(x) for kv in hot.items() for x in kv])
+        split = base.withColumn(
+            "np", F.coalesce(pmap[F.col("cent_id")], F.lit(1))
+        ).withColumn(
+            "part", F.pmod(F.xxhash64("vec_id"), F.col("np"))
+        )
+        blocks = split.select(
+            "vec_id", "cent_id", "qv", "n2", "part",
+            F.explode(F.expr(
+                "transform(sequence(0, np - 1), q -> "
+                "struct(least(part, q) AS bi, "
+                "greatest(part, q) AS bj))"
+            )).alias("blk"),
+        ).select(
+            "vec_id", "cent_id", "qv", "n2", "part",
+            F.col("blk.bi").alias("bi"), F.col("blk.bj").alias("bj"),
+        )
+        cand = blocks.groupBy("cent_id", "bi", "bj").applyInArrow(
+            block_pair, schema=_PAIR_SCHEMA,
+        )
     # the exact certificate decides; the kernel's float pre-filter only
     # bounds what reaches it (identical to _verify_cosine_candidates)
     keep = (
@@ -2452,7 +2301,7 @@ def duck_semantic_cluster_pairs_sql(
     where centroids come from batch 0 only."""
     ctes, prev = _duck_kmeans_ctes(
         n_centroids, iters, table,
-        # `is not None`, not `or` (r12 ADVICE): an explicit empty /
+        # `is not None`, not `or`: an explicit empty /
         # falsy train_filter must error downstream, not silently fall
         # back to the seed_by_rank branch
         train_filter=(
@@ -2558,11 +2407,10 @@ def semantic_cluster_pairs_fast(
     quadratic (the exact rung measured 13.82×/decade at fixed-K
     sizing: training + argmax assignment are n·C = n²/K).
 
-    ``cap`` (default 8192) is the skew bound that un-refutes this rung:
-    sampled training over near-uniform vectors leaves heavy Voronoi
-    skew, and the r10 measurement lost 5.4× absolute to the exact rung
-    purely because ONE hot cluster serialized a ~30-minute straggler
-    tile sweep (BASELINE.md r10 refutation row). The block-pair
+    ``cap`` (default 8192) is the skew bound this rung needs: sampled
+    training over near-uniform vectors leaves heavy Voronoi skew, and
+    uncapped, ONE hot cluster serialized a ~30-minute straggler tile
+    sweep that lost 5.4× to the exact rung (BASELINE.md). The block-pair
     decomposition (_cluster_pairs_from_assign) bounds every verify
     task at ~cap² dots with byte-identical output, so the straggler
     parallelizes away instead of trading recall.
@@ -2615,25 +2463,22 @@ def semantic_cluster_pairs_fast(
             if m.any():
                 cc[r] = cmf[m].mean(axis=0)
     # membership must be defined against the FINAL centroids in the
-    # SAME min-distance geometry the probe ranking below uses (r10
-    # ADVICE: `best` was the pre-update assignment and the probe ranked
-    # cells by raw dot — a vector could probe cells whose membership
-    # was drawn under different geometry, silently costing pair recall)
+    # SAME min-distance geometry the probe ranking below uses: a
+    # vector must not probe cells whose membership was drawn under a
+    # different geometry, which silently costs pair recall
     ccnorm = (cc * cc).sum(axis=1)
     best = np.argmax(2.0 * (cmf @ cc.T) - ccnorm, axis=1)
     members = [np.nonzero(best == r)[0] for r in range(r_cells)]
     ccT = cc.T.copy()
 
     def assign2(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            xm = _quantize_batch(pdf)
+            xm = _quantize_batch(b.column("embedding"))
             xf = xm.astype(np.float64)
             # rank probe cells in the SAME 2·dot − |c|² form membership
-            # used — raw dot ranks by a different geometry (r10 ADVICE)
+            # used — raw dot ranks by a different geometry
             cells = np.argsort(
                 -(2.0 * (xf @ ccT) - ccnorm), axis=1
             )[:, :n_probe]
@@ -2661,15 +2506,9 @@ def semantic_cluster_pairs_fast(
             miss = ~np.isfinite(best_sc)
             if miss.any():
                 best_fine[miss] = _argmax_dot_chunked(xm[miss], cm)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "cent_id": cent_ids[best_fine],
-                "qv": list(xm),
-                "n2": (xm * xm).sum(axis=1),
-            })
+            yield _assign_batch(b, cent_ids[best_fine], xm)
 
-    base = emb.select("vec_id", "embedding").mapInPandas(
-        assign2,
-        schema="vec_id long, cent_id long, qv array<long>, n2 long",
+    base = emb.select("vec_id", "embedding").mapInArrow(
+        assign2, schema=_ASSIGN_SCHEMA,
     ).filter(F.col("n2") > 0)
     return _cluster_pairs_from_assign(base, tau_milli, cap=cap)

@@ -57,24 +57,25 @@ def apply_mutation(
 def np_mutation_mask(ss: int, keys, n_bits: int, t21: int):
     """(N, nl) int64 masks: bit b of long j flips when draw j·64 + b,
     the (j·64 + b) mod 3 slot of hash (seed_salt, key, (j·64 + b) // 3),
-    is below ``t21`` — the stream duck_mutation_query rebuilds in SQL."""
+    is below ``t21`` — the stream duck_mutation_query rebuilds in SQL.
+    Built one long at a time (its 64 draws come from 22 or 23 hashes),
+    so the temporaries are rows × 64 whatever n_bits is."""
     import numpy as np
 
     nl = bits.n_longs(n_bits)
-    n_hashes = (nl * 64 + 2) // 3
     k = np.asarray(keys, dtype=np.int64).reshape(-1, 1)
-    hi = np.arange(n_hashes, dtype=np.int64).reshape(1, -1)
-    h = prng.np_xxhash64([ss, np.broadcast_to(k, (len(k), n_hashes)),
-                          np.broadcast_to(hi, (len(k), n_hashes))])
-    hu = h.view(np.uint64)
-    u = np.empty((len(k), n_hashes * 3), dtype=np.uint64)
-    for slot in range(3):
-        u[:, slot::3] = (hu >> np.uint64(1 + slot * 21)) & np.uint64(U21)
-    flips = (u[:, : nl * 64] < np.uint64(t21)).astype(np.uint64)
     weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
-    packed = (
-        flips.reshape(len(k), nl, 64) * weights.reshape(1, 1, 64)
-    ).sum(axis=2).astype(np.uint64).view(np.int64)
+    packed = np.empty((len(k), nl), dtype=np.uint64)
+    for j in range(nl):
+        draw = j * 64 + np.arange(64, dtype=np.int64)
+        hi = draw // 3
+        h = prng.np_xxhash64(
+            [ss, k, np.arange(hi[0], hi[-1] + 1).reshape(1, -1)]
+        ).view(np.uint64)
+        shift = (1 + draw % 3 * 21).astype(np.uint64)
+        u = (h[:, hi - hi[0]] >> shift) & np.uint64(U21)
+        packed[:, j] = ((u < np.uint64(t21)) * weights).sum(axis=1)
+    packed = packed.view(np.int64)
     m = bits.last_long_mask(n_bits)
     if m != -1:
         packed[:, -1] &= m

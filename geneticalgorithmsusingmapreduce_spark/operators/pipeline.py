@@ -963,7 +963,7 @@ def curate_corpus_full(
 
     # truncate, don't just persist: the LM + rank + split stages make
     # ~6 more passes over final2, whose logical plan carries the whole
-    # stage-1-5 composition (incl. the semantic applyInPandas subtree)
+    # stage-1-5 composition (incl. the semantic applyInArrow subtree)
     # — same Catalyst re-analysis trap the stage-4 checkpoint already
     # documents, measured again here: 167.9 s → checkpointed at sf0.01
     res = _semdedup_final(

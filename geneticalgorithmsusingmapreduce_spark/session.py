@@ -14,11 +14,8 @@ from pyspark.sql import SparkSession
 
 
 def _blas_threads() -> str:
-    """'1' (the shipped pin) unless SPARK_GRAFT_BLAS_PIN=0 — the A/B
-    dial that lets tools/ab_int8_kernels.py price the pin without a
-    code edit."""
-    if os.environ.get("SPARK_GRAFT_BLAS_PIN", "1") == "0":
-        return str(os.cpu_count() or 1)
+    """BLAS threads per Python worker: '1'. Task parallelism is the
+    outer loop, so a BLAS pool per worker only oversubscribes cores."""
     return "1"
 
 
@@ -101,10 +98,7 @@ def build_session(
         # (Lloyd's partials, SemDeDup assignment/tiles) otherwise spawn
         # an OpenBLAS pool of nproc threads in EACH of the 32 parallel
         # workers — 1,024 threads of pure oversubscription on a 32-core
-        # box; task-level parallelism is already the outer loop.
-        # SPARK_GRAFT_BLAS_PIN=0 disables (the A/B dial —
-        # tools/ab_int8_kernels.py prices this pin against the r10
-        # int8-family readings)
+        # box; task-level parallelism is already the outer loop
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", _blas_threads())
         .config("spark.executorEnv.OMP_NUM_THREADS", _blas_threads())
         .config("spark.executorEnv.MKL_NUM_THREADS", _blas_threads())

@@ -67,14 +67,15 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, \
     functions as F
 
+from ..functions import bits
 from ..operators import ann
 from ..runtime import free_checkpoint, local_checkpoint_truncated
 from .microbatch import run_micro_batches
 
-_ASSIGN_SCHEMA = "vec_id long, cent_id long, qv array<long>, n2 long"
 _PAIR_BATCH_SCHEMA = (
     "vec_a long, vec_b long, dot long, na2 long, nb2 long, "
     "found_batch long"
@@ -95,20 +96,18 @@ def _new_vs_all_fn(t2: int):
     """Per-cent_id pair kernel over a tagged union: the fresh block's
     own upper triangle + fresh × history cross tiles — history ×
     history pairs are never re-emitted. Shared by both variants."""
-    def new_vs_all(pdf):
-        import pandas as pd
-
-        fresh = pdf["fresh"].to_numpy() == 1
-        va, n2a, xfa = ann._sorted_block(pdf, fresh)
+    def new_vs_all(table):
+        fresh = table.column("fresh").to_numpy() == 1
+        va, n2a, xfa = ann._sorted_block(table, fresh)
         if not len(va):
             return ann._empty_pairs()
         parts = [ann._tile_pairs(va, n2a, xfa, t2=t2)]
-        vh, n2h, xfh = ann._sorted_block(pdf, ~fresh)
+        vh, n2h, xfh = ann._sorted_block(table, ~fresh)
         if len(vh):
             parts.append(
                 ann._tile_pairs(va, n2a, xfa, vh, n2h, xfh, t2=t2)
             )
-        return pd.concat(parts, ignore_index=True)
+        return pa.concat_tables(parts)
 
     return new_vs_all
 
@@ -140,7 +139,7 @@ def start_streaming_semdedup(
     ``results`` carries [vec_a, vec_b, dot, na2, nb2, found_batch]."""
     t2 = tau_milli * tau_milli
     state = SemDedupState(
-        assigned=spark.createDataFrame([], _ASSIGN_SCHEMA),
+        assigned=spark.createDataFrame([], ann._ASSIGN_SCHEMA),
         results=spark.createDataFrame(
             [], _PAIR_BATCH_SCHEMA
         ),
@@ -166,7 +165,7 @@ def start_streaming_semdedup(
         )
         new_pairs = (
             tagged.groupBy("cent_id")
-            .applyInPandas(new_vs_all, schema=ann._PAIR_SCHEMA)
+            .applyInArrow(new_vs_all, schema=ann._PAIR_SCHEMA)
             .filter(F.expr(_keep_expr(t2)))
             .withColumn("found_batch", F.lit(b).cast("long"))
         )
@@ -318,6 +317,45 @@ _ENRICH_SCHEMA = (
 )
 
 
+def _sketch(xm):
+    """The int8 SKETCH of (N, D) int64 rows: s8 = max|qv_i| clamped ≥ 1
+    and v8_i = round(127·qv_i/s8), |qv_i − v8_i·s8/127| ≤ s8/254 (the
+    ann int8-postings convention), v8 as one D-byte binary value per
+    row (_v8_binary)."""
+    import numpy as np
+
+    s8 = np.maximum(np.abs(xm).max(axis=1), 1)
+    return s8, _v8_binary(np.rint(127.0 * xm / s8[:, None]).astype(np.int8))
+
+
+def _v8_binary(v8):
+    """(N, D) int8 matrix → Arrow binary array of N D-byte values over
+    the same flat buffer (the stored sketch type)."""
+    import numpy as np
+
+    n, d = v8.shape
+    offsets = np.arange(0, (n + 1) * d, d, dtype=np.int32)
+    return pa.Array.from_buffers(pa.binary(), n, [
+        None, pa.py_buffer(offsets), pa.py_buffer(np.ascontiguousarray(v8)),
+    ])
+
+
+def _v8_matrix(col):
+    """Arrow binary column of N non-null D-byte sketches → (N, D) int8
+    matrix, a view of its data buffer."""
+    import numpy as np
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if not len(col):
+        return np.empty((0, ann.DIMS), np.int8)
+    off = np.frombuffer(col.buffers()[1], dtype=np.int32)
+    off = off[col.offset:col.offset + len(col) + 1]
+    return np.frombuffer(col.buffers()[2], dtype=np.int8)[
+        off[0]:off[-1]
+    ].reshape(len(col), ann.DIMS)
+
+
 def _enrich_kernel(centroid_rows: list, from_qv: bool):
     """Arrow kernel: assign each vector to its Voronoi cell (the
     kernel_assign integers — np.argmax first-max tie-break) and emit,
@@ -325,9 +363,7 @@ def _enrich_kernel(centroid_rows: list, from_qv: bool):
     pass: the full quantized vector (qv, n2), the angle to the
     assigned centroid in micro-radians (theta_urad — the ZONE MAP
     coordinate: cos θ = cdot/√(n2·cn2) over the same integers the
-    exact certificate uses), and the int8 SKETCH (s8 = max|qv_i|
-    clamped ≥ 1; v8_i = round(127·qv_i/s8) packed as 64 bytes — the
-    ann int8-postings convention, |qv_i − v8_i·s8/127| ≤ s8/254).
+    exact certificate uses), and the int8 SKETCH (s8, v8; _sketch).
     ``from_qv``: input rows carry qv (a store re-read during rebuild)
     instead of a float embedding."""
     import numpy as np
@@ -336,17 +372,13 @@ def _enrich_kernel(centroid_rows: list, from_qv: bool):
     cn2 = (cm * cm).sum(axis=1).astype(np.float64)
 
     def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
             if from_qv:
-                xm = np.stack([
-                    np.asarray(v, dtype=np.int64) for v in pdf["qv"]
-                ])
+                xm = bits.np_list_matrix(b.column("qv"), ann.DIMS)
             else:
-                xm = ann._quantize_batch(pdf)
+                xm = ann._quantize_batch(b.column("embedding"))
             best = ann._argmax_dot_chunked(xm, cm)
             n2 = (xm * xm).sum(axis=1)
             cdot = (xm * cm[best]).sum(axis=1).astype(np.float64)
@@ -354,16 +386,15 @@ def _enrich_kernel(centroid_rows: list, from_qv: bool):
                 np.maximum(n2.astype(np.float64) * cn2[best], 1.0)
             )
             theta = np.arccos(np.clip(cdot / denom, -1.0, 1.0))
-            s8 = np.maximum(np.abs(xm).max(axis=1), 1)
-            v8 = np.rint(127.0 * xm / s8[:, None]).astype(np.int8)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy(),
+            s8, v8 = _sketch(xm)
+            yield pa.RecordBatch.from_pydict({
+                "vec_id": b.column("vec_id"),
                 "cent_id": cent_ids[best],
-                "qv": list(xm),
+                "qv": bits.arrow_list_column(xm),
                 "n2": n2,
                 "theta_urad": np.rint(theta * 1e6).astype(np.int64),
                 "s8": s8,
-                "v8": [row.tobytes() for row in v8],
+                "v8": v8,
             })
 
     return kernel
@@ -404,28 +435,23 @@ def _sketch_from_qv(df: DataFrame) -> DataFrame:
     needed — s8/v8 are per-vector). Used by compaction to BACKFILL
     sketches for bands written before the lazy-sketch cutover, so a
     merged band's sketch is always complete."""
-    import numpy as np
-
     def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            xm = np.stack([
-                np.asarray(v, dtype=np.int64) for v in pdf["qv"]
-            ])
-            s8 = np.maximum(np.abs(xm).max(axis=1), 1)
-            v8 = np.rint(127.0 * xm / s8[:, None]).astype(np.int8)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "cent_id": pdf["cent_id"].to_numpy(),
-                "n2": pdf["n2"].to_numpy(),
+            s8, v8 = _sketch(bits.np_list_matrix(b.column("qv"), ann.DIMS))
+            yield pa.RecordBatch.from_pydict({
+                "vec_id": b.column("vec_id"),
+                "cent_id": b.column("cent_id"),
+                "n2": b.column("n2"),
                 "s8": s8,
-                "v8": [row.tobytes() for row in v8],
+                "v8": v8,
             })
 
-    return df.select("vec_id", "cent_id", "qv", "n2").mapInPandas(
+    # a store re-read types the cent_id partition column as int
+    return df.select(
+        "vec_id", F.col("cent_id").cast("long"), "qv", "n2"
+    ).mapInArrow(
         kernel,
         schema="vec_id long, cent_id long, n2 long, s8 long, v8 binary",
     )
@@ -441,38 +467,25 @@ def _prefilter_fn(t2: int, tile: int = 8192):
     can pair — the exact decimal certificate on the full store rows
     decides. Emits [cent_id, batch, vec_id] of kept history rows;
     float64 with the _tile_pairs slack margin, tiled on both sides."""
-    def prefilter(pdf):
+    def prefilter(table):
         import numpy as np
-        import pandas as pd
 
-        fresh = pdf["fresh"].to_numpy() == 1
-        n_a = int(fresh.sum())
-        n_h = len(pdf) - n_a
-        if not n_a or not n_h:
-            return pd.DataFrame({
-                "cent_id": np.empty(0, np.int64),
-                "batch": np.empty(0, np.int64),
-                "vec_id": np.empty(0, np.int64),
-            })
-        am = np.stack([
-            np.asarray(v, dtype=np.int64)
-            for v in pdf["qv"].to_numpy()[fresh]
-        ]).astype(np.float64)
-        n2a = pdf["n2"].to_numpy()[fresh].astype(np.float64)
+        fresh = table.column("fresh").to_numpy() == 1
+        a, h = table.filter(pa.array(fresh)), table.filter(pa.array(~fresh))
+        if not a.num_rows or not h.num_rows:
+            return h.select(["cent_id", "batch", "vec_id"]).slice(0, 0)
+        am = bits.np_list_matrix(a.column("qv"), ann.DIMS).astype(np.float64)
+        n2a = a.column("n2").to_numpy().astype(np.float64)
         l1a = np.abs(am).sum(axis=1)
-        hm = np.frombuffer(
-            b"".join(pdf["v8"].to_numpy()[~fresh]), dtype=np.int8
-        ).reshape(n_h, ann.DIMS).astype(np.float64)
-        sh = pdf["s8"].to_numpy()[~fresh].astype(np.float64)
-        n2h = pdf["n2"].to_numpy()[~fresh].astype(np.float64)
-        hvid = pdf["vec_id"].to_numpy()[~fresh]
-        hb = pdf["batch"].to_numpy()[~fresh]
-        keep = np.zeros(n_h, dtype=bool)
-        for j0 in range(0, n_h, tile):
+        hm = _v8_matrix(h.column("v8")).astype(np.float64)
+        sh = h.column("s8").to_numpy().astype(np.float64)
+        n2h = h.column("n2").to_numpy().astype(np.float64)
+        keep = np.zeros(h.num_rows, dtype=bool)
+        for j0 in range(0, h.num_rows, tile):
             hj = hm[j0:j0 + tile]
             sj = sh[j0:j0 + tile]
             kj = np.zeros(len(hj), dtype=bool)
-            for i0 in range(0, n_a, tile):
+            for i0 in range(0, a.num_rows, tile):
                 d8 = am[i0:i0 + tile] @ hj.T
                 u = sj[None, :] * (
                     d8 / 127.0 + l1a[i0:i0 + tile, None] / 254.0
@@ -485,12 +498,9 @@ def _prefilter_fn(t2: int, tile: int = 8192):
                 if kj.all():
                     break
             keep[j0:j0 + len(hj)] = kj
-        cid = int(pdf["cent_id"].iloc[0])
-        return pd.DataFrame({
-            "cent_id": np.full(int(keep.sum()), cid, np.int64),
-            "batch": hb[keep].astype(np.int64),
-            "vec_id": hvid[keep].astype(np.int64),
-        })
+        return h.select(["cent_id", "batch", "vec_id"]).filter(
+            pa.array(keep)
+        )
 
     return prefilter
 
@@ -758,12 +768,12 @@ def start_streaming_semdedup_durable(
         # assign/sketch writes) and must materialize once, and the
         # cache's first action (the cell_stats collect below) does that
         # — an eager checkpoint would spend a dedicated job on it. The
-        # plan behind the cache is two nodes (filter ∘ mapInPandas over
+        # plan behind the cache is two nodes (filter ∘ mapInArrow over
         # the source leaf), so there is no nested plan tree to truncate;
         # free_checkpoint at batch end falls back to unpersist for plain
         # cached frames.
         asg = (
-            batch.select("vec_id", "embedding").mapInPandas(
+            batch.select("vec_id", "embedding").mapInArrow(
                 _enrich_kernel(state.centroid_rows, from_qv=False),
                 schema=_ENRICH_SCHEMA,
             ).filter(F.col("n2") > 0)
@@ -835,7 +845,7 @@ def start_streaming_semdedup_durable(
                 # materializing action (same move as the asg persist
                 # above): one job, where an eager checkpoint followed by
                 # the distinct-collect would be two.
-                cand = pre.groupBy("cent_id").applyInPandas(
+                cand = pre.groupBy("cent_id").applyInArrow(
                     prefilter,
                     schema="cent_id long, batch long, vec_id long",
                 ).persist()
@@ -889,7 +899,7 @@ def start_streaming_semdedup_durable(
             tagged = fresh_side
         new_pairs = (
             tagged.groupBy("cent_id")
-            .applyInPandas(new_vs_all, schema=ann._PAIR_SCHEMA)
+            .applyInArrow(new_vs_all, schema=ann._PAIR_SCHEMA)
             .filter(F.expr(_keep_expr(t2)))
             .withColumn("found_batch", F.lit(b).cast("long"))
         )
@@ -952,7 +962,7 @@ def start_streaming_semdedup_durable(
             # checkpoint: the re-assignment kernel feeds three
             # consumers (assign write, sketch write, zone stats)
             re_enriched = local_checkpoint_truncated(
-                store.select("vec_id", "qv").mapInPandas(
+                store.select("vec_id", "qv").mapInArrow(
                     _enrich_kernel(rows, from_qv=True),
                     schema=_ENRICH_SCHEMA,
                 )

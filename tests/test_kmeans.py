@@ -24,6 +24,12 @@ def test_kmeans_inertia_monotone_and_ivf_pluggable(spark):
 
     rows = cents.collect()
     assert len(rows) == 8 and all(len(r.cv) == ann.DIMS for r in rows)
+    # one Lloyd's loop trains both models: PQ over one subspace of all
+    # DIMS with the same seeds (vec_id < 8) is this k-means
+    pq = ann.pq_train_codebook_rows(emb, m_sub=1, k_codes=8, iters=3)
+    assert [cw for _, _, cw in pq] == [
+        list(r.cv) for r in sorted(rows, key=lambda r: r.cent_id)
+    ]
 
     out = ann.ivf_topk(emb, centroids=cents)
     got = out.groupBy("query_id").count().collect()

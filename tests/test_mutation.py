@@ -56,6 +56,25 @@ def test_numpy_mask_matches_expression(spark):
         }, n_bits
 
 
+def test_numpy_mask_memory_is_bounded():
+    # 1,000 rows at 10,000 bits: the mask itself is 1.3 MB, and building
+    # it must not hold (rows × n_bits) draw matrices (257 MB when it did)
+    import tracemalloc
+
+    import numpy as np
+
+    tracemalloc.start()
+    try:
+        mutate.np_mutation_mask(
+            bits.seed_salt(3, mutate.SALT_MUTATE), np.arange(1000), 10_000,
+            mutate._t21(1e-2),
+        )
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 64 << 20, peak
+
+
 def test_sparse_mutation_rate_and_determinism(spark):
     # the low-rate Poisson path: measured flip rate ≈ nominal, and the
     # same seed reproduces the exact same flips

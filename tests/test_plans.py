@@ -436,7 +436,7 @@ def test_semdedup_balanced_single_block_exchange(spark):
     df = ann.semantic_cluster_pairs(aug, tau_milli=700, n_centroids=16,
                                     cap=24)
     p = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in p
+    assert "FlatMapGroupsInArrow" in p
     assert p.count("hashpartitioning(cent_id") == 1
     assert "bi" in p and "bj" in p  # the block keys ride that exchange
 
@@ -595,3 +595,70 @@ def test_genome_kernels_are_arrow_native(spark):
         assert set(types) == {str(PythonEvalType.SQL_SCALAR_ARROW_UDF)}, (
             f"{name}:\n{p}"
         )
+
+
+def test_embedding_kernels_are_arrow_native(spark, tmp_path, monkeypatch):
+    # every numpy kernel of the ANN stack and the streaming SemDeDup
+    # store moves vectors as flat Arrow buffers: mapInArrow and
+    # applyInArrow plans, and the trainers and a durable SemDeDup run
+    # never reach a pandas kernel
+    from pyspark.sql import functions as F
+
+    from geneticalgorithmsusingmapreduce_spark.operators import ann
+    from geneticalgorithmsusingmapreduce_spark.sources.registry import (
+        read_table,
+    )
+    from geneticalgorithmsusingmapreduce_spark.streaming import (
+        ivf_rebuild as ir, semdedup,
+    )
+
+    emb = read_table(spark, SF, "embeddings")
+    aug = ann.augmented_embeddings(spark, SF)
+    rows = [
+        (r.vec_id, list(r.qv)) for r in emb.select(
+            "vec_id", F.expr(ann.quantize_expr()).alias("qv")
+        ).filter("vec_id < 8").collect()
+    ]
+    d = str(tmp_path / "idx")
+    ir.write_generation(spark, emb, d, 0, rows)
+    ir.commit_generation(spark, d, 0)
+    cents, postings = ir.read_serve_tables(spark, d)
+    assigned = ann.kernel_assign(emb, rows)
+    codebook = [(m, kk, [kk] * ann.SUB_DIMS)
+                for m in range(ann.M_SUB) for kk in range(ann.K_CODES)]
+    frames = {
+        "encode_postings_int8": ann.encode_postings_int8(emb, rows),
+        "ivf_serve_topk_int8": ann.ivf_serve_topk_int8(postings, cents),
+        "kernel_assign": assigned,
+        "pq_encode": ann.pq_encode(assigned, codebook, rows),
+        "quantize_bucket_norm": ann.quantize_bucket_norm(emb, 7),
+        "topk_dot_numpy": ann.topk_dot_numpy(emb),
+        "semantic_cluster_pairs": ann.semantic_cluster_pairs(aug, 700),
+        "semantic_cluster_pairs capped": ann.semantic_cluster_pairs(
+            aug, 700, n_centroids=16, cap=24
+        ),
+    }
+    for name, df in frames.items():
+        p = _plan(df)
+        for node in ("MapInPandas", "FlatMapGroupsInPandas"):
+            assert node not in p, f"{name} has {node}:\n{p}"
+        assert "InArrow" in p, f"{name} has no Arrow kernel:\n{p}"
+    assert "FlatMapGroupsInArrow" in _plan(
+        frames["semantic_cluster_pairs capped"]
+    )
+
+    def pandas_kernel(*args, **kwargs):
+        raise AssertionError("pandas kernel")
+
+    monkeypatch.setattr(type(emb), "mapInPandas", pandas_kernel)
+    monkeypatch.setattr(
+        type(emb.groupBy("vec_id")), "applyInPandas", pandas_kernel
+    )
+    cent_rows, _ = ann.train_centroid_rows(emb, 8, 2)
+    ann.pq_train_codebook_rows(emb, iters=1)
+    ann.pq_train_codebook_rows_residual(assigned, rows, iters=1)
+    st = semdedup.start_streaming_semdedup_durable(
+        spark, aug, str(tmp_path / "sd"), n_batches=2,
+        sketch_read_min_bytes=0,
+    )
+    assert st.batches_done == 2 and st.history[1]["sketch_bytes_read"] > 0

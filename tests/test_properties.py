@@ -112,8 +112,6 @@ def test_block_pair_decomposition_covers_every_pair_once(
     # EXACTLY the monolithic upper-triangle pair set — each unordered
     # pair lands in the one group keyed (min, max) of its members'
     # parts. Pure-kernel property over random integer vectors.
-    import pandas as pd
-
     from geneticalgorithmsusingmapreduce_spark.operators import ann
 
     rng = np.random.default_rng(seed)
@@ -129,8 +127,8 @@ def test_block_pair_decomposition_covers_every_pair_once(
     vid, xm, n2 = vid[order], xm[order], n2[order]
     xf = xm.astype(np.float64)
 
-    def norm(df: pd.DataFrame) -> set:
-        return {tuple(int(x) for x in r) for r in df.to_numpy()}
+    def norm(table) -> set:  # Arrow [vec_a, vec_b, dot, na2, nb2]
+        return set(zip(*(c.to_pylist() for c in table.columns)))
 
     mono = norm(ann._tile_pairs(vid, n2, xf, t2=t2, tile=7))
     part = (vid * 2654435761 % n_parts).astype(np.int64)

@@ -184,12 +184,12 @@ def test_centroids_for_count_rule():
 def test_semdedup_ships_each_vector_once(spark):
     # the SemDeDup scale property: ONE exchange keyed on cent_id (each
     # vector ships once to its cluster's partition), the pairwise block
-    # inside a grouped pandas kernel — candidate PAIRS never cross an
+    # inside a grouped Arrow kernel — candidate PAIRS never cross an
     # exchange
     aug = ann.augmented_embeddings(spark, SF)
     df = ann.semantic_cluster_pairs(aug)
     p = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in p
+    assert "FlatMapGroupsInArrow" in p
     assert p.count("hashpartitioning(cent_id") == 1
 
 
