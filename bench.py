@@ -16,7 +16,9 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-from geneticalgorithmsusingmapreduce_spark import catalog  # noqa: E402
+from geneticalgorithmsusingmapreduce_spark import (  # noqa: E402
+    catalog, runtime,
+)
 from geneticalgorithmsusingmapreduce_spark.session import (  # noqa: E402
     build_session, local_cpus,
 )
@@ -51,19 +53,19 @@ def ga_loop_benchmarks(spark) -> dict[str, float]:
     best = float("inf")
     for it in range(4):  # gen 0-1 warm Python workers/JIT; gens 2-3 measured
         t0 = time.perf_counter()
-        ch = sga.next_generation(
+        ch = runtime.local_checkpoint_truncated(sga.next_generation(
             cur, n_bits, 42, it, 32, pop_rows=pop_size
-        ).localCheckpoint(eager=True)
+        ))
         ch.count()
         dt = time.perf_counter() - t0
         if it >= 2:  # min-of-2: single-gen readings spike ~4x under GC
             best = min(best, dt)
         if cur is not pop:
-            cur.unpersist()
+            runtime.free_checkpoint(cur)
         cur = ch
     out["sga_10kbit_gen_sec"] = round(best, 4)
     pop.unpersist()
-    cur.unpersist()
+    runtime.free_checkpoint(cur)
 
     # incr_ga's hardcoded scale: 64,000-bit genomes (1,000 longs), pop
     # 6,000 (reference src/edu/illinois/incr_ga/MapReduce.java:31-32) —
@@ -78,19 +80,19 @@ def ga_loop_benchmarks(spark) -> dict[str, float]:
     best = float("inf")
     for it in range(3):  # gen 0 warms; gens 1-2 measured (min-of-2)
         t0 = time.perf_counter()
-        ch = sga.next_generation(
+        ch = runtime.local_checkpoint_truncated(sga.next_generation(
             cur, n_bits, 42, it, 32, pop_rows=pop_size
-        ).localCheckpoint(eager=True)
+        ))
         ch.count()
         dt = time.perf_counter() - t0
         if it >= 1:
             best = min(best, dt)
         if cur is not pop:
-            cur.unpersist()
+            runtime.free_checkpoint(cur)
         cur = ch
     out["sga_64kbit_gen_sec"] = round(best, 4)
     pop.unpersist()
-    cur.unpersist()
+    runtime.free_checkpoint(cur)
 
     # the README's own example command is the 10x multiplier
     # (`hadoop jar ga.jar 4 4 10000 100 10`, reference README:40-41) →

@@ -3036,19 +3036,56 @@ def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("emb_ivf_topk", f"SELECT * FROM {ann_ops.duck_ivf_topk_sql()} _q")
 def emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style approximate top-k: centroid assignment via broadcast
-    join + grouped argmax, queries probe their 2 nearest of 8 lists —
-    the relational ANN shape that scales (one shuffle on centroid id)."""
+    """IVF-style approximate top-k: the first 8 quantized vectors are the
+    centroids, one Arrow pass assigns every vector to its max-dot list,
+    and queries probe their 2 nearest of 8 lists, scanning only those —
+    the driver-side probe pick plus one Arrow scan that every IVF serve
+    shares (ann._probe_scan)."""
     return ann_ops.ivf_topk(read_table(spark, sf_dir, "embeddings"))
+
+
+def _duck_recall_sql(appx: str) -> str:
+    """Oracle twin of _recall over the approximate ranking's DuckDB
+    subquery ``appx``."""
+    return f"""
+    (WITH e AS (SELECT query_id, vec_id FROM {ann_ops.duck_topk_sql()} _e),
+          a AS (SELECT query_id, vec_id, 1 AS m FROM {appx} _a)
+     SELECT count(a.m) AS hits, count(*) AS total,
+            cast(count(a.m) as double) / count(*) AS recall
+     FROM e LEFT JOIN a USING (query_id, vec_id))
+    """
+
+
+def _recall(emb: DataFrame, appx: DataFrame) -> DataFrame:
+    """Recall@10 of the ranking ``appx`` [query_id, vec_id, ...] against
+    the exact brute-force top-k of ``emb`` (emb_topk_dot). Both sides
+    are deterministic, so the recall is a hash-checkable value, not a
+    statistical claim. hits and total come from ONE left join, so each
+    side's subtree executes once. Output: 1 row [hits, total, recall]."""
+    exact = ann_ops.topk_dot(emb).select("query_id", "vec_id")
+    return (
+        exact.join(
+            appx.select("query_id", "vec_id", F.lit(1).alias("m")),
+            ["query_id", "vec_id"], "left",
+        )
+        .agg(
+            F.count("m").alias("hits"),
+            F.count(F.lit(1)).alias("total"),
+        )
+        .select(
+            "hits", "total",
+            (F.col("hits").cast("double") / F.col("total")).alias("recall"),
+        )
+    )
 
 
 # One Lloyd's training per (dataset, C, iters) per process: the trained
 # model is a tiny session-independent list of C×D ints over an immutable
-# parquet dir, and THREE entries (trained IVF, cluster stats, recall)
-# consume the identical model — r4 VERDICT flagged the triple retrain as
-# ~6.8 s of redundant bench time. This is the "shared artifact" a real
-# pipeline would persist; here it lives for the process. Oracles are
-# unaffected: they replay the full training symbolically every time.
+# parquet dir, and every trained-IVF entry consumes the identical model
+# (each retraining cost seconds of bench time). This is the "shared
+# artifact" a real pipeline would persist; here it lives for the
+# process. Oracles are unaffected: they replay the full training
+# symbolically every time.
 _CENTROID_CACHE: dict[tuple, list] = {}
 
 
@@ -3070,10 +3107,6 @@ def trained_centroid_rows(
     return _CENTROID_CACHE[key]
 
 
-def _trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ann_ops.centroid_frame(spark, trained_centroid_rows(spark, sf_dir))
-
-
 @register(
     "emb_ivf_topk_trained",
     f"SELECT * FROM {ann_ops.duck_trained_ivf_sql()} _q",
@@ -3089,7 +3122,9 @@ def emb_ivf_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself comes from the per-process training cache shared with
     emb_kmeans_clusters / emb_ivf_recall."""
     emb = read_table(spark, sf_dir, "embeddings")
-    return ann_ops.ivf_topk(emb, centroids=_trained_centroids(spark, sf_dir))
+    return ann_ops.ivf_topk(
+        emb, centroid_rows=trained_centroid_rows(spark, sf_dir)
+    )
 
 
 @register(
@@ -3099,13 +3134,15 @@ def emb_ivf_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 def emb_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-training cluster diagnostics: per-centroid member count and
     exact min/max squared distance after 3 Lloyd's iterations — the
-    monitoring query of the IVF training loop, with the oracle replaying
+    monitoring query of the IVF training loop: one Arrow pass assigns
+    each vector in the min-distance form and emits its squared
+    distance, one exchange on cent_id aggregates. The oracle replays
     the full training (same unrolled-CTE machinery as
     emb_ivf_topk_trained); the model comes from the shared per-process
     training cache."""
     return ann_ops.kmeans_cluster_stats(
         read_table(spark, sf_dir, "embeddings"),
-        centroids=_trained_centroids(spark, sf_dir),
+        centroid_rows=trained_centroid_rows(spark, sf_dir),
     )
 
 
@@ -3116,24 +3153,24 @@ def emb_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def emb_ivf_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DURABLE IVF index: the build/serve split a production ANN system
     actually runs. Build = trained centroids (shared cache) + one
-    assignment pass; the artifact lands as parquet — centroids plus a
-    postings table PARTITIONED BY cent_id, so at 100 TB a probe of 2 of
-    C lists prunes the other C−2 at the directory level before any scan
-    (same layout story as events_partitioned_scan, applied to an index).
-    Serve = reload both tables and run only the probe/search stage — no
-    re-assignment scan of the vector table. The final ranking
+    Arrow assignment pass (ann.kernel_assign); the artifact lands as
+    parquet — centroids plus a postings table PARTITIONED BY cent_id,
+    so at 100 TB a probe of 2 of C lists prunes the other C−2 at the
+    directory level before any scan (same layout story as
+    events_partitioned_scan, applied to an index). Serve = reload both
+    tables and run only the probe-and-scan stage (ann.ivf_serve_topk) —
+    no re-assignment scan of the vector table. The final ranking
     hash-matches the SAME oracle as emb_ivf_topk_trained: a full
     symbolic replay of training + assignment + probe, which therefore
     also proves the artifact round-trips losslessly (int64 arrays
     survive parquet bit-exactly)."""
     emb = read_table(spark, sf_dir, "embeddings")
-    cents = _trained_centroids(spark, sf_dir)
-    qz = emb.select("vec_id", F.expr(ann_ops.quantize_expr()).alias("qv"))
+    rows = trained_centroid_rows(spark, sf_dir)
     d = runtime.scoped_tempdir("gamr_ivf_idx_")
-    ann_ops.assign_to_centroids(qz, cents).write.partitionBy(
-        "cent_id"
-    ).parquet(f"{d}/postings")
-    cents.write.parquet(f"{d}/centroids")
+    ann_ops.kernel_assign(emb, rows).select(
+        "vec_id", "qv", "cent_id"
+    ).write.partitionBy("cent_id").parquet(f"{d}/postings")
+    ann_ops.centroid_frame(spark, rows).write.parquet(f"{d}/centroids")
     back_cents = spark.read.parquet(f"{d}/centroids")
     postings = spark.read.parquet(f"{d}/postings").select(
         "vec_id", "qv", F.col("cent_id").cast("long").alias("cent_id")
@@ -3141,43 +3178,15 @@ def emb_ivf_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_ops.ivf_serve_topk(postings, back_cents)
 
 
-@register(
-    "emb_ivf_recall",
-    f"""
-    (WITH e AS (SELECT query_id, vec_id FROM {ann_ops.duck_topk_sql()} _e),
-          a AS (SELECT query_id, vec_id, 1 AS m
-                FROM {ann_ops.duck_trained_ivf_sql()} _a)
-     SELECT count(a.m) AS hits, count(*) AS total,
-            cast(count(a.m) as double) / count(*) AS recall
-     FROM e LEFT JOIN a USING (query_id, vec_id))
-    """,
-)
+@register("emb_ivf_recall", _duck_recall_sql(ann_ops.duck_trained_ivf_sql()))
 def emb_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality metric of the ANN scale path: recall@10 of the trained-IVF
-    ranking (emb_ivf_topk_trained) against the exact brute-force top-k
-    (emb_topk_dot). Both sides are deterministic, so the recall itself is
-    a hash-checkable value, not a statistical claim — the oracle replays
-    the full k-means training AND the exact ranking and intersects them
-    identically. hits and total come from ONE left join (each side's
-    expensive subtree executes exactly once — no cross-branch reuse
-    exists at the plan level). Output: 1 row [hits, total, recall]."""
+    """Quality metric of the ANN scale path: _recall of the trained-IVF
+    ranking (emb_ivf_topk_trained); the oracle replays the full k-means
+    training AND the exact ranking and intersects them identically."""
     emb = read_table(spark, sf_dir, "embeddings")
-    exact = ann_ops.topk_dot(emb).select("query_id", "vec_id")
-    cents = _trained_centroids(spark, sf_dir)
-    appx = ann_ops.ivf_topk(emb, centroids=cents).select(
-        "query_id", "vec_id", F.lit(1).alias("m")
-    )
-    return (
-        exact.join(appx, ["query_id", "vec_id"], "left")
-        .agg(
-            F.count("m").alias("hits"),
-            F.count(F.lit(1)).alias("total"),
-        )
-        .select(
-            "hits", "total",
-            (F.col("hits").cast("double") / F.col("total")).alias("recall"),
-        )
-    )
+    return _recall(emb, ann_ops.ivf_topk(
+        emb, centroid_rows=trained_centroid_rows(spark, sf_dir)
+    ))
 
 
 @register(
@@ -3212,37 +3221,16 @@ def emb_ivf_postings_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_ivf_recall_int8",
-    f"""
-    (WITH e AS (SELECT query_id, vec_id FROM {ann_ops.duck_topk_sql()} _e),
-          a AS (SELECT query_id, vec_id, 1 AS m
-                FROM {ann_ops.duck_trained_ivf_int8_sql()} _a)
-     SELECT count(a.m) AS hits, count(*) AS total,
-            cast(count(a.m) as double) / count(*) AS recall
-     FROM e LEFT JOIN a USING (query_id, vec_id))
-    """,
+    _duck_recall_sql(ann_ops.duck_trained_ivf_int8_sql()),
 )
 def emb_ivf_recall_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the int8-compressed IVF ranking against the exact
-    full-precision brute-force top-k — the hash-checked quality row for
-    the compression dial (the emb_ivf_recall pattern at the quantized
-    setting): what int8 postings cost in recall is a checkable value,
-    not a statistical claim. Output: 1 row [hits, total, recall]."""
+    """_recall of the int8-compressed IVF ranking — the hash-checked
+    quality row for the compression dial: what int8 postings cost in
+    recall is a checkable value."""
     emb = read_table(spark, sf_dir, "embeddings")
-    exact = ann_ops.topk_dot(emb).select("query_id", "vec_id")
-    appx = ann_ops.ivf_topk_int8(
+    return _recall(emb, ann_ops.ivf_topk_int8(
         emb, trained_centroid_rows(spark, sf_dir)
-    ).select("query_id", "vec_id", F.lit(1).alias("m"))
-    return (
-        exact.join(appx, ["query_id", "vec_id"], "left")
-        .agg(
-            F.count("m").alias("hits"),
-            F.count(F.lit(1)).alias("total"),
-        )
-        .select(
-            "hits", "total",
-            (F.col("hits").cast("double") / F.col("total")).alias("recall"),
-        )
-    )
+    ))
 
 
 # PQ codebooks share the per-process training-cache discipline of
@@ -3274,24 +3262,22 @@ def emb_ivf_postings_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-int64 arithmetic as the IVF training) compress each posting to 8
     code bytes — 8× below the int8 artifact, 64× below full precision: the
     step that makes a 100 TB embedding index RAM-resident. Serve is
-    asymmetric (ADC): per query a broadcast LUT of (sub, code) → partial
-    dot, each candidate scored as M_SUB LUT lookups via posexplode +
-    equi-join + grouped sum — candidate rows carry four small ints. The
-    DuckDB oracle replays k-means + assignment + codebook training + encode
-    + ADC serve symbolically; the hash-match also proves the array<tinyint>
-    codes round-trip parquet losslessly. Codebooks train on the vectors (not
-    IVF residuals) — documented simplification; the recall twin measures
-    what that + 8-byte codes cost."""
+    asymmetric (ADC) on the shared IVF probe-and-scan kernel: the driver
+    builds each query's LUT of (sub, code) → partial dot, and a
+    candidate in a probed list scores as the sum of its M_SUB LUT
+    entries. The DuckDB oracle replays k-means + assignment + codebook
+    training + encode + ADC serve symbolically; the hash-match also
+    proves the array<tinyint> codes round-trip parquet losslessly.
+    Codebooks train on the vectors (not IVF residuals) — documented
+    simplification; the recall twin measures what that + 8-byte codes
+    cost."""
     emb = read_table(spark, sf_dir, "embeddings")
-    cents = _trained_centroids(spark, sf_dir)
+    rows = trained_centroid_rows(spark, sf_dir)
     cb_rows = _pq_codebook_rows(spark, sf_dir)
-    qz = emb.select("vec_id", F.expr(ann_ops.quantize_expr()).alias("qv"))
-    codes = ann_ops.pq_encode(
-        ann_ops.assign_to_centroids(qz, cents), cb_rows
-    )
+    codes = ann_ops.pq_encode(ann_ops.kernel_assign(emb, rows), cb_rows)
     d = runtime.scoped_tempdir("gamr_ivf_pq_")
     codes.write.partitionBy("cent_id").parquet(f"{d}/codes")
-    cents.write.parquet(f"{d}/centroids")
+    ann_ops.centroid_frame(spark, rows).write.parquet(f"{d}/centroids")
     spark.createDataFrame(cb_rows, ann_ops.CODEBOOK_SCHEMA).write.parquet(
         f"{d}/codebook"
     )
@@ -3300,46 +3286,23 @@ def emb_ivf_postings_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     back_codes = spark.read.parquet(f"{d}/codes").select(
         "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
     )
-    queries = qz.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("qv").alias("qe")
+    return ann_ops.pq_serve_topk(
+        back_codes, back_cents, back_cb, ann_ops.query_rows(emb)
     )
-    return ann_ops.pq_serve_topk(back_codes, back_cents, back_cb, queries)
 
 
 @register(
-    "emb_ivf_recall_pq",
-    f"""
-    (WITH e AS (SELECT query_id, vec_id FROM {ann_ops.duck_topk_sql()} _e),
-          a AS (SELECT query_id, vec_id, 1 AS m
-                FROM {ann_ops.duck_trained_ivf_pq_sql()} _a)
-     SELECT count(a.m) AS hits, count(*) AS total,
-            cast(count(a.m) as double) / count(*) AS recall
-     FROM e LEFT JOIN a USING (query_id, vec_id))
-    """,
+    "emb_ivf_recall_pq", _duck_recall_sql(ann_ops.duck_trained_ivf_pq_sql())
 )
 def emb_ivf_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the PQ/ADC ranking against the exact full-precision
-    brute-force top-k — the hash-checked quality row for the 8-byte
-    compression dial, completing the precision ladder
-    (full → int8 → PQ) each rung of which is a checkable value.
-    Output: 1 row [hits, total, recall]."""
+    """_recall of the PQ/ADC ranking — the hash-checked quality row for
+    the 8-byte compression dial, completing the precision ladder
+    (full → int8 → PQ) each rung of which is a checkable value."""
     emb = read_table(spark, sf_dir, "embeddings")
-    exact = ann_ops.topk_dot(emb).select("query_id", "vec_id")
-    appx = ann_ops.ivf_topk_pq(
-        emb, _trained_centroids(spark, sf_dir),
+    return _recall(emb, ann_ops.ivf_topk_pq(
+        emb, trained_centroid_rows(spark, sf_dir),
         _pq_codebook_rows(spark, sf_dir),
-    ).select("query_id", "vec_id", F.lit(1).alias("m"))
-    return (
-        exact.join(appx, ["query_id", "vec_id"], "left")
-        .agg(
-            F.count("m").alias("hits"),
-            F.count(F.lit(1)).alias("total"),
-        )
-        .select(
-            "hits", "total",
-            (F.col("hits").cast("double") / F.col("total")).alias("recall"),
-        )
-    )
+    ))
 
 
 def _pq_residual_codebook_rows(spark: SparkSession, sf_dir: str) -> list:
@@ -3352,53 +3315,29 @@ def _pq_residual_codebook_rows(spark: SparkSession, sf_dir: str) -> list:
     if key not in _PQ_CACHE:
         emb = read_table(spark, sf_dir, "embeddings")
         cent_rows = trained_centroid_rows(spark, sf_dir)
-        cents = ann_ops.centroid_frame(spark, cent_rows)
-        qz = emb.select(
-            "vec_id", F.expr(ann_ops.quantize_expr()).alias("qv")
-        )
         _PQ_CACHE[key] = ann_ops.pq_train_codebook_rows_residual(
-            ann_ops.assign_to_centroids(qz, cents), cent_rows
+            ann_ops.kernel_assign(emb, cent_rows), cent_rows
         )
     return _PQ_CACHE[key]
 
 
 @register(
     "emb_ivf_recall_pq_residual",
-    f"""
-    (WITH e AS (SELECT query_id, vec_id FROM {ann_ops.duck_topk_sql()} _e),
-          a AS (SELECT query_id, vec_id, 1 AS m
-                FROM {ann_ops.duck_trained_ivf_pq_residual_sql()} _a)
-     SELECT count(a.m) AS hits, count(*) AS total,
-            cast(count(a.m) as double) / count(*) AS recall
-     FROM e LEFT JOIN a USING (query_id, vec_id))
-    """,
+    _duck_recall_sql(ann_ops.duck_trained_ivf_pq_residual_sql()),
 )
 def emb_ivf_recall_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of RESIDUAL-PQ/ADC against the exact brute-force top-k
-    (r9 VERDICT "Next round" #4): the codebook trains on (vector −
+    """_recall of RESIDUAL-PQ/ADC: the codebook trains on (vector −
     assigned centroid) — standard IVF-PQ — and the serve adds the
     candidate list's exact query×centroid dot back. Same 8 bytes/vector
     as the plain-PQ rung; this row is the measured answer to whether
     residual encoding lifts pure-code recall on this corpus (the
     shipping decision lives in BASELINE.md next to the 0.38 plain rung
-    and the re-rank ceiling). Output: 1 row [hits, total, recall]."""
+    and the re-rank ceiling)."""
     emb = read_table(spark, sf_dir, "embeddings")
-    exact = ann_ops.topk_dot(emb).select("query_id", "vec_id")
-    appx = ann_ops.ivf_topk_pq_residual(
+    return _recall(emb, ann_ops.ivf_topk_pq_residual(
         emb, trained_centroid_rows(spark, sf_dir),
         _pq_residual_codebook_rows(spark, sf_dir),
-    ).select("query_id", "vec_id", F.lit(1).alias("m"))
-    return (
-        exact.join(appx, ["query_id", "vec_id"], "left")
-        .agg(
-            F.count("m").alias("hits"),
-            F.count(F.lit(1)).alias("total"),
-        )
-        .select(
-            "hits", "total",
-            (F.col("hits").cast("double") / F.col("total")).alias("recall"),
-        )
-    )
+    ))
 
 
 _IVF_APPEND_DUCK = ann_ops.duck_trained_ivf_int8_sql(
@@ -3489,40 +3428,20 @@ def emb_ivf_rebuild_gen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_ivf_recall_pq_rerank",
-    f"""
-    (WITH e AS (SELECT query_id, vec_id FROM {ann_ops.duck_topk_sql()} _e),
-          a AS (SELECT query_id, vec_id, 1 AS m
-                FROM {ann_ops.duck_trained_ivf_pq_rerank_sql()} _a)
-     SELECT count(a.m) AS hits, count(*) AS total,
-            cast(count(a.m) as double) / count(*) AS recall
-     FROM e LEFT JOIN a USING (query_id, vec_id))
-    """,
+    _duck_recall_sql(ann_ops.duck_trained_ivf_pq_rerank_sql()),
 )
 def emb_ivf_recall_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the PRODUCTION PQ serve (8-byte-code ADC shortlist
-    of 100 → exact re-rank) against the exact brute-force top-k. The
-    hash-checked value closes the precision ladder: re-ranking recovers
-    everything the codes gave up — at the gate setting 44/50, identical
-    to the full-precision IVF at the same probe count (the probes=2
-    ceiling), while the scanned index stays 8 bytes/vector. Output:
-    1 row [hits, total, recall]."""
+    """_recall of the PRODUCTION PQ serve (8-byte-code ADC shortlist of
+    100 → exact re-rank). The hash-checked value closes the precision
+    ladder: re-ranking recovers everything the codes gave up — at the
+    gate setting 44/50, identical to the full-precision IVF at the same
+    probe count (the probes=2 ceiling), while the scanned index stays 8
+    bytes/vector."""
     emb = read_table(spark, sf_dir, "embeddings")
-    exact = ann_ops.topk_dot(emb).select("query_id", "vec_id")
-    appx = ann_ops.pq_topk_rerank(
-        emb, _trained_centroids(spark, sf_dir),
+    return _recall(emb, ann_ops.pq_topk_rerank(
+        emb, trained_centroid_rows(spark, sf_dir),
         _pq_codebook_rows(spark, sf_dir),
-    ).select("query_id", "vec_id", F.lit(1).alias("m"))
-    return (
-        exact.join(appx, ["query_id", "vec_id"], "left")
-        .agg(
-            F.count("m").alias("hits"),
-            F.count(F.lit(1)).alias("total"),
-        )
-        .select(
-            "hits", "total",
-            (F.col("hits").cast("double") / F.col("total")).alias("recall"),
-        )
-    )
+    ))
 
 
 MUTATION_RATE = 0.01

@@ -20,6 +20,10 @@ Scale shapes:
   Every kernel here reads vectors with bits.np_list_matrix (a reshape of
   the Arrow list's flat values) and writes them with
   bits.arrow_list_column, never row by row.
+* IVF (float, int8 and PQ postings): kernel_assign puts each vector
+  in its max-dot centroid's list in one Arrow pass, and every serve is
+  one driver-side probe pick plus one Arrow scan of the probed lists
+  only (_probe_scan).
 * sign-LSH: 16 seeded hyperplanes with ±1 components from the xxhash64
   stream → 16-bit bucket; pairs within a bucket verified exactly. One
   narrow projection + one self-join on the bucket key.
@@ -103,8 +107,7 @@ def _centroid_arrays(centroid_rows: list):
     np.searchsorted(cent_ids, c) is cent_id c's row).
     ``cent_ids[_argmax_dot_chunked(xm, cm)]`` is each row's max-dot
     centroid: np.argmax keeps the first maximum, so ties go to the
-    lowest cent_id — max_by(cent_id, struct(cdot, -cent_id)) in
-    assign_to_centroids."""
+    lowest cent_id, as in the DuckDB twin _duck_asgn_cte."""
     import numpy as np
 
     rows = sorted(centroid_rows)
@@ -392,7 +395,7 @@ def train_centroid_rows(
     needs (the duck replay's train_filter branch matches). Returns
     ``(rows, history)``: rows is the LOCAL model ``[(cent_id, [D
     ints]), ...]`` (session-independent plain rows, so callers cache
-    them; train_centroids wraps them in a DataFrame) and history the
+    them; centroid_frame makes them a DataFrame) and history the
     inertia per iteration, which the tests pin as non-increasing.
 
     At 100 TB you'd train on a sample (`emb.sample(...)`) — assignment
@@ -423,39 +426,75 @@ def centroid_frame(spark, rows: list) -> DataFrame:
     }))
 
 
-def train_centroids(
-    emb: DataFrame, n_centroids: int = N_CENTROIDS, iters: int = 3,
-    compute_inertia: bool = True,
-):
-    """train_centroid_rows materialized as a (DataFrame, history) pair —
-    the drop-in shape ivf_topk(centroids=...) consumes."""
-    rows, history = train_centroid_rows(
-        emb, n_centroids, iters, compute_inertia
+def _query_matrix(df: DataFrame):
+    """(ids, (R, D) int64 matrix) of the driver-collected rows [id,
+    vector] of ``df``."""
+    import numpy as np
+
+    t = df.toArrow()
+    return t.column(0).to_numpy(), _bits.np_list_matrix(
+        t.column(1), DIMS
+    ).astype(np.int64)
+
+
+def _probe_scan(
+    postings: DataFrame, cents: DataFrame, qids, qm, cols: tuple,
+    score, score_col: str, k: int, n_probes: int,
+) -> DataFrame:
+    """The one IVF serve: top-k of the query rows ``qids`` over
+    ``postings`` [vec_id, cent_id, *cols] → [query_id, vec_id,
+    score_col, rank]. The driver picks each query's n_probes centroids
+    by exact dot of its probe vector (row of ``qm``, (R, D) int64) with
+    each centroid, ties to the lowest cent_id, in one probe window per
+    query_id (duplicate query rows share it, as in the DuckDB twins), so
+    only the probed lists are scanned — directory pruning on a
+    cent_id-partitioned index. One mapInArrow scores each batch with
+    ``score(batch, ldot)``, an (N, R) int64 matrix (``ldot`` is each
+    row's list dot with each query row, from the probe pick), drops each
+    query's own row and keeps a k-row partial top-k by (score desc,
+    vec_id); one window merges the partials."""
+    import numpy as np
+    from pyspark.sql import Window
+
+    cent_ids, cm = _centroid_arrays(cents.select("cent_id", "cv").collect())
+    pdot = _i64_matmul(qm, cm.T)  # (R, C)
+    # probe pair i = (query row, centroid) = divmod(i, C)
+    row, c = np.divmod(np.arange(pdot.size), len(cent_ids))
+    pick = _head_per_group(
+        np.lexsort((cent_ids[c], -pdot.ravel(), qids[row])), qids[row],
+        n_probes,
     )
-    return centroid_frame(emb.sparkSession, rows), history
+    probe_row, probe_cent = row[pick], cent_ids[c[pick]]
+    probe_qid = qids[probe_row]
 
+    def scan(batches):
+        for b in batches:
+            if not b.num_rows:
+                continue
+            vid = b.column("vec_id").to_numpy()
+            cid = b.column("cent_id").to_numpy()
+            s_all = score(b, pdot[:, np.searchsorted(cent_ids, cid)].T)
+            n, i = np.nonzero(
+                (cid[:, None] == probe_cent) & (vid[:, None] != probe_qid)
+            )
+            q, v, s = probe_qid[i], vid[n], s_all[n, probe_row[i]]
+            top = _head_per_group(np.lexsort((v, -s, q)), q, k)
+            yield pa.RecordBatch.from_pydict(
+                {"query_id": q[top], "vec_id": v[top], score_col: s[top]}
+            )
 
-def assign_to_centroids(qz: DataFrame, cents: DataFrame) -> DataFrame:
-    """IVF list assignment: each quantized vector to its max-dot centroid
-    (ties to the lowest cent_id). [vec_id, qv, cent_id] — the POSTINGS
-    table of an IVF index; persist it cent_id-partitioned and probes
-    prune whole lists at the file level (emb_ivf_index_roundtrip).
-    Broadcast NLJ over the C-row centroid side + grouped argmax — one
-    shuffle, keyed on vec_id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(score_col), F.asc("vec_id")
+    )
+    probed = sorted(set(probe_cent.tolist()))
     return (
-        qz.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id", "qv", "cent_id",
-            F.expr(qdot_sql("qv", "cv")).alias("cdot"),
+        postings.filter(F.col("cent_id").isin(probed))
+        .select("vec_id", "cent_id", *cols)
+        .mapInArrow(
+            scan, schema=f"query_id long, vec_id long, {score_col} long"
         )
-        .groupBy("vec_id")
-        .agg(
-            # struct ordering, not cdot*8192 - cent_id: the scalar key
-            # multiplies an int64 dot by 8192, which throws on overflow
-            # under ANSI once embedding magnitudes grow
-            F.expr("max_by(cent_id, struct(cdot, -cent_id))").alias("cent_id"),
-            F.first("qv").alias("qv"),
-        )
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
     )
 
 
@@ -463,68 +502,45 @@ def ivf_serve_topk(
     assigned: DataFrame, cents: DataFrame,
     n_queries: int = 5, k: int = 10, n_probes: int = N_PROBES,
 ) -> DataFrame:
-    """The SERVE stage of IVF top-k over a prebuilt postings table
-    ([vec_id, qv, cent_id] — from assign_to_centroids or a reloaded
-    index artifact): queries probe their n_probes nearest centroid
-    lists, search joins only those lists. Output: [query_id, vec_id,
-    dot, rank]."""
-    from pyspark.sql import Window
+    """The SERVE stage of IVF top-k over a postings table [vec_id, qv,
+    cent_id] (from kernel_assign or a reloaded index artifact) for the
+    rows vec_id < n_queries: _probe_scan with probes picked by the
+    query's qv and each candidate scored by the exact dot qv·qe.
+    Output: [query_id, vec_id, dot, rank]."""
+    qids, qe = _query_matrix(
+        assigned.filter(F.col("vec_id") < n_queries).select("vec_id", "qv")
+    )
 
-    queries = assigned.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("qv").alias("qe")
-    )
-    # probe lists: top n_probes centroids per query
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("pdot"), F.asc("cent_id")
-    )
-    probes = (
-        queries.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id", "qe", "cent_id",
-            F.expr(qdot_sql("qe", "cv")).alias("pdot"),
-        )
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= n_probes)
-        .select("query_id", "qe", "cent_id")
-    )
-    # search only the probed lists
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("vec_id"))
-    return (
-        probes.join(assigned.select("vec_id", "qv", "cent_id"), "cent_id")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id", "vec_id", F.expr(qdot_sql("qe", "qv")).alias("dot")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    def dot(b, _):
+        return _i64_matmul(_bits.np_list_matrix(b.column("qv"), DIMS), qe.T)
+
+    return _probe_scan(
+        assigned, cents, qids, qe, ("qv",), dot, "dot", k, n_probes
     )
 
 
 def ivf_topk(
     emb: DataFrame, n_queries: int = 5, k: int = 10,
     n_centroids: int = N_CENTROIDS, n_probes: int = N_PROBES,
-    centroids: DataFrame | None = None,
+    centroid_rows: list | None = None,
 ) -> DataFrame:
-    """IVF-style ANN: vectors are assigned to their nearest of
-    ``n_centroids`` centroid vectors (deterministically the first C
-    vectors when ``centroids`` is None — the oracle-checkable baseline;
-    pass train_centroids(...)[0] for Lloyd's-trained lists); queries
-    probe only their ``n_probes`` nearest centroid lists. Fully
-    relational: assignment is a broadcast join + grouped argmax — the
-    shape that scales (the vector table shuffles once, on the centroid
-    id). Composition of assign_to_centroids + ivf_serve_topk.
+    """IVF-style ANN: vectors are assigned to their nearest of the
+    centroid rows ``[(cent_id, [D ints])]`` by kernel_assign, then
+    ivf_serve_topk probes each query's ``n_probes`` nearest lists and
+    scans only those. Without centroid rows the centroids are the
+    ``n_centroids`` seed vectors untrained (train_centroid_rows with
+    zero iterations) — the oracle-checkable baseline; pass
+    train_centroid_rows(...)[0] for Lloyd's-trained lists.
 
     Output: [query_id, vec_id, dot, rank] — approximate (recall < 1 vs
     emb_topk_dot when the true neighbor lives in an unprobed list)."""
-    qz = emb.select("vec_id", F.expr(quantize_expr()).alias("qv"))
-    if centroids is not None:
-        cents = centroids.select("cent_id", "cv")
-    else:
-        cents = qz.filter(F.col("vec_id") < n_centroids).select(
-            F.col("vec_id").alias("cent_id"), F.col("qv").alias("cv")
-        )
-    assigned = assign_to_centroids(qz, cents)
-    return ivf_serve_topk(assigned, cents, n_queries, k, n_probes)
+    if centroid_rows is None:
+        centroid_rows, _ = train_centroid_rows(emb, n_centroids, 0)
+    return ivf_serve_topk(
+        kernel_assign(emb, centroid_rows),
+        centroid_frame(emb.sparkSession, centroid_rows),
+        n_queries, k, n_probes,
+    )
 
 
 def duck_ivf_topk_sql(
@@ -532,38 +548,42 @@ def duck_ivf_topk_sql(
     n_centroids: int = N_CENTROIDS, n_probes: int = N_PROBES,
     table: str = "embeddings",
 ) -> str:
-    dot_vc = dot_sql("v.embedding", "c.embedding", "duckdb")
-    dot_qc = dot_sql("q.embedding", "c.embedding", "duckdb")
-    dot_qv = dot_sql("q.embedding", "v.embedding", "duckdb")
+    """Oracle twin of ivf_topk with the seed centroids: the trained
+    replay with zero Lloyd's iterations."""
+    return duck_trained_ivf_sql(
+        n_queries, k, n_centroids, n_probes, 0, table
+    )
+
+
+def duck_serve_sql(
+    postings: str, cents: str,
+    n_queries: int = 5, k: int = 10, n_probes: int = N_PROBES,
+) -> str:
+    """Oracle twin of ivf_serve_topk, as one subquery over the DuckDB
+    tables or CTEs ``postings`` [vec_id, qv, cent_id] and ``cents``
+    [cent_id, cv]."""
     return f"""(
-      WITH cents AS (
-        SELECT vec_id AS cent_id, embedding FROM {table}
-        WHERE vec_id < {n_centroids}
-      ), assigned AS (
-        -- two-key row_number ordering (DuckDB arg_max takes only scalar
-        -- keys; a composed cdot*8192 key can overflow int64)
-        SELECT vec_id, cent_id FROM (
-          SELECT v.vec_id, c.cent_id,
-                 row_number() OVER (PARTITION BY v.vec_id
-                   ORDER BY {dot_vc} DESC, c.cent_id ASC) AS arn
-          FROM {table} v CROSS JOIN cents c
-        ) _a WHERE arn = 1
-      ), probes AS (
-        SELECT * FROM (
-          SELECT q.vec_id AS query_id, c.cent_id,
-                 row_number() OVER (PARTITION BY q.vec_id
-                   ORDER BY {dot_qc} DESC, c.cent_id ASC) AS pr
-          FROM {table} q CROSS JOIN cents c WHERE q.vec_id < {n_queries}
-        ) _p WHERE pr <= {n_probes}
-      ), hits AS (
-        SELECT p.query_id, a.vec_id, {dot_qv} AS dot
-        FROM probes p
-        JOIN assigned a ON a.cent_id = p.cent_id
-        JOIN {table} v ON v.vec_id = a.vec_id
-        JOIN {table} q ON q.vec_id = p.query_id
-        WHERE p.query_id != a.vec_id
-      )
+      WITH probes AS (SELECT query_id, qe, cent_id FROM (
+        SELECT q.vec_id AS query_id, q.qv AS qe, c.cent_id,
+               row_number() OVER (PARTITION BY q.vec_id
+                 ORDER BY {_duck_ldot('q.qv', 'c.cv')} DESC,
+                          c.cent_id ASC) AS pr
+        FROM {postings} q CROSS JOIN {cents} c
+        WHERE q.vec_id < {n_queries}) _p WHERE pr <= {n_probes}),
+      hits AS (SELECT p.query_id, a.vec_id,
+               {_duck_ldot('p.qe', 'a.qv')} AS dot
+        FROM probes p JOIN {postings} a ON a.cent_id = p.cent_id
+        WHERE p.query_id != a.vec_id)
       {_duck_rank_sql("hits", "dot", k)}
+    )"""
+
+
+def _duck_with(ctes: list, serve: str) -> str:
+    """``serve``, a subquery over the CTEs ``ctes``, as one query."""
+    body = ",\n      ".join(ctes)
+    return f"""(
+      WITH {body}
+      SELECT * FROM {serve} _s
     )"""
 
 
@@ -593,7 +613,7 @@ def _duck_ldot(a: str, b: str) -> str:
 def _duck_asgn_cte(cents: str) -> str:
     """``asgn`` [vec_id, qv, cent_id]: each ``qz`` vector's max-dot
     centroid in ``cents``, ties to the lowest cent_id (the DuckDB twin
-    of assign_to_centroids)."""
+    of kernel_assign)."""
     return (
         f"asgn AS (SELECT vec_id, qv, cent_id FROM ("
         f"SELECT v.vec_id, v.qv, c.cent_id, "
@@ -608,14 +628,13 @@ def _duck_kmeans_ctes(
     table: str = "embeddings",
     train_filter: str | None = None,
 ) -> tuple[list, str]:
-    """Unrolled Lloyd's-training CTEs replaying train_centroids exactly:
-    seed centroids = first C quantized vectors; per iteration a
-    min-distance assignment (argmax 2x·c − |c|², ties to the lowest
+    """Unrolled Lloyd's-training CTEs replaying train_centroid_rows
+    exactly: seed centroids = first C quantized vectors; per iteration
+    a min-distance assignment (argmax 2x·c − |c|², ties to the lowest
     cent_id) and a per-dimension mean rounded half-up via exact int64
-    sums + one IEEE double divide + floor (the same arithmetic
-    train_centroids performs); empty clusters keep their previous
-    centroid. Returns (ctes, name-of-final-centroid-CTE); qz holds the
-    quantized vectors.
+    sums + one IEEE double divide + floor (the same arithmetic _lloyd
+    performs); empty clusters keep their previous centroid. Returns
+    (ctes, name-of-final-centroid-CTE); qz holds the quantized vectors.
 
     ``train_filter``: optional predicate restricting TRAINING to a
     slice of the table (the incremental-append replay: centroids are
@@ -679,32 +698,14 @@ def duck_trained_ivf_sql(
     n_centroids: int = N_CENTROIDS, n_probes: int = N_PROBES,
     iters: int = 3, table: str = "embeddings",
 ) -> str:
-    """Oracle twin of ivf_topk(emb, centroids=train_centroids(emb)[0]):
-    replays the ENTIRE training via _duck_kmeans_ctes, then runs the same
-    probe/search query as duck_ivf_topk_sql against the trained
-    centroids."""
+    """Oracle twin of ivf_topk(emb, centroid_rows=train_centroid_rows(
+    emb)[0]): replays the ENTIRE training via _duck_kmeans_ctes, assigns
+    by max dot (_duck_asgn_cte) and serves with duck_serve_sql."""
     ctes, prev = _duck_kmeans_ctes(n_centroids, iters, table)
-    # the ivf_topk query itself (assignment by max DOT, as ivf_topk does)
     ctes.append(_duck_asgn_cte(prev))
-    ctes.append(
-        f"probes AS (SELECT query_id, qe, cent_id FROM ("
-        f"SELECT q.vec_id AS query_id, q.qv AS qe, c.cent_id, "
-        f"row_number() OVER (PARTITION BY q.vec_id "
-        f"ORDER BY {_duck_ldot('q.qv', 'c.cv')} DESC, c.cent_id ASC) AS pr "
-        f"FROM asgn q CROSS JOIN {prev} c WHERE q.vec_id < {n_queries}) _p "
-        f"WHERE pr <= {n_probes})"
+    return _duck_with(
+        ctes, duck_serve_sql("asgn", prev, n_queries, k, n_probes)
     )
-    ctes.append(
-        f"hits AS (SELECT p.query_id, a.vec_id, "
-        f"{_duck_ldot('p.qe', 'a.qv')} AS dot "
-        f"FROM probes p JOIN asgn a ON a.cent_id = p.cent_id "
-        f"WHERE p.query_id != a.vec_id)"
-    )
-    body = ",\n      ".join(ctes)
-    return f"""(
-      WITH {body}
-      {_duck_rank_sql("hits", "dot", k)}
-    )"""
 
 
 # --------------------------------------------------------------------------
@@ -764,8 +765,8 @@ def encode_postings_int8(emb: DataFrame, centroid_rows: list) -> DataFrame:
     (floor(x·10^6 + 0.5)), take the max-dot centroid (ties to the
     lowest cent_id), then scale = max(max|q|, 1) and v8 = sign(q) ·
     ((|q|·254 + scale) // (2·scale)) in int64 arithmetic. The rows are
-    bit-identical to _scale_sql/_v8_sql over assign_to_centroids, from
-    a constant-size plan. The coarse quantizer (the centroid rows)
+    bit-identical to _scale_sql/_v8_sql over _duck_asgn_cte, from a
+    constant-size plan. The coarse quantizer (the centroid rows)
     stays full precision, standard IVF-SQ practice."""
     import numpy as np
 
@@ -799,61 +800,21 @@ def ivf_serve_topk_int8(
     n_queries: int = 5, k: int = 10, n_probes: int = N_PROBES,
 ) -> DataFrame:
     """Top-k over int8 postings [vec_id, cent_id, v8, scale] for the rows
-    vec_id < n_queries: [query_id, vec_id, sdot, rank]. The driver picks
-    each query's n_probes centroids by int8-query × centroid dot, ties
-    to the lowest cent_id, so only the probed lists are scanned —
-    directory pruning on a cent_id-partitioned index. Per Arrow batch,
-    one BLAS matmul scores sdot = dot8(qe8, v8)·scale_v for all queries
-    (exact: |sdot| ≤ 64·127²·577,001 < 2^53; it ranks like the symmetric
-    reconstruction, scale_q/127² being constant per query), and each
-    query keeps a k-row partial top-k of its probed lists minus its own
-    row; one window merges them. Duplicate query rows share one probe
-    and one rank window, as in duck_serve_int8_sql."""
-    import numpy as np
-    from pyspark.sql import Window
-
-    qt = p8.filter(F.col("vec_id") < n_queries).select(
-        "vec_id", "v8"
-    ).toArrow()
-    qids = qt.column("vec_id").to_numpy()
-    qe8 = _bits.np_list_matrix(qt.column("v8"), DIMS).astype(np.int64)
-    cent_ids, cm = _centroid_arrays(cents.select("cent_id", "cv").collect())
-    # probe pair i = (query row, centroid) = divmod(i, C)
-    row, c = np.divmod(np.arange(len(qids) * len(cent_ids)), len(cent_ids))
-    pdot = _i64_matmul(qe8, cm.T).ravel()
-    pick = _head_per_group(
-        np.lexsort((cent_ids[c], -pdot, qids[row])), qids[row], n_probes
+    vec_id < n_queries: [query_id, vec_id, sdot, rank]. _probe_scan with
+    probes picked by the int8 query qe8, and one BLAS matmul per batch
+    scoring sdot = dot8(qe8, v8)·scale_v for all queries (exact: |sdot|
+    ≤ 64·127²·577,001 < 2^53; it ranks like the symmetric
+    reconstruction, scale_q/127² being constant per query)."""
+    qids, qe8 = _query_matrix(
+        p8.filter(F.col("vec_id") < n_queries).select("vec_id", "v8")
     )
-    probe_row, probe_cent = row[pick], cent_ids[c[pick]]
-    probe_qid = qids[probe_row]
 
-    def scan(batches):
-        for b in batches:
-            if not b.num_rows:
-                continue
-            vid = b.column("vec_id").to_numpy()
-            v8 = _bits.np_list_matrix(b.column("v8"), DIMS)
-            sdot = _i64_matmul(v8, qe8.T)
-            sdot *= b.column("scale").to_numpy()[:, None]  # (N, R)
-            n, i = np.nonzero(
-                (b.column("cent_id").to_numpy()[:, None] == probe_cent)
-                & (vid[:, None] != probe_qid)
-            )
-            q, v, s = probe_qid[i], vid[n], sdot[n, probe_row[i]]
-            top = _head_per_group(np.lexsort((v, -s, q)), q, k)
-            yield pa.RecordBatch.from_pydict(
-                {"query_id": q[top], "vec_id": v[top], "sdot": s[top]}
-            )
+    def sdot(b, _):
+        v8 = _bits.np_list_matrix(b.column("v8"), DIMS)
+        return _i64_matmul(v8, qe8.T) * b.column("scale").to_numpy()[:, None]
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sdot"), F.asc("vec_id")
-    )
-    return (
-        p8.filter(F.col("cent_id").isin(sorted(set(probe_cent.tolist()))))
-        .select("vec_id", "cent_id", "v8", "scale")
-        .mapInArrow(scan, schema="query_id long, vec_id long, sdot long")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _probe_scan(
+        p8, cents, qids, qe8, ("v8", "scale"), sdot, "sdot", k, n_probes
     )
 
 
@@ -913,12 +874,9 @@ def duck_trained_ivf_int8_sql(
         f"p8 AS MATERIALIZED (SELECT vec_id, cent_id, scale, "
         f"{_v8_sql('qv', 'scale')} AS v8 FROM p8a)"
     )
-    body = ",\n      ".join(ctes)
-    serve = duck_serve_int8_sql("p8", prev, n_queries, k, n_probes)
-    return f"""(
-      WITH {body}
-      SELECT * FROM {serve} _s
-    )"""
+    return _duck_with(
+        ctes, duck_serve_int8_sql("p8", prev, n_queries, k, n_probes)
+    )
 
 
 # --------------------------------------------------------------------------
@@ -929,15 +887,13 @@ def duck_trained_ivf_int8_sql(
 # subspace (Lloyd's, the same exact-integer arithmetic as the IVF
 # training); a vector is then M_SUB code bytes — 8 bytes/vector vs the
 # int8 artifact's 64+8, the storage step that makes a 100 TB embedding
-# index RAM-resident. Serving is the standard ADC shape: per query,
-# a LUT of (sub, code) → partial dot (M_SUB·K_CODES ints, broadcast),
-# and each candidate scores as the sum of M_SUB LUT lookups — fully
-# relational (posexplode + equi-join + grouped sum), so the DuckDB
-# oracle replays training, encoding, and serving symbolically and the
-# final ranking hash-matches. Codebooks are trained on the vectors
-# themselves (not IVF residuals) — a documented simplification: the
-# exact-integer replay stays one joint CTE chain, and recall at the
-# gate setting is measured by emb_ivf_recall_pq either way.
+# index RAM-resident. Serving is the standard ADC shape on the one IVF
+# probe-and-scan kernel (_probe_scan): per query, a driver-built LUT of
+# (sub, code) → partial dot (M_SUB·K_CODES ints in the kernel's
+# closure), and each candidate scores as the sum of its M_SUB LUT
+# entries. The DuckDB oracle replays training, encoding and serving
+# symbolically and the final ranking hash-matches. Plain PQ trains its
+# codebooks on the vectors, residual PQ on qv − assigned centroid.
 
 M_SUB = 8
 SUB_DIMS = DIMS // M_SUB
@@ -953,6 +909,19 @@ def _codebook_rows(cb) -> list:
         (m, kk, cw.tolist()) for m in range(len(cb))
         for kk, cw in enumerate(cb[m])
     ]
+
+
+def _codebook_array(rows: list):
+    """[(sub, code, [S ints]), ...] → (M, K, S) int64 codebook."""
+    import numpy as np
+
+    cb = np.zeros((
+        max(r[0] for r in rows) + 1, max(r[1] for r in rows) + 1,
+        len(rows[0][2]),
+    ), dtype=np.int64)
+    for m, kk, cw in rows:
+        cb[m, kk] = cw
+    return cb
 
 
 def pq_train_codebook_rows(
@@ -1021,11 +990,7 @@ def pq_encode(
     pq_train_codebook_rows_residual."""
     import numpy as np
 
-    m_sub = max(r[0] for r in codebook_rows) + 1
-    k_codes = max(r[1] for r in codebook_rows) + 1
-    cb = np.zeros((m_sub, k_codes, DIMS // m_sub), dtype=np.int64)
-    for m, kk, cw in codebook_rows:
-        cb[m, kk] = cw
+    cb = _codebook_array(codebook_rows)
     matrix = (
         _residuals(centroid_rows) if centroid_rows is not None
         else lambda b: _bits.np_list_matrix(b.column("qv"), DIMS)
@@ -1055,94 +1020,72 @@ def pq_serve_topk(
     queries_qz: DataFrame, k: int = 10, n_probes: int = N_PROBES,
     plus_centroid_dot: bool = False,
 ) -> DataFrame:
-    """ADC serve over PQ postings. ``queries_qz``: [query_id, qe] full-
-    precision quantized queries (asymmetric distance — standard PQ
-    practice: only the CANDIDATES are compressed). Probes rank IVF lists
-    by the exact query×centroid dot; each candidate's approximate dot is
-    the sum of M_SUB broadcast-LUT lookups: lut(query, sub, code) =
-    dot(query subvector, codeword). The exploded candidate rows carry
-    four small ints — the genome-skinny discipline applied to ANN.
-    ``plus_centroid_dot``: RESIDUAL codes — each candidate's score adds
-    its list's exact query×centroid dot (dot(q, v̂) = dot(q, c) +
-    dot(q, r̂)); the probe stage already computed that dot, so the
-    residual serve costs nothing extra. Output: [query_id, vec_id,
-    adot, rank]."""
-    from pyspark.sql import Window
+    """ADC serve over PQ postings [vec_id, cent_id, codes].
+    ``queries_qz``: [query_id, qe] full-precision quantized queries
+    (asymmetric distance — standard PQ practice: only the CANDIDATES
+    are compressed). _probe_scan with probes picked by the exact
+    query×centroid dot; the driver builds an (R, M, K) int64 LUT of
+    query-subvector × codeword dots (sub_dims from the codebook) and
+    each candidate's approximate dot is the sum over m of LUT[r, m,
+    codes[m]]. ``plus_centroid_dot``: RESIDUAL codes — each candidate's
+    score adds its list's exact query×centroid dot (dot(q, v̂) = dot(q,
+    c) + dot(q, r̂)), which the probe pick already computed. Output:
+    [query_id, vec_id, adot, rank]."""
+    import numpy as np
 
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("pdot"), F.asc("cent_id")
+    qids, qe = _query_matrix(queries_qz.select("query_id", "qe"))
+    cb = _codebook_array(codebook.select("sub", "code", "cw").collect())
+    m_sub, _, sub_dims = cb.shape
+    lut = np.einsum(
+        "rms,mks->rmk", qe.reshape(len(qe), m_sub, sub_dims), cb
+    )  # (R, M, K)
+
+    def adot(b, ldot):
+        codes = _bits.np_list_matrix(b.column("codes"), m_sub)
+        s = lut[:, np.arange(m_sub), codes.astype(np.intp)].sum(axis=2).T
+        return s + ldot if plus_centroid_dot else s
+
+    return _probe_scan(
+        codes_df, cents, qids, qe, ("codes",), adot, "adot", k, n_probes
     )
-    probe_cols = ["query_id", "cent_id"] + (
-        ["pdot"] if plus_centroid_dot else []
+
+
+def query_rows(emb: DataFrame, n_queries: int = 5) -> DataFrame:
+    """The quantized query rows [query_id, qe] of vec_id < n_queries."""
+    return emb.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.expr(quantize_expr()).alias("qe"),
     )
-    probes = (
-        queries_qz.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id", "cent_id",
-            F.expr(qdot_sql("qe", "cv")).alias("pdot"),
-        )
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= n_probes)
-        .select(*probe_cols)
+
+
+def _ivf_topk_pq(
+    emb: DataFrame, centroid_rows: list, codebook_rows: list,
+    n_queries: int, k: int, n_probes: int, residual: bool,
+) -> DataFrame:
+    """kernel_assign → pq_encode (of the residual when ``residual``) →
+    pq_serve_topk (adding the centroid dot back when ``residual``)."""
+    spark = emb.sparkSession
+    codes = pq_encode(
+        kernel_assign(emb, centroid_rows), codebook_rows,
+        centroid_rows if residual else None,
     )
-    # derive sub_dims from the codebook itself: pq_encode
-    # and the duck twin both parameterize on m_sub; hardcoding the
-    # module-level SUB_DIMS here would silently mis-slice query
-    # subvectors for a codebook trained with non-default m_sub
-    sub_dims = len(codebook.select("cw").head()["cw"])
-    part = "(" + " + ".join(
-        f"element_at(qe, sub * {sub_dims} + {j + 1}) * "
-        f"element_at(cw, {j + 1})"
-        for j in range(sub_dims)
-    ) + ")"
-    lut = (
-        queries_qz.crossJoin(F.broadcast(codebook))
-        .select(
-            "query_id", "sub", "code", F.expr(part).alias("pdot_part")
-        )
-    )
-    cand = (
-        probes.join(codes_df, "cent_id")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id", "vec_id",
-            *(["pdot"] if plus_centroid_dot else []),
-            F.posexplode("codes").alias("sub", "code"),
-        )
-    )
-    adot = (
-        (F.max("pdot") + F.sum("pdot_part")).alias("adot")
-        if plus_centroid_dot
-        else F.sum("pdot_part").alias("adot")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adot"), F.asc("vec_id")
-    )
-    return (
-        cand.join(F.broadcast(lut), ["query_id", "sub", "code"])
-        .groupBy("query_id", "vec_id")
-        .agg(adot)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return pq_serve_topk(
+        codes, centroid_frame(spark, centroid_rows),
+        spark.createDataFrame(codebook_rows, CODEBOOK_SCHEMA),
+        query_rows(emb, n_queries), k, n_probes,
+        plus_centroid_dot=residual,
     )
 
 
 def ivf_topk_pq(
-    emb: DataFrame, centroids: DataFrame, codebook_rows: list,
+    emb: DataFrame, centroid_rows: list, codebook_rows: list,
     n_queries: int = 5, k: int = 10, n_probes: int = N_PROBES,
 ) -> DataFrame:
     """assign → PQ-encode → ADC serve (no durable artifact — the
     postings entry adds the parquet write/read split)."""
-    qz = emb.select("vec_id", F.expr(quantize_expr()).alias("qv"))
-    cents = centroids.select("cent_id", "cv")
-    codes = pq_encode(assign_to_centroids(qz, cents), codebook_rows)
-    codebook = emb.sparkSession.createDataFrame(
-        codebook_rows, CODEBOOK_SCHEMA
+    return _ivf_topk_pq(
+        emb, centroid_rows, codebook_rows, n_queries, k, n_probes, False
     )
-    queries = qz.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("qv").alias("qe")
-    )
-    return pq_serve_topk(codes, cents, codebook, queries, k, n_probes)
 
 
 def ivf_topk_pq_residual(
@@ -1153,23 +1096,13 @@ def ivf_topk_pq_residual(
     added back (the standard IVF-PQ serve identity dot(q, v̂) =
     dot(q, c) + dot(q, r̂)). ``codebook_rows`` must come from
     pq_train_codebook_rows_residual over the same centroids."""
-    spark = emb.sparkSession
-    cents = centroid_frame(spark, centroid_rows)
-    qz = emb.select("vec_id", F.expr(quantize_expr()).alias("qv"))
-    assigned = assign_to_centroids(qz, cents)
-    codes = pq_encode(assigned, codebook_rows, centroid_rows=centroid_rows)
-    codebook = spark.createDataFrame(codebook_rows, CODEBOOK_SCHEMA)
-    queries = qz.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("qv").alias("qe")
-    )
-    return pq_serve_topk(
-        codes, cents, codebook, queries, k, n_probes,
-        plus_centroid_dot=True,
+    return _ivf_topk_pq(
+        emb, centroid_rows, codebook_rows, n_queries, k, n_probes, True
     )
 
 
 def pq_topk_rerank(
-    emb: DataFrame, centroids: DataFrame, codebook_rows: list,
+    emb: DataFrame, centroid_rows: list, codebook_rows: list,
     n_queries: int = 5, k: int = 10, n_probes: int = N_PROBES,
     shortlist: int = 100,
 ) -> DataFrame:
@@ -1185,16 +1118,8 @@ def pq_topk_rerank(
     from pyspark.sql import Window
 
     qz = emb.select("vec_id", F.expr(quantize_expr()).alias("qv"))
-    cents = centroids.select("cent_id", "cv")
-    codes = pq_encode(assign_to_centroids(qz, cents), codebook_rows)
-    codebook = emb.sparkSession.createDataFrame(
-        codebook_rows, CODEBOOK_SCHEMA
-    )
-    queries = qz.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("qv").alias("qe")
-    )
-    sl = pq_serve_topk(
-        codes, cents, codebook, queries, k=shortlist, n_probes=n_probes
+    sl = ivf_topk_pq(
+        emb, centroid_rows, codebook_rows, n_queries, shortlist, n_probes
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("dot"), F.asc("vec_id")
@@ -1202,7 +1127,7 @@ def pq_topk_rerank(
     return (
         sl.select("query_id", "vec_id")
         .join(qz, "vec_id")
-        .join(F.broadcast(queries), "query_id")
+        .join(F.broadcast(query_rows(emb, n_queries)), "query_id")
         .select(
             "query_id", "vec_id",
             F.expr(qdot_sql("qe", "qv")).alias("dot"),
@@ -1305,56 +1230,92 @@ def _duck_pq_ctes(
     return ctes, prev
 
 
+def duck_serve_pq_sql(
+    codes: str, cents: str, codebook: str, queries: str,
+    k: int = 10, n_probes: int = N_PROBES,
+    plus_centroid_dot: bool = False, sub_dims: int = SUB_DIMS,
+) -> str:
+    """Oracle twin of pq_serve_topk, as one subquery over the DuckDB
+    tables or CTEs ``codes`` [vec_id, cent_id, codes], ``cents``
+    [cent_id, cv], ``codebook`` [sub, code, cw] and ``queries``
+    [query_id, qe]. Each hit sums its codes' LUT entries in a correlated
+    subquery, so duplicate query or posting rows stay separate hits, as
+    in the kernel."""
+    adot = (
+        "(SELECT sum(l.part) FROM lut l WHERE l.query_id = p.query_id "
+        "AND l.code = a.codes[l.sub + 1])"
+    )
+    if plus_centroid_dot:
+        adot = f"p.pdot + {adot}"
+    return f"""(
+      WITH probes AS (SELECT query_id, cent_id, pdot FROM (
+        SELECT q.query_id, c.cent_id, {_duck_ldot('q.qe', 'c.cv')} AS pdot,
+               row_number() OVER (PARTITION BY q.query_id
+                 ORDER BY {_duck_ldot('q.qe', 'c.cv')} DESC,
+                          c.cent_id ASC) AS pr
+        FROM {queries} q CROSS JOIN {cents} c) _p WHERE pr <= {n_probes}),
+      lut AS MATERIALIZED (SELECT DISTINCT q.query_id, c.sub, c.code,
+               {_duck_subdot('q.qe', 'c.sub', 'c.cw', sub_dims)} AS part
+        FROM {queries} q CROSS JOIN {codebook} c),
+      hits AS (SELECT p.query_id, a.vec_id, cast({adot} as bigint) AS adot
+        FROM probes p JOIN {codes} a ON a.cent_id = p.cent_id
+        WHERE p.query_id != a.vec_id)
+      {_duck_rank_sql("hits", "adot", k)}
+    )"""
+
+
+def _duck_trained_pq_sql(
+    n_queries: int, k: int, n_centroids: int, n_probes: int, iters: int,
+    table: str, m_sub: int, k_codes: int, pq_iters: int, residual: bool,
+) -> str:
+    """Full IVF k-means replay + assignment + per-subspace codebook
+    training (over the residual CTE rz = qv − assigned centroid, pure
+    int64, when ``residual``) + encode + duck_serve_pq_sql."""
+    ctes, prev = _duck_kmeans_ctes(n_centroids, iters, table)
+    ctes.append(_duck_asgn_cte(prev))
+    train, enc, vcol = "qz", "asgn", "qv"
+    if residual:
+        rv = "[" + ", ".join(
+            f"v.qv[{j + 1}] - c.cv[{j + 1}]" for j in range(DIMS)
+        ) + "]"
+        ctes.append(
+            f"rz AS MATERIALIZED (SELECT v.vec_id, a.cent_id, {rv} AS rv "
+            f"FROM qz v JOIN asgn a USING (vec_id) "
+            f"JOIN {prev} c ON c.cent_id = a.cent_id)"
+        )
+        train, enc, vcol = "rz", "rz", "rv"
+    pq_ctes, cb = _duck_pq_ctes(m_sub, k_codes, pq_iters, train, vcol)
+    ctes.extend(pq_ctes)
+    sub_dims = DIMS // m_sub
+    sd = _duck_subdot(f"v.{vcol}", "c.sub", "c.cw", sub_dims)
+    ctes.append(
+        f"enc AS (SELECT vec_id, cent_id, list(code ORDER BY sub) AS codes "
+        f"FROM (SELECT v.vec_id, v.cent_id, c.sub, c.code, "
+        f"row_number() OVER (PARTITION BY v.vec_id, c.sub "
+        f"ORDER BY 2 * {sd} - {_duck_cwdot('c.cw', sub_dims)} DESC, "
+        f"c.code ASC) AS rn FROM {enc} v CROSS JOIN {cb} c) _e "
+        f"WHERE rn = 1 GROUP BY vec_id, cent_id)"
+    )
+    ctes.append(
+        f"pq_q AS (SELECT vec_id AS query_id, qv AS qe FROM qz "
+        f"WHERE vec_id < {n_queries})"
+    )
+    return _duck_with(ctes, duck_serve_pq_sql(
+        "enc", prev, cb, "pq_q", k, n_probes, residual, sub_dims
+    ))
+
+
 def duck_trained_ivf_pq_sql(
     n_queries: int = 5, k: int = 10,
     n_centroids: int = N_CENTROIDS, n_probes: int = N_PROBES,
     iters: int = 3, table: str = "embeddings",
     m_sub: int = M_SUB, k_codes: int = K_CODES, pq_iters: int = PQ_ITERS,
 ) -> str:
-    """Oracle twin of the PQ postings entry: full IVF k-means replay +
-    IVF assignment + per-subspace codebook training + encode + ADC
-    serve, one chained query."""
-    ctes, prev = _duck_kmeans_ctes(n_centroids, iters, table)
-    ctes.append(_duck_asgn_cte(prev))
-    pq_ctes, cb = _duck_pq_ctes(m_sub, k_codes, pq_iters)
-    ctes.extend(pq_ctes)
-    sub_dims = DIMS // m_sub
-    sd = _duck_subdot("v.qv", "c.sub", "c.cw", sub_dims)
-    ctes.append(
-        f"enc AS (SELECT vec_id, sub, code FROM ("
-        f"SELECT v.vec_id, c.sub, c.code, "
-        f"row_number() OVER (PARTITION BY v.vec_id, c.sub "
-        f"ORDER BY 2 * {sd} - {_duck_cwdot('c.cw', sub_dims)} DESC, c.code ASC) "
-        f"AS rn FROM qz v CROSS JOIN {cb} c) _e WHERE rn = 1)"
+    """Oracle twin of the PQ postings entry and ivf_topk_pq."""
+    return _duck_trained_pq_sql(
+        n_queries, k, n_centroids, n_probes, iters, table,
+        m_sub, k_codes, pq_iters, False,
     )
-    ctes.append(
-        f"probes AS (SELECT query_id, cent_id FROM ("
-        f"SELECT q.vec_id AS query_id, c.cent_id, "
-        f"row_number() OVER (PARTITION BY q.vec_id "
-        f"ORDER BY {_duck_ldot('q.qv', 'c.cv')} DESC, c.cent_id ASC) AS pr "
-        f"FROM qz q CROSS JOIN {prev} c WHERE q.vec_id < {n_queries}) _p "
-        f"WHERE pr <= {n_probes})"
-    )
-    ctes.append(
-        f"lut AS MATERIALIZED (SELECT q.vec_id AS query_id, c.sub, c.code, "
-        f"{_duck_subdot('q.qv', 'c.sub', 'c.cw', sub_dims)} AS pdot_part "
-        f"FROM qz q CROSS JOIN {cb} c WHERE q.vec_id < {n_queries})"
-    )
-    ctes.append(
-        f"hits AS (SELECT p.query_id, a.vec_id, "
-        f"cast(sum(l.pdot_part) as bigint) AS adot "
-        f"FROM probes p JOIN asgn a ON a.cent_id = p.cent_id "
-        f"JOIN enc e ON e.vec_id = a.vec_id "
-        f"JOIN lut l ON l.query_id = p.query_id "
-        f"AND l.sub = e.sub AND l.code = e.code "
-        f"WHERE p.query_id != a.vec_id "
-        f"GROUP BY p.query_id, a.vec_id)"
-    )
-    body = ",\n      ".join(ctes)
-    return f"""(
-      WITH {body}
-      {_duck_rank_sql("hits", "adot", k)}
-    )"""
 
 
 def duck_trained_ivf_pq_residual_sql(
@@ -1363,99 +1324,50 @@ def duck_trained_ivf_pq_residual_sql(
     iters: int = 3, table: str = "embeddings",
     m_sub: int = M_SUB, k_codes: int = K_CODES, pq_iters: int = PQ_ITERS,
 ) -> str:
-    """Oracle twin of ivf_topk_pq_residual: IVF k-means replay +
-    assignment + a residual CTE (qv − assigned centroid, pure int64) +
-    codebook training OVER THE RESIDUALS + encode + ADC serve with the
-    candidate list's query×centroid dot added back."""
-    ctes, prev = _duck_kmeans_ctes(n_centroids, iters, table)
-    ctes.append(_duck_asgn_cte(prev))
-    rv = "[" + ", ".join(
-        f"v.qv[{j + 1}] - c.cv[{j + 1}]" for j in range(DIMS)
-    ) + "]"
-    ctes.append(
-        f"rz AS MATERIALIZED (SELECT v.vec_id, a.cent_id, {rv} AS rv "
-        f"FROM qz v JOIN asgn a USING (vec_id) "
-        f"JOIN {prev} c ON c.cent_id = a.cent_id)"
+    """Oracle twin of ivf_topk_pq_residual: the candidate list's
+    query×centroid dot is added back to each ADC score."""
+    return _duck_trained_pq_sql(
+        n_queries, k, n_centroids, n_probes, iters, table,
+        m_sub, k_codes, pq_iters, True,
     )
-    pq_ctes, cb = _duck_pq_ctes(m_sub, k_codes, pq_iters, src="rz", vcol="rv")
-    ctes.extend(pq_ctes)
-    sub_dims = DIMS // m_sub
-    sd = _duck_subdot("v.rv", "c.sub", "c.cw", sub_dims)
-    ctes.append(
-        f"enc AS (SELECT vec_id, cent_id, sub, code FROM ("
-        f"SELECT v.vec_id, v.cent_id, c.sub, c.code, "
-        f"row_number() OVER (PARTITION BY v.vec_id, c.sub "
-        f"ORDER BY 2 * {sd} - {_duck_cwdot('c.cw', sub_dims)} DESC, c.code ASC) "
-        f"AS rn FROM rz v CROSS JOIN {cb} c) _e WHERE rn = 1)"
-    )
-    ctes.append(
-        f"probes AS (SELECT query_id, cent_id, pdot FROM ("
-        f"SELECT q.vec_id AS query_id, c.cent_id, "
-        f"{_duck_ldot('q.qv', 'c.cv')} AS pdot, "
-        f"row_number() OVER (PARTITION BY q.vec_id "
-        f"ORDER BY {_duck_ldot('q.qv', 'c.cv')} DESC, c.cent_id ASC) AS pr "
-        f"FROM qz q CROSS JOIN {prev} c WHERE q.vec_id < {n_queries}) _p "
-        f"WHERE pr <= {n_probes})"
-    )
-    ctes.append(
-        f"lut AS MATERIALIZED (SELECT q.vec_id AS query_id, c.sub, c.code, "
-        f"{_duck_subdot('q.qv', 'c.sub', 'c.cw', sub_dims)} AS pdot_part "
-        f"FROM qz q CROSS JOIN {cb} c WHERE q.vec_id < {n_queries})"
-    )
-    ctes.append(
-        f"hits AS (SELECT p.query_id, e.vec_id, "
-        f"cast(max(p.pdot) + sum(l.pdot_part) as bigint) AS adot "
-        f"FROM probes p JOIN enc e ON e.cent_id = p.cent_id "
-        f"JOIN lut l ON l.query_id = p.query_id "
-        f"AND l.sub = e.sub AND l.code = e.code "
-        f"WHERE p.query_id != e.vec_id "
-        f"GROUP BY p.query_id, e.vec_id)"
-    )
-    body = ",\n      ".join(ctes)
-    return f"""(
-      WITH {body}
-      {_duck_rank_sql("hits", "adot", k)}
-    )"""
 
 
 def kmeans_cluster_stats(
     emb: DataFrame, n_centroids: int = N_CENTROIDS, iters: int = 3,
-    centroids: DataFrame | None = None,
+    centroid_rows: list | None = None,
 ) -> DataFrame:
-    """Training diagnostics as a relational query: train the IVF
-    centroids (or take a pre-trained model via ``centroids``), then one
-    assignment pass (broadcast join + grouped argmax, the same shape
-    assignment always takes) aggregated per cluster. Output: [cent_id,
-    n_members, d2_min, d2_max] — all exact int64 per-row stats (no
-    big-sum columns, which would need int128 at scale and hash
-    differently across engines).
+    """Training diagnostics: train the IVF centroids (or take the trained
+    rows ``centroid_rows``), then one Arrow assignment pass in the
+    Lloyd's min-distance form (argmax 2x·c − |c|², ties to the lowest
+    cent_id) emitting [cent_id, d2 = |x − c|²], aggregated per cluster.
+    Output: [cent_id, n_members, d2_min, d2_max] — all exact int64
+    per-row stats (no big-sum columns, which would need int128 at scale
+    and hash differently across engines).
 
     At 100 TB this is the monitoring query you run after each training
     round: one scan of the vector table, one tiny exchange keyed on
     cent_id."""
-    if centroids is not None:
-        cents = centroids.select("cent_id", "cv")
-    else:
-        cents, _ = train_centroids(
+    if centroid_rows is None:
+        centroid_rows, _ = train_centroid_rows(
             emb, n_centroids, iters, compute_inertia=False
         )
-    qz = emb.select("vec_id", F.expr(quantize_expr()).alias("qv"))
-    scored = qz.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "qv", "cent_id",
-        (
-            2 * F.expr(qdot_sql("qv", "cv")) - F.expr(qdot_sql("cv", "cv"))
-        ).alias("score"),
-    )
-    assigned = scored.groupBy("vec_id").agg(
-        F.expr("max_by(cent_id, struct(score, -cent_id))").alias("cent_id"),
-        F.first("qv").alias("qv"),
-        F.max("score").alias("score"),
-    )
+    cent_ids, cm = _centroid_arrays(centroid_rows)
+    cnorm = (cm * cm).sum(axis=1)
+
+    def d2(batches):
+        for b in batches:
+            if not b.num_rows:
+                continue
+            xm = _quantized(b)
+            best = _argmax_dot_chunked(xm, cm, cnorm)
+            r = xm - cm[best]
+            yield pa.RecordBatch.from_pydict(
+                {"cent_id": cent_ids[best], "d2": (r * r).sum(axis=1)}
+            )
+
     return (
-        assigned.select(
-            "cent_id",
-            (F.expr(qdot_sql("qv", "qv")) - F.col("score")).alias("d2"),
-        )
+        emb.select("embedding")
+        .mapInArrow(d2, schema="cent_id long, d2 long")
         .groupBy("cent_id")
         .agg(
             F.count(F.lit(1)).alias("n_members"),
@@ -2000,11 +1912,12 @@ def centroids_for_count(
 
 def kernel_assign(emb: DataFrame, centroid_rows: list) -> DataFrame:
     """One-pass Arrow assignment: quantize + blocked int64 matmul
-    argmax + self-norm per batch → [vec_id, cent_id, qv, n2]. Same
-    integers as assign_to_centroids (np.argmax first-max ≡
-    max_by(cent_id, struct(cdot, -cent_id)) tie-break) but emits n
-    rows instead of materializing the n·C crossJoin — the path that
-    stays linear when C is corpus-sized (√n at the third decade)."""
+    argmax + self-norm per batch → [vec_id, cent_id, qv, n2]: each
+    vector's max-dot centroid, ties to the lowest cent_id (np.argmax
+    keeps the first maximum; _duck_asgn_cte is the DuckDB twin). It
+    emits n rows and never pairs the vectors with the centroid table,
+    so it stays linear when C is corpus-sized (√n at the third
+    decade). Every Spark IVF list assignment goes through it."""
     cent_ids, cm = _centroid_arrays(centroid_rows)
 
     def assign_kernel(batches):

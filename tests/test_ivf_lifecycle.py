@@ -1,6 +1,7 @@
 """IVF generation lifecycle (streaming/ivf_rebuild.py): atomic
 marker-file commit, serve continuity through a rebuild, rebuild ≡
-from-scratch build. r9 VERDICT "Next round" #3."""
+from-scratch build; and the IVF encode and serve kernels against the
+DuckDB SQL the oracles replay."""
 
 from __future__ import annotations
 
@@ -202,23 +203,24 @@ def _p8_rows(df):
 
 def test_encode_postings_int8_matches_duckdb_twin(spark):
     # the Spark encode kernel and the DuckDB int8 SQL the oracles replay
-    # must agree bit for bit, over the Spark expression-form assignment
+    # must agree bit for bit, over the DuckDB assignment (_duck_asgn_cte)
     import duckdb
 
     emb, cents = _edge_table(spark)
     got = _p8_rows(ann.encode_postings_int8(emb, cents))
 
-    qz = emb.select("vec_id", F.expr(ann.quantize_expr()).alias("qv"))
-    asgn = ann.assign_to_centroids(
-        qz, ann.centroid_frame(spark, cents)
-    ).collect()
     con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE asgn (vec_id BIGINT, cent_id BIGINT, qv BIGINT[])"
-    )
+    con.execute("CREATE TABLE emb (vec_id BIGINT, embedding FLOAT[])")
     con.executemany(
-        "INSERT INTO asgn VALUES (?, ?, ?)",
-        [(r.vec_id, r.cent_id, list(r.qv)) for r in asgn],
+        "INSERT INTO emb VALUES (?, ?)",
+        [(r.vec_id, list(r.embedding)) for r in emb.collect()],
+    )
+    con.execute("CREATE TABLE cents (cent_id BIGINT, cv BIGINT[])")
+    con.executemany("INSERT INTO cents VALUES (?, ?)", cents)
+    con.execute(
+        f"CREATE TABLE asgn AS WITH qz AS (SELECT vec_id, "
+        f"{ann._duck_qlist('embedding')} AS qv FROM emb), "
+        f"{ann._duck_asgn_cte('cents')} SELECT * FROM asgn"
     )
     want = sorted(
         (v, c, tuple(v8), s) for v, c, v8, s in con.sql(
@@ -228,8 +230,8 @@ def test_encode_postings_int8_matches_duckdb_twin(spark):
     )
     assert got == want
 
+    qv = dict(con.sql("SELECT vec_id, qv FROM asgn").fetchall())
     by_id = {r[0]: r for r in got}
-    qv = {r.vec_id: list(r.qv) for r in asgn}
     assert by_id[0][1:] == (1, (0,) * ann.DIMS, 1)  # clamp; tie to 1
     assert by_id[1][1] == 3  # exact tie between 3 and 5
     # the boundaries really are hit: 127·15625/3968750 = 0.5 and
@@ -279,9 +281,43 @@ def _serve_edge_tables():
     return rows, cents
 
 
-def test_serve_int8_kernel_matches_duckdb(spark):
-    # the serve kernel and the DuckDB serve SQL the oracles replay must
-    # agree row for row, ties and edge lists included
+def _pq_codebook(post, cents, residual):
+    """Codebook rows under which every float posting [vec_id, qv,
+    cent_id] of ``post`` (its residual qv − centroid when ``residual``)
+    has an exact PQ code: subspace m's codewords are the distinct m-th
+    subvectors, sorted. Returns (codebook rows, encode(post) → codes
+    rows [vec_id, cent_id, codes])."""
+    import numpy as np
+
+    cv = dict(cents)
+
+    def subvectors(p):
+        x = np.array([
+            np.subtract(qv, cv[c]) if residual else qv for _, qv, c in p
+        ], dtype=np.int64)
+        return x.reshape(len(p), ann.M_SUB, ann.SUB_DIMS).tolist()
+
+    x = subvectors(post)
+    book = [sorted({tuple(r[m]) for r in x}) for m in range(ann.M_SUB)]
+
+    def encode(p):
+        return [
+            (v, c, [book[m].index(tuple(r[m])) for m in range(ann.M_SUB)])
+            for (v, _, c), r in zip(p, subvectors(p))
+        ]
+
+    rows = [(m, kk, list(w)) for m in range(ann.M_SUB)
+            for kk, w in enumerate(book[m])]
+    return rows, encode
+
+
+@pytest.mark.parametrize("serve", ["int8", "float", "pq", "pq_residual"])
+def test_serve_kernel_matches_duckdb(spark, serve):
+    # every IVF serve and the DuckDB serve SQL the oracles replay must
+    # agree row for row, ties and edge lists included. The float
+    # postings hold qv = v8·scale and the PQ codes reconstruct qv (or
+    # its residual) exactly, so each serve scores scale_q·sdot and the
+    # int8 expectations below hold for all four
     import duckdb
 
     rows, cents = _serve_edge_tables()
@@ -289,28 +325,71 @@ def test_serve_int8_kernel_matches_duckdb(spark):
     con.execute("CREATE TABLE cents (cent_id BIGINT, cv BIGINT[])")
     con.executemany("INSERT INTO cents VALUES (?, ?)", cents)
     cents_df = ann.centroid_frame(spark, cents)
+    scale_q = {v: 1 if serve == "int8" else s for v, _, _, s in rows}
+    residual = serve == "pq_residual"
+    codebook, encode = _pq_codebook(
+        [(v, [x * s for x in v8], c) for v, c, v8, s in rows], cents, residual
+    )
+
+    def table(name, ddl, data, schema):
+        con.execute(f"CREATE OR REPLACE TABLE {name} ({ddl})")
+        if data:
+            con.executemany(
+                f"INSERT INTO {name} VALUES ({', '.join('?' * len(data[0]))})",
+                data,
+            )
+        return spark.createDataFrame(data, schema)
 
     def check(p8_rows, n_queries, k, n_probes):
-        con.execute(
-            "CREATE OR REPLACE TABLE p8 (vec_id BIGINT, cent_id BIGINT, "
-            "v8 TINYINT[], scale BIGINT)"
-        )
-        if p8_rows:
-            con.executemany("INSERT INTO p8 VALUES (?, ?, ?, ?)", p8_rows)
-        want = sorted(con.sql(
-            "SELECT * FROM "
-            f"{ann.duck_serve_int8_sql('p8', 'cents', n_queries, k, n_probes)}"
-            " _q"
-        ).fetchall())
-        out = ann.ivf_serve_topk_int8(
-            spark.createDataFrame(p8_rows, ann.POSTINGS8_SCHEMA), cents_df,
-            n_queries, k, n_probes,
-        )
+        post = [(v, [x * s for x in v8], c) for v, c, v8, s in p8_rows]
+        if serve == "int8":
+            p8 = table(
+                "p8", "vec_id BIGINT, cent_id BIGINT, v8 TINYINT[], "
+                "scale BIGINT", p8_rows, ann.POSTINGS8_SCHEMA,
+            )
+            sql = ann.duck_serve_int8_sql(
+                "p8", "cents", n_queries, k, n_probes
+            )
+            out = ann.ivf_serve_topk_int8(
+                p8, cents_df, n_queries, k, n_probes
+            )
+        elif serve == "float":
+            df = table(
+                "post", "vec_id BIGINT, qv BIGINT[], cent_id BIGINT", post,
+                "vec_id long, qv array<long>, cent_id long",
+            )
+            sql = ann.duck_serve_sql("post", "cents", n_queries, k, n_probes)
+            out = ann.ivf_serve_topk(df, cents_df, n_queries, k, n_probes)
+        else:
+            codes = table(
+                "codes", "vec_id BIGINT, cent_id BIGINT, codes TINYINT[]",
+                encode(post),
+                "vec_id long, cent_id long, codes array<tinyint>",
+            )
+            cb = table(
+                "codebook", "sub INTEGER, code INTEGER, cw BIGINT[]",
+                codebook, ann.CODEBOOK_SCHEMA,
+            )
+            queries = table(
+                "queries", "query_id BIGINT, qe BIGINT[]",
+                [(v, qv) for v, qv, _ in post if v < n_queries],
+                "query_id long, qe array<long>",
+            )
+            sql = ann.duck_serve_pq_sql(
+                "codes", "cents", "codebook", "queries", k, n_probes,
+                residual,
+            )
+            out = ann.pq_serve_topk(
+                codes, cents_df, cb, queries, k, n_probes,
+                plus_centroid_dot=residual,
+            )
+        want = sorted(con.sql(f"SELECT * FROM {sql} _q").fetchall())
+        col = {"int8": "sdot", "float": "dot"}.get(serve, "adot")
         assert out.schema.simpleString() == (
-            "struct<query_id:bigint,vec_id:bigint,sdot:bigint,rank:int>"
+            f"struct<query_id:bigint,vec_id:bigint,{col}:bigint,rank:int>"
         )
         assert sorted(tuple(r) for r in out.collect()) == want
-        return want
+        return [(q, v, score // scale_q[q], r) for q, v, score, r in want]
 
     got = check(rows, 3, 3, 2)
     byq = {}

@@ -13,7 +13,7 @@ SF = "/root/testdata/sf0.001"
 
 def test_kmeans_inertia_monotone_and_ivf_pluggable(spark):
     emb = read_table(spark, SF, "embeddings")
-    cents, hist = ann.train_centroids(emb, n_centroids=8, iters=3)
+    rows, hist = ann.train_centroid_rows(emb, n_centroids=8, iters=3)
     assert len(hist) == 3
     # quantized Lloyd's (integer-rounded centroids) is not strictly
     # non-increasing step-to-step, and the driver regenerates the
@@ -22,16 +22,13 @@ def test_kmeans_inertia_monotone_and_ivf_pluggable(spark):
     assert hist[-1] <= hist[0]
     assert all(b <= a * 1.001 for a, b in zip(hist, hist[1:]))
 
-    rows = cents.collect()
-    assert len(rows) == 8 and all(len(r.cv) == ann.DIMS for r in rows)
+    assert len(rows) == 8 and all(len(cv) == ann.DIMS for _, cv in rows)
     # one Lloyd's loop trains both models: PQ over one subspace of all
     # DIMS with the same seeds (vec_id < 8) is this k-means
     pq = ann.pq_train_codebook_rows(emb, m_sub=1, k_codes=8, iters=3)
-    assert [cw for _, _, cw in pq] == [
-        list(r.cv) for r in sorted(rows, key=lambda r: r.cent_id)
-    ]
+    assert [cw for _, _, cw in pq] == [cv for _, cv in sorted(rows)]
 
-    out = ann.ivf_topk(emb, centroids=cents)
+    out = ann.ivf_topk(emb, centroid_rows=rows)
     got = out.groupBy("query_id").count().collect()
     assert len(got) == 5 and all(r["count"] == 10 for r in got)
 
@@ -50,8 +47,7 @@ def test_kmeans_inertia_monotone_and_ivf_pluggable(spark):
 
 def test_trained_centroid_cache_shared_across_entries(spark, monkeypatch):
     # the three trained-model entries (trained IVF, cluster stats,
-    # recall) must consume ONE training run per (dataset, C, iters) —
-    # r4 VERDICT flagged the triple retrain as redundant bench time
+    # recall) must consume ONE training run per (dataset, C, iters)
     from geneticalgorithmsusingmapreduce_spark import catalog
 
     catalog._CENTROID_CACHE.clear()
@@ -84,10 +80,10 @@ def test_ivf_index_artifact_layout_and_roundtrip(spark, tmp_path):
     from pyspark.sql import functions as F
 
     emb = read_table(spark, SF, "embeddings")
-    qz = emb.select("vec_id", F.expr(ann.quantize_expr()).alias("qv"))
-    cents, _ = ann.train_centroids(emb, n_centroids=8, iters=3,
-                                   compute_inertia=False)
-    assigned = ann.assign_to_centroids(qz, cents)
+    rows, _ = ann.train_centroid_rows(emb, n_centroids=8, iters=3,
+                                      compute_inertia=False)
+    cents = ann.centroid_frame(spark, rows)
+    assigned = ann.kernel_assign(emb, rows).select("vec_id", "qv", "cent_id")
     d = str(tmp_path / "idx")
     assigned.write.partitionBy("cent_id").parquet(d)
     import os
@@ -109,19 +105,16 @@ def test_ivf_index_artifact_layout_and_roundtrip(spark, tmp_path):
     assert live == stored
 
 
-# --- product quantization (r9 — r8 VERDICT "Next round" #3) ---------------
+# --- product quantization -------------------------------------------------
 
 def test_pq_codebooks_shape_and_codes_in_range(spark):
-    from pyspark.sql import functions as F
-
     emb = read_table(spark, SF, "embeddings")
     rows = ann.pq_train_codebook_rows(emb)
     assert len(rows) == ann.M_SUB * ann.K_CODES
     assert all(len(cw) == ann.SUB_DIMS for _, _, cw in rows)
     assert sorted({m for m, _, _ in rows}) == list(range(ann.M_SUB))
-    cents, _ = ann.train_centroids(emb, compute_inertia=False)
-    qz = emb.select("vec_id", F.expr(ann.quantize_expr()).alias("qv"))
-    codes = ann.pq_encode(ann.assign_to_centroids(qz, cents), rows).collect()
+    cents, _ = ann.train_centroid_rows(emb, compute_inertia=False)
+    codes = ann.pq_encode(ann.kernel_assign(emb, cents), rows).collect()
     assert len(codes) == emb.count()
     for r in codes:
         assert len(r.codes) == ann.M_SUB
@@ -133,7 +126,7 @@ def test_pq_rerank_recovers_recall(spark):
     # re-rank must reach at least the pure-PQ recall, and the re-ranked
     # ranking must carry EXACT dots (equal to brute force on the hits)
     emb = read_table(spark, SF, "embeddings")
-    cents, _ = ann.train_centroids(emb, compute_inertia=False)
+    cents, _ = ann.train_centroid_rows(emb, compute_inertia=False)
     rows = ann.pq_train_codebook_rows(emb)
     exact = {(r.query_id, r.vec_id): r.dot for r in ann.topk_dot(emb).collect()}
     pure = {(r.query_id, r.vec_id)
@@ -146,16 +139,16 @@ def test_pq_rerank_recovers_recall(spark):
 
 
 def test_pq_non_default_m_sub_slices_queries_correctly(spark):
-    # ADVICE r10: pq_serve_topk used the module-level SUB_DIMS in its
-    # LUT expression while the rest of the PQ stack parameterizes on
-    # m_sub — a codebook trained with non-default m_sub would silently
-    # mis-slice query subvectors. Pin the ADC dots against a
-    # driver-side numpy recomputation at m_sub=4.
+    # pq_serve_topk takes sub_dims from the codebook, as the rest of
+    # the PQ stack parameterizes on m_sub: a module-level SUB_DIMS would
+    # silently mis-slice query subvectors of a codebook trained with
+    # non-default m_sub. Pin the ADC dots against a driver-side numpy
+    # recomputation at m_sub=4.
     import numpy as np
     from pyspark.sql import functions as F
 
     emb = read_table(spark, SF, "embeddings")
-    cents, _ = ann.train_centroids(emb, compute_inertia=False)
+    cents, _ = ann.train_centroid_rows(emb, compute_inertia=False)
     m_sub = 4
     rows = ann.pq_train_codebook_rows(emb, m_sub=m_sub)
     sub_dims = ann.DIMS // m_sub
@@ -167,9 +160,7 @@ def test_pq_non_default_m_sub_slices_queries_correctly(spark):
           for r in qz_df.collect()}
     codes = {
         r.vec_id: list(r.codes)
-        for r in ann.pq_encode(
-            ann.assign_to_centroids(qz_df, cents), rows
-        ).collect()
+        for r in ann.pq_encode(ann.kernel_assign(emb, cents), rows).collect()
     }
     cb = {(m, c): np.asarray(cw, dtype=np.int64) for m, c, cw in rows}
     for r in out:

@@ -9,6 +9,8 @@ CI, not the cluster."""
 
 from __future__ import annotations
 
+import pytest
+
 from geneticalgorithmsusingmapreduce_spark import catalog
 
 SF = "/root/testdata/sf0.001"
@@ -200,15 +202,23 @@ def _join_on(p: str, key: str) -> bool:
     ) is not None
 
 
+def _one_kernel_exchange(p: str, key: str) -> None:
+    """The plan pairs nothing with a centroid table, runs an Arrow
+    kernel and shuffles once, on ``key``."""
+    for node in ("CartesianProduct", "BroadcastNestedLoopJoin"):
+        assert node not in p, f"plan has {node}:\n{p}"
+    assert "InArrow" in p, f"plan has no Arrow kernel:\n{p}"
+    assert p.count("Exchange ") == 1, p
+    assert f"Exchange hashpartitioning({key}" in p, p
+
+
 def test_ivf_topk_keyed_probe_no_cartesian(spark):
-    p = _plan(catalog.QUERIES["emb_ivf_topk"](spark, SF))
-    assert "CartesianProduct" not in p
-    # candidates probe via an equi-join on the centroid id; the only
-    # nested-loop joins are the deliberate broadcasts of the tiny
-    # query/centroid sets (k rows), never two big sides
-    assert _join_on(p, "cent_id")
-    # per-query partial top-k: final agg shuffles on query_id only
-    assert "Exchange hashpartitioning(query_id" in p
+    # assignment is one Arrow pass, the probe pick is driver-side and
+    # keys the postings scan on the probed cent_ids, and the per-query
+    # partial top-ks merge in one window shuffled on query_id
+    _one_kernel_exchange(
+        _plan(catalog.QUERIES["emb_ivf_topk"](spark, SF)), "query_id"
+    )
 
 
 def test_lsh_pairs_bucketed_join(spark):
@@ -317,11 +327,12 @@ def test_repetition_single_exchange(spark):
 
 
 def test_kmeans_stats_broadcast_assignment(spark):
-    # the post-training assignment pass must broadcast the centroid table
-    # (8 rows) — never shuffle the vector table against it
-    p = _plan(catalog.QUERIES["emb_kmeans_clusters"](spark, SF))
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
-    assert "CartesianProduct" not in p
+    # the post-training assignment pass ships the centroid model (8 rows)
+    # in the Arrow kernel's closure — never a join with the vector
+    # table — and only the per-cluster aggregate shuffles
+    _one_kernel_exchange(
+        _plan(catalog.QUERIES["emb_kmeans_clusters"](spark, SF)), "cent_id"
+    )
 
 
 def test_shipping_priority_broadcast_dim(spark):
@@ -489,15 +500,16 @@ def test_ivf_generation_postings_one_kernel_pass(spark, tmp_path,
     )
 
 
-# extended-explain budget (bytes) of the int8 serve over a stored index
-# generation: the serve kernel's plan measures ~6.6 KB; the expression
-# form it replaced (broadcast cross join + two 64-term dots + two
-# windows) ~97 KB
+# extended-explain budget (bytes) of an IVF serve over a stored index:
+# the probe-and-scan kernel's plan measures ~6.6 KB; the expression
+# forms it replaced (broadcast cross join + 64-term dots + windows, and
+# for PQ a LUT join + grouped sum) measured ~79–99 KB
 SERVE8_EXPLAIN_BUDGET = 16 << 10
 
 
-def test_ivf_serve_int8_scans_probed_lists_only(spark, tmp_path):
-    # serving a stored generation pairs nothing with the centroid table,
+@pytest.mark.parametrize("serve", ["int8", "float", "pq"])
+def test_ivf_serve_scans_probed_lists_only(spark, tmp_path, serve):
+    # serving a stored index pairs nothing with the centroid table,
     # scans only the probed list directories, and keeps a constant-size
     # plan
     from pyspark.sql import functions as F
@@ -510,20 +522,26 @@ def test_ivf_serve_int8_scans_probed_lists_only(spark, tmp_path):
         ivf_rebuild as ir,
     )
 
-    emb = read_table(spark, SF, "embeddings")
-    qz = emb.select("vec_id", F.expr(ann.quantize_expr()).alias("qv"))
-    rows = [
-        (r.vec_id, list(r.qv)) for r in qz.filter("vec_id < 8").collect()
-    ]
-    d = str(tmp_path / "idx")
-    ir.write_generation(spark, emb, d, 0, rows)
-    ir.commit_generation(spark, d, 0)
-    cents, postings = ir.read_serve_tables(spark, d)
-    out = ann.ivf_serve_topk_int8(postings, cents)
+    if serve == "int8":
+        emb = read_table(spark, SF, "embeddings")
+        qz = emb.select("vec_id", F.expr(ann.quantize_expr()).alias("qv"))
+        rows = [
+            (r.vec_id, list(r.qv)) for r in qz.filter("vec_id < 8").collect()
+        ]
+        d = str(tmp_path / "idx")
+        ir.write_generation(spark, emb, d, 0, rows)
+        ir.commit_generation(spark, d, 0)
+        cents, postings = ir.read_serve_tables(spark, d)
+        out = ann.ivf_serve_topk_int8(postings, cents)
+    else:
+        entry = {
+            "float": "emb_ivf_index_roundtrip", "pq": "emb_ivf_postings_pq",
+        }[serve]
+        out = catalog.QUERIES[entry](spark, SF)
     p = _plan(out)
     for node in ("CartesianProduct", "BroadcastNestedLoopJoin"):
         assert node not in p, f"serve plan has {node}:\n{p}"
-    assert re.search(r"PartitionFilters: \[[^\]]*cent_id#\d+L (=|IN) ", p), (
+    assert re.search(r"PartitionFilters: \[[^\]]*cent_id#\d+L? (=|IN) ", p), (
         f"postings scan prunes no list:\n{p}"
     )
     size = len(out._jdf.queryExecution().toString().encode())
@@ -626,11 +644,21 @@ def test_embedding_kernels_are_arrow_native(spark, tmp_path, monkeypatch):
     assigned = ann.kernel_assign(emb, rows)
     codebook = [(m, kk, [kk] * ann.SUB_DIMS)
                 for m in range(ann.M_SUB) for kk in range(ann.K_CODES)]
+    codes = ann.pq_encode(assigned, codebook, rows)
     frames = {
         "encode_postings_int8": ann.encode_postings_int8(emb, rows),
         "ivf_serve_topk_int8": ann.ivf_serve_topk_int8(postings, cents),
+        "ivf_serve_topk": ann.ivf_serve_topk(assigned, cents),
+        "pq_serve_topk": ann.pq_serve_topk(
+            codes, cents,
+            spark.createDataFrame(codebook, ann.CODEBOOK_SCHEMA),
+            ann.query_rows(emb), plus_centroid_dot=True,
+        ),
+        "kmeans_cluster_stats": ann.kmeans_cluster_stats(
+            emb, centroid_rows=rows
+        ),
         "kernel_assign": assigned,
-        "pq_encode": ann.pq_encode(assigned, codebook, rows),
+        "pq_encode": codes,
         "quantize_bucket_norm": ann.quantize_bucket_norm(emb, 7),
         "topk_dot_numpy": ann.topk_dot_numpy(emb),
         "semantic_cluster_pairs": ann.semantic_cluster_pairs(aug, 700),

@@ -1,9 +1,14 @@
 """Dump finalized physical plans for the headline queries to EXPLAIN.md —
 human-readable scale evidence (pushdown, broadcast sides, exchange counts,
 WholeStageCodegen spans) complementing the machine checks in
-tests/test_plans.py.
+tests/test_plans.py — or, given catalog entry names, print those
+entries' plans instead.
 
-Usage: python tools/explain_dump.py [sf_dir]
+Usage: python tools/explain_dump.py [sf_dir] [entry ...]
+
+sf_dir defaults to the sf0.01 test data: an entry's build can run eager
+actions (checkpoint-truncated ladder rungs, trained models), and the
+physical plan shape does not depend on the scale factor.
 """
 
 from __future__ import annotations
@@ -29,7 +34,7 @@ HEADLINE = [
     "dedup_exact_digest",       # 16-byte-key exchange
     "dedup_minhash_lsh",        # band/bucket equi-join
     "dedup_minhash_lsh_capped", # + hot-bucket guard: window count on the join key
-    "emb_ivf_topk",             # IVF probe equi-join
+    "emb_ivf_topk",             # IVF probe pick + probed-lists scan
     "decontaminate",            # broadcast semi-probe
     "corpus_curation",          # composed pipeline, one keyed exchange
     "events_partitioned_scan",  # partition pruning
@@ -77,10 +82,30 @@ def summarize(plan: str) -> str:
     return "\n".join(out)
 
 
+def section(spark, sf_dir: str, name: str) -> list[str]:
+    df = catalog.QUERIES[name](spark, sf_dir)
+    df.collect()  # finalize AQE
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0].rstrip()
+    return [f"## {name}", "", summarize(plan), "", "```", plan, "```", ""]
+
+
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    args = sys.argv[1:]
+    sf_dir = (
+        args.pop(0) if args and os.path.isdir(args[0])
+        else "/root/testdata/sf0.01"
+    )
+    unknown = [n for n in args if n not in catalog.QUERIES]
+    if unknown:
+        sys.exit(f"unknown entries: {unknown}")
     spark = build_session("explain-dump")
     spark.sparkContext.setLogLevel("ERROR")
+    if args:
+        for name in args:
+            print("\n".join(section(spark, sf_dir, name)), flush=True)
+        spark.stop()
+        return
     lines = [
         "# EXPLAIN — finalized physical plans (AQE final), sf0.01",
         "",
@@ -90,20 +115,7 @@ def main():
         "",
     ]
     for name in HEADLINE:
-        df = catalog.QUERIES[name](spark, sf_dir)
-        df.collect()  # finalize AQE
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        plan = plan.split("== Initial Plan ==")[0].rstrip()
-        lines += [
-            f"## {name}",
-            "",
-            summarize(plan),
-            "",
-            "```",
-            plan,
-            "```",
-            "",
-        ]
+        lines += section(spark, sf_dir, name)
     with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"wrote EXPLAIN.md ({len(HEADLINE)} plans)")
