@@ -649,7 +649,7 @@ def layout_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-files COMPACTION (the operational pass every appending
     100 TB sink needs): the events table is deliberately
     fragmented into 64 tiny part files (a streaming sink's morning
-    after), then sources/layout.compact_layout rewrites it at
+    after), then sources/store.compact_layout rewrites it at
     ~target-sized files (output count from the layout's ON-DISK bytes,
     no row scan). Correctness contract is CONTENT INVARIANCE: the
     returned aggregate is computed over the COMPACTED read-back and
@@ -658,15 +658,15 @@ def layout_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction and the sizing rule are pinned in tests/test_io_loops.py.
     At 100 TB this runs per partition directory on a schedule, never
     the whole table at once (module doc)."""
-    from .sources import layout as layout_ops
+    from .sources import store
 
     ev = read_events(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "value"
     )
     d = runtime.scoped_tempdir("gamr_compact_")
     ev.repartition(64).write.parquet(f"{d}/fragmented")
-    layout_ops.compact_layout(spark, f"{d}/fragmented", f"{d}/compact")
-    back = layout_ops.compacted(spark, f"{d}/compact")
+    store.compact_layout(spark, f"{d}/fragmented", f"{d}/compact")
+    back = spark.read.parquet(f"{d}/compact")
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("user_id").alias("sum_user"),
@@ -3355,21 +3355,22 @@ def emb_ivf_append_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch's C smallest vec_ids), every batch assigns its vectors to the
     FIXED centroids, int8-quantizes, and APPENDS to the durable
     cent_id-partitioned postings (streaming/ivf_append.py — foreachBatch,
-    the streaming_neardup pattern). Serve runs over the final reloaded
-    artifact. The oracle replays the whole ingestion as ONE static build
-    (k-means restricted to the batch-0 slice via train_filter, assignment of
-    all vectors, int8, serve): hash equality proves the appended index is
-    bit-identical to the batch build — no vector lost or re-assigned, every
-    append in the right list directory. Per-batch list-size skew (max/mean)
-    is returned as the re-train alarm value; re-training rebuilds under a
-    new index generation rather than mutating this one (module doc)."""
+    the streaming_neardup pattern). Serve runs over the committed
+    generation the sink leaves, read back. The oracle replays the whole
+    ingestion as ONE static build (k-means restricted to the batch-0 slice
+    via train_filter, assignment of all vectors, int8, serve): hash
+    equality proves the appended index is bit-identical to the batch
+    build — no vector lost or re-assigned, every append in the right list
+    directory. Per-batch list-size skew (max/mean) is returned as the
+    re-train alarm value; re-training rebuilds under a new index
+    generation rather than mutating this one (module doc)."""
     from .streaming import ivf_append as ia, ivf_rebuild as ir
 
     emb = read_table(spark, sf_dir, "embeddings")
     d = runtime.scoped_tempdir("gamr_ivf_append_")
     ia.start_ivf_append(spark, emb, d, n_batches=3)
-    back_cents, postings = ir.read_index_tables(spark, d)
-    return ann_ops.ivf_serve_topk_int8(postings, back_cents)
+    cents, postings = ir.read_serve_tables(spark, d)
+    return ann_ops.ivf_serve_topk_int8(postings, cents)
 
 
 @register(
@@ -3393,8 +3394,8 @@ def emb_ivf_append_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = runtime.scoped_tempdir("gamr_ivf_compact_")
     st = ia.start_ivf_append(spark, emb, d, n_batches=3, compact_after=2)
     assert st.compactions, "compaction threshold never tripped"
-    back_cents, postings = ir.read_index_tables(spark, d)
-    return ann_ops.ivf_serve_topk_int8(postings, back_cents)
+    cents, postings = ir.read_serve_tables(spark, d)
+    return ann_ops.ivf_serve_topk_int8(postings, cents)
 
 
 @register(
@@ -3418,8 +3419,7 @@ def emb_ivf_rebuild_gen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = read_table(spark, sf_dir, "embeddings")
     d = runtime.scoped_tempdir("gamr_ivf_rebuild_")
-    ia.start_ivf_append(spark, emb, f"{d}/gen=0", n_batches=3)
-    ir.commit_generation(spark, d, 0)
+    ia.start_ivf_append(spark, emb, d, n_batches=3)
     new_gen = ir.rebuild_index(spark, emb, d)
     assert new_gen == 1 and ir.serve_generation(spark, d) == 1
     cents, postings = ir.read_serve_tables(spark, d)

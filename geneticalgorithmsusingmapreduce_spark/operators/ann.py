@@ -507,9 +507,19 @@ def ivf_serve_topk(
     rows vec_id < n_queries: _probe_scan with probes picked by the
     query's qv and each candidate scored by the exact dot qv·qe.
     Output: [query_id, vec_id, dot, rank]."""
-    qids, qe = _query_matrix(
-        assigned.filter(F.col("vec_id") < n_queries).select("vec_id", "qv")
+    return _serve_qv(
+        assigned, cents, assigned.filter(F.col("vec_id") < n_queries),
+        k, n_probes,
     )
+
+
+def _serve_qv(
+    assigned: DataFrame, cents: DataFrame, queries: DataFrame,
+    k: int, n_probes: int,
+) -> DataFrame:
+    """ivf_serve_topk with the query rows [vec_id, qv, ...] collected
+    from ``queries``."""
+    qids, qe = _query_matrix(queries.select("vec_id", "qv"))
 
     def dot(b, _):
         return _i64_matmul(_bits.np_list_matrix(b.column("qv"), DIMS), qe.T)
@@ -536,10 +546,15 @@ def ivf_topk(
     emb_topk_dot when the true neighbor lives in an unprobed list)."""
     if centroid_rows is None:
         centroid_rows, _ = train_centroid_rows(emb, n_centroids, 0)
-    return ivf_serve_topk(
+    # the query rows come from the kernel over the query vectors only
+    # (it is row-wise), not from a filter above the corpus-wide kernel
+    return _serve_qv(
         kernel_assign(emb, centroid_rows),
         centroid_frame(emb.sparkSession, centroid_rows),
-        n_queries, k, n_probes,
+        kernel_assign(
+            emb.filter(F.col("vec_id") < n_queries), centroid_rows
+        ),
+        k, n_probes,
     )
 
 
@@ -805,9 +820,18 @@ def ivf_serve_topk_int8(
     scoring sdot = dot8(qe8, v8)·scale_v for all queries (exact: |sdot|
     ≤ 64·127²·577,001 < 2^53; it ranks like the symmetric
     reconstruction, scale_q/127² being constant per query)."""
-    qids, qe8 = _query_matrix(
-        p8.filter(F.col("vec_id") < n_queries).select("vec_id", "v8")
+    return _serve_int8(
+        p8, cents, p8.filter(F.col("vec_id") < n_queries), k, n_probes
     )
+
+
+def _serve_int8(
+    p8: DataFrame, cents: DataFrame, queries: DataFrame,
+    k: int, n_probes: int,
+) -> DataFrame:
+    """ivf_serve_topk_int8 with the query rows [vec_id, v8, ...]
+    collected from ``queries``."""
+    qids, qe8 = _query_matrix(queries.select("vec_id", "v8"))
 
     def sdot(b, _):
         v8 = _bits.np_list_matrix(b.column("v8"), DIMS)
@@ -823,10 +847,16 @@ def ivf_topk_int8(
     n_queries: int = 5, k: int = 10, n_probes: int = N_PROBES,
 ) -> DataFrame:
     """encode_postings_int8 → serve (no durable artifact — the
-    postings entry adds the parquet write/read split)."""
-    cents = centroid_frame(emb.sparkSession, centroid_rows)
-    p8 = encode_postings_int8(emb, centroid_rows)
-    return ivf_serve_topk_int8(p8, cents, n_queries, k, n_probes)
+    postings entry adds the parquet write/read split). As in ivf_topk,
+    the query rows come from the kernel over the query vectors only."""
+    return _serve_int8(
+        encode_postings_int8(emb, centroid_rows),
+        centroid_frame(emb.sparkSession, centroid_rows),
+        encode_postings_int8(
+            emb.filter(F.col("vec_id") < n_queries), centroid_rows
+        ),
+        k, n_probes,
+    )
 
 
 def duck_serve_int8_sql(

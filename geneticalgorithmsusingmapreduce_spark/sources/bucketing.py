@@ -22,9 +22,9 @@ write task or sortBy + maxRecordsPerFile tuning) removes the sort too.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
+
+from . import store
 
 
 def buckets_for_path(
@@ -34,7 +34,7 @@ def buckets_for_path(
     hi: int = 4096,
 ) -> int:
     """Bucket count sized to the data: next power of two of
-    ceil(on-disk bytes / target_bytes), clamped to [lo, hi].
+    ceil(on-disk data bytes / target_bytes), clamped to [lo, hi].
 
     A FIXED bucket count is the classic bucketing scale trap: the join
     read runs one task per bucket, so 8 buckets cap a 1000-executor
@@ -44,14 +44,7 @@ def buckets_for_path(
     zero-exchange plan property only needs the two sides to AGREE on
     the count — callers pass the bigger side's path and use the result
     for both."""
-    n_bytes = 0
-    if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            n_bytes += sum(
-                os.path.getsize(os.path.join(root, f)) for f in files
-            )
-    elif os.path.isfile(path):
-        n_bytes = os.path.getsize(path)
+    n_bytes = store.data_stats(path)["bytes"]
     n = lo
     while n < hi and n * target_bytes < n_bytes:
         n *= 2

@@ -1,12 +1,12 @@
-"""Table registry over the driver-generated parquet fixtures (TESTDATA.md)
-and per-generation GA state dirs.
+"""Table registry over the driver-generated parquet fixtures (TESTDATA.md),
+format-generic sinks and scans, and the SequenceFile interchange shim.
 
 Reference mapping (SURVEY.md §2.1): the reference reads/writes one
 SequenceFile dir per GA generation (S1/S2, ``reference
 src/edu/illinois/ga/MapReduce.java:282,286,298-302``). Here a generation is
 a parquet dir (columnar, splittable, min/max-pruned) — at 100 TB the scan
 benefits from column pruning + predicate pushdown that SequenceFiles can't
-offer.
+offer; committed generation directories are ``sources/store.py``'s.
 """
 
 from __future__ import annotations
@@ -148,11 +148,3 @@ def read_sequencefile_population(spark: SparkSession, path: str) -> DataFrame:
     rdd = spark.sparkContext.sequenceFile(path).map(dec)
     return spark.createDataFrame(rdd, schema)
 
-
-def write_generation(df: DataFrame, base_dir: str, generation: int) -> str:
-    """S2: sink for generation state. Overwrite semantics replace the
-    reference's manual recursive-delete (S6, ``reference
-    src/edu/illinois/ga/MapReduce.java:317,362-363``)."""
-    path = os.path.join(base_dir, f"gen={generation}")
-    df.write.mode("overwrite").parquet(path)
-    return path

@@ -45,21 +45,21 @@ Two variants:
   over B batches) and batch-0 training is flat Lloyd's over the full
   batch (an n·C/3 term). Kept as the minimal-moving-parts form and the
   ``streaming_semdedup`` gate entry.
-* ``start_streaming_semdedup_durable`` — the scale shape: history lives as
-  (batch, cent_id)-PARTITIONED PARQUET inside an atomically-committed
-  GENERATION directory, with an int8 SKETCH sidecar and per-directory
-  angular ZONE rows. Each batch re-reads only what can still pair:
-  zone-gap skip (triangle inequality) → sketch-bytes pre-filter
-  (int8 reconstruction bound) → full rows for candidate directories
-  only — three provably output-invariant stages, so per-batch history
-  bytes track sketch-size + candidate mass even under UNIFORM
-  arrivals, where plain probed-cell pruning degenerates to re-reading
-  the whole store. Batch-0 training runs on a deterministic
-  fixed-modulus sample (train_filter replay — the oracle stays
-  symbolic); recency-banded compaction bounds the
-  file count; a hot-cell alarm retrains the quantizer into generation
-  N+1 with the ivf_rebuild marker discipline. Pairs land per batch in
-  a found_batch-partitioned store outside the generations, so driver
+* ``start_streaming_semdedup_durable`` — the scale shape: history
+  lives as (batch, cent_id)-PARTITIONED PARQUET inside a committed
+  GENERATION directory (the generation store, ``sources/store.py``),
+  with an int8 SKETCH sidecar and per-directory angular ZONE rows.
+  Each batch re-reads only what can still pair: zone-gap skip
+  (triangle inequality) → sketch-bytes pre-filter (int8 reconstruction
+  bound) → full rows for candidate directories only — three provably
+  output-invariant stages, so per-batch history bytes track
+  sketch-size + candidate mass even under UNIFORM arrivals, where plain
+  probed-cell pruning degenerates to re-reading the whole store.
+  Batch-0 training runs on a deterministic fixed-modulus sample
+  (train_filter replay — the oracle stays symbolic); recency-banded
+  compaction bounds the file count; a hot-cell alarm retrains the
+  quantizer into generation N+1. Pairs land per batch in a
+  found_batch-partitioned store outside the generations, so driver
   state is counters only and pair attribution survives a rebuild.
 """
 
@@ -74,6 +74,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, \
 from ..functions import bits
 from ..operators import ann
 from ..runtime import free_checkpoint, local_checkpoint_truncated
+from ..sources import store
 from .microbatch import run_micro_batches
 
 _PAIR_BATCH_SCHEMA = (
@@ -190,11 +191,9 @@ def start_streaming_semdedup(
 
 
 @dataclass
-class DurableSemDedupState:
-    history_dir: str
+class DurableSemDedupState(store.Generations):
     centroid_rows: list | None = None
     batches_done: int = 0
-    gen: int = 0
     history: list[dict] = field(default_factory=list)
     # per batch: {batch, n_new_pairs, probed_cells, band_dirs_total,
     #             zone_skipped_dirs, sketch_bytes_read, cand_dirs,
@@ -204,74 +203,57 @@ class DurableSemDedupState:
     # (batch, old_gen, new_gen, hot_frac)
     compactions: list = field(default_factory=list)
     # per maintenance run: compact_semdedup_history's stats dict
-    pending_gc: list = field(default_factory=list)  # superseded gens
 
 
-def read_probed_cells(
-    spark: SparkSession, assign_base: str, probed: list[int]
-):
-    """Read ONLY the probed cells' directories from a
-    cent_id-partitioned assignment store — explicit per-cell paths, so
-    pruning holds by construction (an unprobed cell's files are never
-    listed, opened, or read; pinned via DataFrame.inputFiles in
-    tests/test_streaming.py). Returns
-    (frame_or_None, bytes_read, n_live_cells)."""
+def _band_dirs(cells) -> list[str]:
+    """The store directories of (band, cent_id) cells."""
+    return [f"batch={b}/cent_id={c}" for b, c in cells]
+
+
+def _cell_stats(asg: DataFrame) -> list:
+    """Per-cell [cent_id, t1, t2, n]: theta interval and row count — the
+    zone rows of the directories ``asg`` writes (≤ C driver rows)."""
+    return asg.groupBy("cent_id").agg(
+        F.min("theta_urad").alias("t1"),
+        F.max("theta_urad").alias("t2"),
+        F.count(F.lit(1)).alias("n"),
+    ).collect()
+
+
+def _append_stores(
+    asg: DataFrame, b: int, cell_stats: list, gd: str, write_sketch: bool
+) -> None:
+    """Append enriched rows ``asg`` as band ``b`` to the generation at
+    ``gd``: the assign store, the sketch store (``write_sketch``) and
+    the zone rows."""
     import os
 
-    cell_dirs = [
-        os.path.join(assign_base, f"cent_id={c}") for c in probed
-    ]
-    live = [d for d in cell_dirs if os.path.isdir(d)]
-    if not live:
-        return None, 0, 0
-    hist_bytes = sum(_dir_bytes(d) for d in live)
-    hist = spark.read.option("basePath", assign_base).parquet(
-        *live
-    ).select(
-        "vec_id", F.col("cent_id").cast("long").alias("cent_id"),
-        "qv", "n2",
-    )
-    return hist, hist_bytes, len(live)
-
-
-def read_band_cells(
-    spark: SparkSession, base: str, band_cells: list, cols: list
-):
-    """Read ONLY the given (band, cent_id) directories from a
-    batch+cent_id-partitioned store — the banded generalization of
-    read_probed_cells (explicit per-directory paths; a skipped band's
-    files are never listed, opened, or read — pinned via
-    DataFrame.inputFiles in tests/test_streaming.py). Returns
-    (frame_or_None, bytes_read, n_live_dirs)."""
-    import os
-
-    dirs = [
-        os.path.join(base, f"batch={b}", f"cent_id={c}")
-        for b, c in band_cells
-    ]
-    live = [d for d in dirs if os.path.isdir(d)]
-    if not live:
-        return None, 0, 0
-    nbytes = sum(_dir_bytes(d) for d in live)
-    df = spark.read.option("basePath", base).parquet(*live).select(
-        *cols,
-        F.col("batch").cast("long").alias("batch"),
-        F.col("cent_id").cast("long").alias("cent_id"),
-    )
-    return df, nbytes, len(live)
-
-
-def _dir_bytes(path: str) -> int:
-    import os
-
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
+    for name, cols, on in (
+        ("assign", ["vec_id", "cent_id", "qv", "n2"], True),
+        # lazy: bands written before the store crossed the sketch
+        # threshold have no sketch (readers fall back to the full read
+        # for them; compaction backfills)
+        ("sketch", ["vec_id", "cent_id", "n2", "s8", "v8"], write_sketch),
+    ):
+        if on:
+            (
+                asg.select(*cols)
+                .withColumn("batch", F.lit(b).cast("long"))
+                .write.mode("append").partitionBy("batch", "cent_id")
+                .parquet(os.path.join(gd, name))
+            )
+    # zone rows ride the per-cell stats the batch already collected
+    # (≤ C driver scalars): the zones sidecar is a tiny JSON file, not a
+    # Spark job — two fewer jobs per batch than a parquet zone store,
+    # and the read side is an os-level load
+    _zones_append(gd, [
+        {
+            "batch": b, "cent_id": int(r["cent_id"]),
+            "tmin_urad": int(r["t1"]), "tmax_urad": int(r["t2"]),
+            "n_rows": int(r["n"]),
+        }
+        for r in cell_stats
+    ])
 
 
 # conservative slack for zone-gap comparisons: per-row theta is rounded
@@ -544,7 +526,7 @@ def compact_semdedup_history(
     if not src:
         return {"merged_bands": 0}
     stats["assign_files_before"] = sum(
-        len(files) for d in src for _, _, files in os.walk(d)
+        store.data_stats(d)["files"] for d in src
     )
     # one pass over the merged assign rows feeds BOTH the re-banded
     # assign write and the sketch BACKFILL (merging sketch dirs alone
@@ -575,11 +557,9 @@ def compact_semdedup_history(
         shutil.rmtree(
             os.path.join(sketch_base, f"batch={b}"), ignore_errors=True
         )
-    stats["assign_files_after"] = sum(
-        len(files) for _, _, files in os.walk(
-            os.path.join(assign_base, f"batch={new_band}")
-        )
-    )
+    stats["assign_files_after"] = store.data_stats(
+        os.path.join(assign_base, f"batch={new_band}")
+    )["files"]
     # fold the merged bands' zone rows to the per-cell min/max
     # envelope — driver-side (the sidecar is a tiny JSON list)
     zones = _zones_load(gen_dir)
@@ -623,11 +603,11 @@ def start_streaming_semdedup_durable(
     """Cross-batch semantic dedup with DURABLE cent_id-partitioned
     history — the scale shape of the in-memory variant.
 
-    Store layout (generation-wrapped, the ivf_rebuild marker
-    discipline — pairs are generation-INDEPENDENT):
+    Store layout (a generation store, ``sources/store.py`` — pairs are
+    generation-INDEPENDENT; batch 0 deletes the generations and pairs
+    of an earlier run into the same ``history_dir``):
 
         {history_dir}/pairs/found_batch=b/
-        {history_dir}/gen=N/_COMMITTED
         {history_dir}/gen=N/assign/batch=B/cent_id=C/   [vec_id, qv, n2]
         {history_dir}/gen=N/sketch/batch=B/cent_id=C/   [vec_id, s8, v8, n2]
         {history_dir}/gen=N/zones.json  [batch, cent_id, tmin/tmax_urad, n_rows]
@@ -674,8 +654,8 @@ def start_streaming_semdedup_durable(
         cells of the frozen batch-0 quantizer, gutting the cluster
         restriction's selectivity), retrain on the
         deterministic sample of history ∪ batch, re-enrich the WHOLE
-        store into generation N+1 (same one-pass kernel, from qv),
-        commit it atomically (ivf_rebuild's marker discipline — a
+        store into generation N+1 (same one-pass kernel, from qv, and
+        the same store writer as the batches), swap to it atomically (a
         half-written generation is invisible, the old one serves until
         the single metadata flip), and defer-delete the old
         generation one batch later. The PAIRS store is untouched: every
@@ -689,16 +669,13 @@ def start_streaming_semdedup_durable(
     greatest(vec_a % B, vec_b % B) — which the gate entry hash-checks.
     With rebuilds ON the restriction (hence recall) intentionally
     changes mid-stream; that path is quality-gated by plant recall
-    (tests/test_streaming.py, tools/probe_durable_pruning.py), the
-    emb_ivf_rebuild_gen convention.
+    (tests/test_streaming.py), the emb_ivf_rebuild_gen convention.
 
     Reference analog: the incremental fork's persistent reduce state
     (``reference src/edu/illinois/incr_ga/IncMapReduce.java:241-325``),
     here as a partitioned columnar store instead of re-shipped
     sequence files."""
     import os
-
-    from . import ivf_rebuild as gens
 
     t2 = tau_milli * tau_milli
     state = DurableSemDedupState(history_dir)
@@ -707,51 +684,16 @@ def start_streaming_semdedup_durable(
     pairs_base = os.path.join(history_dir, "pairs")
     train_mod = n_batches * train_sample_mod
 
-    def gen_dir() -> str:
-        return os.path.join(history_dir, f"gen={state.gen}")
-
-    def _append_stores(asg, b: int, cell_stats, write_sketch: bool) -> None:
-        gd = gen_dir()
-        (
-            asg.select("vec_id", "cent_id", "qv", "n2")
-            .withColumn("batch", F.lit(b).cast("long"))
-            .write.mode("append").partitionBy("batch", "cent_id")
-            .parquet(os.path.join(gd, "assign"))
-        )
-        if write_sketch:
-            # lazy: bands written before the store crossed the sketch
-            # threshold have no sketch (readers fall back to the full
-            # read for them; compaction backfills)
-            (
-                asg.select("vec_id", "cent_id", "n2", "s8", "v8")
-                .withColumn("batch", F.lit(b).cast("long"))
-                .write.mode("append").partitionBy("batch", "cent_id")
-                .parquet(os.path.join(gd, "sketch"))
-            )
-        # zone rows ride the per-cell stats the batch already collected
-        # (≤ C driver scalars): the zones sidecar is a tiny JSON file,
-        # not a Spark job — two fewer jobs per batch than a parquet
-        # zone store, and the read side is an os-level load
-        _zones_append(gd, [
-            {
-                "batch": b, "cent_id": int(r["cent_id"]),
-                "tmin_urad": int(r["t1"]), "tmax_urad": int(r["t2"]),
-                "n_rows": int(r["n"]),
-            }
-            for r in cell_stats
-        ])
-
     def one_batch(b: int) -> None:
-        # deferred GC of a generation superseded in an earlier batch
-        # (the ivf_append_gen grace-batch discipline)
-        while state.pending_gc:
-            gens.delete_generation(spark, history_dir, state.pending_gc.pop(0))
+        if b == 0:
+            state.fresh_start(spark, pairs_base)
+        state.collect_garbage(spark, b)
         if (
             compact_every is not None and b > 0
             and b % compact_every == 0
         ):
             stats = compact_semdedup_history(
-                spark, gen_dir(), keep_recent=compact_keep_recent
+                spark, state.dir, keep_recent=compact_keep_recent
             )
             if stats.get("merged_bands"):
                 state.compactions.append({"batch": b, **stats})
@@ -778,12 +720,8 @@ def start_streaming_semdedup_durable(
                 schema=_ENRICH_SCHEMA,
             ).filter(F.col("n2") > 0)
         ).persist()
-        gd = gen_dir()
-        cell_stats = asg.groupBy("cent_id").agg(
-            F.min("theta_urad").alias("t1"),
-            F.max("theta_urad").alias("t2"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()
+        gd = state.dir
+        cell_stats = _cell_stats(asg)
         probed = sorted(int(r["cent_id"]) for r in cell_stats)
         batch_iv = {
             int(r["cent_id"]): (int(r["t1"]), int(r["t2"]))
@@ -806,7 +744,7 @@ def start_streaming_semdedup_durable(
         # superset either way. Tests pin the sketch path with
         # sketch_read_min_bytes=0; the decade probe measures the
         # above-threshold regime.
-        store_bytes = _dir_bytes(os.path.join(gd, "assign"))
+        store_bytes = store.data_stats(os.path.join(gd, "assign"))["bytes"]
         sketch_on = store_bytes >= sketch_read_min_bytes
         if sketch_on:
             sk_live = [
@@ -821,8 +759,8 @@ def start_streaming_semdedup_durable(
         cand = None
         full_dirs = list(full_live)
         if sk_live:
-            sk, sk_bytes, _ = read_band_cells(
-                spark, os.path.join(gd, "sketch"), sk_live,
+            sk, sk_bytes, _ = store.read_dirs(
+                spark, os.path.join(gd, "sketch"), _band_dirs(sk_live),
                 ["vec_id", "n2", "s8", "v8"],
             )
             if sk is not None:
@@ -866,8 +804,8 @@ def start_streaming_semdedup_durable(
         cdirs = sorted(set(full_dirs) - set(full_live))
         if cdirs:
             n_cand_dirs += len(cdirs)
-            cf, nb, _ = read_band_cells(
-                spark, os.path.join(gd, "assign"), cdirs,
+            cf, nb, _ = store.read_dirs(
+                spark, os.path.join(gd, "assign"), _band_dirs(cdirs),
                 ["vec_id", "qv", "n2"],
             )
             cand_bytes += nb
@@ -877,8 +815,8 @@ def start_streaming_semdedup_durable(
                 ).select("vec_id", "cent_id", "qv", "n2"))
         if full_live:
             n_cand_dirs += len(full_live)
-            ff, nb, _ = read_band_cells(
-                spark, os.path.join(gd, "assign"), full_live,
+            ff, nb, _ = store.read_dirs(
+                spark, os.path.join(gd, "assign"), _band_dirs(full_live),
                 ["vec_id", "qv", "n2"],
             )
             cand_bytes += nb
@@ -915,9 +853,9 @@ def start_streaming_semdedup_durable(
         n_new = int(pairs_obs.get["n"])
         for df in to_free:
             free_checkpoint(df)
-        _append_stores(asg, b, cell_stats, write_sketch=sketch_on)
+        _append_stores(asg, b, cell_stats, gd, write_sketch=sketch_on)
         if b == 0:
-            gens.commit_generation(spark, history_dir, state.gen)
+            state.commit(spark)
         hot = (
             max(int(r["n"]) for r in cell_stats)
             / max(1, sum(int(r["n"]) for r in cell_stats))
@@ -933,9 +871,9 @@ def start_streaming_semdedup_durable(
             "cand_dirs": int(n_cand_dirs),
             "cand_bytes_read": int(cand_bytes),
             "history_bytes_read": int(sk_bytes + cand_bytes),
-            "store_bytes_total": int(
-                _dir_bytes(os.path.join(gd, "assign"))
-                + _dir_bytes(os.path.join(gd, "sketch"))
+            "store_bytes_total": sum(
+                store.data_stats(os.path.join(gd, name))["bytes"]
+                for name in ("assign", "sketch")
             ),
             "hot_frac": round(hot, 4),
             "gen": state.gen,
@@ -945,12 +883,9 @@ def start_streaming_semdedup_durable(
             rebuild_hot_frac is not None and hot > rebuild_hot_frac
             and b + 1 < n_batches
         ):
-            old, new = state.gen, state.gen + 1
-            store = spark.read.option(
-                "basePath", os.path.join(gd, "assign")
-            ).parquet(os.path.join(gd, "assign"))
+            assigned = spark.read.parquet(os.path.join(gd, "assign"))
             rows, _ = ann.train_centroid_rows(
-                store.filter(F.col("vec_id") % train_mod == 0)
+                assigned.filter(F.col("vec_id") % train_mod == 0)
                 .select("vec_id", F.col("qv").alias("embedding"))
                 .withColumn(
                     "embedding",
@@ -962,45 +897,17 @@ def start_streaming_semdedup_durable(
             # checkpoint: the re-assignment kernel feeds three
             # consumers (assign write, sketch write, zone stats)
             re_enriched = local_checkpoint_truncated(
-                store.select("vec_id", "qv").mapInArrow(
+                assigned.select("vec_id", "qv").mapInArrow(
                     _enrich_kernel(rows, from_qv=True),
                     schema=_ENRICH_SCHEMA,
                 )
             )
-            ngd = os.path.join(history_dir, f"gen={new}")
-            for frame, cols, store_name in (
-                (re_enriched, ["vec_id", "cent_id", "qv", "n2"], "assign"),
-                (re_enriched,
-                 ["vec_id", "cent_id", "n2", "s8", "v8"], "sketch"),
-            ):
-                (
-                    frame.select(*cols)
-                    .withColumn("batch", F.lit(b).cast("long"))
-                    .write.mode("overwrite").partitionBy("batch", "cent_id")
-                    .parquet(os.path.join(ngd, store_name))
-                )
-            nz = (
-                re_enriched.groupBy("cent_id")
-                .agg(
-                    F.min("theta_urad").alias("tmin_urad"),
-                    F.max("theta_urad").alias("tmax_urad"),
-                    F.count(F.lit(1)).alias("n_rows"),
-                )
-                .collect()
+            _append_stores(
+                re_enriched, b, _cell_stats(re_enriched), state.next_dir,
+                write_sketch=True,
             )
-            _zones_write(ngd, [
-                {
-                    "batch": b, "cent_id": int(r["cent_id"]),
-                    "tmin_urad": int(r["tmin_urad"]),
-                    "tmax_urad": int(r["tmax_urad"]),
-                    "n_rows": int(r["n_rows"]),
-                }
-                for r in nz
-            ])
-            gens.commit_generation(spark, history_dir, new)
             free_checkpoint(re_enriched)
-            state.pending_gc.append(old)
-            state.gen = new
+            old, new = state.swap(spark)
             state.centroid_rows = rows
             state.rebuilds.append((b, old, new, round(hot, 4)))
         state.batches_done = b + 1

@@ -1,4 +1,5 @@
-"""Generation IO round-trip (S2/S1) + multi-split cGA loop."""
+"""SequenceFile round-trip (S1/S2), layout compaction and the
+multi-split cGA loop."""
 
 from __future__ import annotations
 
@@ -10,25 +11,6 @@ from geneticalgorithmsusingmapreduce_spark.functions import bits
 from geneticalgorithmsusingmapreduce_spark.operators import fitness as fit_ops
 from geneticalgorithmsusingmapreduce_spark.operators import generate
 from geneticalgorithmsusingmapreduce_spark.plans import cga as cga_plan
-from geneticalgorithmsusingmapreduce_spark.sources.registry import (
-    write_generation,
-)
-
-
-def test_generation_write_read_roundtrip(spark):
-    pop = fit_ops.with_fitness(
-        generate.random_population(spark, 256, 128, seed=3), nl=2
-    )
-    with tempfile.TemporaryDirectory() as d:
-        p0 = write_generation(pop, d, 0)
-        back = spark.read.parquet(p0)
-        assert back.count() == 256
-        a = sorted((r.id, tuple(r.genome), r.fitness) for r in pop.collect())
-        b = sorted((r.id, tuple(r.genome), r.fitness) for r in back.collect())
-        assert a == b
-        # overwrite semantics (S6): writing gen 0 again must not duplicate
-        write_generation(pop, d, 0)
-        assert spark.read.parquet(p0).count() == 256
 
 
 def test_sequencefile_roundtrip(spark):
@@ -91,7 +73,7 @@ def test_layout_compaction_reduces_files_content_invariant(spark):
     # to the byte-sized file count, with EXACTLY the same rows
     import tempfile
 
-    from geneticalgorithmsusingmapreduce_spark.sources import layout
+    from geneticalgorithmsusingmapreduce_spark.sources import store
     from geneticalgorithmsusingmapreduce_spark.sources.registry import (
         read_table,
     )
@@ -101,24 +83,24 @@ def test_layout_compaction_reduces_files_content_invariant(spark):
     )
     with tempfile.TemporaryDirectory() as d:
         li.repartition(64).write.parquet(f"{d}/frag")
-        stats = layout.compact_layout(spark, f"{d}/frag", f"{d}/out")
+        stats = store.compact_layout(spark, f"{d}/frag", f"{d}/out")
         assert stats["files_before"] >= 64
         assert stats["files_after"] == stats["n_files_planned"] == 1
         want = sorted(tuple(r) for r in li.collect())
         got = sorted(
             tuple(r)
-            for r in layout.compacted(spark, f"{d}/out").collect()
+            for r in spark.read.parquet(f"{d}/out").collect()
         )
         assert got == want
 
 
 def test_files_for_bytes_rule():
-    from geneticalgorithmsusingmapreduce_spark.sources import layout
+    from geneticalgorithmsusingmapreduce_spark.sources import store
 
     mb = 1 << 20
-    assert layout.files_for_bytes(0) == 1
-    assert layout.files_for_bytes(1) == 1
-    assert layout.files_for_bytes(128 * mb) == 1
-    assert layout.files_for_bytes(128 * mb + 1) == 2
-    assert layout.files_for_bytes(10 * 1024 * mb) == 80
-    assert layout.files_for_bytes(300 * mb, target_bytes=64 * mb) == 5
+    assert store.files_for_bytes(0) == 1
+    assert store.files_for_bytes(1) == 1
+    assert store.files_for_bytes(128 * mb) == 1
+    assert store.files_for_bytes(128 * mb + 1) == 2
+    assert store.files_for_bytes(10 * 1024 * mb) == 80
+    assert store.files_for_bytes(300 * mb, target_bytes=64 * mb) == 5

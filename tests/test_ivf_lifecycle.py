@@ -98,21 +98,16 @@ def test_rebuild_matches_from_scratch_build(spark, tmp_path):
     assert rebuilt == scratch
 
 
-def test_append_alarm_rebuild_composed(spark, tmp_path):
+def test_append_alarm_rebuild_composed(spark, tmp_path, skewed_embeddings):
     # r10 VERDICT #6: append → skew alarm → retrain → atomic generation
     # swap, all inside ONE foreachBatch maintenance path. Batch 0 is
     # diverse (trains a spread quantizer); batches 1-2 pile onto one
     # region, driving max/mean list skew over the threshold.
-    emb = read_table(spark, SF, "embeddings").select(
-        "vec_id",
-        F.expr(
-            "CASE WHEN vec_id % 3 = 0 THEN embedding "
-            "ELSE transform(embedding, (x, i) -> cast(0.9 + "
-            "(vec_id % 7) * 0.001 + i * 0.0001 as float)) END"
-        ).alias("embedding"),
-    )
+    from geneticalgorithmsusingmapreduce_spark.streaming import ivf_append
+
+    emb = skewed_embeddings
     idx = str(tmp_path / "genidx")
-    st = ir.start_ivf_append_gen(
+    st = ivf_append.start_ivf_append(
         spark, emb, idx, n_batches=3, n_centroids=4, iters=2,
         rebuild_skew=1.5,
     )

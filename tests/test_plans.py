@@ -615,6 +615,63 @@ def test_genome_kernels_are_arrow_native(spark):
         )
 
 
+def test_durable_store_rules_live_in_store_module():
+    # one owner of the durable-store rules: inside the package the
+    # generation marker, its atomic create and the data-file walk
+    # appear only in sources/store.py
+    import pathlib
+
+    pkg = pathlib.Path(catalog.__file__).parent
+    found = {
+        (str(p.relative_to(pkg)), token)
+        for p in pkg.rglob("*.py")
+        for token in (
+            "_COMMITTED", "createNewFile", "os.walk", "os.path.getsize",
+        )
+        if token in p.read_text()
+    }
+    assert {f for f, _ in found} == {"sources/store.py"}, sorted(found)
+
+
+@pytest.mark.parametrize("serve", ["float", "int8"])
+def test_ivf_query_rows_skip_the_corpus_kernel(spark, monkeypatch, serve):
+    # ivf_topk and ivf_topk_int8 collect their query rows from the
+    # kernel over the query vectors only: in the frame _query_matrix
+    # receives, the vec_id < n_queries filter sits BELOW the kernel's
+    # MapInArrow, so the collect does not run the kernel over the
+    # whole corpus to keep n_queries rows
+    from geneticalgorithmsusingmapreduce_spark.operators import ann
+    from geneticalgorithmsusingmapreduce_spark.sources.registry import (
+        read_table,
+    )
+
+    seen = []
+    query_matrix = ann._query_matrix
+
+    def capture(df):
+        seen.append(df)
+        return query_matrix(df)
+
+    monkeypatch.setattr(ann, "_query_matrix", capture)
+    emb = read_table(spark, SF, "embeddings")
+    rows, _ = ann.train_centroid_rows(emb, 8, 0)
+    if serve == "float":
+        ann.ivf_topk(emb, centroid_rows=rows)
+    else:
+        ann.ivf_topk_int8(emb, rows)
+    (queries,) = seen
+    p = queries._jdf.queryExecution().optimizedPlan().toString()
+    lines = p.splitlines()
+    kernel = [i for i, ln in enumerate(lines) if "MapInArrow" in ln]
+    query_filter = [
+        i for i, ln in enumerate(lines)
+        if ln.lstrip(" :+-").startswith("Filter") and "vec_id" in ln
+        and " < " in ln
+    ]
+    assert kernel and query_filter, p
+    assert min(query_filter) > max(kernel), p
+
+
 def test_embedding_kernels_are_arrow_native(spark, tmp_path, monkeypatch):
     # every numpy kernel of the ANN stack and the streaming SemDeDup
     # store moves vectors as flat Arrow buffers: mapInArrow and

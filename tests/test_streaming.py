@@ -327,47 +327,74 @@ def test_streaming_neardup_cross_batch_state(spark):
     assert st.batches_done == 3
 
 
-def test_ivf_append_reused_index_dir_is_cleared(spark, tmp_path):
-    # the per-batch postings writes are mode(append), so an ingestion
-    # into a directory that already holds postings must clear them on
-    # batch 0 — otherwise every vector is silently duplicated in the
-    # durable index. Two inputs: a second plain append into the same
-    # index_dir, and the generation sink over a leftover UNCOMMITTED
-    # gen=0 (a crashed earlier run) that it then commits and serves.
+def test_ivf_append_reused_index_dir_is_cleared(
+    spark, tmp_path, skewed_embeddings
+):
+    # the per-batch store writes are mode(append), so a sink run into a
+    # directory that already holds a store must start it afresh at
+    # batch 0 — otherwise every row is silently duplicated, an earlier
+    # run's newer generation is served, or the commit of generation 0
+    # fails. Inputs: a second plain append into the same index_dir; an
+    # append over a crashed earlier run's UNCOMMITTED gen=0; a 30-vector
+    # append over an earlier run that rebuilt to a later generation
+    # (caller's GC done); two durable SemDeDup runs into one history_dir
+    from geneticalgorithmsusingmapreduce_spark.operators import ann
+    from geneticalgorithmsusingmapreduce_spark.sources import store
     from geneticalgorithmsusingmapreduce_spark.sources.registry import (
         read_table,
     )
     from geneticalgorithmsusingmapreduce_spark.streaming import (
         ivf_append,
         ivf_rebuild,
+        semdedup as sd_stream,
     )
 
     emb = read_table(spark, SF, "embeddings")
     n = emb.count()
-    for sink in ("append", "append_gen"):
-        d = str(tmp_path / sink)
-        stale = d if sink == "append" else f"{d}/gen=0"
+
+    def append(d, vecs):
         st = ivf_append.start_ivf_append(
-            spark, emb, stale, n_batches=2, n_centroids=4, iters=1
+            spark, vecs, d, n_batches=2, n_centroids=4, iters=1
         )
         assert st.batches_done == 2
-        assert spark.read.parquet(f"{stale}/postings8").count() == n
-        if sink == "append":
-            st2 = ivf_append.start_ivf_append(
-                spark, emb, d, n_batches=2, n_centroids=4, iters=1
-            )
-            postings = spark.read.parquet(f"{d}/postings8")
-        else:
-            st2 = ivf_rebuild.start_ivf_append_gen(
-                spark, emb, d, n_batches=2, n_centroids=4, iters=1,
-                rebuild_skew=None,
-            )
-            assert ivf_rebuild.committed_generations(spark, d) == [0]
-            _, postings = ivf_rebuild.read_serve_tables(spark, d)
-        assert st2.batches_done == 2
-        ids = [r.vec_id for r in postings.select("vec_id").collect()]
-        assert len(ids) == n, sink  # not 2n
-        assert len(set(ids)) == n, sink
+        assert store.committed_generations(spark, d) == [0]
+        _, postings = ivf_rebuild.read_serve_tables(spark, d)
+        return [r.vec_id for r in postings.select("vec_id").collect()]
+
+    d = str(tmp_path / "append")
+    for _run in range(2):
+        ids = append(d, emb)
+        assert len(ids) == n and len(set(ids)) == n  # not 2n
+
+    d = str(tmp_path / "uncommitted")
+    ivf_rebuild.write_generation(
+        spark, emb, d, 0, ann.train_centroid_rows(emb, 4, 0)[0]
+    )
+    ids = append(d, emb)
+    assert len(ids) == n and len(set(ids)) == n
+
+    d = str(tmp_path / "rebuilt")
+    st = ivf_append.start_ivf_append(
+        spark, skewed_embeddings, d, n_batches=3, n_centroids=4, iters=2,
+        rebuild_skew=1.5,
+    )
+    assert st.gen >= 1, st.history
+    for gen in st.pending_gc:
+        store.delete_generation(spark, d, gen)
+    ids = append(d, emb.filter(F.col("vec_id") < 30))
+    assert sorted(ids) == list(range(30))
+
+    d = str(tmp_path / "semdedup")
+    aug = ann.augmented_embeddings(spark, SF)
+    runs = []
+    for _run in range(2):
+        sd_stream.start_streaming_semdedup_durable(spark, aug, d, n_batches=3)
+        runs.append(
+            [tuple(r) for r in sd_stream.durable_results(spark, d).collect()]
+        )
+        assert store.committed_generations(spark, d) == [0]
+    assert runs[0] and len(set(runs[1])) == len(runs[1])
+    assert set(runs[1]) == set(runs[0])
 
 
 def test_ivf_append_compaction_reduces_files_content_invariant(
@@ -378,7 +405,7 @@ def test_ivf_append_compaction_reduces_files_content_invariant(
     # of fragmented lists AND leave the serve output bit-identical to
     # the uncompacted ingest
     from geneticalgorithmsusingmapreduce_spark.operators import ann
-    from geneticalgorithmsusingmapreduce_spark.sources import layout
+    from geneticalgorithmsusingmapreduce_spark.sources import store
     from geneticalgorithmsusingmapreduce_spark.sources.registry import (
         read_table,
     )
@@ -397,12 +424,12 @@ def test_ivf_append_compaction_reduces_files_content_invariant(
     assert st.compactions, "threshold never tripped at 3 batches"
     for _cid, before, after in st.compactions:
         assert after < before
-    plain_files = layout.layout_file_stats(f"{plain_d}/postings8")["files"]
-    comp_files = layout.layout_file_stats(f"{comp_d}/postings8")["files"]
+    plain_files = store.data_stats(f"{plain_d}/gen=0/postings8")["files"]
+    comp_files = store.data_stats(f"{comp_d}/gen=0/postings8")["files"]
     assert comp_files < plain_files
 
     def serve(d):
-        cents, p = ivf_rebuild.read_index_tables(spark, d)
+        cents, p = ivf_rebuild.read_serve_tables(spark, d)
         return {
             tuple(r) for r in ann.ivf_serve_topk_int8(p, cents).collect()
         }
@@ -493,70 +520,48 @@ def test_streaming_semdedup_durable_matches_static_pairs(spark, tmp_path):
         st.history[1]["store_bytes_total"]
         < st.history[2]["store_bytes_total"]
     )
-    from geneticalgorithmsusingmapreduce_spark.streaming import (
-        ivf_rebuild as gens,
-    )
+    from geneticalgorithmsusingmapreduce_spark.sources import store
 
-    assert gens.committed_generations(spark, d) == [0]
+    assert store.committed_generations(spark, d) == [0]
 
 
-def test_read_probed_cells_prunes_unprobed_dirs(spark, tmp_path):
-    # the pruning pin (r11 VERDICT #1 "unprobed cells are not read"):
-    # with cells {0,1,2} on disk and probes {0,2}, the read must list
-    # only the probed directories' files — by construction, not by
-    # planner pushdown
-    from geneticalgorithmsusingmapreduce_spark.streaming import (
-        semdedup as sd_stream,
-    )
-
-    base = str(tmp_path / "assign")
-    df = spark.createDataFrame(
-        [(i, i % 3, [i, i + 1], 5) for i in range(30)],
-        "vec_id long, cent_id long, qv array<long>, n2 long",
-    )
-    df.write.partitionBy("cent_id").parquet(base)
-    hist, nbytes, n_live = sd_stream.read_probed_cells(spark, base, [0, 2])
-    assert n_live == 2 and nbytes > 0
-    files = hist.inputFiles()
-    assert files, "probed read must see the probed cells' files"
-    assert all("cent_id=0" in f or "cent_id=2" in f for f in files)
-    assert not any("cent_id=1" in f for f in files)
-    got = {(r.vec_id, r.cent_id) for r in hist.collect()}
-    assert got == {(i, i % 3) for i in range(30) if i % 3 != 1}
-    # probing only missing cells reads nothing at all
-    none, zero, live0 = sd_stream.read_probed_cells(spark, base, [99])
-    assert none is None and zero == 0 and live0 == 0
-
-
-def test_read_band_cells_prunes_unlisted_dirs(spark, tmp_path):
-    # the banded generalization of the probed-cell pin: with bands
-    # {0, 1} x cells {0, 1, 2} on disk and a plan of
-    # [(0, 0), (1, 2)], the read must list ONLY those two directories
-    from geneticalgorithmsusingmapreduce_spark.streaming import (
-        semdedup as sd_stream,
-    )
+@pytest.mark.parametrize(
+    "keys", [("cent_id",), ("batch", "cent_id")],
+    ids=["one-level", "two-level"],
+)
+def test_read_dirs_prunes_unlisted_dirs(spark, tmp_path, keys):
+    # the pruning pin: with every (batch, cell) directory on disk and a
+    # plan listing two of them, the read lists ONLY those directories'
+    # files — by construction, not by planner pushdown — in a one-level
+    # (cent_id) and a two-level (batch, cent_id) layout
+    from geneticalgorithmsusingmapreduce_spark.sources import store
 
     base = str(tmp_path / "assign")
     df = spark.createDataFrame(
         [(i, i % 2, i % 3, [i, i + 1], 5) for i in range(30)],
         "vec_id long, batch long, cent_id long, qv array<long>, n2 long",
     )
-    df.write.partitionBy("batch", "cent_id").parquet(base)
-    hist, nbytes, n_live = sd_stream.read_band_cells(
-        spark, base, [(0, 0), (1, 2)], ["vec_id", "qv", "n2"]
+    df.select("vec_id", "qv", "n2", *keys).write.partitionBy(*keys).parquet(
+        base
+    )
+
+    def key(i):
+        return tuple({"batch": i % 2, "cent_id": i % 3}[k] for k in keys)
+
+    plan = [(0, 0), (1, 2)] if len(keys) == 2 else [(0,), (2,)]
+    dirs = ["/".join(f"{k}={v}" for k, v in zip(keys, p)) for p in plan]
+    hist, nbytes, n_live = store.read_dirs(
+        spark, base, dirs, ["vec_id", "qv", "n2"]
     )
     assert n_live == 2 and nbytes > 0
     files = hist.inputFiles()
     assert files
-    assert all(
-        ("batch=0/cent_id=0" in f) or ("batch=1/cent_id=2" in f)
-        for f in files
-    )
-    got = {(r.vec_id, r.batch, r.cent_id) for r in hist.collect()}
-    assert got == {
-        (i, i % 2, i % 3) for i in range(30)
-        if (i % 2, i % 3) in {(0, 0), (1, 2)}
-    }
+    assert all(any(f"/{d}/" in f for d in dirs) for f in files), files
+    got = {(r.vec_id, *(r[k] for k in keys)) for r in hist.collect()}
+    assert got == {(i, *key(i)) for i in range(30) if key(i) in plan}
+    # listing only missing directories reads nothing at all
+    missing = ["/".join(f"{k}=99" for k in keys)]
+    assert store.read_dirs(spark, base, missing, ["vec_id"]) == (None, 0, 0)
 
 
 def test_zone_plan_skips_only_unreachable_bands(spark):
@@ -627,8 +632,9 @@ def test_durable_rebuild_lifecycle_keeps_attribution(spark, tmp_path):
     # rebuild keeps its found_batch attribution, (c) the stream keeps
     # finding cross-batch pairs after the swap
     from geneticalgorithmsusingmapreduce_spark.operators import ann
+    from geneticalgorithmsusingmapreduce_spark.sources import store
     from geneticalgorithmsusingmapreduce_spark.streaming import (
-        ivf_rebuild as gens, semdedup as sd_stream,
+        semdedup as sd_stream,
     )
 
     aug = ann.augmented_embeddings(spark, SF)
@@ -637,7 +643,7 @@ def test_durable_rebuild_lifecycle_keeps_attribution(spark, tmp_path):
         spark, aug, d, n_batches=3, rebuild_hot_frac=0.0,
     )
     assert st.rebuilds and st.rebuilds[0][0] == 0
-    assert gens.committed_generations(spark, d)[-1] == st.gen >= 1
+    assert store.committed_generations(spark, d)[-1] == st.gen >= 1
     assert st.gen == st.history[-1]["gen"]
     res = {
         (r.vec_a, r.vec_b): r.found_batch
