@@ -890,14 +890,11 @@ def sga_tournament(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame window aggregation — skinny-shuffled (the windows sort
     (id, fitness, skey) only; winner genomes hash-join back by id —
     operators/selection module doc). The lookup side is the
-    BUCKET-STORED generation (r9): _pop_genomes_unique written once as
-    a bucketed table on id — genome bytes cross no exchange AND the
+    bucket-stored generation: _pop_genomes_unique written once as a
+    bucketed table on id, so genome bytes cross no exchange and the
     bucketed scan feeds the join-back directly (zero exchange on the
-    lookup side too; the r8 dedup-then-derive shape still paid a
-    bare-id distinct exchange + a second in-plan genome derivation).
-    Plan pinned in tests/test_plans.py::test_tournament_genome_side_zero_exchange;
-    sf0.1 probe: 8.21 s → 3.84 s total including the store write
-    (tools/probe_bucket_store.py)."""
+    lookup side too). Plan pinned in
+    tests/test_plans.py::test_tournament_genome_side_zero_exchange."""
     sh = shuffle_ops.with_shuffle_key(
         _pop_with_fitness(spark, sf_dir), SEED * 1_000_033, n_buckets=32
     )

@@ -45,31 +45,10 @@ def with_fitness(
     return df.withColumn("fitness", fitness_col(genome, nl))
 
 
-def fitness_duckdb_sql(genome: str = "genome") -> str:
-    return bits.popcount_sql(genome, "duckdb")
-
-
 def best_individual(df: DataFrame) -> DataFrame:
     """A1+A2: one-row DataFrame (best_fitness, best_genome). Partial max
     happens map-side automatically (no side files, no driver fold)."""
     return df.agg(
         F.max("fitness").alias("best_fitness"),
         F.max_by("genome", "fitness").alias("best_genome"),
-    )
-
-
-def best_fitness_value(df: DataFrame) -> int:
-    """Driver-side scalar for the SGA stop rule (P7,
-    ``reference src/edu/illinois/ga/MapReduce.java:433-434``)."""
-    return best_individual(df).collect()[0]["best_fitness"]
-
-
-def grouped_best(df: DataFrame, *group_cols: str) -> DataFrame:
-    """Grouped variant (engine extension used by the flagship query):
-    per-group max fitness + argmax genome."""
-    return df.groupBy(*group_cols).agg(
-        F.max("fitness").alias("best_fitness"),
-        F.max_by("genome", "fitness").alias("best_genome"),
-        F.count(F.lit(1)).alias("pop"),
-        F.avg("fitness").alias("avg_fitness"),
     )

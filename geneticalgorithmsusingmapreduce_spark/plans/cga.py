@@ -19,6 +19,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
+from .. import runtime
 from ..operators import cga, generate
 
 
@@ -91,24 +92,29 @@ def run_cga(
     max_generations: int = 200,
     pop: int | None = None,
     bits_per_split: int = cga.BITS_PER_SPLIT,
-    checkpoint_every: int = 2,
     check_every: int = 1,
     verbose: bool = True,
 ) -> CgaResult:
     """Iterative cGA. Note the model update is *deterministic* given the
     seed — each generation folds the iteration index into its stream.
 
-    Driver-overhead policy (the model is tiny per generation — at 1,000
-    bits each Spark job is ~all scheduling): the only per-generation job
-    that the algorithm *requires* is the T-row (winner, loser, best) agg —
-    the next update depends on it. That job also materializes the previous
-    update's persisted model as a side effect, so steady state is ONE job
-    per generation. The convergence stats collect runs every `check_every`
-    generations (the reference checks every generation — identical stop
-    semantics, just coarser polling: a converged model stays converged
-    under further updates' outward drift, and we only ever stop on a read
-    of 0). Lineage is truncated by a *lazy* localCheckpoint every
-    `checkpoint_every` generations riding whichever job materializes it."""
+    Per generation the loop runs the T-row (winner, loser, best) agg
+    collect — the one job the algorithm requires, since the next update
+    depends on it — and, every `check_every` generations (and on the
+    last), the convergence stats collect over the updated model. The
+    reference checks every generation; coarser polling keeps its stop
+    semantics, because a converged model stays converged under further
+    updates' outward drift and the loop only stops on a read of 0. So a
+    generation is two Spark jobs with ``check_every=1`` (a traced
+    perfbench ``cga_converge`` run reads 2.0 jobs per generation) and
+    one job on the generations that skip the check.
+
+    Each updated model is a lazy ``localCheckpoint`` (a projection with
+    no join, so there are no join statistics to compound): the first
+    collect that reads it materialises its blocks and cuts the lineage.
+    A model's blocks are freed with ``runtime.free_checkpoint`` (an
+    unpersist frees nothing of a checkpoint) once that first read of its
+    successor has run, and the last models are freed on return."""
     if pop is None:
         pop = reference_pop_size(num_splits, bits_per_split)
     res = CgaResult()
@@ -117,9 +123,8 @@ def run_cga(
     parts = max(1, -(-num_splits * bits_per_split // 65_536))
     vectors = generate.init_prob_vectors(
         spark, num_splits, bits_per_split, num_partitions=parts
-    )
-    vectors = vectors.persist()
-    vectors.count()
+    ).localCheckpoint(eager=False)
+    prev = None  # the model `vectors` was computed from, until it is read
     try:
         for it in range(max_generations):
             t0 = time.perf_counter()
@@ -127,16 +132,20 @@ def run_cga(
             samples = cga.sample_members(vectors, t_size, gen_seed)
             fits = cga.member_fitness(samples)
             w, l, best = cga.winner_loser_best(fits)
-            new_vectors = cga.update_vectors(vectors, w, l, gen_seed, pop)
-            if (it + 1) % checkpoint_every == 0:
-                new_vectors = new_vectors.localCheckpoint(eager=False)
-            new_vectors = new_vectors.persist()
+            if prev is not None:
+                runtime.free_checkpoint(prev)
+            prev = vectors
+            vectors = cga.update_vectors(
+                vectors, w, l, gen_seed, pop
+            ).localCheckpoint(eager=False)
             unconv = -1
             if (it + 1) % check_every == 0 or it == max_generations - 1:
                 unconv = (
-                    cga.convergence_stats(new_vectors).collect()[0].unconverged
+                    cga.convergence_stats(vectors).collect()[0].unconverged
                 )
                 res.final_unconverged = unconv
+                runtime.free_checkpoint(prev)
+                prev = None
             ms = int((time.perf_counter() - t0) * 1000)
             res.stats.append(CgaGenStats(it, best, unconv, ms))
             if verbose:
@@ -144,12 +153,12 @@ def run_cga(
                     f"CGA:{it}:{pop}:{best}:{num_splits * bits_per_split}:"
                     f"{bits_per_split}:{unconv}:{ms}"
                 )
-            vectors.unpersist()
-            vectors = new_vectors
             res.generations = it
             if unconv == 0:
                 res.converged = True
                 break
     finally:
-        vectors.unpersist()
+        for df in (prev, vectors):
+            if df is not None:
+                runtime.free_checkpoint(df)
     return res

@@ -44,9 +44,11 @@ def build_session(
     spark.io.compression.codec — a SparkConf setting that cannot be
     changed on a live session).
 
-    Codec policy (r6 VERDICT #4, decided by tools/ab_codec.py —
-    strictly-alternating same-box A/B at sf0.1 and sf10, BASELINE.md
-    r7): lz4 STAYS the default. zstd showed no wall-clock win while
+    Codec policy (a strictly alternating same-box A/B at sf0.1 and
+    sf10, BASELINE.md; re-run it with ``python tools/time_entry.py
+    --ab spark.io.compression.codec=lz4,zstd word_counts
+    dedup_minhash_lsh_capped corpus_curation_neardup``): lz4 STAYS the
+    default. zstd showed no wall-clock win while
     shuffles fit in page cache — up to ~16% slower on shuffle-heavy
     text entries at sf10 (compression CPU in the task path) vs ~12%
     faster on two scan-bound ones, i.e. noise-band overall. Its ~2×
@@ -74,19 +76,18 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         # the reference enables speculative execution on every job
         # (reference src/edu/illinois/ga/MapReduce.java:281, CGA.java:341)
-        # to mask straggler tasks; same knob, Spark spelling. r14
-        # CORRECTION to the long-standing comment here ("no effect in
-        # local mode"): it measurably DOES have an effect in local mode,
-        # and a purely harmful one — the speculation checker re-enqueues
+        # to mask straggler tasks; same knob, Spark spelling. In local
+        # mode it is purely harmful: the speculation checker re-enqueues
         # copies of sub-ms tasks onto the SAME cores (there is no other
         # node to mask), measured at +0.5-0.9 s of scheduler churn on a
-        # trivial one-exchange agg (1.6-2.4 s → 0.76-0.97 s with it off;
-        # tools/ab_speculation_r14.py) — a fixed tax on every job of
-        # every entry. This factory always builds local[N] sessions, so
-        # the default here is OFF; a cluster deployment (where the knob
-        # belongs, per the reference) re-enables it with
-        # SPARK_GRAFT_SPECULATION=1 — parameterized, not hardcoded, per
-        # the scale-dependent-settings rule.
+        # trivial one-exchange agg (1.6-2.4 s → 0.76-0.97 s with it off)
+        # — a fixed tax on every job of every entry. Re-run the A/B on
+        # a one-exchange entry with ``python tools/time_entry.py --ab
+        # spark.speculation=false,true orders_by_month``. This factory
+        # always builds local[N] sessions, so the default here is OFF; a
+        # cluster deployment (where the knob belongs, per the reference)
+        # re-enables it with SPARK_GRAFT_SPECULATION=1 — parameterized,
+        # not hardcoded, per the scale-dependent-settings rule.
         .config(
             "spark.speculation",
             {"1": "true", "0": "false"}.get(

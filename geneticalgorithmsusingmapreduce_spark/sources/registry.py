@@ -74,13 +74,6 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        p = table_path(sf_dir, t)
-        if os.path.exists(p):
-            read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def write_table(
     df: DataFrame, path: str, fmt: str = "parquet", **options
 ) -> None:

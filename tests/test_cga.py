@@ -4,7 +4,9 @@ must leave the [0.1, 0.501]·MAX band (unConverged → 0,
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+from test_runtime_persists import _stored_rdds
 
 from geneticalgorithmsusingmapreduce_spark.operators import cga, generate
 from geneticalgorithmsusingmapreduce_spark.plans import cga as cga_plan
@@ -58,3 +60,15 @@ def test_run_cga_converges(spark):
     # unconverged trend: start high (band contains p=0.5), end at zero
     assert res.stats[0].unconverged > 0
     assert res.stats[-1].unconverged == 0
+
+
+@pytest.mark.parametrize("check_every", [1, 4])
+def test_run_cga_frees_its_checkpoints(spark, check_every):
+    # every generation's model is a local checkpoint: unpersist() frees
+    # none of its blocks, so the loop must release each one itself
+    pre = _stored_rdds(spark)
+    cga_plan.run_cga(
+        spark, 4, t_size=4, seed=7, max_generations=12, pop=10,
+        bits_per_split=16, check_every=check_every, verbose=False,
+    )
+    assert not (_stored_rdds(spark) - pre), "run_cga left stored RDDs"

@@ -19,13 +19,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from geneticalgorithmsusingmapreduce_spark import catalog  # noqa: E402
 from geneticalgorithmsusingmapreduce_spark.session import build_session  # noqa: E402
+from tools.time_entry import time_entry  # noqa: E402
 
 DEFAULT_ENTRIES = [
     # dedup / LSH / cluster / curation
@@ -43,31 +43,11 @@ DEFAULT_ENTRIES = [
 ]
 
 
-def time_entry(spark, fn, sf_dir: str, runs: int | None = None) -> float:
-    if runs is None:
-        runs = int(os.environ.get("SCALE_BENCH_RUNS", "3"))
-    best = float("inf")
-    for _ in range(runs):
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-        # shuffle files of a finished run are only deleted once the
-        # driver GCs the plan objects (ContextCleaner is weak-ref
-        # driven) — at sf100 three runs of one heavy entry accumulated
-        # >39 GB of dead spill and filled the disk. Drop the Python
-        # refs, then force a JVM GC so the cleaner fires between runs.
-        import gc
-
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-    return round(best, 4)
-
-
 def main() -> None:
     small = os.environ.get("SMALL_SF_DIR", "/root/testdata/sf0.1")
     big = os.environ.get("BIG_SF_DIR", f"{REPO}/.localdata/sf1")
     names = sys.argv[1:] or DEFAULT_ENTRIES
+    runs = int(os.environ.get("SCALE_BENCH_RUNS", "3"))
     # SCALE_BENCH_CONF="k=v,k=v" reaches create-time-only core confs
     # (spark.io.compression.codec=zstd keeps the widest text shuffles
     # inside a laptop-sized spill budget at the sf100 decade).
@@ -83,8 +63,8 @@ def main() -> None:
         fn = catalog.QUERIES[name]
         # process-level artifact caches (centroids, near-dup pairs) are
         # per-sf_dir keyed, so both scales train/build their own
-        s = time_entry(spark, fn, small)
-        b = time_entry(spark, fn, big)
+        s = time_entry(spark, fn, small, runs)
+        b = time_entry(spark, fn, big, runs)
         row = {
             "name": name, "small_sec": s, "big_sec": b,
             "ratio": round(b / s, 2) if s > 0 else None,
