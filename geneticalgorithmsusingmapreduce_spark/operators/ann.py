@@ -263,6 +263,12 @@ N_CENTROIDS = 8
 N_PROBES = 2
 
 
+# Every training set is at most this many rows per codeword: the bound
+# FAISS's k-means trains on (max_points_per_centroid, Johnson, Douze and
+# Jégou, "Billion-scale similarity search with GPUs").
+MAX_POINTS_PER_CODE = 256
+
+
 def _nearest_codes(xm, cb):
     """(N, G) index of the nearest codeword per S-wide slice g of the
     (N, G·S) int64 matrix ``xm`` among the K rows of ``cb[g]`` (cb is
@@ -278,103 +284,72 @@ def _nearest_codes(xm, cb):
     ])
 
 
-def _lloyd_partials(matrix, cb, compute_inertia: bool):
-    """mapInArrow kernel of one Lloyd's iteration: per Arrow batch, the
-    int64 matrix ``matrix(batch)`` is assigned to ``cb``'s codewords
-    (_nearest_codes) and folded by a sort + np.add.reduceat (exact
-    int64, order-free) into one row per non-empty (g, code): [g, code,
-    cnt, sums, inert], inert being the batch's Σ|x − c|² (zero unless
-    ``compute_inertia``)."""
-    import numpy as np
-
-    s = cb.shape[2]
-
-    def partials(batches):
-        for b in batches:
-            if not b.num_rows:
-                continue
-            xm = matrix(b)
-            best = _nearest_codes(xm, cb)
-            out = {"g": [], "code": [], "cnt": [], "sums": [], "inert": []}
-            for g in range(len(cb)):
-                xs, bg, cm = xm[:, g * s:(g + 1) * s], best[:, g], cb[g]
-                order = np.argsort(bg, kind="stable")
-                ub, starts = np.unique(bg[order], return_index=True)
-                out["g"].append(np.full(len(ub), g, np.int32))
-                out["code"].append(ub.astype(np.int32))
-                out["cnt"].append(np.diff(np.append(starts, len(order))))
-                out["sums"].append(np.add.reduceat(xs[order], starts, axis=0))
-                inert = np.zeros(len(ub), np.int64)
-                if compute_inertia:
-                    # |x|² − (2x·c − |c|²) per row, one int64 gather-dot
-                    d2 = (xs * xs).sum(axis=1) - (
-                        2 * np.einsum("ij,ij->i", xs, cm[bg])
-                        - (cm * cm).sum(axis=1)[bg]
-                    )
-                    inert = np.add.reduceat(d2[order], starts)
-                out["inert"].append(inert)
-            cols = {k: np.concatenate(v) for k, v in out.items()}
-            cols["sums"] = _bits.arrow_list_column(cols["sums"])
-            yield pa.RecordBatch.from_pydict(cols)
-
-    return partials
+def _training_keys(k: int, seed_by_rank: bool) -> list:
+    """Sort keys of the training set of a K-codeword model: the seeded
+    xxhash64 of vec_id, then vec_id; for the vec_id < K seed rule the
+    seed rows sort first, so they are always in the set."""
+    keys = [F.expr(prng.spark_hash("vec_id")), F.col("vec_id")]
+    return keys if seed_by_rank else [F.col("vec_id") >= k] + keys
 
 
 def _lloyd(
-    src: DataFrame, seed_src: DataFrame, matrix, groups: int, iters: int,
-    compute_inertia: bool = False,
+    src: DataFrame, matrix, k: int, groups: int, iters: int,
+    compute_inertia: bool = False, seed_by_rank: bool = False,
 ):
     """The one Lloyd's loop behind the IVF and PQ trainers: G groups of
     K codewords over S-wide slices (S = D/G) of the (N, D) int64 matrix
-    ``matrix(batch)`` maps an Arrow batch to. Seeds are ``seed_src``'s
-    rows (K of them, in vec_id order), sliced into G groups. Per
-    iteration ONE action: a mapInArrow pass (_lloyd_partials) emits
-    per-(g, code) partial sums, posexplode + a grouped SUM keyed on (g,
-    code, pos) folds them with map-side combine, and exactly G·K·S
-    scalars reach the driver — the model itself, which the next
-    iteration's closure must carry anyway (a driver fold of the partial
-    rows would grow as tasks × K). Each (g, pos) group sees every
-    batch's partial once, so SUM(cnt) and SUM(inert) per group are the
-    per-code totals. The update is the mean rounded half up: exact int64
-    sum → one IEEE double divide → floor(· + 0.5), op for op the DuckDB
-    replays (_duck_kmeans_ctes, _duck_pq_ctes); an empty code keeps its
-    codeword. Returns (seed vec_ids, (G, K, S) codebook, inertia per
-    iteration — empty unless ``compute_inertia``)."""
+    ``matrix(batch)`` maps an Arrow batch to.
+
+    One Spark job: the training set, at most MAX_POINTS_PER_CODE·K rows
+    of ``src`` in _training_keys order, reaches the driver in one
+    toArrow, and every iteration runs there on a model of K·D integers.
+    Seeds are its rows with vec_id < K, or with ``seed_by_rank`` its K
+    smallest vec_ids, in vec_id order, sliced into G groups. An input of
+    at most that many rows is its own training set. Per iteration each
+    row goes to its nearest codeword (_nearest_codes); per-code sums are
+    exact int64 (a sort + np.add.reduceat); the update is the mean
+    rounded half up, sum → one IEEE double divide → floor(· + 0.5), op
+    for op the DuckDB replays (_duck_kmeans_ctes, _duck_pq_ctes); an
+    empty code keeps its codeword. Returns (seed vec_ids, (G, K, S)
+    codebook, inertia over the training set per iteration — empty
+    unless ``compute_inertia``)."""
     import numpy as np
 
-    seeds = seed_src.toArrow().sort_by("vec_id")
-    x0 = matrix(seeds)  # (K, D)
-    k, d = x0.shape
-    cb = x0.reshape(k, groups, d // groups).transpose(1, 0, 2).copy()
+    t = (
+        src.orderBy(*_training_keys(k, seed_by_rank))
+        .limit(MAX_POINTS_PER_CODE * k)
+        .toArrow()
+    )
+    ids = t.column("vec_id").to_numpy()
+    by_id = np.argsort(ids, kind="stable")
+    seeds = by_id[:k] if seed_by_rank else by_id[ids[by_id] < k]
+    xm = matrix(t)  # (N, D)
+    s = xm.shape[1] // groups
+    cb = xm[seeds].reshape(len(seeds), groups, s).transpose(1, 0, 2).copy()
     history: list[float] = []
     for _ in range(iters):
-        rows = (
-            src.mapInArrow(
-                _lloyd_partials(matrix, cb, compute_inertia),
-                schema="g int, code int, cnt long, sums array<long>, "
-                "inert long",
-            )
-            .select(
-                "g", "code", "cnt", "inert",
-                F.posexplode("sums").alias("pos", "s"),
-            )
-            .groupBy("g", "code", "pos")
-            .agg(
-                F.sum("s").alias("s"), F.sum("cnt").alias("cnt"),
-                F.sum("inert").alias("inert"),
-            )
-            .collect()
-        )
+        best = _nearest_codes(xm, cb)
         sums = np.zeros_like(cb)
         cnt = np.zeros(cb.shape[:2], dtype=np.int64)
-        for r in rows:
-            sums[r.g, r.code, r.pos] = r.s
-            cnt[r.g, r.code] = r.cnt
+        inert = 0
+        for g in range(groups):
+            xs, bg, cm = xm[:, g * s:(g + 1) * s], best[:, g], cb[g]
+            order = np.argsort(bg, kind="stable")
+            codes, starts = np.unique(bg[order], return_index=True)
+            sums[g, codes] = np.add.reduceat(xs[order], starts, axis=0)
+            cnt[g] = np.bincount(bg, minlength=len(cm))
+            if compute_inertia:
+                # |x|² − (2x·c − |c|²) per row, summed per code in int64
+                d2 = (xs * xs).sum(axis=1) - (
+                    2 * np.einsum("ij,ij->i", xs, cm[bg])
+                    - (cm * cm).sum(axis=1)[bg]
+                )
+                inert += sum(map(int, np.add.reduceat(d2[order], starts)))
         if compute_inertia:
-            history.append(float(sum(r.inert for r in rows if r.pos == 0)))
+            history.append(float(inert))
         mean = np.floor(sums / np.maximum(cnt, 1)[..., None] + 0.5)
         cb = np.where(cnt[..., None] > 0, mean.astype(np.int64), cb)
-    return seeds.column("vec_id").to_numpy(), cb, history
+    return ids[seeds], cb, history
 
 
 def _quantized(b):
@@ -389,24 +364,19 @@ def train_centroid_rows(
 ):
     """Lloyd's k-means over the quantized vectors — the training step
     that turns ivf_topk's deterministic seed centroids into real ones:
-    _lloyd with one group over all D dimensions. Seeds are the first C
-    quantized vectors (vec_id < C), or with ``seed_by_rank`` the C
-    smallest vec_ids, which a slice whose ids are not dense from 0
-    needs (the duck replay's train_filter branch matches). Returns
-    ``(rows, history)``: rows is the LOCAL model ``[(cent_id, [D
-    ints]), ...]`` (session-independent plain rows, so callers cache
-    them; centroid_frame makes them a DataFrame) and history the
-    inertia per iteration, which the tests pin as non-increasing.
-
-    At 100 TB you'd train on a sample (`emb.sample(...)`) — assignment
-    cost is the same one-scan shape ivf_topk pays once."""
-    src = emb.select("vec_id", "embedding")
-    seed_src = (
-        src.orderBy("vec_id").limit(n_centroids) if seed_by_rank
-        else src.filter(F.col("vec_id") < n_centroids)
-    )
+    _lloyd with one group over all D dimensions, on a training set of at
+    most MAX_POINTS_PER_CODE·C vectors (the whole input below that).
+    Seeds are the first C quantized vectors (vec_id < C), or with
+    ``seed_by_rank`` the C smallest vec_ids of the training set, which a
+    slice whose ids are not dense from 0 needs (the duck replay's
+    train_filter branch matches). Returns ``(rows, history)``: rows is
+    the LOCAL model ``[(cent_id, [D ints]), ...]`` (session-independent
+    plain rows, so callers cache them; centroid_frame makes them a
+    DataFrame) and history the inertia over the training set per
+    iteration, which the tests pin as non-increasing."""
     ids, cb, history = _lloyd(
-        src, seed_src, _quantized, 1, iters, compute_inertia
+        emb.select("vec_id", "embedding"), _quantized, n_centroids, 1,
+        iters, compute_inertia, seed_by_rank,
     )
     return [(int(c), cv.tolist()) for c, cv in zip(ids, cb[0])], history
 
@@ -638,41 +608,58 @@ def _duck_asgn_cte(cents: str) -> str:
     )
 
 
+def _duck_training_cte(
+    name: str, src: str, cols: str, k: int, seed_by_rank: bool
+) -> str:
+    """``name`` [``cols``]: the training set _lloyd collects for a
+    K-codeword model from the relation ``src``, ordered as
+    _training_keys (prng.duck_hash_query replays Spark's xxhash64 of
+    vec_id) and cut to MAX_POINTS_PER_CODE·K rows. MATERIALIZED, so
+    the hash chain runs once, not once per iteration that reads it."""
+    keys = "h, vec_id" if seed_by_rank else f"vec_id >= {k}, h, vec_id"
+    hashed = prng.duck_hash_query(f"SELECT {cols} FROM {src}", ["vec_id"], "h")
+    return (
+        f"{name} AS MATERIALIZED (SELECT {cols} FROM {hashed} _t "
+        f"ORDER BY {keys} LIMIT {MAX_POINTS_PER_CODE * k})"
+    )
+
+
 def _duck_kmeans_ctes(
     n_centroids: int = N_CENTROIDS, iters: int = 3,
     table: str = "embeddings",
     train_filter: str | None = None,
 ) -> tuple[list, str]:
     """Unrolled Lloyd's-training CTEs replaying train_centroid_rows
-    exactly: seed centroids = first C quantized vectors; per iteration
-    a min-distance assignment (argmax 2x·c − |c|², ties to the lowest
-    cent_id) and a per-dimension mean rounded half-up via exact int64
-    sums + one IEEE double divide + floor (the same arithmetic _lloyd
-    performs); empty clusters keep their previous centroid. Returns
-    (ctes, name-of-final-centroid-CTE); qz holds the quantized vectors.
+    exactly: the training set ``qzt`` is _lloyd's (_duck_training_cte)
+    and the seed centroids its first C quantized vectors (vec_id < C);
+    per iteration a min-distance assignment of qzt (argmax 2x·c − |c|²,
+    ties to the lowest cent_id) and a per-dimension mean rounded
+    half-up via exact int64 sums + one IEEE double divide + floor (the
+    same arithmetic _lloyd performs); empty clusters keep their previous
+    centroid. Returns (ctes, name-of-final-centroid-CTE); qz holds every
+    quantized vector, which assignment/serve CTEs built on top use.
 
     ``train_filter``: optional predicate restricting TRAINING to a
     slice of the table (the incremental-append replay: centroids are
     trained on the initial batch only, later batches are assigned to
-    them). Seeds become the C smallest vec_ids OF THE SLICE (rank, not
-    vec_id < C — the slice may not contain ids 0..C−1); assignment/
-    serve CTEs built on top keep using the full qz. Default (None)
-    emits the original byte-identical CTE chain."""
-    qzt = "qz"
+    them). The training set is then drawn from the slice, and the seeds
+    are its C smallest vec_ids (rank, not vec_id < C — the slice may
+    not contain ids 0..C−1): train_centroid_rows(seed_by_rank=True)."""
+    by_rank = train_filter is not None
     ctes = [
         f"qz AS (SELECT vec_id, {_duck_qlist('embedding')} AS qv "
         f"FROM {table})",
+        _duck_training_cte(
+            "qzt", f"qz WHERE {train_filter}" if by_rank else "qz",
+            "vec_id, qv", n_centroids, by_rank,
+        ),
     ]
-    if train_filter is None:
+    if not by_rank:
         ctes.append(
-            f"cents0 AS (SELECT vec_id AS cent_id, qv AS cv FROM qz "
+            f"cents0 AS (SELECT vec_id AS cent_id, qv AS cv FROM qzt "
             f"WHERE vec_id < {n_centroids})"
         )
     else:
-        qzt = "qzt"
-        ctes.append(
-            f"qzt AS (SELECT vec_id, qv FROM qz WHERE {train_filter})"
-        )
         ctes.append(
             f"cents0 AS (SELECT vec_id AS cent_id, qv AS cv FROM ("
             f"SELECT *, row_number() OVER (ORDER BY vec_id) AS srn "
@@ -684,7 +671,7 @@ def _duck_kmeans_ctes(
             f"sc{i} AS (SELECT v.vec_id, v.qv, c.cent_id, "
             f"2 * {_duck_ldot('v.qv', 'c.cv')} - "
             f"{_duck_ldot('c.cv', 'c.cv')} AS score "
-            f"FROM {qzt} v CROSS JOIN {prev} c)"
+            f"FROM qzt v CROSS JOIN {prev} c)"
         )
         ctes.append(
             f"ag{i} AS (SELECT vec_id, qv, cent_id FROM ("
@@ -962,9 +949,8 @@ def pq_train_codebook_rows(
     over the quantized vectors, seed codebook m = the m-th subvector of
     the first K quantized vectors. Returns [(sub, code, [SUB_DIMS
     ints]), ...]."""
-    src = emb.select("vec_id", "embedding")
     _, cb, _ = _lloyd(
-        src, src.filter(F.col("vec_id") < k_codes), _quantized, m_sub, iters
+        emb.select("vec_id", "embedding"), _quantized, k_codes, m_sub, iters
     )
     return _codebook_rows(cb)
 
@@ -983,10 +969,9 @@ def pq_train_codebook_rows_residual(
     the residual CTE). Input: ``assigned`` [vec_id, qv, cent_id] (one
     assignment pass, shared with encoding). Returns the same
     [(sub, code, [SUB_DIMS ints]), ...] shape."""
-    src = assigned.select("vec_id", "qv", "cent_id")
     _, cb, _ = _lloyd(
-        src, src.filter(F.col("vec_id") < k_codes),
-        _residuals(centroid_rows), m_sub, iters,
+        assigned.select("vec_id", "qv", "cent_id"),
+        _residuals(centroid_rows), k_codes, m_sub, iters,
     )
     return _codebook_rows(cb)
 
@@ -1217,8 +1202,10 @@ def _duck_pq_ctes(
 ) -> tuple[list, str]:
     """Unrolled per-subspace Lloyd's replaying pq_train_codebook_rows
     exactly (expects a ``src`` CTE with [vec_id, ``vcol``] in scope —
-    the plain replay trains on qz.qv, the residual replay on rz.rv).
-    Returns (ctes, final codebook CTE name). Codebook CTEs are AS
+    the plain replay trains on qz.qv, the residual replay on rz.rv):
+    the training set ``pqt`` is _lloyd's (_duck_training_cte) and the
+    seed codebook its first K vectors' subvectors. Returns (ctes, final
+    codebook CTE name). Codebook CTEs are AS
     MATERIALIZED — their cw list expressions are referenced
     per-component by the sub-dots, and DuckDB's default CTE inlining
     would substitute the whole training chain into every reference (the
@@ -1228,10 +1215,11 @@ def _duck_pq_ctes(
     sub_dims = DIMS // m_sub
     sd = _duck_subdot(f"v.{vcol}", "c.sub", "c.cw", sub_dims)
     ctes = [
+        _duck_training_cte("pqt", src, f"vec_id, {vcol}", k_codes, False),
         f"cb0 AS MATERIALIZED (SELECT r.m AS sub, vec_id AS code, "
         f"list_slice({vcol}, r.m * {sub_dims} + 1, r.m * {sub_dims} + {sub_dims}) AS cw "
-        f"FROM {src} CROSS JOIN range(0, {m_sub}) r(m) "
-        f"WHERE vec_id < {k_codes})"
+        f"FROM pqt CROSS JOIN range(0, {m_sub}) r(m) "
+        f"WHERE vec_id < {k_codes})",
     ]
     prev = "cb0"
     for i in range(1, iters + 1):
@@ -1240,14 +1228,14 @@ def _duck_pq_ctes(
             f"SELECT v.vec_id, c.sub, c.code, "
             f"row_number() OVER (PARTITION BY v.vec_id, c.sub "
             f"ORDER BY 2 * {sd} - {_duck_cwdot('c.cw', sub_dims)} DESC, c.code ASC) "
-            f"AS rn FROM {src} v CROSS JOIN {prev} c) _x WHERE rn = 1)"
+            f"AS rn FROM pqt v CROSS JOIN {prev} c) _x WHERE rn = 1)"
         )
         ctes.append(
             f"pqmn{i} AS (SELECT sub, code, list(v ORDER BY pos) AS cw "
             f"FROM (SELECT a.sub, a.code, r.j AS pos, "
             f"cast(floor(cast(sum(v.{vcol}[a.sub * {sub_dims} + r.j + 1]) "
             f"as double) / count(*) + 0.5) as bigint) AS v "
-            f"FROM pqag{i} a JOIN {src} v USING (vec_id) "
+            f"FROM pqag{i} a JOIN pqt v USING (vec_id) "
             f"CROSS JOIN range(0, {sub_dims}) r(j) "
             f"GROUP BY a.sub, a.code, r.j) _m GROUP BY sub, code)"
         )
@@ -1994,9 +1982,10 @@ def semantic_cluster_pairs(
     same-day decade 6.86× vs 16.52× flat-trained at 99.5% of flat's
     pairs, identical sf10 pair sets; the registered
     ``dedup_semantic_semdedup_sampled`` entry is this config).
-    ``train_mod=None`` (flat Lloyd's over every vector) is kept as the
-    LABELED BASELINE only — the emb_topk_dot convention — because its
-    n·C training term is quadratic-class at corpus scale.
+    ``train_mod=None`` (Lloyd's over up to MAX_POINTS_PER_CODE·C
+    vectors: every vector once centroids_for_count sizes C) is kept as
+    the LABELED BASELINE only — the emb_topk_dot convention — because
+    its n·C training term is quadratic-class at corpus scale.
 
     Differs from cosine_near_pairs (sign-LSH buckets) in recall shape:
     LSH buckets drop near pairs probabilistically per plane; the
@@ -2020,7 +2009,7 @@ def semantic_cluster_pairs(
     1.4e9 rows at the third decade even at √n-sized C — the dense
     block never materializes pairs that fail.
 
-    At 100 TB: one training pass (sample-able), one Arrow assignment
+    At 100 TB: one training collect (a bounded sample), one Arrow assignment
     kernel (n rows out, never the n·C crossJoin), ONE cent_id
     exchange, n·K/2 in-cluster dot evaluations all inside numpy. Size
     C with centroids_for_count (fixed target cluster size K → C grows
@@ -2289,7 +2278,7 @@ def cluster_balanced_sample(
     dense regions; an equal per-cluster quota flattens the semantic
     density profile.
 
-    Scale shape: one training pass (sample-able at 100 TB), one Arrow
+    Scale shape: one training collect (a bounded sample), one Arrow
     assignment kernel (n rows out, no n·C join), ONE exchange on
     cent_id + an in-partition window sort on the 64-bit hash — the
     same shape as doc_stratified_sample, with the hot-stratum salting

@@ -852,8 +852,8 @@ def _semdedup_final(
     is (final2, cut_docs) so the caller's LM stage scores CUT text."""
     from . import ann as ann_ops
 
-    # truncate, don't just persist: the semantic stage makes ~6 passes
-    # (seed collect, Lloyd's iterations, assignment, skew census, block
+    # truncate, don't just persist: the semantic stage makes several passes
+    # (training-set collect, assignment, skew census, block
     # sweep) over frames derived from `final`, and the containment
     # composition's logical plan is enormous — a cached-but-untruncated
     # lineage made EVERY pass pay ~7 s of Catalyst re-analysis at sf0.1

@@ -76,18 +76,16 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         # the reference enables speculative execution on every job
         # (reference src/edu/illinois/ga/MapReduce.java:281, CGA.java:341)
-        # to mask straggler tasks; same knob, Spark spelling. In local
-        # mode it is purely harmful: the speculation checker re-enqueues
-        # copies of sub-ms tasks onto the SAME cores (there is no other
-        # node to mask), measured at +0.5-0.9 s of scheduler churn on a
-        # trivial one-exchange agg (1.6-2.4 s → 0.76-0.97 s with it off)
-        # — a fixed tax on every job of every entry. Re-run the A/B on
-        # a one-exchange entry with ``python tools/time_entry.py --ab
-        # spark.speculation=false,true orders_by_month``. This factory
-        # always builds local[N] sessions, so the default here is OFF; a
-        # cluster deployment (where the knob belongs, per the reference)
-        # re-enables it with SPARK_GRAFT_SPECULATION=1 — parameterized,
-        # not hardcoded, per the scale-dependent-settings rule.
+        # to mask straggler tasks; same knob, Spark spelling. A local
+        # session has no second node to run a speculative copy on: the
+        # copy competes for the same cores as the task it shadows, so
+        # it cannot mask a straggler. It costs little either: ``python
+        # tools/time_entry.py --ab spark.speculation=false,true
+        # orders_by_month`` read B/A 0.972 (sf0.01, 4 cores), within
+        # noise. This factory always builds local[N] sessions, so the
+        # default here is OFF; a cluster deployment (where the knob
+        # belongs, per the reference) re-enables it with
+        # SPARK_GRAFT_SPECULATION=1.
         .config(
             "spark.speculation",
             {"1": "true", "0": "false"}.get(
@@ -96,7 +94,7 @@ def build_session(
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # one BLAS thread per Python worker: the float64 matmul kernels
-        # (Lloyd's partials, SemDeDup assignment/tiles) otherwise spawn
+        # (IVF assignment, SemDeDup assignment/tiles) otherwise spawn
         # an OpenBLAS pool of nproc threads in EACH of the 32 parallel
         # workers — 1,024 threads of pure oversubscription on a 32-core
         # box; task-level parallelism is already the outer loop

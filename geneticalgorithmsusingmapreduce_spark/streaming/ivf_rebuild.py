@@ -15,10 +15,12 @@ Layout:
     {index_dir}/gen={n}/postings8/    parquet [vec_id, v8, scale],
                                       partitionBy cent_id
 
-At 100 TB: the rebuild is one full scan + one cent_id-partitioned write
-(the same cost as the original build — unavoidable, that is what a
-re-train is), while serving never blocks: queries hitting generation N
-keep directory-level list pruning until the atomic flip to N+1.
+A rebuild is three Spark jobs: the training-set collect (at most
+``ann.MAX_POINTS_PER_CODE`` vectors per centroid; Lloyd's iterates on the
+driver), the centroid write and one full-scan cent_id-partitioned
+postings write (the same cost as the original build — unavoidable, that
+is what a re-encode is). Serving never blocks: queries hitting generation
+N keep directory-level list pruning until the atomic flip to N+1.
 """
 
 from __future__ import annotations

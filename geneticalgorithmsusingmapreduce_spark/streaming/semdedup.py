@@ -42,8 +42,9 @@ Two variants:
 * ``start_streaming_semdedup`` — in-memory cumulative history
   (checkpoint-rotated union). Correct, but the WHOLE history re-ships
   through the cent_id exchange every batch (ΣB ≈ B²/2 history-bytes
-  over B batches) and batch-0 training is flat Lloyd's over the full
-  batch (an n·C/3 term). Kept as the minimal-moving-parts form and the
+  over B batches) and batch-0 training is flat Lloyd's over the batch
+  (up to ann.MAX_POINTS_PER_CODE·C of its rows). Kept as the
+  minimal-moving-parts form and the
   ``streaming_semdedup`` gate entry.
 * ``start_streaming_semdedup_durable`` — the scale shape: history
   lives as (batch, cent_id)-PARTITIONED PARQUET inside a committed

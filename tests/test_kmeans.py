@@ -171,3 +171,89 @@ def test_pq_non_default_m_sub_slices_queries_correctly(spark):
             for m in range(m_sub)
         )
         assert r.adot == expect, (r.query_id, r.vec_id)
+
+
+# --- the bounded training set ---------------------------------------------
+
+def _sampled_corpus(spark, tmp_path, n=3_000):
+    """A seeded n × DIMS corpus above the K = 8 training bound
+    (MAX_POINTS_PER_CODE · 8 = 2,048 rows), written in shuffled vec_id
+    order, as a Spark frame and a DuckDB connection with the same
+    ``embeddings`` view."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(14)
+    x = rng.uniform(-1, 1, (n, ann.DIMS)).astype(np.float32)
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(pa.table({
+        "vec_id": pa.array(rng.permutation(n), pa.int64()),
+        "embedding": pa.ListArray.from_arrays(
+            pa.array(np.arange(0, (n + 1) * ann.DIMS, ann.DIMS, np.int32)),
+            pa.array(x.reshape(-1)),
+        ),
+    }), path)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')"
+    )
+    return spark.read.parquet(path), con
+
+
+def test_sampled_training_matches_duckdb_replay(spark, tmp_path):
+    # above MAX_POINTS_PER_CODE·K rows every trainer iterates on the
+    # seeded hash sample, and the DuckDB replays draw the same one: the
+    # final models and the inertia over the sample equal row for row
+    emb, con = _sampled_corpus(spark, tmp_path)
+    k, iters = 8, 3
+    limit = ann.MAX_POINTS_PER_CODE * k
+    sq = " + ".join(
+        f"(a.qv[{j}] - c.cv[{j}]) * (a.qv[{j}] - c.cv[{j}])"
+        for j in range(1, ann.DIMS + 1)
+    )
+    cases = {
+        "vec_id < C seeds": (emb, False, None),
+        "rank seeds": (emb, True, "TRUE"),
+        "train_filter slice": (
+            emb.filter("vec_id % 10 <> 3"), True, "vec_id % 10 <> 3",
+        ),
+    }
+    for name, (src, by_rank, train_filter) in cases.items():
+        rows, hist = ann.train_centroid_rows(
+            src, k, iters, seed_by_rank=by_rank
+        )
+        ctes, prev = ann._duck_kmeans_ctes(
+            k, iters, train_filter=train_filter
+        )
+        head = "WITH " + ",\n".join(ctes)
+        assert con.sql(f"{head} SELECT count(*) FROM qzt").fetchone() == (
+            limit,
+        ), name
+        want = con.sql(
+            f"{head} SELECT cent_id, cv FROM {prev} ORDER BY cent_id"
+        ).fetchall()
+        assert [(c, list(cv)) for c, cv in want] == sorted(rows), name
+        want_hist = [
+            float(con.sql(
+                f"{head} SELECT sum({sq}) FROM ag{i} a "
+                f"JOIN {'cents' + str(i - 1)} c USING (cent_id)"
+            ).fetchone()[0])
+            for i in range(1, iters + 1)
+        ]
+        assert hist == want_hist, name
+
+    m_sub, pq_iters = ann.M_SUB, 2
+    pq_ctes, cb = ann._duck_pq_ctes(m_sub, k, pq_iters)
+    qz = (
+        f"qz AS (SELECT vec_id, {ann._duck_qlist('embedding')} AS qv "
+        f"FROM embeddings)"
+    )
+    head = "WITH " + ",\n".join([qz] + pq_ctes)
+    assert con.sql(f"{head} SELECT count(*) FROM pqt").fetchone() == (limit,)
+    want = con.sql(
+        f"{head} SELECT sub, code, cw FROM {cb} ORDER BY sub, code"
+    ).fetchall()
+    got = ann.pq_train_codebook_rows(emb, m_sub, k, pq_iters)
+    assert [(s, c, list(cw)) for s, c, cw in want] == got

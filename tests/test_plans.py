@@ -551,6 +551,71 @@ def test_ivf_serve_scans_probed_lists_only(spark, tmp_path, serve):
     )
 
 
+def _jobs_in_group(spark, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_training_is_one_job(spark):
+    # every Lloyd's trainer collects its training set once and iterates
+    # on the driver: one job per call, whatever the iteration count (a
+    # job per iteration plus a seed collect ran 7 here at 3 iterations)
+    from geneticalgorithmsusingmapreduce_spark.operators import ann
+    from geneticalgorithmsusingmapreduce_spark.sources.registry import (
+        read_table,
+    )
+
+    emb = read_table(spark, SF, "embeddings")
+    rows, _ = ann.train_centroid_rows(emb, 8, 0)
+    assigned = ann.kernel_assign(emb, rows)
+    calls = {
+        "train_centroid_rows": lambda: ann.train_centroid_rows(emb, 8, 3),
+        "train_centroid_rows seed_by_rank": lambda: ann.train_centroid_rows(
+            emb.filter("vec_id % 3 = 0"), 8, 3, seed_by_rank=True
+        ),
+        "pq_train_codebook_rows": lambda: ann.pq_train_codebook_rows(
+            emb, iters=3
+        ),
+        "pq_train_codebook_rows_residual":
+            lambda: ann.pq_train_codebook_rows_residual(
+                assigned, rows, iters=3
+            ),
+    }
+    for name, fn in calls.items():
+        assert _jobs_in_group(spark, fn) == 1, name
+
+
+def test_ivf_rebuild_generation_job_budget(spark, tmp_path):
+    # one index generation is the training set, the centroid write and
+    # the postings write; the commit and the old generation's delete are
+    # file operations
+    from geneticalgorithmsusingmapreduce_spark.operators import ann
+    from geneticalgorithmsusingmapreduce_spark.sources.registry import (
+        read_table,
+    )
+    from geneticalgorithmsusingmapreduce_spark.streaming import (
+        ivf_rebuild as ir,
+    )
+
+    emb = read_table(spark, SF, "embeddings")
+    d = str(tmp_path / "idx")
+    rows, _ = ann.train_centroid_rows(emb, 8, 0)
+    ir.write_generation(spark, emb, d, 0, rows)
+    ir.commit_generation(spark, d, 0)
+    jobs = _jobs_in_group(spark, lambda: ir.rebuild_index(spark, emb, d))
+    assert jobs <= 3, f"rebuild_index ran {jobs} jobs"
+    assert ir.serve_generation(spark, d) == 1
+
+
 # extended-explain budget (bytes) of one kernel-route SGA generation
 # (population within WIDE_PATH_BYTES): the per-bucket breed kernel's plan
 # measures ~4.3 KB; the one-pass wide-window plan it replaced (max_by
