@@ -9,4 +9,8 @@ derive randomness from pure int64 arithmetic on row ids (functions.prng),
 so every operator has a DuckDB-verifiable oracle.
 """
 
+from ._worker_imports import freeze_zip_finders as _freeze_zip_finders
+
 __version__ = "0.1.0"
+
+_freeze_zip_finders()

@@ -254,12 +254,15 @@ def np_genome(seed: int, keys, n_bits: int, salt: int = SALT_GENOME):
 
     from . import prng
 
-    nl = n_longs(n_bits)
-    ss = seed_salt(seed, salt)
-    k = np.asarray(keys, dtype=np.int64).reshape(-1, 1)
-    j = np.arange(nl, dtype=np.int64).reshape(1, -1)
-    g = prng.np_xxhash64([ss, np.broadcast_to(k, (len(k), nl)),
-                          np.broadcast_to(j, (len(k), nl))])
+    # the hash is a fold over its columns: the (seed_salt, key) prefix
+    # once per row, then j folded over the (N, nl) matrix
+    prefix = prng.np_xxhash64(
+        [seed_salt(seed, salt), np.asarray(keys, dtype=np.int64).reshape(-1)]
+    )
+    g = prng.np_xxhash64(
+        [np.arange(n_longs(n_bits), dtype=np.int64)],
+        seed=prefix.reshape(-1, 1),
+    )
     mask = last_long_mask(n_bits)
     if mask != -1:
         g[:, -1] &= mask
@@ -275,8 +278,9 @@ def np_popcount_rows(genomes) -> "object":
 
 def np_crossover(pa, pb, seed: int | None, pair_keys, n_bits: int):
     """Both children for each pair row: masks from the same stream as
-    spark_mask_sql, 3 bitwise ops per long. ``seed=None`` draws the masks
-    from numpy's default generator instead, tail long masked."""
+    spark_mask_sql, 4 bitwise ops per long for both children. ``seed=None``
+    draws the masks from numpy's default generator instead, tail long
+    masked."""
     import numpy as np
 
     if seed is None:
@@ -286,9 +290,10 @@ def np_crossover(pa, pb, seed: int | None, pair_keys, n_bits: int):
         m[:, -1] &= last_long_mask(n_bits)
     else:
         m = np_genome(seed, pair_keys, n_bits, salt=SALT_MASK)
-    c1 = (pa & m) | (pb & ~m)
-    c2 = (pb & m) | (pa & ~m)
-    return c1, c2
+    # c1 = (pa & m) | (pb & ~m), c2 = (pb & m) | (pa & ~m): d marks the
+    # bits where the mask picks the other parent and the parents differ
+    d = (pa ^ pb) & m
+    return pb ^ d, pa ^ d
 
 
 def getbit_sql(x: str, bit: str, dialect: str) -> str:

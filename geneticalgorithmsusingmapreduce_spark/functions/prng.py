@@ -185,7 +185,10 @@ def np_xxhash64(cols: list, seed: int = SPARK_XXH_SEED):
     """Vectorized twin of the same chain over numpy arrays (any mix of
     int arrays / python int scalars, broadcast together). uint64 ops wrap
     exactly like the JVM — used by the large-genome Arrow kernels, which
-    must emit the *same* stream the SQL expressions would."""
+    must emit the *same* stream the SQL expressions would. The chain is
+    a fold over ``cols``, so ``seed`` may also be an int64 array: the
+    hash of a shared column prefix, ``np_xxhash64(rest,
+    seed=np_xxhash64(prefix))`` equals ``np_xxhash64(prefix + rest)``."""
     import numpy as np
 
     u64 = np.uint64
@@ -193,15 +196,17 @@ def np_xxhash64(cols: list, seed: int = SPARK_XXH_SEED):
     def rotl(x, r):
         return (x << u64(r)) | (x >> u64(64 - r))
 
+    def as_u64(c):
+        # mask before converting: np.uint64(-1) relies on numpy's
+        # deprecated wrap-around int conversion (error in numpy 2)
+        if np.isscalar(c):
+            return np.uint64(c % M64)
+        return np.asarray(c).astype(np.int64).view(np.uint64)
+
     with np.errstate(over="ignore"):
-        h = None
+        h = as_u64(seed)
         for c in cols:
-            v = np.asarray(c).astype(np.int64).view(np.uint64) \
-                if not np.isscalar(c) else np.uint64(c % M64)
-            if h is None:
-                # mask before converting: np.uint64(-1) relies on numpy's
-                # deprecated wrap-around int conversion (error in numpy 2)
-                h = np.uint64(seed % M64)
+            v = as_u64(c)
             k = rotl(v * u64(P2), 31) * u64(P1)
             acc = (h + u64((P5 + 8) % M64)) ^ k
             acc = rotl(acc, 27) * u64(P1) + u64(P4)

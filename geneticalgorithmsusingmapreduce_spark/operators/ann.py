@@ -385,15 +385,18 @@ CENTROID_SCHEMA = "cent_id long, cv array<long>"
 
 
 def centroid_frame(spark, rows: list) -> DataFrame:
-    """Centroid rows ``[(cent_id, [D ints])]`` as a CENTROID_SCHEMA
-    DataFrame, from a pyarrow.Table the JVM reads directly: Python rows
-    would pay a Python worker's fixed cost (a few hundred ms)."""
+    """Centroid rows ``[(cent_id, [D ints])]`` as a one-partition
+    CENTROID_SCHEMA DataFrame, from a pyarrow.Table the JVM reads
+    directly: Python rows would pay a Python worker's fixed cost (a few
+    hundred ms). The JVM slices the table over the default parallelism;
+    one partition makes a centroid table one file and one write task,
+    and its read one task."""
     import pyarrow as pa
 
     return spark.createDataFrame(pa.table({
         "cent_id": pa.array([cid for cid, _ in rows], pa.int64()),
         "cv": pa.array([list(cv) for _, cv in rows], pa.list_(pa.int64())),
-    }))
+    })).coalesce(1)
 
 
 def _query_matrix(df: DataFrame):
@@ -1968,7 +1971,7 @@ def _assign_batch(b, cent_id, xm):
 def semantic_cluster_pairs(
     emb: DataFrame, tau_milli: int = 800,
     n_centroids: int = N_CENTROIDS, iters: int = 2,
-    cap: int | None = None, seed_by_rank: bool = False,
+    cap: int | None = None, seed_by_rank: bool | None = None,
     train_mod: int | None = None,
 ) -> DataFrame:
     """Semantic near-dup pairs under the SemDeDup cluster restriction:
@@ -2024,8 +2027,11 @@ def semantic_cluster_pairs(
     ``train_mod`` (keeps the exact FALLBACK rung's training linear):
     Lloyd's trains on the deterministic
     slice ``vec_id % train_mod == 0`` (rank seeds implied, so seeds
-    stay well-defined on the sparse id set) while ASSIGNMENT stays the
-    exact argmax over every vector — the rung's point. This kills the
+    stay well-defined on the sparse id set; an explicit
+    ``seed_by_rank=False`` is overridden with a warning, and the
+    default ``None`` means dense-id seeds without ``train_mod``) while
+    ASSIGNMENT stays the exact argmax over every vector — the rung's
+    point. This kills the
     flat-training half of the n·C quadratic term (training becomes
     (n/train_mod)·C; pick train_mod ≈ n/262k for a fixed-size slice)
     and, unlike the fast rung's two-level probe, costs ZERO assignment
@@ -2037,7 +2043,7 @@ def semantic_cluster_pairs(
     fast rung's in-driver coarse k-means."""
     train = emb
     if train_mod is not None:
-        if not seed_by_rank:
+        if seed_by_rank is False:
             # loud, not silent: dense-id seeding is
             # ill-defined on the sparse sampled slice, so train_mod
             # REQUIRES rank seeds — an explicit False is a caller bug
@@ -2054,7 +2060,7 @@ def semantic_cluster_pairs(
         seed_by_rank = True
     rows, _ = train_centroid_rows(
         train, n_centroids, iters, compute_inertia=False,
-        seed_by_rank=seed_by_rank,
+        seed_by_rank=bool(seed_by_rank),
     )
     base = kernel_assign(emb, rows).filter(F.col("n2") > 0)
     return _cluster_pairs_from_assign(base, tau_milli, cap=cap)

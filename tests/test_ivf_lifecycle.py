@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geneticalgorithmsusingmapreduce_spark.operators import ann
+from geneticalgorithmsusingmapreduce_spark.sources import store
 from geneticalgorithmsusingmapreduce_spark.sources.registry import read_table
 from geneticalgorithmsusingmapreduce_spark.streaming import ivf_rebuild as ir
 
@@ -87,6 +88,8 @@ def test_rebuild_matches_from_scratch_build(spark, tmp_path):
     ir.commit_generation(spark, d, 0)
 
     assert ir.rebuild_index(spark, emb, d, n_centroids=8, iters=3) == 1
+    # the centroid table is one file: one write task, one read task
+    assert store.data_stats(f"{ir.gen_dir(d, 1)}/centroids")["files"] == 1
     rebuilt = _serve_rows(spark, d)
 
     rows, _ = ann.train_centroid_rows(

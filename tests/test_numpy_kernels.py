@@ -5,6 +5,7 @@ paths (SURVEY.md §7.4: the stream is the spec)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from geneticalgorithmsusingmapreduce_spark.functions import bits, prng
@@ -20,6 +21,27 @@ def test_np_xxhash64_matches_python():
     ks = np.arange(-300, 300, dtype=np.int64)
     got = prng.np_xxhash64([7, ks, 3])
     assert list(got) == [prng.py_xxhash64([7, int(k), 3]) for k in ks]
+
+
+@pytest.mark.parametrize("n_bits", [1, 100, 64 * 3 + 5, 10_000])
+def test_mask_kernels_match_their_direct_formulas(n_bits):
+    # np_genome hashes the (seed_salt, key) prefix once per row and
+    # np_crossover derives both children from one xor mask; both must
+    # equal the direct formulas, tail long included
+    keys = np.arange(-40, 260, dtype=np.int64) * 7
+    nl = bits.n_longs(n_bits)
+    k = np.broadcast_to(keys.reshape(-1, 1), (len(keys), nl))
+    j = np.broadcast_to(np.arange(nl, dtype=np.int64), (len(keys), nl))
+    want = prng.np_xxhash64([bits.seed_salt(3, bits.SALT_MASK), k, j])
+    want[:, -1] &= bits.last_long_mask(n_bits)
+    m = bits.np_genome(3, keys, n_bits, salt=bits.SALT_MASK)
+    assert np.array_equal(m, want)
+
+    pa = bits.np_genome(1, keys, n_bits)
+    pb = bits.np_genome(2, keys, n_bits)
+    c1, c2 = bits.np_crossover(pa, pb, 3, keys, n_bits)
+    assert np.array_equal(c1, (pa & m) | (pb & ~m))
+    assert np.array_equal(c2, (pb & m) | (pa & ~m))
 
 
 def test_np_popcount_edges():

@@ -172,6 +172,27 @@ def test_semdedup_sampled_training_parity_and_cap_invariance(spark):
     assert len(got) > 0
 
 
+def test_semdedup_train_mod_warns_only_on_explicit_false(spark):
+    # train_mod implies rank seeds: the registered sampled config sets
+    # no seed_by_rank and must build silently; only an explicit False,
+    # which train_mod overrides, warns
+    import warnings
+
+    import pytest
+
+    from geneticalgorithmsusingmapreduce_spark import catalog
+
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        catalog.dedup_semantic_semdedup_sampled(spark, SF)
+    assert not [w for w in seen if issubclass(w.category, UserWarning)]
+    with pytest.warns(UserWarning, match="seed_by_rank=False"):
+        ann.semantic_cluster_pairs(
+            ann.augmented_embeddings(spark, SF), train_mod=4,
+            seed_by_rank=False,
+        )
+
+
 def test_centroids_for_count_rule():
     # fixed target cluster size: C grows linearly with the corpus, so
     # in-cluster pairwise work stays n·K/2 and each group's K×K dot
