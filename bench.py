@@ -54,7 +54,7 @@ def ga_loop_benchmarks(spark) -> dict[str, float]:
     for it in range(4):  # gen 0-1 warm Python workers/JIT; gens 2-3 measured
         t0 = time.perf_counter()
         ch = runtime.local_checkpoint_truncated(sga.next_generation(
-            cur, n_bits, 42, it, 32, pop_rows=pop_size
+            cur, n_bits, 42, it, 32
         ))
         ch.count()
         dt = time.perf_counter() - t0
@@ -81,7 +81,7 @@ def ga_loop_benchmarks(spark) -> dict[str, float]:
     for it in range(3):  # gen 0 warms; gens 1-2 measured (min-of-2)
         t0 = time.perf_counter()
         ch = runtime.local_checkpoint_truncated(sga.next_generation(
-            cur, n_bits, 42, it, 32, pop_rows=pop_size
+            cur, n_bits, 42, it, 32
         ))
         ch.count()
         dt = time.perf_counter() - t0

@@ -791,11 +791,13 @@ def _pop_with_fitness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pop_genomes_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Id-UNIQUE [id, genome] lookup for the skinny tournament's
-    join-back (operators/selection duplicate-id contract): the lineitem
-    fixture repeats ~24% of iids (equal genomes by construction — genome
-    is a pure function of iid), and a repeated winner id would fan out
-    one output row per copy. So dedup the 8-byte IDS first and run the
+    """Id-UNIQUE [id, genome] lookup for the window tournament's
+    join-back (``sga_tournament``, operators/selection.tournament_parents):
+    the lineitem fixture repeats ~24% of iids (equal genomes by
+    construction — genome is a pure function of iid), and a repeated
+    winner id would fan out one output row per copy. The generation
+    kernel carries each row's own genome and needs no lookup. So dedup
+    the 8-byte IDS first and run the
     hash-chain derivation AFTER, on distinct ids only: the dedup
     exchange carries bare ids, the derived genomes stay in their
     post-exchange partitions (already matching the join key), and
@@ -831,7 +833,7 @@ def _pop_genome_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup written as a bucketed+sorted parquet table on ``id`` and read
     back — the genome join-back side of the tournament/pairing then
     needs NO exchange at all (the bucketed scan's hash(id) partitioning
-    satisfies the join; only the skinny winner/role rows shuffle, to
+    satisfies the join; only the skinny winner rows shuffle, to
     the store's bucket count).  This is the Spark shape of the
     reference's per-generation HDFS store
     (``reference src/edu/illinois/ga/MapReduce.java:298-302``): each
@@ -899,7 +901,7 @@ def sga_tournament(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pop_with_fitness(spark, sf_dir), SEED * 1_000_033, n_buckets=32
     )
     return selection_ops.tournament_parents(
-        sh, genome_df=_pop_genome_store(spark, sf_dir)
+        sh, genomes=_pop_genome_store(spark, sf_dir)
     ).withColumn("parent", _gstr("parent"))
 
 
@@ -916,18 +918,12 @@ def sga_tournament(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sga_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full composed generation: evaluate → shuffle → tournament → pair →
     crossover → evaluated children. The reference's entire
-    map-shuffle-reduce job (§3.1) as one declarative plan whose
-    window exchanges are genome-free (skinny composition — see
-    plans/sga.next_generation). The lookup stays dedup-then-derive: a
-    bucket-stored lookup was MEASURED at the sf100 decade and lost
-    (402.3 s / 9.6× vs this shape's 335.3 / 8.19×) —
-    the (part, pair) crossover pivot re-ships the genomes regardless,
-    so the store write buys nothing here; the amortized store belongs
-    to the LOOP (run_sga storage="bucketed"), where one write serves
-    every lookup of the next generation."""
+    map-shuffle-reduce job (§3.1) as one exchange and one streaming
+    reducer kernel (plans/sga.next_generation). Each row brings its own
+    genome, so the population's repeated ids need no id-unique lookup:
+    copies are equal rows and breed as the oracle's rows do."""
     children = sga_plan.next_generation(
         _pop_with_fitness(spark, sf_dir), GENOME_BITS, SEED, generation=0,
-        genome_df=_pop_genomes_unique(spark, sf_dir),
     )
     return children.select("id", _gstr("genome").alias("genome"), "fitness")
 
@@ -1012,24 +1008,19 @@ ORACLES_SHARED_TOURNAMENT = ORACLES.get("sga_tournament")
 
 @register("sga_tournament_pandas", ORACLES_SHARED_TOURNAMENT)
 def sga_tournament_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3: the tournament as a stateful per-bucket Arrow kernel
-    (applyInArrow) — the idiomatic successor of the reference's reducer
-    class. Checked against the *same* oracle as the window-expression form:
-    both must produce identical parents.
-
-    n_buckets is this operator's WORKING-SET dial: each bucket becomes
-    ONE Arrow table in a worker, so a fixed count scales per-worker
-    memory linearly with the population — at the sf10→sf100 decade
-    (278.6M individuals) 32 buckets put ~8.7M rows in every group and
-    the worker was OOM-killed, while shuffle.buckets_for_pop's 512 ran
-    it saturation-linear (BASELINE.md r7). The entry keeps 32 — the
-    sized value for the sf10 population (buckets_for_pop(27.9M) = 32)
-    and the count the static oracle bakes in; size it to the population
-    everywhere else."""
+    """W3: the tournament as the streaming reducer kernel (mapInArrow
+    over sorted buckets) — the idiomatic successor of the reference's
+    reducer class. Checked against the *same* oracle as the
+    window-expression form: both must produce identical parents. The
+    kernel holds one Arrow batch plus O(T) rows, so the bucket count
+    sets parallelism, not worker memory; 32 is the count the static
+    oracle bakes in."""
     sh = shuffle_ops.with_shuffle_key(
         _pop_with_fitness(spark, sf_dir), SEED * 1_000_033, n_buckets=32
     )
-    return selection_ops.tournament_parents_pandas(sh).withColumn(
+    return selection_ops.tournament_parents_pandas(
+        sh, n_buckets=32
+    ).withColumn(
         "parent", _gstr("parent")
     )
 

@@ -91,6 +91,12 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None):
         raise _usage_err(f"{cmd}: population multiplier must be >= 1")
     if cmd == "cga" and args[5] < 2:
         raise _usage_err("cga: tournament size must be >= 2")
+    if cmd in ("ga", "inc_ga"):
+        from .operators.crossover import MAX_BUCKETS
+
+        if args[1] > MAX_BUCKETS:
+            # nReducers is the tournament bucket count
+            raise _usage_err(f"{cmd}: nReducers must be <= {MAX_BUCKETS}")
 
     own_session = spark is None
     if own_session:
@@ -107,7 +113,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None):
             print(f"Population = {pop}")
             return sga.run_sga(
                 spark, n_bits=n_bits, pop_size=pop, seed=42,
-                max_generations=iters, n_buckets=max(n_reducers, 1),
+                max_generations=iters, n_buckets=n_reducers,
             )
         if cmd == "cga":
             from .plans import cga as cga_plan
@@ -143,7 +149,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None):
         n_maps, n_reducers, iters = args
         return incremental.start_incremental_sga(
             spark, n_bits=INC_GA_BITS, pop_size=INC_GA_POP,
-            generations=iters, seed=42, n_buckets=max(n_reducers, 1),
+            generations=iters, seed=42, n_buckets=n_reducers,
         )
     finally:
         if own_session:

@@ -59,7 +59,7 @@ def np_stack_cells(col, dtype="int64"):
 def np_list_matrix(col, nl: int):
     """Arrow list<int64> column of N lists of ``nl`` longs → (N, nl)
     matrix: a reshape of the flat values buffer, zero-copy for a single
-    chunk."""
+    chunk. ``nl=-1`` infers the width from a non-empty column."""
     import pyarrow as pa
 
     if isinstance(col, pa.ChunkedArray):
@@ -188,23 +188,6 @@ def duck_genome_query(
 # Uniform crossover (P4)
 # --------------------------------------------------------------------------
 
-def spark_crossover_sql(a: str, b: str, mask: str, child: int, nl: int) -> str:
-    """child1 = (a & m) | (b & ~m); child2 = (b & m) | (a & ~m) per long
-    (``reference src/edu/illinois/ga/MapReduce.java:174-201`` walks the 64
-    bits of every long with per-bit coin flips; a random 64-bit mask gives
-    the identical distribution in 3 bitwise ops). Literal-j → codegen."""
-    elems = []
-    for j in range(nl):
-        aj = f"element_at({a}, {j + 1})"
-        bj = f"element_at({b}, {j + 1})"
-        mj = f"element_at({mask}, {j + 1})"
-        if child == 1:
-            elems.append(f"(({aj} & {mj}) | ({bj} & ~{mj}))")
-        else:
-            elems.append(f"(({bj} & {mj}) | ({aj} & ~{mj}))")
-    return "array(" + ", ".join(elems) + ")"
-
-
 def duck_crossover_sql(a: str, b: str, mask: str, child: int, nl: int) -> str:
     if child == 1:
         body = (f"(list_extract({a}, j) & list_extract({mask}, j)) | "
@@ -213,12 +196,6 @@ def duck_crossover_sql(a: str, b: str, mask: str, child: int, nl: int) -> str:
         body = (f"(list_extract({b}, j) & list_extract({mask}, j)) | "
                 f"(list_extract({a}, j) & ~list_extract({mask}, j))")
     return f"list_transform(range(1, {nl + 1}), j -> {body})"
-
-
-def spark_mask_sql(seed: int, key: str, n_bits: int) -> str:
-    """Random full-width mask array for crossover (bits beyond n_bits are
-    masked so children stay canonical)."""
-    return spark_genome_sql(seed, key, n_bits, salt=SALT_MASK)
 
 
 def duck_mask_query(source_sql, key, carry, n_bits, seed, out="mask"):
@@ -234,12 +211,13 @@ def duck_mask_query(source_sql, key, carry, n_bits, seed, out="mask"):
 # numpy kernels (large-genome path)
 # --------------------------------------------------------------------------
 # The one dispatch rule: at n_longs(n_bits) > LARGE_NL the seeded
-# generator, fitness and crossover run Arrow-batched numpy kernels, at or
-# below it the literal-index expressions above. A 10,000-bit genome is
-# 157 longs, and literal-index expressions that wide blow the JVM's 64 KB
-# method limit, so whole-stage codegen silently falls back to interpreted
-# evaluation. Mutation is the exception: its per-bit mask expression
-# outgrows that limit at two longs, so it always runs the kernel. The
+# generator and fitness run Arrow-batched numpy kernels, at or below it
+# the literal-index expressions above. A 10,000-bit genome is 157 longs,
+# and literal-index expressions that wide blow the JVM's 64 KB method
+# limit, so whole-stage codegen silently falls back to interpreted
+# evaluation. Crossover runs inside the generation kernel at every
+# width, and mutation's per-bit mask expression outgrows that limit at
+# two longs, so both always run numpy. The
 # kernels compute the *identical* seeded streams (prng.np_xxhash64 wraps
 # exactly like the JVM), so results stay oracle-compatible whichever path
 # ran. Genomes enter numpy through np_list_matrix and leave through
@@ -277,8 +255,11 @@ def np_popcount_rows(genomes) -> "object":
 
 
 def np_crossover(pa, pb, seed: int | None, pair_keys, n_bits: int):
-    """Both children for each pair row: masks from the same stream as
-    spark_mask_sql, 4 bitwise ops per long for both children. ``seed=None``
+    """Both children for each pair row (child1 = (a & m) | (b & ~m),
+    child2 = (b & m) | (a & ~m) per long, ``reference
+    src/edu/illinois/ga/MapReduce.java:174-201``): masks are
+    spark_genome_sql's stream under SALT_MASK keyed by the pair key, 4
+    bitwise ops per long for both children. ``seed=None``
     draws the masks from numpy's default generator instead, tail long
     masked."""
     import numpy as np

@@ -18,40 +18,26 @@ rn = row_number over (skey, id) within the bucket:
                                       max(0, 2n - (T-1)) below)
     pair  = pos / 2 at even pos; partner = the parent at pos - 1
 
-The operator has two physical forms with the same keys, hence
-bit-identical parents and children:
+The reducer itself is ``_walk_parents``: the buckets arrive as
+``part % P`` partitions sorted by (part, skey, id), and the walk streams
+each partition's Arrow batches through the same circular buffer,
+carrying only a bucket's first and last T-1 rows and its parent count
+between batches, so a worker holds one batch plus O(T) rows whatever
+the bucket size. ``breed_children`` pairs the walk's parents, crosses
+and evaluates them (a whole generation is one exchange and one Python
+pass); ``tournament_parents_pandas`` (W3, the reducer-class successor,
+SURVEY.md §2.12) emits the parents themselves.
 
-* ``breed_children`` — the reference's reducer as ONE grouped Arrow
-  kernel: each bucket arrives as one Arrow table, is sorted in numpy,
-  selected by ``_tournament_index``, paired, crossed over and
-  evaluated, so a generation is one exchange and one Python pass.
-  A bucket's genomes live in one worker at once, which is why
-  plans/sga.next_generation takes it only below WIDE_PATH_BYTES.
-* the skinny composition (``tournament_parent_ids`` →
-  ``paired_parent_ids`` → ``pair_genomes``) — the scale form: the
-  window exchange and sorts carry (id, fitness, skey, part) only, and
-  the two parents' genomes attach through one skinny-build hash join
-  and a role pivot, so genome bytes cross one exchange and enter no
-  sort. Plan property pinned in
-  tests/test_plans.py::test_tournament_shuffle_is_skinny.
-
-``tournament_parents_pandas`` is W3, the reducer-class successor
-(SURVEY.md §2.12): the same ``_tournament_index`` over whole buckets,
-emitting parents instead of children.
-
-Duplicate-id contract: ``id`` is row identity for the genome join-back.
-Callers whose source can repeat ids (the lineitem fixture's duplicate
-(orderkey, linenumber) keys, equal genomes by construction) pass an
-id-unique [id, genome] frame as ``genome_df``; otherwise each repeated
-winner id would fan out k output rows.
-
-At scale n_buckets should be O(cores·4): both forms sort within buckets
-only (no global sort), and the skinny form's wrap-around union re-reads
-the bucket head — the generation loop checkpoints its input, so that is
-a cached read, not a recompute.
+``tournament_parent_ids``/``tournament_parents`` keep the tournament as
+window expressions over (id, fitness, skey, part) with the winners'
+genomes joined back by id: the declarative form the ``sga_tournament``
+entry registers, and the reference the kernel is tested against. All
+forms share the ordering key, hence bit-identical parents.
 """
 
 from __future__ import annotations
+
+import itertools
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -106,7 +92,7 @@ def tournament_parent_ids(
 def tournament_parents(
     df: DataFrame,
     t_size: int = TOURNAMENT_SIZE,
-    genome_df: DataFrame | None = None,
+    genomes: DataFrame | None = None,
 ) -> DataFrame:
     """W1. Input: [id, genome, fitness, skey, part]; output: one parent per
     input row: [part, pos, parent(genome array), parent_fitness].
@@ -114,12 +100,13 @@ def tournament_parents(
     ``tournament_parent_ids`` runs the windows genome-free, then winners
     join their genomes back via a SHUFFLED HASH join on id, hinted with
     the skinny winner rows as the build side (a sort-merge join would
-    re-sort the wide genome side; a wide-side hash build exhausts the
-    heap at scale). ``genome_df`` overrides the lookup side with an
-    id-unique [id, genome] frame (module doc)."""
+    re-sort the wide genome side). ``id`` is row identity here: a source
+    that repeats ids (the lineitem population's duplicate keys) passes
+    an id-unique [id, genome] frame as ``genomes``, or each repeated
+    winner id would fan out k rows."""
     sel = tournament_parent_ids(df, t_size)
     g = (
-        genome_df if genome_df is not None else df.select("id", "genome")
+        genomes if genomes is not None else df.select("id", "genome")
     ).withColumnsRenamed({"id": "parent_id", "genome": "parent"})
     return (
         sel.hint("shuffle_hash")
@@ -128,174 +115,211 @@ def tournament_parents(
     )
 
 
-def paired_parent_ids(parent_ids: DataFrame) -> DataFrame:
-    """W2 skinny core: pairs consecutive parent IDS — rows at even pos
-    carry (pa_id, pb_id) = (previous, current); the odd tail parent
-    drops (reference pairs every 2nd selection,
-    ``reference src/edu/illinois/ga/MapReduce.java:235-243``). Same
-    window partitioning as W1 → no additional exchange."""
-    wp = Window.partitionBy("part").orderBy("pos")
-    d = parent_ids.withColumn("pa_id", F.lag("parent_id", 1).over(wp))
-    return (
-        d.filter(F.col("pos") % 2 == 0)
-        .select(
-            "part",
-            ((F.col("pos") + 1) / 2).cast("bigint").alias("pair"),
-            "pa_id",
-            F.col("parent_id").alias("pb_id"),
-        )
-    )
+# Parent genome bytes crossed per kernel step: keeps the crossover and
+# popcount temporaries in cache. At 10,000 bits a whole 8,300-row batch
+# per step ran the kernel ~1.5× slower than 256 KB steps (~200 pairs).
+_CHUNK_BYTES = 256 << 10
 
 
-def pair_genomes(
-    pair_ids: DataFrame,
-    pop: DataFrame,
-    genome_df: DataFrame | None = None,
-) -> DataFrame:
-    """Join both parents' genomes onto the skinny pair rows:
-    [part, pair, pa_id, pb_id] → [part, pair, pa, pb].
-
-    Shape: explode each pair into two SKINNY role rows
-    (part, pair, role, pid), hash-join genomes on pid with the role
-    rows as the build side, then pivot the two genome rows per pair
-    back to columns via map_from_entries(collect_list(...)) — an
-    OBJECT HASH aggregate (hash-based, sort-fallback spill; an array
-    `max` buffer would force a full sort aggregate).
-
-    Two sequential id-joins would be worse either way: the second
-    join's smaller side already carries the pa genomes, so it either
-    hash-builds wide rows (heap exhaustion) or sort-merges, re-sorting
-    1.5× pop of wide rows. The explode/pivot form moves the genomes
-    through exactly ONE wide exchange (hashpartitioning(part, pair),
-    n rows) with no wide sort anywhere.
-
-    ``genome_df``: id-unique [id, genome] lookup override (module doc)."""
-    g = genome_df if genome_df is not None else pop.select("id", "genome")
-    roles = pair_ids.select(
-        "part",
-        "pair",
-        F.explode(
-            F.expr(
-                "array(struct('a' as role, pa_id as pid), "
-                "struct('b' as role, pb_id as pid))"
-            )
-        ).alias("rp"),
-    ).select("part", "pair", "rp.role", "rp.pid")
-    j = roles.hint("shuffle_hash").join(
-        g.withColumnRenamed("id", "pid"), "pid"
-    )
-    return (
-        j.groupBy("part", "pair")
-        .agg(
-            F.expr(
-                "map_from_entries(collect_list(struct(role, genome)))"
-            ).alias("m")
-        )
-        .select(
-            "part", "pair",
-            F.expr("m['a']").alias("pa"),
-            F.expr("m['b']").alias("pb"),
-        )
-    )
-
-
-def _tournament_index(fitness, t_size: int = TOURNAMENT_SIZE):
-    """Parent rows of one bucket whose ``fitness`` is in stream order
-    (skey, id): the window ending at every ext row rn ≥ T over the rows
-    ∪ the first min(n, T-1) rows again, won by the largest
-    (fitness, rn) — the key fitness·2^31 + rn of the window form.
-    Returns max(0, n + min(n, T-1) - (T-1)) indices, in pos order."""
+def _ranges(starts, lens):
+    """Concatenation of arange(s, s + l) over the pairs (starts, lens)."""
     import numpy as np
 
-    n = len(fitness)
-    ext = np.arange(n + min(n, t_size - 1)) % max(n, 1)
-    if len(ext) < t_size:
-        return ext[:0]
-    win = np.lib.stride_tricks.sliding_window_view(fitness[ext], t_size)
-    # argmax takes the FIRST maximum; the later stream row wins a tie
-    last = t_size - 1 - win[:, ::-1].argmax(axis=1)
-    return ext[np.arange(len(win)) + last]
+    off = np.repeat(starts - np.cumsum(lens) + lens, lens)
+    return off + np.arange(off.size)
 
 
-def _bucket_parents(table, t_size: int):
-    """(parent row indices in pos order, fitness) of one bucket given as
-    an Arrow table with id, skey and fitness columns."""
+def _walk_parents(batches, t_size: int = TOURNAMENT_SIZE):
+    """The reference reducer over one partition's Arrow batches, sorted by
+    (part, skey, id): per input batch, yields the parents whose windows
+    closed in it as (part, pos, rows, fitness, take) in stream order (by
+    bucket, then pos); ``take(rows)`` gathers their genomes, and holds
+    only until the next batch is pulled.
+
+    Each batch becomes a pool of the carried rows followed by its own
+    rows. A bucket's stretch of the pool is its rows so far (R: the
+    carried tail, then the batch's rows) and, once a later bucket or the
+    end of the stream closes it, its head again (H: the carried first
+    T-1 rows, or R's own prefix while the bucket is shorter than that).
+    Windows end at every stretch position ≥ T-1; the carried tail is at
+    most T-1 rows, so no window is emitted twice. Between batches only
+    the open bucket's head, its last T-1 rows and its parent count are
+    kept."""
     import numpy as np
 
-    order = np.lexsort(
-        (table.column("id").to_numpy(), table.column("skey").to_numpy())
-    )
-    fit = table.column("fitness").to_numpy()
-    return order[_tournament_index(fit[order], t_size)], fit
+    h = t_size - 1
+    cpart = None      # the open bucket
+    cg = cf = None    # its carried rows: the head (hc rows), then the tail
+    hc = npar = 0     # hc = 0 until the bucket has T-1 rows
+    for b in itertools.chain(batches, [None]):
+        if b is None:
+            if cg is None:
+                return
+            part = fit = np.zeros(0, dtype=np.int64)
+            g = None
+        elif b.num_rows == 0:
+            continue
+        else:
+            part = b.column("part").to_numpy()
+            fit = b.column("fitness").to_numpy()
+            g = bits.np_list_matrix(b.column("genome"), -1)
+        k = 0 if cg is None else len(cg)
+        pf = fit if k == 0 else np.concatenate([cf, fit])
 
+        def take(idx):
+            """Genomes of pool rows ``idx``: carried, then the batch's."""
+            if k == 0:
+                return g[idx]
+            if g is None:
+                return cg[idx]
+            out = np.empty((len(idx), cg.shape[1]), dtype=np.int64)
+            m = idx < k
+            out[m] = cg[idx[m]]
+            out[~m] = g[idx[~m] - k]
+            return out
 
-def breed_children(
-    sh: DataFrame, n_bits: int, seed: int | None,
-    t_size: int = TOURNAMENT_SIZE,
-) -> DataFrame:
-    """W1 + W2 + P4 + P2 as one kernel per bucket, the reference's
-    GAReducer: [id, genome, fitness, skey, part] → evaluated children
-    [id, genome, fitness]. Per bucket: sort by (skey, id), pick parents
-    with ``_tournament_index``, pair consecutive parents at even pos,
-    cross each pair over with pair key pk = part·2^40 + pair (child ids
-    pk·2 and pk·2+1, the crossover_children stream) and popcount the
-    children. Genomes move as flat Arrow buffers both ways."""
-    nl = bits.n_longs(n_bits)
-
-    def breed(key, table):
-        import numpy as np
-        import pyarrow as pa
-
-        win, _ = _bucket_parents(table, t_size)
-        half = len(win) // 2
-        pk = (key[0].as_py() << 40) + np.arange(1, half + 1, dtype=np.int64)
-        g = bits.np_list_matrix(table.column("genome"), nl)
-        c1, c2 = bits.np_crossover(
-            g[win[0:2 * half:2]], g[win[1:2 * half:2]], seed, pk, n_bits
+        st = np.flatnonzero(np.diff(part)) + 1
+        starts = np.concatenate([[0], st]) if len(part) else st
+        lens = np.diff(np.concatenate([starts, [len(part)]]))
+        seg_part, r_start, base = part[starts], starts + k, np.zeros_like(lens)
+        if cg is not None:
+            if len(part) == 0 or part[0] != cpart:
+                # the open bucket closes before this batch's first row
+                seg_part = np.concatenate([[cpart], seg_part])
+                r_start = np.concatenate([[hc], r_start])
+                lens = np.concatenate([[0], lens])
+                base = np.concatenate([[0], base])
+            r_start[0], base[0] = hc, npar
+            lens[0] += k - hc
+        h_start, h_len = r_start.copy(), np.minimum(h, lens)
+        if hc:
+            h_start[0], h_len[0] = 0, hc
+        if b is not None:
+            h_len[-1] = 0  # the last bucket stays open
+        seg_len = lens + h_len
+        ext = _ranges(
+            np.stack([r_start, h_start], 1).ravel(),
+            np.stack([lens, h_len], 1).ravel(),
         )
+        seg = np.repeat(np.arange(len(seg_len)), seg_len)
+        w = np.flatnonzero(seg[h:] == seg[:max(len(ext) - h, 0)])
+        if len(w):
+            win = np.lib.stride_tricks.sliding_window_view(pf[ext], t_size)
+            # argmax takes the FIRST maximum; the later stream row wins a tie
+            src = ext[w + h - win[w, ::-1].argmax(axis=1)]
+            s = seg[w]
+            pos = base[s] + w - (np.cumsum(seg_len) - seg_len)[s] + 1
+            yield seg_part[s], pos, src, pf[src], take
+        if b is None:
+            return
+        rs, rl = r_start[-1], lens[-1]
+        if hc and len(lens) == 1:
+            head = np.arange(hc)  # the carried bucket is still open
+        else:
+            head = np.arange(rs, rs + h) if rl >= h else np.arange(0)
+        keep = np.concatenate([head, np.arange(rs + max(rl - h, 0), rs + rl)])
+        cpart, hc = seg_part[-1], len(head)
+        cg, cf = take(keep), pf[keep]
+        npar = base[-1] + max(rl - h, 0)
+
+
+def _paired(parents, chunk: int):
+    """W2 over the walk's parent stream: (pk, pa, pb) for every parent at
+    even pos and the one before it, pk = part·2^40 + pos/2, in chunks of
+    at most ``chunk`` pairs. A parent at odd pos that ends a walk
+    step is carried for the next; a bucket's odd tail parent drops
+    (reference pairs every 2nd selection,
+    ``reference src/edu/illinois/ga/MapReduce.java:235-243``)."""
+    import numpy as np
+
+    odd = None
+    for part, pos, src, _, take in parents:
+        ev = np.flatnonzero(pos % 2 == 0)
+        pk = (part[ev] << 40) + pos[ev] // 2
+        for lo in range(0, len(ev), chunk):
+            e = ev[lo:lo + chunk]
+            pa = take(src[e - 1])
+            if e[0] == 0:
+                pa[0] = odd
+            yield pk[lo:lo + chunk], pa, take(src[e])
+        odd = take(src[-1:])[0] if pos[-1] % 2 else None
+
+
+def _bucket_stream(df: DataFrame, kernel, schema: str, n_buckets):
+    """``kernel`` over the buckets as ``part % P`` partitions sorted by
+    (part, skey, id). P is the session's shuffle partitions, capped at
+    ``n_buckets`` when known so no task is empty; not a partition per
+    bucket, since every Python task has a fixed cost (README design
+    rule 8)."""
+    p = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        df.repartitionById(
+            min(p, n_buckets or p), F.col("part").cast("int")
+        )
+        .sortWithinPartitions("part", "skey", "id")
+        .mapInArrow(kernel, schema)
+    )
+
+
+def _breed(batches, n_bits: int, seed: int | None, t_size: int):
+    """breed_children's kernel: the walk's parents paired, crossed over
+    and popcounted, one output batch per chunk of pairs."""
+    import numpy as np
+    import pyarrow as pa
+
+    chunk = max(1, _CHUNK_BYTES // (8 * bits.n_longs(n_bits)))
+    for pk, a, b in _paired(_walk_parents(batches, t_size), chunk):
+        c1, c2 = bits.np_crossover(a, b, seed, pk, n_bits)
         ch = np.concatenate([c1, c2])
-        return pa.table({
+        yield pa.RecordBatch.from_pydict({
             "id": np.concatenate([pk * 2, pk * 2 + 1]),
             "genome": bits.arrow_list_column(ch),
             "fitness": bits.np_popcount_rows(ch),
         })
 
-    return (
-        sh.select("id", "genome", "fitness", "skey", "part")
-        .groupBy("part")
-        .applyInArrow(breed, schema="id long, genome array<long>, fitness long")
+
+def breed_children(
+    sh: DataFrame, n_bits: int, seed: int | None,
+    t_size: int = TOURNAMENT_SIZE, n_buckets: int | None = None,
+) -> DataFrame:
+    """W1 + W2 + P4 + P2 as one streaming kernel, the reference's
+    GAReducer: [id, genome, fitness, skey, part] → evaluated children
+    [id, genome, fitness]. Parents come from ``_walk_parents``, pair at
+    even pos and cross over with pair key pk = part·2^40 + pair (child
+    ids pk·2 and pk·2+1); the children are popcounted in the same pass.
+    Genomes move as flat Arrow buffers both ways. ``n_buckets`` caps
+    the partition count (``_bucket_stream``)."""
+    return _bucket_stream(
+        sh.select("id", "genome", "fitness", "skey", "part"),
+        lambda batches: _breed(batches, n_bits, seed, t_size),
+        "id long, genome array<long>, fitness long", n_buckets,
     )
 
 
 def tournament_parents_pandas(
-    df: DataFrame, t_size: int = TOURNAMENT_SIZE
+    df: DataFrame, t_size: int = TOURNAMENT_SIZE, n_buckets: int | None = None,
 ) -> DataFrame:
-    """W3: ``tournament_parents`` as a stateful per-bucket kernel — the
-    idiomatic successor of writing a reducer class (SURVEY.md §2.12),
-    shaped like the reference's GAReducer
-    (``reference src/edu/illinois/ga/MapReduce.java:151-273``). Each
-    bucket is one Arrow table through ``_tournament_index``, so parents
-    match the window form and its DuckDB twin row for row, buckets
-    smaller than T included. Output [part, pos, parent, parent_fitness]."""
+    """W3: ``tournament_parents`` as the reducer kernel — the idiomatic
+    successor of writing a reducer class (SURVEY.md §2.12): the
+    ``_walk_parents`` stream of ``breed_children``, emitting parents
+    instead of children, so parents match the window form and its
+    DuckDB twin row for row, buckets smaller than T included. Output
+    [part, pos, parent, parent_fitness]."""
 
-    def one_bucket(key, table):
-        import numpy as np
+    def parents(batches):
         import pyarrow as pa
 
-        win, fit = _bucket_parents(table, t_size)
-        return pa.table({
-            "part": np.full(len(win), key[0].as_py(), dtype=np.int64),
-            "pos": np.arange(1, len(win) + 1, dtype=np.int64),
-            # the declared array<bigint> has nullable elements
-            "parent": table.column("genome").take(win).cast(
-                pa.list_(pa.int64())
-            ),
-            "parent_fitness": fit[win],
-        })
+        for part, pos, src, fit, take in _walk_parents(batches, t_size):
+            yield pa.RecordBatch.from_pydict({
+                "part": part, "pos": pos,
+                "parent": bits.arrow_list_column(take(src)),
+                "parent_fitness": fit,
+            })
 
-    return df.groupBy("part").applyInArrow(
-        one_bucket,
-        schema="part bigint, pos bigint, parent array<bigint>, parent_fitness bigint",
+    return _bucket_stream(
+        df.select("id", "genome", "fitness", "skey", "part"), parents,
+        "part bigint, pos bigint, parent array<bigint>, parent_fitness bigint",
+        n_buckets,
     )
 
 

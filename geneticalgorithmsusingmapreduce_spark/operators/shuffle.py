@@ -32,19 +32,14 @@ def buckets_for_pop(
     """Shuffle-bucket count sized to the population: next power of two
     of ⌈n_rows / target_rows⌉, clamped to [lo, hi].
 
-    The per-bucket row count is the WORKING-SET unit of every consumer
-    of `part`: the window tournament sorts one bucket per task, and the
-    grouped Arrow kernels (the generation kernel and the W3 reducer
-    twin) hold one bucket as ONE Arrow table. A fixed bucket count
-    therefore scales the per-task memory linearly with the population —
-    at the sf10→sf100 decade, 32 buckets put ~8.7M rows (GBs with
-    genomes) in each reducer group and the worker was OOM-killed; the
-    sized count (512 at 278.6M individuals) ran it saturation-linear at
-    9.84× (BASELINE.md r7). Same rule family as
-    sources.bucketing.buckets_for_path and ann.planes_for_count: the
-    fan-out constant must follow the data. ~1M rows/bucket keeps a
-    bucket's genomes in the hundreds of MB at reference genome widths
-    while leaving enough buckets for full parallelism."""
+    The per-bucket row count is the sort unit of the window tournament
+    (one bucket per window partition), and the bucket count is the
+    parallelism of the streaming generation kernel, which holds one
+    Arrow batch plus O(T) rows whatever the bucket size. A fixed count
+    therefore leaves the window form's per-task sort growing with the
+    population. Same rule family as sources.bucketing.buckets_for_path
+    and ann.planes_for_count: the fan-out constant must follow the
+    data."""
     n = lo
     while n < hi and n * target_rows < n_rows:
         n *= 2

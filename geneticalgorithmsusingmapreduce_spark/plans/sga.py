@@ -6,15 +6,16 @@ max, shuffle randomly partitions AND randomly sorts, reduce runs the
 windowed tournament + pairing + crossover, driver folds side-files for the
 global best and stops at best ≥ nBits−10 (``:433-434``).
 
-Spark plan per generation: the seeded bucket exchange, then either ONE
-per-bucket Arrow kernel (the reference reducer: W1 tournament, W2
-pairing, P4 crossover and P2 fitness in numpy) or, above
-WIDE_PATH_BYTES, the skinny composition (genome-free W1/W2 windows, one
-genome join-back, P4 crossover, P2 fitness) — see WIDE_PATH_BYTES:
+Spark plan per generation, one route at every population size: the
+seeded bucket key, one exchange of the buckets onto ``part % P``
+partitions sorted by (part, skey, id), and ONE streaming Arrow kernel
+per partition that is the reference reducer (W1 tournament, W2
+pairing, P4 crossover and P2 fitness in numpy,
+operators/selection.breed_children). The kernel holds one Arrow batch
+plus O(T) carried rows, so worker memory does not grow with the bucket:
 
-    population --(O1/X1 seeded skey+bucket)--> exchange(part) -->
-    {breed kernel | W1 windows → W2 lag-pairing → join-back → P4 → P2}
-    --> evaluated children
+    population --(O1/X1 seeded skey+bucket)--> exchange(part % P) -->
+    sort(part, skey, id) --> breed kernel --> evaluated children
 
 The A1/A2 best-individual stats ride the same evaluated DataFrame as a
 separate 1-row agg (partial map-side max → 32-row final exchange — the
@@ -32,6 +33,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import runtime
 from ..functions import bits
 from ..operators import crossover, fitness as fit_ops, generate, selection, shuffle
 
@@ -64,19 +66,15 @@ def default_n_buckets(spark: SparkSession) -> int:
     return spark.sparkContext.defaultParallelism * 4
 
 
-# The only route selector of next_generation, in genome bytes
-# (pop_rows × n_longs × 8). At or below it a generation is ONE grouped
-# Arrow kernel per bucket (selection.breed_children): one exchange, one
-# Python pass, no window, join or pivot — but a whole bucket's genomes
-# sit in one Python worker, so the bound also caps worker memory (16 MB
-# per bucket at the default 32 buckets). Above it the skinny composition
-# runs: windows over (id, fitness, skey) only and the genomes joined back
-# through one wide exchange with no wide sort, the shape that scales to
-# 10^7-10^8 individuals. 512 MB keeps the reference-scale runs (pop
-# 132,878 at 10k bits = 167 MB; pop 6,000 at 64k bits = 48 MB) on the
-# kernel and the README's 10× run (1.33M at 10k bits = 1.67 GB) on the
-# skinny route.
-WIDE_PATH_BYTES = 512 << 20
+def _check_buckets(n_buckets: int) -> None:
+    """The pair key part·2^40 + pair (operators/crossover) holds
+    MAX_BUCKETS buckets; past 2^22 the child ids pk·2 + c wrap int64, and
+    0 buckets has no bucket to route to."""
+    if not 1 <= n_buckets <= crossover.MAX_BUCKETS:
+        raise ValueError(
+            f"n_buckets must be in [1, {crossover.MAX_BUCKETS}], "
+            f"got {n_buckets}"
+        )
 
 
 def next_generation(
@@ -86,7 +84,6 @@ def next_generation(
     generation: int,
     n_buckets: int = 32,
     t_size: int = selection.TOURNAMENT_SIZE,
-    genome_df: DataFrame | None = None,
     pop_rows: int | None = None,
 ) -> DataFrame:
     """One SGA generation: evaluated population [id, genome, fitness] →
@@ -95,26 +92,14 @@ def next_generation(
     stream; ``seed=None`` draws shuffle keys and crossover masks at
     random.
 
-    ``pop_rows`` is the caller's known population size: when the
-    generation fits WIDE_PATH_BYTES it takes the per-bucket kernel,
-    otherwise (or when None) the skinny composition. Same ordering keys
-    and mask stream ⇒ bit-identical seeded children either way (pinned
-    in tests/test_sga.py). ``genome_df``: an id-unique [id, genome]
-    lookup for the skinny route's join-back, for sources that repeat ids
-    or derive genomes from ids (the lineitem entries) and for the
-    bucket-stored loop."""
+    ``pop_rows`` is accepted and ignored: it used to choose between two
+    generation routes, and perfbench's SGA workload still passes it."""
+    _check_buckets(n_buckets)
     gen_seed = None if seed is None else seed * 1_000_033 + generation
     sh = shuffle.with_shuffle_key(pop, gen_seed, n_buckets=n_buckets)
-    if (
-        pop_rows is not None
-        and pop_rows * bits.n_longs(n_bits) * 8 <= WIDE_PATH_BYTES
-    ):
-        return selection.breed_children(sh, n_bits, gen_seed, t_size)
-    sel = selection.tournament_parent_ids(sh, t_size)
-    pairs = selection.paired_parent_ids(sel)
-    wide = selection.pair_genomes(pairs, pop, genome_df)
-    children = crossover.crossover_children(wide, n_bits, gen_seed)
-    return evaluate(children, n_bits)
+    return selection.breed_children(
+        sh, n_bits, gen_seed, t_size, n_buckets=n_buckets
+    )
 
 
 def duck_generation_sql(
@@ -162,36 +147,20 @@ def run_sga(
     n_buckets: int | None = None,
     mutation_rate: float | None = None,
     rng: "_random.Random | None" = None,
-    storage: str = "memory",
-    store_dir: str | None = None,
 ) -> SgaResult:
     """Iterative driver (P7 stop rule: best ≥ n_bits − target_slack,
     ``reference src/edu/illinois/ga/MapReduce.java:433-434``). Emits the
     reference's telemetry line GA:<it>:<bits>:<pop>:<best>:<ms>
-    (``:432``) per generation.
-
-    ``storage``: per-generation materialization strategy.
-    - "memory" (default): persist + stats-truncating localCheckpoint —
-      the single-box shape (no disk churn while shuffles fit in RAM).
-    - "bucketed": each generation is WRITTEN as a parquet table
-      bucketed by id (sources/bucketing, count sized by
-      buckets_for_pop) and read back — the reference's per-generation
-      HDFS store (``MapReduce.java:298-302``) re-expressed so the NEXT
-      generation's genome join-backs are exchange-free on the genome
-      side (the bucketed scan already satisfies hash(id)); the
-      write/read also truncates lineage AND estimated stats, so the
-      checkpoint-stats trap can't arise. This is the 100 TB loop shape:
-      a generation is ~pop × genome bytes of sequential columnar I/O,
-      and every genome access after the write is a co-located local
-      read. ``store_dir`` (default: a temp dir, removed at the end)
-      holds one layout per live generation; generation k's layout is
-      deleted once k+1 is materialized."""
-    if storage not in ("memory", "bucketed"):
-        raise ValueError(f"run_sga: unknown storage {storage!r}")
+    (``:432``) per generation. Each generation is materialized by a
+    stats-resetting localCheckpoint (runtime.local_checkpoint_truncated)
+    and the one it replaced is freed (runtime.free_checkpoint)."""
     if pop_size < 1:
         # an empty population would surface as best=None deep in the
         # stats fold; fail at the API boundary instead
         raise ValueError(f"run_sga: pop_size must be >= 1, got {pop_size}")
+    if n_buckets is None:
+        n_buckets = default_n_buckets(spark)
+    _check_buckets(n_buckets)
     res = SgaResult()
     # seed=None mutation still needs a *fresh* deterministic stream per
     # generation — a literal-0 fallback reapplied the identical mask keyed
@@ -207,50 +176,11 @@ def run_sga(
     mut_base = (rng or _random).getrandbits(32) if seed is None else seed
     if seed is None:
         print(f"GA:mut_base={mut_base}")
-    if n_buckets is None:
-        n_buckets = default_n_buckets(spark)
-
-    own_store = False
-    if storage == "bucketed":
-        import os as _os
-        import shutil as _shutil
-        import tempfile as _tempfile
-        import uuid as _uuid
-
-        from ..sources import bucketing
-
-        if store_dir is None:
-            store_dir = _tempfile.mkdtemp(prefix="gamr_sga_store_")
-            own_store = True
-        run_tag = _uuid.uuid4().hex[:8]
-        live: dict = {"tbl": None, "path": None}
-
-        def _materialize_bucketed(df: DataFrame, it: int, rows_hint: int):
-            """Write generation ``it`` bucketed by id, read it back, and
-            delete the PREVIOUS generation's layout (now superseded)."""
-            # it = -1 is the initial population; shift so the table
-            # suffix stays a valid (unsigned) SQL identifier
-            tbl = f"gamr_sga_{run_tag}_g{it + 1}"
-            path = _os.path.join(store_dir, f"gen_{it + 1}")
-            bucketing.write_bucketed(
-                df, tbl, path, shuffle.buckets_for_pop(rows_hint), "id",
-                sort=False,  # hash join-backs — never sort genome rows
-            )
-            new = bucketing.read_bucketed(spark, tbl)
-            if live["tbl"]:
-                spark.sql(f"DROP TABLE IF EXISTS {live['tbl']}")
-                _shutil.rmtree(live["path"], ignore_errors=True)
-            live["tbl"], live["path"] = tbl, path
-            return new
 
     t0 = time.perf_counter()
-    init = evaluate(
+    pop = evaluate(
         generate.random_population(spark, pop_size, n_bits, seed), n_bits
-    )
-    if storage == "bucketed":
-        pop = _materialize_bucketed(init, -1, pop_size)
-    else:
-        pop = init.persist()
+    ).persist()
     # ONE job materializes the generation AND gathers its stats (the
     # reference's map-side running max + side-channel fold rode the same
     # job too, MapReduce.java:296-310) — a separate count()-then-agg
@@ -277,19 +207,7 @@ def run_sga(
                 # 1.33M-row generation per bounded run)
                 break
             t0 = time.perf_counter()
-            children = next_generation(
-                pop, n_bits, seed, it, n_buckets,
-                # the bucket-stored generation IS the id-unique genome
-                # lookup: join-backs ride its hash(id) bucketing with
-                # zero exchange on the genome side
-                genome_df=(
-                    pop.select("id", "genome")
-                    if storage == "bucketed" else None
-                ),
-                # the loop tracks its population size — generations
-                # within WIDE_PATH_BYTES take the per-bucket kernel
-                pop_rows=n,
-            )
+            children = next_generation(pop, n_bits, seed, it, n_buckets)
             if mutation_rate:
                 # extension beyond the reference (which has no mutation and
                 # therefore plateaus near the optimum as diversity depletes)
@@ -307,33 +225,18 @@ def run_sga(
                         children, n_bits, mutation_rate, gen_seed
                     )
                 children = evaluate(children, n_bits)
-            if storage == "bucketed":
-                # the store write IS the materialization: lineage and
-                # estimated stats both reset at the scan, so the
-                # checkpoint-stats trap (below) cannot arise
-                new_pop = _materialize_bucketed(children, it, n)
-            else:
-                # checkpoint WITH a statistics reset: plain
-                # localCheckpoint preserves the plan's estimated stats,
-                # and the skinny generation's JOINS make the size-only
-                # estimator's product COMPOUND across generations —
-                # digit count of sizeInBytes doubles per generation and
-                # the driver drowns in BigInteger.multiply from ~gen 18
-                # (exponential wall at ANY data size). See
-                # runtime.local_checkpoint_truncated.
-                from ..runtime import local_checkpoint_truncated
-
-                new_pop = local_checkpoint_truncated(children, eager=False)
+            # checkpoint WITH a statistics reset: plain localCheckpoint
+            # carries the plan's estimated stats into the next
+            # generation's plan (runtime.local_checkpoint_truncated);
+            # the stats agg below is the one action that materializes it
+            new_pop = runtime.local_checkpoint_truncated(children, eager=False)
             best, n = new_pop.agg(
                 F.max("fitness"), F.count(F.lit(1))
             ).collect()[0]
             gen_ms = int((time.perf_counter() - t0) * 1000)
-            if storage != "bucketed":
-                # free_checkpoint: unpersist() alone leaks the rotated
-                # localCheckpoint's RDD blocks
-                from ..runtime import free_checkpoint
-
-                free_checkpoint(pop)
+            # free_checkpoint: unpersist() alone leaks the rotated
+            # localCheckpoint's RDD blocks
+            runtime.free_checkpoint(pop)
             pop = new_pop
             if n == 0:
                 # the odd-tail pairing drop shrinks each bucket by ~1
@@ -344,14 +247,5 @@ def run_sga(
                 print(f"GA:extinct:{it + 1}")
                 break
     finally:
-        if storage == "bucketed":
-            if live["tbl"]:
-                spark.sql(f"DROP TABLE IF EXISTS {live['tbl']}")
-                _shutil.rmtree(live["path"], ignore_errors=True)
-            if own_store:
-                _shutil.rmtree(store_dir, ignore_errors=True)
-        else:
-            from ..runtime import free_checkpoint
-
-            free_checkpoint(pop)
+        runtime.free_checkpoint(pop)
     return res

@@ -141,13 +141,13 @@ def local_checkpoint_truncated(df: DataFrame, eager: bool = True) -> DataFrame:
     loop whose per-iteration plan contains joins, the size-only
     estimator multiplies child sizes (inner-join sizeInBytes = product
     of children), so the carried estimate COMPOUNDS: sizeInBytes's
-    digit count doubles every iteration (measured on the r8 skinny SGA
-    loop: 7 → 15 → 29 → … → 902 digits by generation 7), and every
-    subsequent plan's stats pass multiplies those BigInts — wall time
-    per generation triples from ~gen 18 regardless of data size (the
-    40-generation 64-row repro hit 292 s/generation of pure
-    driver-side BigInteger.multiply; r1-r7's join-free generation plan
-    only ever ADDED stats, which masked the trap).
+    digit count doubles every iteration (a join-composed SGA
+    generation went 7 → 15 → 29 → … → 902 digits by generation 7),
+    and every subsequent plan's stats pass multiplies those BigInts —
+    wall time per generation triples from ~gen 18 regardless of data
+    size (292 s/generation of pure driver-side BigInteger.multiply on
+    a 64-row population). The SGA generation is join-free today, but
+    the loops keep the reset so no plan shape can bring the trap back.
 
     The fix rebuilds the DataFrame over the checkpointed RDD with
     default leaf stats (sizeInBytes = spark.sql.defaultSizeInBytes):

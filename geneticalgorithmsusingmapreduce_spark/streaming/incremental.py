@@ -62,18 +62,13 @@ def start_incremental_sga(
     )
 
     def one_batch(b: int) -> None:
-        # the loop knows its population size (pop_size at batch 0, the
-        # previous batch's count after) — small generations take the
-        # per-bucket kernel, identical children (plans/sga)
-        prev_n = state.history[-1][2] if state.history else pop_size
         children = sga.next_generation(
-            state.population, n_bits, seed, b, n_buckets, pop_rows=prev_n,
+            state.population, n_bits, seed, b, n_buckets
         )
         if dedup_children:
             children = dedup.dedup_genomes(children)
-        # stats-resetting checkpoint: the generation plan's joins would
-        # otherwise compound the size estimate across micro-batches
-        # (see runtime.local_checkpoint_truncated)
+        # stats-resetting checkpoint: the estimate must not carry
+        # across micro-batches (see runtime.local_checkpoint_truncated)
         new_pop = local_checkpoint_truncated(children)
         best, n = new_pop.agg(F.max("fitness"), F.count(F.lit(1))).collect()[0]
         old = state.population

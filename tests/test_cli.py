@@ -81,6 +81,7 @@ def test_inc_ga_three_args(spark):
         ["inc_ga", "4", "4"],  # 2 of 3 args
         ["ga", "4", "4", "x", "100", "10"],  # non-integer
         ["ga", "0", "4", "64", "3", "1"],  # zero maps
+        ["ga", "4", str((1 << 20) + 1), "64", "3", "1"],  # > 2^20 buckets
     ],
 )
 def test_usage_errors(spark, argv):

@@ -22,8 +22,6 @@ from geneticalgorithmsusingmapreduce_spark.operators import (
     shuffle,
 )
 
-WIDE_BITS = 64 * (bits.LARGE_NL + 2)  # just over the dispatch threshold
-
 
 def test_seed_none_population_sets_every_bit_position(spark):
     """OR of 2048 random 64-bit longs must set all 64 bits (miss
@@ -35,29 +33,11 @@ def test_seed_none_population_sets_every_bit_position(spark):
     assert row.b == 64
 
 
-def test_seed_none_crossover_masks_set_every_bit_position(spark):
+def test_seed_none_crossover_masks_set_every_bit_position():
     """Crossover with seed=None must be able to mix every bit position:
     children of all-ones × all-zeros parents are exactly the masks, so
-    OR over children must cover every bit — at one long (the rand()
-    expression) and above LARGE_NL (the mapInArrow kernel)."""
-    from geneticalgorithmsusingmapreduce_spark.operators import crossover
-
-    for n_bits in (64, WIDE_BITS):
-        nl = bits.n_longs(n_bits)
-        pairs = spark.range(1024).select(
-            F.lit(0).alias("part"),
-            F.col("id").alias("pair"),
-            F.array_repeat(F.lit(-1).cast("long"), nl).alias("pa"),
-            F.array_repeat(F.lit(0).cast("long"), nl).alias("pb"),
-        )
-        ch = crossover.crossover_children(pairs, n_bits, seed=None)
-        row = ch.agg(*[
-            F.expr(f"bit_count(bit_or(element_at(genome, {j + 1})))")
-            for j in range(nl)
-        ]).collect()[0]
-        assert list(row) == [64] * nl, n_bits
-    # the per-bucket kernel's numpy masks: every bit of a full long, and
-    # exactly the used bits of the tail long
+    the kernel's numpy masks must cover every bit of a full long and
+    exactly the used bits of the tail long."""
     import numpy as np
 
     ones = np.full((1024, 2), -1, dtype=np.int64)

@@ -104,46 +104,42 @@ def _formatted_plan(df) -> str:
 
 
 def test_tournament_shuffle_is_skinny(spark):
-    # r8 (r7 VERDICT "Next round" #1): selection needs only
-    # (id, fitness, skey) — the tournament/pairing window exchanges
-    # must NOT carry genome bytes (pop × genome was the engine's
-    # dominant sf100 cost); genomes join back by id through a hash
-    # join, never a wide sort.
+    # the window tournament needs only (id, fitness, skey) — its window
+    # exchanges must NOT carry genome bytes; genomes join back by id
+    # through a hash join, never a wide sort.
     import re
 
-    for name in ("sga_tournament", "sga_generation"):
-        p = _formatted_plan(catalog.QUERIES[name](spark, SF))
-        # split into per-node blocks: "(12) Exchange ..." sections
-        blocks = re.split(r"\n(?=\(\d+\) )", p)
-        # window exchanges partition on part ALONE; the pairing pivot's
-        # (part, pair) exchange is the one sanctioned genome carrier
-        part_exchanges = [
-            b for b in blocks
-            if b.startswith("(") and "Exchange" in b.split("\n")[0]
-            and re.search(r"hashpartitioning\(part#\d+L?, \d+\)", b)
-        ]
-        assert part_exchanges, f"{name}: no window exchange found"
-        for b in part_exchanges:
-            assert "genome" not in b and "parent#" not in b, (
-                f"{name}: window exchange carries genome bytes:\n{b[:400]}"
-            )
-        # the skinny side of the genome join-back must hash-build (a
-        # wide-side hash build OOM'd sf100; a genome-side SMJ sort is
-        # allowed — merge sorts spill)
-        assert "ShuffledHashJoin" in p, f"{name}: join-back not hash join"
-        # every WINDOW sort (skey / rn / pos ordering — the O(n log n)
-        # per-bucket sorts) must be genome-free; only join-id merge
-        # sorts may see genome-carrying rows
-        window_sorts = [
-            b for b in blocks
-            if b.startswith("(") and b.split("\n")[0].endswith("Sort")
-            and re.search(r"Arguments: \[[^\]]*(skey|rn|pos)#", b)
-        ]
-        assert window_sorts, f"{name}: no window sorts found"
-        for b in window_sorts:
-            assert "genome" not in b and "parent#" not in b and (
-                " pa#" not in b
-            ), f"{name}: window sort carries genome bytes:\n{b[:400]}"
+    p = _formatted_plan(catalog.QUERIES["sga_tournament"](spark, SF))
+    # split into per-node blocks: "(12) Exchange ..." sections
+    blocks = re.split(r"\n(?=\(\d+\) )", p)
+    # window exchanges partition on part ALONE
+    part_exchanges = [
+        b for b in blocks
+        if b.startswith("(") and "Exchange" in b.split("\n")[0]
+        and re.search(r"hashpartitioning\(part#\d+L?, \d+\)", b)
+    ]
+    assert part_exchanges, "no window exchange found"
+    for b in part_exchanges:
+        assert "genome" not in b and "parent#" not in b, (
+            f"window exchange carries genome bytes:\n{b[:400]}"
+        )
+    # the skinny side of the genome join-back must hash-build (a
+    # wide-side hash build OOM'd sf100; a genome-side SMJ sort is
+    # allowed — merge sorts spill)
+    assert "ShuffledHashJoin" in p, "join-back not hash join"
+    # every WINDOW sort (skey / rn ordering — the O(n log n) per-bucket
+    # sorts) must be genome-free; only join-id merge sorts may see
+    # genome-carrying rows
+    window_sorts = [
+        b for b in blocks
+        if b.startswith("(") and b.split("\n")[0].endswith("Sort")
+        and re.search(r"Arguments: \[[^\]]*(skey|rn|pos)#", b)
+    ]
+    assert window_sorts, "no window sorts found"
+    for b in window_sorts:
+        assert "genome" not in b and "parent#" not in b, (
+            f"window sort carries genome bytes:\n{b[:400]}"
+        )
 
 
 def test_tournament_genome_side_zero_exchange(spark):
@@ -616,34 +612,47 @@ def test_ivf_rebuild_generation_job_budget(spark, tmp_path):
     assert ir.serve_generation(spark, d) == 1
 
 
-# extended-explain budget (bytes) of one kernel-route SGA generation
-# (population within WIDE_PATH_BYTES): the per-bucket breed kernel's plan
-# measures ~4.3 KB; the one-pass wide-window plan it replaced (max_by
-# genome windows, a wrap-around union, lag pairing and the crossover
-# expression) measured ~25 KB, both at 10,000 bits
+# extended-explain budget (bytes) of one SGA generation: the streaming
+# breed kernel's plan measures ~4.3 KB; the one-pass wide-window plan
+# it replaced (max_by genome windows, a wrap-around union, lag pairing
+# and the crossover expression) measured ~25 KB, both at 10,000 bits
 SGA_KERNEL_EXPLAIN_BUDGET = 8 << 10
 
 
+def assert_one_kernel_pass(df, budget=SGA_KERNEL_EXPLAIN_BUDGET) -> None:
+    """A generation is the seeded bucket exchange and one streaming
+    Arrow pass: one exchange, passing ``part`` through as the partition
+    id, one mapInArrow, no window, join or grouped kernel, and a
+    constant-size plan (``budget`` bytes of extended explain; None
+    skips the size check)."""
+    p = _plan(df)
+    for node in ("Window", "Join", "FlatMapGroupsInArrow"):
+        assert node not in p, f"generation plan has {node}:\n{p}"
+    assert p.count("Exchange") == 1, p
+    assert re.search(
+        r"Exchange shufflepartitionidpassthrough\("
+        r"direct_shuffle_partition_id\(cast\(part#\d+L? as int\)\), \d+\)",
+        p,
+    ), p
+    assert p.count("MapInArrow") == 1, p
+    size = len(df._jdf.queryExecution().toString().encode())
+    assert budget is None or size < budget, (
+        f"generation plan is {size} B of extended explain, budget {budget} B"
+    )
+
+
 def test_sga_kernel_generation_one_exchange(spark):
-    # a small-population generation is the seeded bucket exchange and
-    # one grouped Arrow pass: no window, no join, one exchange on part,
-    # and a constant-size plan
     from geneticalgorithmsusingmapreduce_spark.operators import generate
     from geneticalgorithmsusingmapreduce_spark.plans import sga
 
     pop = sga.evaluate(
         generate.random_population(spark, 400, 10_000, seed=3), 10_000
     )
-    ch = sga.next_generation(pop, 10_000, 3, 0, n_buckets=8, pop_rows=400)
-    p = _plan(ch)
-    for node in ("Window", "Join"):
-        assert node not in p, f"kernel generation plan has {node}:\n{p}"
-    assert p.count("Exchange") == 1, p
-    assert re.search(r"Exchange hashpartitioning\(part#\d+L?, \d+\)", p), p
-    size = len(ch._jdf.queryExecution().toString().encode())
-    assert size < SGA_KERNEL_EXPLAIN_BUDGET, (
-        f"kernel generation plan is {size} B of extended explain, budget "
-        f"{SGA_KERNEL_EXPLAIN_BUDGET} B"
+    assert_one_kernel_pass(sga.next_generation(pop, 10_000, 3, 0, n_buckets=8))
+    # no size budget: the entry's lineitem-derived population adds
+    # ~5 KB of extended explain to the generation's ~4.3 KB
+    assert_one_kernel_pass(
+        catalog.QUERIES["sga_generation"](spark, SF), budget=None
     )
 
 
@@ -664,7 +673,7 @@ def test_genome_kernels_are_arrow_native(spark):
     )
     frames = {
         "evaluate": pop,
-        "skinny generation": sga.next_generation(pop, n_bits, 3, 0, 4),
+        "generation": sga.next_generation(pop, n_bits, 3, 0, 4),
         "mutation": mutate.apply_mutation(pop, n_bits, 1e-3, 3),
         "sparse mutation": mutate.apply_mutation_sparse(
             pop, n_bits, 1e-4, 3

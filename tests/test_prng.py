@@ -90,34 +90,29 @@ def test_popcount_matches_python(spark):
         assert r.pc == sum((x & (2**64 - 1)).bit_count() for x in r.g)
 
 
-def test_crossover_bit_conservation_and_parity(spark):
+def test_crossover_bit_conservation_and_parity():
+    import numpy as np
+
     nl = bits.n_longs(256)
-    ga = bits.spark_genome_sql(1, "id", 256)
-    gb = bits.spark_genome_sql(2, "id", 256)
-    gm = bits.spark_mask_sql(3, "id", 256)
-    df = spark.range(300).selectExpr(
-        f"id", f"{ga} AS a", f"{gb} AS b", f"{gm} AS m"
-    ).selectExpr(
-        "id", "a", "b", "m",
-        f"{bits.spark_crossover_sql('a', 'b', 'm', 1, nl)} AS c1",
-        f"{bits.spark_crossover_sql('a', 'b', 'm', 2, nl)} AS c2",
-    )
-    rows = df.collect()
-    for r in rows:
-        for j in range(nl):
-            # exact invariant of P4: children conserve the parents' bits
-            assert (r.c1[j] | r.c2[j]) == (r.a[j] | r.b[j])
-            assert (r.c1[j] & r.c2[j]) == (r.a[j] & r.b[j])
+    ids = np.arange(300, dtype=np.int64)
+    a = bits.np_genome(1, ids, 256)
+    b = bits.np_genome(2, ids, 256)
+    c1, c2 = bits.np_crossover(a, b, 3, ids, 256)
+    # exact invariant of P4: children conserve the parents' bits
+    assert np.array_equal(c1 | c2, a | b)
+    assert np.array_equal(c1 & c2, a & b)
     src = "SELECT id FROM range(300) t(id)"
     qa = bits.duck_genome_query(src, "id", ["id"], 256, 1, out="a")
     qb = bits.duck_genome_query(src, "id", ["id"], 256, 2, out="b")
     qm = bits.duck_mask_query(src, "id", ["id"], 256, 3, out="m")
     d = _duck(f"""
-        SELECT {bits.duck_crossover_sql('a', 'b', 'm', 1, nl)} AS c1
+        SELECT {bits.duck_crossover_sql('a', 'b', 'm', 1, nl)} AS c1,
+               {bits.duck_crossover_sql('a', 'b', 'm', 2, nl)} AS c2
         FROM {qa} _a JOIN {qb} _b ON _a.__gk = _b.__gk
                      JOIN {qm} _m ON _a.__gk = _m.__gk
         ORDER BY _a.__gk""")
-    assert [list(r.c1) for r in rows] == [list(x[0]) for x in d]
+    assert c1.tolist() == [list(x[0]) for x in d]
+    assert c2.tolist() == [list(x[1]) for x in d]
 
 
 def test_getbit(spark):

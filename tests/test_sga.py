@@ -5,6 +5,8 @@ tournament windowing, and crossover all working together."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -52,6 +54,27 @@ def test_tournament_preserves_count_and_pressure(pop):
     assert avg_par > avg_in + 2
 
 
+# Arrow batches of 7 rows split buckets across batches, and 3 shuffle
+# partitions put several buckets in one kernel partition
+SPLIT_BATCHES = {
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "7",
+    "spark.sql.shuffle.partitions": "3",
+}
+
+
+@contextlib.contextmanager
+def _confs(spark, confs):
+    """Run the block with ``confs`` set on the session, then restore."""
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
 def test_small_buckets_kernel_reducer_and_oracle_agree(spark):
     # buckets of 1..6 rows: below T-1 rows the wrap-around yields
     # max(0, 2n - (T-1)) parents, not n (0, 0, 2 for n = 1, 2, 3). The
@@ -89,11 +112,9 @@ def test_small_buckets_kernel_reducer_and_oracle_agree(spark):
     duck_par = {key(r) for r in con.sql(f"SELECT * FROM {par_sql} _p").fetchall()}
     per_part = [sum(1 for r in duck_par if r[0] == p) for p in range(6)]
     assert per_part == [0, 0, 2, 4, 5, 6]
-    for df in (selection.tournament_parents_pandas(sh),
-               selection.tournament_parents(sh)):
-        got = {key(r) for r in df.select(
-            "part", "pos", "parent", "parent_fitness").collect()}
-        assert got == duck_par
+    got = {key(r) for r in selection.tournament_parents(sh).select(
+        "part", "pos", "parent", "parent_fitness").collect()}
+    assert got == duck_par
     ch_sql = crossover.duck_children_sql(
         selection.duck_paired_sql(par_sql), N_BITS, seed
     )
@@ -101,11 +122,59 @@ def test_small_buckets_kernel_reducer_and_oracle_agree(spark):
         (i, tuple(g), _ones(g))
         for i, g in con.sql(f"SELECT * FROM {ch_sql} _c").fetchall()
     }
-    kernel = {
-        (r.id, tuple(r.genome), r.fitness)
-        for r in selection.breed_children(sh, N_BITS, seed).collect()
+    assert len(duck_ch) == 2 * (0 + 0 + 1 + 2 + 2 + 3)
+    # the streaming kernel at the session's batch size and with buckets
+    # split across 7-row Arrow batches
+    for confs in ({}, SPLIT_BATCHES):
+        with _confs(spark, confs):
+            kernel = {
+                (r.id, tuple(r.genome), r.fitness)
+                for r in selection.breed_children(sh, N_BITS, seed).collect()
+            }
+            parents = {key(r) for r in selection.tournament_parents_pandas(
+                sh).collect()}
+        assert kernel == duck_ch, confs
+        assert parents == duck_par, confs
+
+
+def test_breed_kernel_streams_batches():
+    # Spark-free: one 1,000-row bucket in 20 Arrow batches through the
+    # breed kernel. Each batch's children must leave before the batch
+    # after next is pulled (worker memory is a batch plus O(T) rows,
+    # not the bucket), and must equal the kernel's output on the
+    # bucket as one batch.
+    import numpy as np
+    import pyarrow as pa
+
+    t, n, rows_per_batch = selection.TOURNAMENT_SIZE, 1000, 50
+    rng = np.random.default_rng(3)
+    g = rng.integers(-(2**63), 2**63 - 1, (n, NL), dtype=np.int64)
+    fit = rng.integers(0, 8, n)  # coarse fitness: windows hold ties
+
+    def batches(size, pulled):
+        for a in range(0, n, size):
+            pulled.append(a // size)
+            yield pa.RecordBatch.from_pydict({
+                "part": np.full(len(fit[a:a + size]), 7, dtype=np.int64),
+                "fitness": fit[a:a + size],
+                "genome": bits.arrow_list_column(g[a:a + size]),
+            })
+
+    pulled, streamed = [], set()
+    for out in selection._breed(batches(rows_per_batch, pulled), N_BITS, 9, t):
+        for cid, genome in zip(out.column("id").to_pylist(),
+                               out.column("genome").to_pylist()):
+            # the pair's second parent closes its window at this row
+            row = (cid % (1 << 41)) // 2 * 2 + t - 2
+            assert pulled[-1] <= row // rows_per_batch + 1, (cid, pulled[-1])
+            streamed.add((cid, tuple(genome)))
+    whole = {
+        (cid, tuple(genome))
+        for out in selection._breed(batches(n, []), N_BITS, 9, t)
+        for cid, genome in zip(out.column("id").to_pylist(),
+                               out.column("genome").to_pylist())
     }
-    assert kernel == duck_ch and len(kernel) == 2 * (0 + 0 + 1 + 2 + 2 + 3)
+    assert streamed == whole and len(whole) == n
 
 
 def test_pairing_and_children_counts(spark, pop):
@@ -149,81 +218,61 @@ def test_run_sga_converges(spark):
     assert res.stats[-1].best_fitness >= res.stats[0].best_fitness
 
 
-def test_run_sga_bucketed_storage_identical_trajectory(spark):
-    # r9 (r8 VERDICT #1): storage="bucketed" writes each generation as
-    # a bucketed-by-id table and feeds it back as the id-unique genome
-    # lookup — a pure MATERIALIZATION strategy change, so the seeded
-    # trajectory must be bit-identical to the in-memory loop
-    kw = dict(
-        n_bits=N_BITS, pop_size=512, seed=7,
-        max_generations=6, target_slack=0, n_buckets=8,
-    )
-    mem = sga.run_sga(spark, **kw)
-    bk = sga.run_sga(spark, storage="bucketed", **kw)
-    assert [s.best_fitness for s in bk.stats] == [
-        s.best_fitness for s in mem.stats
-    ]
-    assert [s.pop for s in bk.stats] == [s.pop for s in mem.stats]
-    # the store cleans up after itself (no leaked gamr_sga tables)
-    leftovers = [
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith("gamr_sga_")
-    ]
-    assert leftovers == []
-
-
 def test_wide_fast_path_children_bit_identical(spark):
-    # the per-bucket kernel route (small populations) must breed
-    # BIT-IDENTICAL evaluated children to the skinny composition — same
-    # ordering keys and mask stream, so the only difference is physical.
-    # One width inside the literal-expression crossover (nl ≤ LARGE_NL)
-    # and one on the numpy crossover (nl > LARGE_NL).
+    # a generation must breed exactly the DuckDB twin's children, with
+    # buckets whole in one Arrow batch and split across 7-row batches;
+    # one width on each side of LARGE_NL
+    import duckdb
+    import pyarrow as pa
+
     for n_bits in (N_BITS, 64 * (bits.LARGE_NL + 2)):
         pop = sga.evaluate(
             generate.random_population(spark, 600, n_bits, seed=5), n_bits
         )
-        skinny = sga.next_generation(pop, n_bits, 5, 0, n_buckets=8)
-        kernel = sga.next_generation(
-            pop, n_bits, 5, 0, n_buckets=8, pop_rows=600
-        )
-        a = {(r.id, tuple(r.genome), r.fitness) for r in skinny.collect()}
-        b = {(r.id, tuple(r.genome), r.fitness) for r in kernel.collect()}
-        assert a == b and a, n_bits
-        assert all(f == _ones(g) for _, g, f in b)
-
-
-def test_wide_fast_path_routing():
-    # threshold arithmetic: within WIDE_PATH_BYTES routes to the
-    # per-bucket kernel, above or unknown stays skinny
-    from geneticalgorithmsusingmapreduce_spark.functions import bits
-
-    nl = bits.n_longs(10_000)
-    assert 132_878 * nl * 8 <= sga.WIDE_PATH_BYTES     # bench 10kbit: kernel
-    assert 6_000 * bits.n_longs(64_000) * 8 <= sga.WIDE_PATH_BYTES
-    assert 1_328_772 * nl * 8 > sga.WIDE_PATH_BYTES    # README 10x: skinny
-    assert 27_856_103 * 4 * 8 > sga.WIDE_PATH_BYTES    # sf10 pop: skinny
+        rows = pop.collect()
+        con = duckdb.connect()
+        con.register("pop", pa.Table.from_pylist([
+            {"id": r.id, "genome": list(r.genome), "fitness": r.fitness}
+            for r in rows
+        ]))
+        q = sga.duck_generation_sql("(SELECT * FROM pop)", n_bits, 5, 0, 8)
+        duck = {
+            (i, tuple(g), _ones(g))
+            for i, g in con.sql(f"SELECT id, genome FROM {q} _q").fetchall()
+        }
+        assert duck, n_bits
+        for confs in ({}, SPLIT_BATCHES):
+            with _confs(spark, confs):
+                got = {
+                    (r.id, tuple(r.genome), r.fitness) for r in
+                    sga.next_generation(pop, n_bits, 5, 0, n_buckets=8)
+                    .collect()
+                }
+            assert got == duck, (n_bits, confs)
 
 
 def test_wide_fast_path_plan_has_no_pivot(spark):
+    from test_plans import assert_one_kernel_pass
+
     pop = sga.evaluate(
         generate.random_population(spark, 400, N_BITS, seed=3), N_BITS
     )
-    kernel_plan = sga.next_generation(
-        pop, N_BITS, 3, 0, n_buckets=8, pop_rows=400
-    )._jdf.queryExecution().optimizedPlan().toString()
-    assert "map_from_entries" not in kernel_plan
-    assert "FlatMapGroupsInArrow" in kernel_plan
-    skinny_plan = sga.next_generation(
-        pop, N_BITS, 3, 0, n_buckets=8
-    )._jdf.queryExecution().optimizedPlan().toString()
-    assert "map_from_entries" in skinny_plan
+    assert_one_kernel_pass(sga.next_generation(pop, N_BITS, 3, 0, n_buckets=8))
 
 
-def test_run_sga_rejects_unknown_storage(spark):
-    import pytest
-
-    with pytest.raises(ValueError, match="unknown storage"):
-        sga.run_sga(spark, n_bits=64, pop_size=8, storage="s3-magic")
+def test_run_sga_rejects_bad_n_buckets(spark):
+    # the pair key part·2^40 + pair holds 2^20 buckets; 0 buckets used to
+    # fail deep in Spark on `skey % 0`, and ids wrapped from 2^22
+    pop = sga.evaluate(
+        generate.random_population(spark, 16, 64, seed=3), 64
+    )
+    for n in (0, -1, (1 << 20) + 1):
+        with pytest.raises(ValueError, match="n_buckets"):
+            sga.run_sga(spark, n_bits=64, pop_size=8, n_buckets=n)
+        with pytest.raises(ValueError, match="n_buckets"):
+            sga.next_generation(pop, 64, 3, 0, n_buckets=n)
+    for n in (1, 1 << 20):  # both ends are valid (lazy: no job runs)
+        sga.next_generation(pop, 64, 3, 0, n_buckets=n)
 
 
 def test_pop_sizing_and_bucket_defaults(spark):
@@ -241,13 +290,12 @@ def test_run_sga_one_action_per_generation(spark):
     # the loop's scale contract: ONE action per generation — the stats
     # agg materializes the lazy checkpoint, so produce + lineage-truncate
     # + stats ride the same action (like the reference's side-channel
-    # fold rode its generation job). AQE turns one action into one job
-    # per exchange stage: the r8 skinny composition runs ~6 stages per
-    # generation (1 skinny window exchange + genome-lookup exchange +
-    # 2 join-probe exchanges + stats), but the heavy ones are hash
-    # repartitions of SKINNY rows — the bound pins action count, not
-    # byte volume. The old two-action loop (eager checkpoint + separate
-    # agg) measures ~12/generation here and fails this bound.
+    # fold rode its generation job). AQE turns the action into one job
+    # per exchange stage (the bucket exchange and the stats agg's): 15
+    # jobs for this run, the initial population's stats and four bred
+    # generations. A second exchange per generation adds 4 and fails;
+    # the old two-action loop (eager checkpoint + separate agg)
+    # measured ~12 per generation.
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None))
     gens = 5
@@ -256,7 +304,7 @@ def test_run_sga_one_action_per_generation(spark):
         max_generations=gens, target_slack=0, n_buckets=4,
     )
     jobs = len(tracker.getJobIdsForGroup(None)) - before
-    assert jobs <= gens * 6 + 4, f"{jobs} jobs for {gens} generations"
+    assert jobs <= gens * 3 + 2, f"{jobs} jobs for {gens} generations"
 
 
 def test_unseeded_mutation_base_injectable(spark, capsys):
