@@ -146,7 +146,7 @@ def ga_loop_benchmarks(spark) -> dict[str, float]:
         t0 = time.perf_counter()
         samples = cga_ops.sample_members(vec, 4, 42 + it)
         fits = cga_ops.member_fitness(samples)
-        w, l = cga_ops.winner_loser(fits)
+        w, l, _ = cga_ops.winner_loser_best(fits)
         nv = cga_ops.update_vectors(vec, w, l, 42 + it, 13_000)
         nv.agg(F.count(F.lit(1))).collect()
         dt = time.perf_counter() - t0

@@ -42,7 +42,7 @@ from .plans import sga as sga_plan
 from .sources import bucketing
 from .sources.registry import (
     read_any, read_events, read_sequencefile_population, read_table,
-    table_path, write_sequencefile_population, write_table,
+    write_sequencefile_population, write_table,
 )
 from .streaming import stateful as stateful_ops
 from .streaming import windows as win_ops
@@ -790,67 +790,6 @@ def _pop_with_fitness(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fit_ops.with_fitness(pop, nl=NL)
 
 
-def _pop_genomes_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Id-UNIQUE [id, genome] lookup for the window tournament's
-    join-back (``sga_tournament``, operators/selection.tournament_parents):
-    the lineitem fixture repeats ~24% of iids (equal genomes by
-    construction — genome is a pure function of iid), and a repeated
-    winner id would fan out one output row per copy. The generation
-    kernel carries each row's own genome and needs no lookup. So dedup
-    the 8-byte IDS first and run the
-    hash-chain derivation AFTER, on distinct ids only: the dedup
-    exchange carries bare ids, the derived genomes stay in their
-    post-exchange partitions (already matching the join key), and
-    derivation cost drops to the distinct count — a dedup of derived
-    genomes would be a wide sort-aggregate over arrays."""
-    ids = (
-        read_table(spark, sf_dir, "lineitem")
-        .filter(LI_POP_WHERE)
-        .select(F.expr(LI_IID).alias("iid"))
-        .distinct()
-    )
-    return generate.population_from_table(
-        ids, "iid", GENOME_BITS, SEED
-    ).select(F.col("iid").alias("id"), "genome")
-
-
-def _scoped_bucketed(
-    df: DataFrame, prefix: str, n_buckets: int, key: str, sort: bool = True
-) -> DataFrame:
-    """Write ``df`` as a uuid-named bucketed table in a temp dir and read
-    it back.  The entry scope drops the table and removes the dir, so
-    calls back to back never share a table."""
-    spark = df.sparkSession
-    d = runtime.scoped_tempdir(prefix)
-    tbl = prefix + uuid.uuid4().hex[:8]
-    runtime.scoped_cleanup(lambda: spark.sql(f"DROP TABLE IF EXISTS {tbl}"))
-    bucketing.write_bucketed(df, tbl, d, n_buckets, key, sort=sort)
-    return bucketing.read_bucketed(spark, tbl)
-
-
-def _pop_genome_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BUCKET-STORED generation: the id-unique genome
-    lookup written as a bucketed+sorted parquet table on ``id`` and read
-    back — the genome join-back side of the tournament/pairing then
-    needs NO exchange at all (the bucketed scan's hash(id) partitioning
-    satisfies the join; only the skinny winner rows shuffle, to
-    the store's bucket count).  This is the Spark shape of the
-    reference's per-generation HDFS store
-    (``reference src/edu/illinois/ga/MapReduce.java:298-302``): each
-    generation is written once, and every genome access inside the
-    next generation's selection is a co-located local read.
-
-    Bucket count sized to the source bytes (buckets_for_path — a fixed
-    count caps read parallelism at scale); bucketBy writes need no
-    shuffle (each task writes its rows into per-bucket files)."""
-    n = bucketing.buckets_for_path(table_path(sf_dir, "lineitem"))
-    return _scoped_bucketed(
-        _pop_genomes_unique(spark, sf_dir), "gamr_gen_store_", n, "id",
-        sort=False,  # the join-back is a hash join — a per-bucket sort
-        # would be a full-width genome sort paid at write time
-    )
-
-
 def _duck_pop_fit() -> str:
     return (
         f"(SELECT iid AS id, genome, {_DUCK_FIT} AS fitness "
@@ -888,20 +827,15 @@ def sga_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sga_tournament(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1: sliding-window tournament (size 5, wrap-around flush) as ROWS
-    frame window aggregation — skinny-shuffled (the windows sort
-    (id, fitness, skey) only; winner genomes hash-join back by id —
-    operators/selection module doc). The lookup side is the
-    bucket-stored generation: _pop_genomes_unique written once as a
-    bucketed table on id, so genome bytes cross no exchange and the
-    bucketed scan feeds the join-back directly (zero exchange on the
-    lookup side too). Plan pinned in
-    tests/test_plans.py::test_tournament_genome_side_zero_exchange."""
+    """W1: sliding-window tournament (size 5, wrap-around flush) as the
+    reference reducer's streaming walk (operators/selection module doc),
+    checked against the DuckDB window twin. Each row carries its own
+    genome, so the population's repeated ids need no lookup."""
     sh = shuffle_ops.with_shuffle_key(
         _pop_with_fitness(spark, sf_dir), SEED * 1_000_033, n_buckets=32
     )
     return selection_ops.tournament_parents(
-        sh, genomes=_pop_genome_store(spark, sf_dir)
+        sh, n_buckets=32
     ).withColumn("parent", _gstr("parent"))
 
 
@@ -978,7 +912,7 @@ def cga_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
     fits = cga_ops.member_fitness(
         cga_ops.sample_members(vec, CGA_T, _CGA_GEN_SEED)
     )
-    w, l = cga_ops.winner_loser(fits)
+    w, l, _ = cga_ops.winner_loser_best(fits)
     return cga_ops.update_vectors(vec, w, l, _CGA_GEN_SEED, CGA_POP)
 
 
@@ -994,7 +928,7 @@ def cga_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     fits = cga_ops.member_fitness(
         cga_ops.sample_members(vec, CGA_T, _CGA_GEN_SEED)
     )
-    w, l = cga_ops.winner_loser(fits)
+    w, l, _ = cga_ops.winner_loser_best(fits)
     return cga_ops.convergence_stats(
         cga_ops.update_vectors(vec, w, l, _CGA_GEN_SEED, CGA_POP)
     )
@@ -1002,27 +936,14 @@ def cga_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- W3 / J1 / D1 / O2-O3 / U1 / S1 parity ------------------------------
 
-# same oracle as sga_tournament: the escape hatch must be bit-identical
-ORACLES_SHARED_TOURNAMENT = ORACLES.get("sga_tournament")
-
-
-@register("sga_tournament_pandas", ORACLES_SHARED_TOURNAMENT)
+@register("sga_tournament_pandas", ORACLES.get("sga_tournament"))
 def sga_tournament_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3: the tournament as the streaming reducer kernel (mapInArrow
-    over sorted buckets) — the idiomatic successor of the reference's
-    reducer class. Checked against the *same* oracle as the
-    window-expression form: both must produce identical parents. The
-    kernel holds one Arrow batch plus O(T) rows, so the bucket count
-    sets parallelism, not worker memory; 32 is the count the static
-    oracle bakes in."""
-    sh = shuffle_ops.with_shuffle_key(
-        _pop_with_fitness(spark, sf_dir), SEED * 1_000_033, n_buckets=32
-    )
-    return selection_ops.tournament_parents_pandas(
-        sh, n_buckets=32
-    ).withColumn(
-        "parent", _gstr("parent")
-    )
+    """W3: the reducer-class successor (SURVEY.md §2.12), a streaming
+    ``mapInArrow`` kernel over sorted buckets: ``sga_tournament`` itself,
+    checked against the same oracle. The kernel holds one Arrow batch
+    plus O(T) rows, so the bucket count sets parallelism, not worker
+    memory; 32 is the count the static oracle bakes in."""
+    return sga_tournament(spark, sf_dir)
 
 
 @register("cga_update_join", ORACLES.get("cga_generation"))
@@ -1032,7 +953,7 @@ def cga_update_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's tagged-union reducer. Same oracle as cga_generation."""
     vec = _cga_vectors(spark)
     samples = cga_ops.sample_members(vec, CGA_T, _CGA_GEN_SEED)
-    w, l = cga_ops.winner_loser(cga_ops.member_fitness(samples))
+    w, l, _ = cga_ops.winner_loser_best(cga_ops.member_fitness(samples))
     return cga_ops.update_vectors_join(vec, samples, w, l, CGA_POP)
 
 
@@ -2772,6 +2693,20 @@ def join_broadcast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_items"),
         )
     )
+
+
+def _scoped_bucketed(
+    df: DataFrame, prefix: str, n_buckets: int, key: str
+) -> DataFrame:
+    """Write ``df`` as a uuid-named bucketed table in a temp dir and read
+    it back.  The entry scope drops the table and removes the dir, so
+    calls back to back never share a table."""
+    spark = df.sparkSession
+    d = runtime.scoped_tempdir(prefix)
+    tbl = prefix + uuid.uuid4().hex[:8]
+    runtime.scoped_cleanup(lambda: spark.sql(f"DROP TABLE IF EXISTS {tbl}"))
+    bucketing.write_bucketed(df, tbl, d, n_buckets, key)
+    return bucketing.read_bucketed(spark, tbl)
 
 
 @register(

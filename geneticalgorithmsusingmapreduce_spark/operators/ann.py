@@ -1919,7 +1919,7 @@ def centroids_for_count(
     FLOP terms (n·C assignment vs n²/(2C) candidates, both n^1.5) but
     lets the per-decade candidate count grow ~3× faster than the
     corpus; fixed-K is the rule that survives the next decade. Same
-    family as planes_for_count / buckets_for_pop: size the
+    family as planes_for_count / buckets_for_path: size the
     partitioning dial to the corpus, never ship a constant that
     silently goes quadratic."""
     import math

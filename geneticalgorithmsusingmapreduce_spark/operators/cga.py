@@ -77,28 +77,18 @@ def member_fitness(samples: DataFrame) -> DataFrame:
     )
 
 
-def winner_loser(fits: DataFrame) -> tuple[int, int]:
-    """A3 final: argmax/argmin member, ties to the smaller member id
-    (deterministic; the reference's scan order does the same,
-    ``reference src/edu/illinois/ga/CGA.java:245-254``).
+def winner_loser_best(fits: DataFrame) -> tuple[int, int, int]:
+    """A3 final: (winner, loser, best fitness) in one T-row agg. Winner
+    and loser are the argmax/argmin member, ties to the smaller member
+    id (deterministic; the reference's scan order does the same,
+    ``reference src/edu/illinois/ga/CGA.java:245-254``); the winner's
+    fitness is the best, which the iterative driver records.
 
     Struct ordering keys, not ``fitness * 8192 ± member``: a scalar-
     composed key silently corrupts the ordering once t_size ≥ 8192 (the
-    member term overwhelms a 1-unit fitness difference — the same
-    magnitude-coupling failure the SGA tournament _ORD key had). The
-    DuckDB oracle keeps the scalar form (its arg_max takes scalar keys
-    only); equivalent there because oracle runs use t_size = 4."""
-    row = fits.agg(
-        F.expr("max_by(member, struct(fitness, -member))").alias("w"),
-        F.expr("min_by(member, struct(fitness, member))").alias("l"),
-    ).collect()[0]
-    return int(row.w), int(row.l)
-
-
-def winner_loser_best(fits: DataFrame) -> tuple[int, int, int]:
-    """winner_loser + the generation's best fitness in the same T-row agg
-    — the iterative driver needs all three, and the winner's fitness IS
-    the max, so a separate best-collect job is pure overhead."""
+    member term overwhelms a 1-unit fitness difference). The DuckDB
+    oracle keeps the scalar form (its arg_max takes scalar keys only);
+    equivalent there because oracle runs use t_size = 4."""
     row = fits.agg(
         F.expr("max_by(member, struct(fitness, -member))").alias("w"),
         F.expr("min_by(member, struct(fitness, member))").alias("l"),
@@ -136,9 +126,9 @@ def update_vectors_join(
     vector through one shuffle keyed by split and co-groups them in the
     reducer (``reference src/edu/illinois/ga/CGA.java:262-309``). Here the
     winner's and loser's bits join back to the model on (split_id, bit).
-    Produces identical output to the recomputing variant; costs one extra
-    shuffle of the sampled bits — kept for parity demonstration and for
-    ``seed=None`` runs where samples can't be recomputed."""
+    Produces identical output to the recomputing variant and costs one
+    extra shuffle of the sampled bits; it is the registered J1 capability
+    (``cga_update_join``, checked against cga_generation's oracle)."""
     delta = LONG_MAX // pop
     wl = (
         samples.filter(F.col("member").isin(w, l))

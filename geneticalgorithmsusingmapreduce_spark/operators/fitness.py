@@ -1,19 +1,15 @@
-"""Fitness evaluation + best-individual aggregation (SURVEY.md §2.2, §2.4).
+"""ONEMAX fitness evaluation P1/P2 (SURVEY.md §2.2).
 
-P1/P2 — ONEMAX fitness projection: the reference's ``fitness()`` mask-walks
-64 bit positions per long, boxing a LongWritable per probe (``reference
+The reference's ``fitness()`` mask-walks 64 bit positions per long,
+boxing a LongWritable per probe (``reference
 src/edu/illinois/ga/MapReduce.java:100-111``); here it is one
-whole-stage-codegen'd ``bit_count`` per long.
-
-A1/A2 — best individual: the reference splits this into a map-side running
-max (``:87-88,120-124``) plus driver-side folding of per-task HDFS side
-files (``:387-427``). Spark's HashAggregate already executes partial
-(map-side) → final aggregation for ``max``/``max_by``; the side-channel
-files collapse into a normal 1-row agg + collect (SURVEY.md §3.4).
-
-Scale note: fitness is a narrow projection (no shuffle); best-individual is
-a single all-to-one agg whose partial side reduces each partition to one
-row, so the final exchange moves #partitions rows — optimal at any scale.
+whole-stage-codegen'd ``bit_count`` per long, or above LARGE_NL a numpy
+popcount over the flat genome buffer. Either way fitness is a narrow
+projection (no shuffle). The best individual (A1/A2) is a plain 1-row
+``max``/``max_by`` aggregate where an entry needs it (the flagship's
+grouped ``max_by``, the drivers' stats collect): Spark's partial
+(map-side) → final aggregation replaces the reference's running max
+and side-file fold (SURVEY.md §3.4).
 """
 
 from __future__ import annotations
@@ -44,11 +40,3 @@ def with_fitness(
         return df.withColumn("fitness", F.arrow_udf(popcount, "long")(genome))
     return df.withColumn("fitness", fitness_col(genome, nl))
 
-
-def best_individual(df: DataFrame) -> DataFrame:
-    """A1+A2: one-row DataFrame (best_fitness, best_genome). Partial max
-    happens map-side automatically (no side files, no driver fold)."""
-    return df.agg(
-        F.max("fitness").alias("best_fitness"),
-        F.max_by("genome", "fitness").alias("best_genome"),
-    )

@@ -9,116 +9,48 @@ over the partition's head (``:252-272``) — so a partition of n rows yields
 exactly n parents. Every 2nd parent pairs with the previous one for
 crossover (``:235-243``).
 
-Over one seeded bucket exchange (operators/shuffle), with
-rn = row_number over (skey, id) within the bucket:
+There is one tournament, the reducer itself: ``_walk_parents``. The
+seeded buckets (operators/shuffle) arrive as ``part % P`` partitions
+sorted by (part, skey, id), and the walk streams each partition's Arrow
+batches through the circular buffer, carrying only a bucket's first and
+last T-1 rows and its parent count between batches, so a worker holds
+one batch plus O(T) rows whatever the bucket size. Each row carries its
+own genome, so a population with repeated ids needs no id-unique
+lookup. ``breed_children`` pairs the walk's parents, crosses and
+evaluates them (a whole generation is one exchange and one Python
+pass); ``tournament_parents`` (W1, and W3: the reducer-class successor,
+SURVEY.md §2.12) emits the parents themselves.
+
+The test reference is the DuckDB twin ``duck_tournament_sql``, the same
+walk as window expressions, with rn = row_number over (skey, id) within
+the bucket:
 
     ext   = rows ∪ the first min(n, T-1) rows re-positioned at rn+n
     pid   = argmax of fitness·2^31 + rn over rows between T-1 preceding
     pos   = rn - (T-1)  for rn ≥ T   (n parents when n ≥ T-1,
                                       max(0, 2n - (T-1)) below)
     pair  = pos / 2 at even pos; partner = the parent at pos - 1
-
-The reducer itself is ``_walk_parents``: the buckets arrive as
-``part % P`` partitions sorted by (part, skey, id), and the walk streams
-each partition's Arrow batches through the same circular buffer,
-carrying only a bucket's first and last T-1 rows and its parent count
-between batches, so a worker holds one batch plus O(T) rows whatever
-the bucket size. ``breed_children`` pairs the walk's parents, crosses
-and evaluates them (a whole generation is one exchange and one Python
-pass); ``tournament_parents_pandas`` (W3, the reducer-class successor,
-SURVEY.md §2.12) emits the parents themselves.
-
-``tournament_parent_ids``/``tournament_parents`` keep the tournament as
-window expressions over (id, fitness, skey, part) with the winners'
-genomes joined back by id: the declarative form the ``sga_tournament``
-entry registers, and the reference the kernel is tested against. All
-forms share the ordering key, hence bit-identical parents.
 """
 
 from __future__ import annotations
 
 import itertools
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions import bits
 
 TOURNAMENT_SIZE = 5  # reference src/edu/illinois/ga/MapReduce.java:154
 
-# Tournament ordering: fitness first, tie-broken by the dense per-bucket
-# row number rn (< bucket size, unique within every window). Not the id:
+# The DuckDB twin's tournament ordering (the walk's argmax ranks the
+# same way: fitness, then the later row of the window): fitness first,
+# tie-broken by the dense per-bucket row number rn (< bucket size,
+# unique within every window). Not the id:
 # child ids carry the pair key in their high bits, so an id term
 # outgrows 2^32 and swamps the fitness term (selection degrades to
 # drift). Any fitness advantage contributes ≥ 2^31 > max rn. DuckDB's
 # arg_max takes scalar keys only, hence one composed key, not a struct.
 _ORD = "(fitness * 2147483648 + rn)"
-
-
-def tournament_parent_ids(
-    df: DataFrame, t_size: int = TOURNAMENT_SIZE
-) -> DataFrame:
-    """W1 skinny core: the windowed tournament over (id, fitness, skey,
-    part) ONLY — genomes never enter the exchange or the sorts. Output:
-    one row per parent: [part, pos, parent_id, parent_fitness]."""
-    w = Window.partitionBy("part").orderBy("skey", "id")
-    d = (
-        df.select("id", "fitness", "skey", "part")
-        .withColumn("rn", F.row_number().over(w))
-        .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("part")))
-    )
-    head = d.filter(F.col("rn") <= t_size - 1).withColumn(
-        "rn", F.col("rn") + F.col("n")
-    )
-    ext = d.unionByName(head)
-    wf = (
-        Window.partitionBy("part")
-        .orderBy("rn")
-        .rowsBetween(-(t_size - 1), 0)
-    )
-    sel = ext.select(
-        "part",
-        "rn",
-        F.expr(f"max_by(id, {_ORD})").over(wf).alias("parent_id"),
-        F.max("fitness").over(wf).alias("parent_fitness"),
-    )
-    return sel.filter(F.col("rn") >= t_size).select(
-        "part",
-        (F.col("rn") - t_size + 1).alias("pos"),
-        "parent_id",
-        "parent_fitness",
-    )
-
-
-def tournament_parents(
-    df: DataFrame,
-    t_size: int = TOURNAMENT_SIZE,
-    genomes: DataFrame | None = None,
-) -> DataFrame:
-    """W1. Input: [id, genome, fitness, skey, part]; output: one parent per
-    input row: [part, pos, parent(genome array), parent_fitness].
-
-    ``tournament_parent_ids`` runs the windows genome-free, then winners
-    join their genomes back via a SHUFFLED HASH join on id, hinted with
-    the skinny winner rows as the build side (a sort-merge join would
-    re-sort the wide genome side). ``id`` is row identity here: a source
-    that repeats ids (the lineitem population's duplicate keys) passes
-    an id-unique [id, genome] frame as ``genomes``, or each repeated
-    winner id would fan out k rows."""
-    sel = tournament_parent_ids(df, t_size)
-    g = (
-        genomes if genomes is not None else df.select("id", "genome")
-    ).withColumnsRenamed({"id": "parent_id", "genome": "parent"})
-    return (
-        sel.hint("shuffle_hash")
-        .join(g, "parent_id")
-        .select("part", "pos", "parent", "parent_fitness")
-    )
-
-
-# Parent genome bytes crossed per kernel step: keeps the crossover and
-# popcount temporaries in cache. At 10,000 bits a whole 8,300-row batch
-# per step ran the kernel ~1.5× slower than 256 KB steps (~200 pairs).
-_CHUNK_BYTES = 256 << 10
 
 
 def _ranges(starts, lens):
@@ -267,7 +199,7 @@ def _breed(batches, n_bits: int, seed: int | None, t_size: int):
     import numpy as np
     import pyarrow as pa
 
-    chunk = max(1, _CHUNK_BYTES // (8 * bits.n_longs(n_bits)))
+    chunk = max(1, bits.STEP_BYTES // (8 * bits.n_longs(n_bits)))
     for pk, a, b in _paired(_walk_parents(batches, t_size), chunk):
         c1, c2 = bits.np_crossover(a, b, seed, pk, n_bits)
         ch = np.concatenate([c1, c2])
@@ -296,15 +228,14 @@ def breed_children(
     )
 
 
-def tournament_parents_pandas(
+def tournament_parents(
     df: DataFrame, t_size: int = TOURNAMENT_SIZE, n_buckets: int | None = None,
 ) -> DataFrame:
-    """W3: ``tournament_parents`` as the reducer kernel — the idiomatic
-    successor of writing a reducer class (SURVEY.md §2.12): the
-    ``_walk_parents`` stream of ``breed_children``, emitting parents
-    instead of children, so parents match the window form and its
-    DuckDB twin row for row, buckets smaller than T included. Output
-    [part, pos, parent, parent_fitness]."""
+    """W1/W3: the ``_walk_parents`` stream of ``breed_children``, emitting
+    parents instead of children: [id, genome, fitness, skey, part] →
+    [part, pos, parent, parent_fitness], one parent per input row (buckets
+    smaller than T yield fewer, as the DuckDB twin does). ``n_buckets``
+    caps the partition count (``_bucket_stream``)."""
 
     def parents(batches):
         import pyarrow as pa
@@ -327,7 +258,7 @@ def duck_tournament_sql(
     shuffled_sql: str, t_size: int = TOURNAMENT_SIZE
 ) -> str:
     """Oracle twin of tournament_parents over a relation exposing
-    (id, genome, fitness, skey, part)."""
+    (id, genome, fitness, skey, part): the walk as ROWS-frame windows."""
     ord_ = _ORD
     return f"""(
       WITH _d AS (

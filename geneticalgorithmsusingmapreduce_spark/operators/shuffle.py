@@ -1,5 +1,5 @@
-"""Seeded shuffle: random partitioner X1 + random sort O1 (SURVEY.md §2.7,
-§2.10).
+"""Seeded shuffle keys: random partitioner X1 + random sort O1 (SURVEY.md
+§2.7, §2.10).
 
 The reference routes each record to a uniformly random reducer
 (``reference src/edu/illinois/ga/MapReduce.java:39-50``,
@@ -8,15 +8,16 @@ The reference routes each record to a uniformly random reducer
 src/edu/illinois/ga/LongArrayWritable.java:52-58``,
 ``LongArrayWritableComparator.java:15-32``) — deliberately violating the
 comparator contract so each reducer sees a random permutation. That trick
-would break TimSort; the honest Spark equivalent is a **seeded random sort
-key**: skey = top-63-bits of xxhash64(seed||salt, id). Partition = skey %
-n_buckets (uniform routing), order within partition by skey (random
-permutation). One shuffle, contract-clean, reproducible, and at 1000
-executors the modulo routing balances load exactly like the reference's
-random partitioner.
+would break TimSort; the contract-clean equivalent is a **seeded random
+sort key**: skey = top-63-bits of xxhash64(seed||salt, id), and bucket
+part = skey % n_buckets (uniform routing). This module only adds the
+two columns. The generation's one exchange
+(operators/selection._bucket_stream) routes the buckets onto
+``part % P`` partitions sorted by (part, skey, id), so each bucket
+reaches the tournament as a seeded random permutation, reproducibly.
 
-seed=None falls back to true randomness (F.rand), matching the reference
-byte-for-byte in spirit but oracle-checkable only as rows-only.
+seed=None draws skey from rand() instead, as the reference does; such
+runs are checkable by row count only.
 """
 
 from __future__ import annotations
@@ -24,26 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import bits, prng
-
-
-def buckets_for_pop(
-    n_rows: int, target_rows: int = 1_000_000, lo: int = 8, hi: int = 65536
-) -> int:
-    """Shuffle-bucket count sized to the population: next power of two
-    of ⌈n_rows / target_rows⌉, clamped to [lo, hi].
-
-    The per-bucket row count is the sort unit of the window tournament
-    (one bucket per window partition), and the bucket count is the
-    parallelism of the streaming generation kernel, which holds one
-    Arrow batch plus O(T) rows whatever the bucket size. A fixed count
-    therefore leaves the window form's per-task sort growing with the
-    population. Same rule family as sources.bucketing.buckets_for_path
-    and ann.planes_for_count: the fan-out constant must follow the
-    data."""
-    n = lo
-    while n < hi and n * target_rows < n_rows:
-        n *= 2
-    return n
 
 
 def with_shuffle_key(

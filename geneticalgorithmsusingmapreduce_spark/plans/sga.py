@@ -53,9 +53,11 @@ def pop_from_multiplier(n_bits: int, x: float) -> int:
 
 def default_n_buckets(spark: SparkSession) -> int:
     """Tournament bucket count scaled to the cluster, not a literal:
-    O(cores·4) keeps every bucket's window sort core-local while bounding
-    the wrap-around head re-read (see operators/selection.py module doc).
-    On 1000 executors this tracks total cores automatically.
+    cores·4 buckets land on ``min(shuffle partitions, n_buckets)``
+    partitions (operators/selection._bucket_stream), so every core gets
+    a partition with an equal share of buckets, while each bucket costs
+    only its T-1 wrap-around rows and at most one unpaired parent. On
+    1000 executors this tracks total cores automatically.
 
     Reproducibility caveat: n_buckets feeds the tournament shuffle key,
     so the same seed evolves DIFFERENT (equally valid) populations under

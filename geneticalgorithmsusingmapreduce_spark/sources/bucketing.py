@@ -52,29 +52,18 @@ def buckets_for_path(
 
 
 def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    n_buckets: int,
-    key: str,
-    sort: bool = True,
+    df: DataFrame, table: str, path: str, n_buckets: int, key: str
 ) -> None:
     """Write ``df`` as an external bucketed table named ``table`` at
-    ``path``. Overwrites both the files and the catalog entry.
-
-    ``sort=False`` skips the per-bucket sortBy: a SORT-MERGE join needs
-    sorted buckets to skip its sort, but a shuffled-HASH join (the
-    genome join-back) only needs the partitioning — and sorting
-    wide rows (genome arrays) at write time is exactly the
-    full-width sort the skinny-shuffle discipline exists to avoid
-    (measured: the sorted store write dominated the sf10 tournament
-    leg). Keys-only or SMJ-bound tables keep the default sort."""
+    ``path``, each bucket sorted by ``key`` (a sort-merge join on the
+    key then skips its sort). Overwrites both the files and the catalog
+    entry."""
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    w = df.write.mode("overwrite").bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.option("path", path).format("parquet").saveAsTable(table)
+    (
+        df.write.mode("overwrite").bucketBy(n_buckets, key).sortBy(key)
+        .option("path", path).format("parquet").saveAsTable(table)
+    )
 
 
 def read_bucketed(spark: SparkSession, table: str) -> DataFrame:

@@ -68,8 +68,9 @@ def start_incremental_sga(
         if dedup_children:
             children = dedup.dedup_genomes(children)
         # stats-resetting checkpoint: the estimate must not carry
-        # across micro-batches (see runtime.local_checkpoint_truncated)
-        new_pop = local_checkpoint_truncated(children)
+        # across micro-batches (see runtime.local_checkpoint_truncated);
+        # the stats collect below is the one action that materializes it
+        new_pop = local_checkpoint_truncated(children, eager=False)
         best, n = new_pop.agg(F.max("fitness"), F.count(F.lit(1))).collect()[0]
         old = state.population
         state.population = new_pop

@@ -84,20 +84,3 @@ def test_buckets_for_path_scales_with_bytes(tmp_path):
     assert bucketing.buckets_for_path(str(d), target_bytes=1, hi=64) == 64
     # missing path -> floor (callers on fresh dirs still get a plan)
     assert bucketing.buckets_for_path(str(tmp_path / "nope")) == 8
-
-
-def test_buckets_for_pop_rule():
-    # r7: the applyInPandas tournament's bucket count is a working-set
-    # dial — a fixed 32 put 5.3M-row pandas frames in each worker at
-    # the sf100 decade and the worker was OOM-killed. The rule sizes
-    # the count to the population (~1M rows/bucket, power of two).
-    from geneticalgorithmsusingmapreduce_spark.operators import shuffle
-
-    assert shuffle.buckets_for_pop(27_856_103) == 32    # sf10 population
-    assert shuffle.buckets_for_pop(278_569_819) == 512  # sf100 population
-    assert shuffle.buckets_for_pop(0) == 8              # clamp floor
-    assert shuffle.buckets_for_pop(10**12) == 65536     # clamp ceiling
-    ns = [10**k for k in range(4, 12)]
-    bs = [shuffle.buckets_for_pop(n) for n in ns]
-    assert bs == sorted(bs)
-    assert all(b & (b - 1) == 0 for b in bs)  # powers of two

@@ -42,8 +42,8 @@ def test_winner_at_least_loser(spark):
     vec = generate.init_prob_vectors(spark, 4)
     fits = cga.member_fitness(cga.sample_members(vec, 4, gen_seed=9))
     rows = {r.member: r.fitness for r in fits.collect()}
-    w, l = cga.winner_loser(fits)
-    assert rows[w] == max(rows.values())
+    w, l, best = cga.winner_loser_best(fits)
+    assert rows[w] == max(rows.values()) == best
     assert rows[l] == min(rows.values())
 
 

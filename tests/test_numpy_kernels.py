@@ -47,6 +47,15 @@ def test_mask_kernels_match_their_direct_formulas(n_bits):
 def test_np_popcount_edges():
     v = np.array([-1, 0, 5, 2**62, -(2**63), 2**63 - 1], dtype=np.int64)
     assert list(prng.np_popcount64(v)) == [64, 0, 2, 1, 1, 63]
+    # np_popcount_rows steps through STEP_BYTES row blocks: a 10,000-bit
+    # matrix of several steps plus a partial one, against a per-row count
+    g = bits.np_genome(5, np.arange(500), 10_000)
+    assert g.nbytes > 2 * bits.STEP_BYTES
+    want = [
+        sum(bin(x & (2**64 - 1)).count("1") for x in row) for row in g.tolist()
+    ]
+    assert bits.np_popcount_rows(g).tolist() == want
+    assert bits.np_popcount_rows(g[:0]).tolist() == []
 
 
 def test_generate_paths_agree(spark):

@@ -85,86 +85,6 @@ def test_window_queries_share_one_exchange(spark):
     assert p.count("Sort") <= 2
 
 
-def test_tournament_exchange_count(spark):
-    # seeded shuffle + tournament windows + pairing: the bucket exchange
-    # must be reused by every window (no per-window re-shuffle)
-    p = _plan(catalog.QUERIES["sga_tournament"](spark, SF))
-    assert p.count("Exchange hashpartitioning(part") <= 2
-
-
-def _formatted_plan(df) -> str:
-    """explain('formatted') as a string — per-node Input/Output column
-    lists, which the tree string doesn't carry."""
-    df.collect()  # finalize AQE
-    jdf = df._jdf
-    sc = df.sparkSession.sparkContext
-    return sc._jvm.PythonSQLUtils.explainString(
-        jdf.queryExecution(), "formatted"
-    )
-
-
-def test_tournament_shuffle_is_skinny(spark):
-    # the window tournament needs only (id, fitness, skey) — its window
-    # exchanges must NOT carry genome bytes; genomes join back by id
-    # through a hash join, never a wide sort.
-    import re
-
-    p = _formatted_plan(catalog.QUERIES["sga_tournament"](spark, SF))
-    # split into per-node blocks: "(12) Exchange ..." sections
-    blocks = re.split(r"\n(?=\(\d+\) )", p)
-    # window exchanges partition on part ALONE
-    part_exchanges = [
-        b for b in blocks
-        if b.startswith("(") and "Exchange" in b.split("\n")[0]
-        and re.search(r"hashpartitioning\(part#\d+L?, \d+\)", b)
-    ]
-    assert part_exchanges, "no window exchange found"
-    for b in part_exchanges:
-        assert "genome" not in b and "parent#" not in b, (
-            f"window exchange carries genome bytes:\n{b[:400]}"
-        )
-    # the skinny side of the genome join-back must hash-build (a
-    # wide-side hash build OOM'd sf100; a genome-side SMJ sort is
-    # allowed — merge sorts spill)
-    assert "ShuffledHashJoin" in p, "join-back not hash join"
-    # every WINDOW sort (skey / rn ordering — the O(n log n) per-bucket
-    # sorts) must be genome-free; only join-id merge sorts may see
-    # genome-carrying rows
-    window_sorts = [
-        b for b in blocks
-        if b.startswith("(") and b.split("\n")[0].endswith("Sort")
-        and re.search(r"Arguments: \[[^\]]*(skey|rn|pos)#", b)
-    ]
-    assert window_sorts, "no window sorts found"
-    for b in window_sorts:
-        assert "genome" not in b and "parent#" not in b, (
-            f"window sort carries genome bytes:\n{b[:400]}"
-        )
-
-
-def test_tournament_genome_side_zero_exchange(spark):
-    # r9 (r8 VERDICT #1): the genome lookup is the BUCKET-STORED
-    # generation — in sga_tournament NO exchange anywhere carries
-    # genome bytes (the r8 shape still exchanged bare ids for the
-    # dedup), the store scan is a bucketed read (Bucketed: true),
-    # and it feeds the join-back directly.
-    import re
-
-    p = _formatted_plan(catalog.QUERIES["sga_tournament"](spark, SF))
-    blocks = re.split(r"\n(?=\(\d+\) )", p)
-    exchanges = [
-        b for b in blocks
-        if b.startswith("(") and "Exchange" in b.split("\n")[0]
-    ]
-    assert exchanges, "no exchanges found (plan parse failed?)"
-    for b in exchanges:
-        assert "genome" not in b and "parent#" not in b, (
-            f"genome bytes cross an exchange:\n{b[:400]}"
-        )
-    assert "Bucketed: true" in p, "store scan did not ride the bucketing"
-    assert "ShuffledHashJoin" in p
-
-
 def test_cga_generation_no_join_no_extra_shuffle(spark):
     # the recomputing update is a projection over the model: no join
     # operators anywhere in the plan
@@ -620,10 +540,10 @@ SGA_KERNEL_EXPLAIN_BUDGET = 8 << 10
 
 
 def assert_one_kernel_pass(df, budget=SGA_KERNEL_EXPLAIN_BUDGET) -> None:
-    """A generation is the seeded bucket exchange and one streaming
-    Arrow pass: one exchange, passing ``part`` through as the partition
-    id, one mapInArrow, no window, join or grouped kernel, and a
-    constant-size plan (``budget`` bytes of extended explain; None
+    """A generation (and a tournament) is the seeded bucket exchange and
+    one streaming Arrow pass: one exchange, passing ``part`` through as
+    the partition id, one mapInArrow, no window, join or grouped kernel,
+    and a constant-size plan (``budget`` bytes of extended explain; None
     skips the size check)."""
     p = _plan(df)
     for node in ("Window", "Join", "FlatMapGroupsInArrow"):
@@ -654,6 +574,13 @@ def test_sga_kernel_generation_one_exchange(spark):
     assert_one_kernel_pass(
         catalog.QUERIES["sga_generation"](spark, SF), budget=None
     )
+
+
+@pytest.mark.parametrize("entry", ["sga_tournament", "sga_tournament_pandas"])
+def test_tournament_entries_one_kernel_pass(spark, entry):
+    # both tournament entries are the streaming reducer walk: the bucket
+    # exchange and one mapInArrow, no window and no genome join-back
+    assert_one_kernel_pass(catalog.QUERIES[entry](spark, SF), budget=None)
 
 
 def test_genome_kernels_are_arrow_native(spark):

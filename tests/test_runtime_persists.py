@@ -222,6 +222,43 @@ def test_ladder_result_valid_until_entry_after_next(spark, monkeypatch):
     )
 
 
+def test_ladder_rows_equal_under_both_persist_policies(spark, monkeypatch):
+    # how a ladder's rungs materialize must not change its rows: the
+    # default checkpoint-truncated leaves and plain persist (what a
+    # Spark Connect session falls back to) give the same row hash
+    import contextlib
+
+    from pyspark.sql import functions as F
+
+    from geneticalgorithmsusingmapreduce_spark import catalog
+    from geneticalgorithmsusingmapreduce_spark.operators import pipeline
+
+    checkpoints = []
+    real_checkpoint = runtime.local_checkpoint_truncated
+
+    def recording_checkpoint(df, eager=True):
+        checkpoints.append(df)
+        return real_checkpoint(df, eager)
+
+    def row_hash(df):
+        """order-independent: xor of per-row hashes, and the row count"""
+        return tuple(df.agg(
+            F.expr("bit_xor(xxhash64(*))"), F.count(F.lit(1))
+        ).collect()[0])
+
+    monkeypatch.setattr(
+        runtime, "local_checkpoint_truncated", recording_checkpoint
+    )
+    entry = catalog.QUERIES["corpus_curation_neardup"]
+    truncated = row_hash(entry(spark, SF_DIR))
+    n_rungs = len(checkpoints)
+    assert n_rungs, "the ladder checkpointed no rung?"
+    monkeypatch.setattr(pipeline, "truncated_persists", contextlib.nullcontext)
+    plain = row_hash(entry(spark, SF_DIR))
+    assert len(checkpoints) == n_rungs, "a rung checkpointed under persist"
+    assert plain == truncated and plain[1] > 0
+
+
 def test_truncation_is_context_local(spark):
     # one thread building a ladder must not flip another thread's
     # scoped_persist into checkpoint-truncation

@@ -78,8 +78,8 @@ def _confs(spark, confs):
 def test_small_buckets_kernel_reducer_and_oracle_agree(spark):
     # buckets of 1..6 rows: below T-1 rows the wrap-around yields
     # max(0, 2n - (T-1)) parents, not n (0, 0, 2 for n = 1, 2, 3). The
-    # kernel route, the W3 reducer, the window form and the DuckDB twin
-    # must agree row for row; fitness is coarsened so windows hold ties.
+    # breed kernel, the tournament kernel and the DuckDB twin must agree
+    # row for row; fitness is coarsened so windows hold ties.
     import duckdb
     import pyarrow as pa
 
@@ -112,9 +112,6 @@ def test_small_buckets_kernel_reducer_and_oracle_agree(spark):
     duck_par = {key(r) for r in con.sql(f"SELECT * FROM {par_sql} _p").fetchall()}
     per_part = [sum(1 for r in duck_par if r[0] == p) for p in range(6)]
     assert per_part == [0, 0, 2, 4, 5, 6]
-    got = {key(r) for r in selection.tournament_parents(sh).select(
-        "part", "pos", "parent", "parent_fitness").collect()}
-    assert got == duck_par
     ch_sql = crossover.duck_children_sql(
         selection.duck_paired_sql(par_sql), N_BITS, seed
     )
@@ -131,7 +128,7 @@ def test_small_buckets_kernel_reducer_and_oracle_agree(spark):
                 (r.id, tuple(r.genome), r.fitness)
                 for r in selection.breed_children(sh, N_BITS, seed).collect()
             }
-            parents = {key(r) for r in selection.tournament_parents_pandas(
+            parents = {key(r) for r in selection.tournament_parents(
                 sh).collect()}
         assert kernel == duck_ch, confs
         assert parents == duck_par, confs

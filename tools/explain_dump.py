@@ -27,7 +27,8 @@ from geneticalgorithmsusingmapreduce_spark.session import build_session  # noqa:
 HEADLINE = [
     "scan_filter_project",      # pushdown + pruning
     "flagship_best_by_flag",    # grouped argmax, single exchange
-    "sga_generation",           # tournament window + pairing + crossover
+    "sga_generation",           # breed kernel: tournament, pairing,
+                                # crossover and fitness in one pass
     "cga_generation",           # shuffle-free vector update
     "join_broadcast_revenue",   # broadcast dim join
     "join_bucketed_revenue",    # bucketed fact⋈fact, no join exchange
@@ -44,8 +45,8 @@ HEADLINE = [
     "events_series_similarity", # day+pattern bucket equi-join
     "emb_ivf_recall",           # trained-IVF vs exact, one left join
     "dedup_cosine_banded",      # skinny banded self-join + one verify
-    "sga_tournament",           # r9: bucket-stored genome lookup —
-                                # zero genome-carrying exchanges
+    "sga_tournament",           # the reducer walk: one bucket exchange,
+                                # one mapInArrow, no window or join
     "emb_ivf_recall_pq_rerank", # r9: PQ ADC LUT join + exact re-rank
     "corpus_curation_chunk_neardup",  # r9: composed chunk containment
     "corpus_curation_chunk_containment",  # r10: candidate-restricted

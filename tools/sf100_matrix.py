@@ -36,9 +36,8 @@ ALIASES = {
     "simhash_capped64": "dedup_simhash_capped",
     "minhash_capped64": "dedup_minhash_lsh_capped",
     "cosine_planes24_b4": "dedup_cosine_banded_sized",
-    # W3 at shuffle.buckets_for_pop (512 @ 278.6M) — the fixed-32 gate
-    # config OOM-killed the worker at sf100; W1/W3 parity verified at
-    # the sized count (BASELINE.md r7)
+    # W3 at 512 buckets (278.6M rows): the whole-bucket pandas kernel
+    # of the time OOM-killed its worker at 32 (BASELINE.md r7)
     "tournament_pandas_sized": "sga_tournament_pandas",
     # (r8's "streaming_neardup_guarded" probe alias is GONE in r9: the
     # guarded variant is now a REGISTERED entry under that exact name —
