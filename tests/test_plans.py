@@ -85,6 +85,54 @@ def test_window_queries_share_one_exchange(spark):
     assert p.count("Sort") <= 2
 
 
+def test_tournament_exchange_count(spark):
+    # seeded shuffle + the tournament walk: the bucket exchange is the
+    # plan's only exchange (the walk runs inside each bucket, no
+    # per-window re-shuffle)
+    p = _plan(catalog.QUERIES["sga_tournament"](spark, SF))
+    assert p.count("Exchange") == 1, p
+    assert "Exchange shufflepartitionidpassthrough(" in p, p
+
+
+def _formatted_plan(df) -> str:
+    """explain('formatted') as a string — per-node Input/Output column
+    lists, which the tree string doesn't carry."""
+    df.collect()  # finalize AQE
+    jdf = df._jdf
+    sc = df.sparkSession.sparkContext
+    return sc._jvm.PythonSQLUtils.explainString(
+        jdf.queryExecution(), "formatted"
+    )
+
+
+def test_tournament_shuffle_is_skinny(spark):
+    # the walk needs only (id, genome, fitness, skey, part): its bucket
+    # exchange carries exactly those columns (nothing of the
+    # population's source rows), and every sort is the per-bucket
+    # (part, skey, id) order the kernel streams in. The formatted plan
+    # lists the final and the initial plan's nodes, so each shows twice.
+    p = _formatted_plan(catalog.QUERIES["sga_tournament"](spark, SF))
+    # split into per-node blocks: "(12) Exchange ..." sections
+    blocks = [
+        b for b in re.split(r"\n(?=\(\d+\) )", p) if b.startswith("(")
+    ]
+    exchanges = [b for b in blocks if "Exchange" in b.split("\n")[0]]
+    assert exchanges, "no exchange found (plan parse failed?)"
+    for b in exchanges:
+        cols = re.search(r"Input \[\d+\]: \[(.*)\]", b)
+        assert cols, b
+        assert [c.split("#")[0] for c in cols.group(1).split(", ")] == [
+            "id", "genome", "fitness", "skey", "part",
+        ], b
+    sorts = [b for b in blocks if b.split("\n")[0].endswith("Sort")]
+    assert sorts, "no bucket sort found"
+    for b in sorts:
+        assert re.search(
+            r"Arguments: \[part#\d+L? ASC NULLS FIRST, skey#\d+L? ASC "
+            r"NULLS FIRST, id#\d+L? ASC NULLS FIRST\]", b
+        ), b
+
+
 def test_cga_generation_no_join_no_extra_shuffle(spark):
     # the recomputing update is a projection over the model: no join
     # operators anywhere in the plan
